@@ -7,10 +7,12 @@ statements are snapshot transforms —
 - ``DELETE FROM t WHERE p``       -> keep rows where p is not satisfied
 - ``UPDATE t SET c = e WHERE p``  -> CASE per assigned column
 
-materialized to a staging table (a query cannot read and overwrite its own
-table) and swapped in with ``INSERT OVERWRITE``. SQL three-valued logic is
-preserved: rows where the predicate is NULL are NOT deleted/updated
-(``coalesce(p, false)``), exactly as warehouse DML behaves.
+written once as the table's next snapshot by ``merge.swap_snapshot`` (a
+fresh directory plus a ``SET LOCATION`` flip for managed tables, an
+in-place file swap for external ones; a failed write leaves the table
+untouched). SQL three-valued logic is preserved: rows where the predicate
+is NULL are NOT deleted/updated (``coalesce(p, false)``), exactly as
+warehouse DML behaves.
 
 Reference surface: Snowflake-side DML reachable through the arbitrary-SQL
 pass-through (``/root/reference/dags/dev_db_test.py:41-70``).
@@ -25,7 +27,11 @@ from __future__ import annotations
 
 import re
 
-from bfs_etl_sep2025_spark.plans.merge import _split_top_level
+from bfs_etl_sep2025_spark.plans.merge import (
+    _split_top_level,
+    swap_snapshot,
+    table_meta,
+)
 from bfs_etl_sep2025_spark.plans.qualify import _top_level_positions
 
 _DELETE_HEAD = re.compile(r"(?is)^\s*DELETE\s+FROM\s+(?P<name>[\w.`\"]+)\s*")
@@ -48,16 +54,6 @@ def _split_where(text: str) -> tuple[str, str | None]:
     return text.strip(), None
 
 
-def _swap(spark, table: str, select: str) -> None:
-    stage = f"{table}__dml_stage"
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    spark.sql(f"CREATE TABLE {stage} AS {select}")
-    try:
-        spark.sql(f"INSERT OVERWRITE TABLE {table} SELECT * FROM {stage}")
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-
-
 def run_update_or_delete(spark, stmt: str) -> None:
     """Parse + execute one UPDATE or DELETE against the session catalog."""
     if m := _DELETE_HEAD.match(stmt):
@@ -65,6 +61,7 @@ def run_update_or_delete(spark, stmt: str) -> None:
         rest, pred = _split_where(stmt[m.end() :])
         if rest:
             raise ValueError(f"unsupported DELETE tail: {rest[:60]!r}")
+        meta = table_meta(spark, table)
         if pred is None:
             # unconditional DELETE == empty the table
             select = f"SELECT * FROM {table} WHERE false"
@@ -72,12 +69,13 @@ def run_update_or_delete(spark, stmt: str) -> None:
             select = (
                 f"SELECT * FROM {table} WHERE NOT coalesce(({pred}), false)"
             )
-        _swap(spark, table, select)
+        swap_snapshot(spark, meta, select)
         return
     m = _UPDATE_HEAD.match(stmt)
     if not m:
         raise ValueError(f"unsupported DML statement: {stmt[:60]!r}")
     table = m.group("name").strip('`"')
+    meta = table_meta(spark, table)
     sets_sql, pred = _split_where(stmt[m.end() :])
     sets: dict[str, str] = {}
     for assign in _split_top_level(sets_sql):
@@ -90,6 +88,6 @@ def run_update_or_delete(spark, stmt: str) -> None:
         f"CASE WHEN {cond} THEN ({expr}) ELSE {c} END AS {c}"
         if (expr := sets.get(c))
         else c
-        for c in spark.table(table).columns
+        for c, _ in meta.fields
     )
-    _swap(spark, table, f"SELECT {cols} FROM {table}")
+    swap_snapshot(spark, meta, f"SELECT {cols} FROM {table}")

@@ -11,17 +11,21 @@ absent here), but MERGE semantics decompose into plain relational algebra
 over the snapshot:
 
 - matched + UPDATE  -> target LEFT JOIN source, CASE per assigned column
-- matched + DELETE  -> target LEFT ANTI JOIN source (keep non-matches)
+- matched + DELETE  -> the same left join, filtering the matched rows out
 - not matched + INSERT -> source LEFT ANTI JOIN target, projected to the
   target schema (missing columns become typed NULLs)
 - not matched BY SOURCE + UPDATE/DELETE -> the SAME left join: a target
   row whose join marker is NULL has no source match, so the branch CASE
   dispatches on ``marker IS NULL`` — no extra join or shuffle
 
-branches UNION ALL'd, materialized to a staging table (a CTAS cannot read
-and overwrite the same table in one statement), then swapped in with
-``INSERT OVERWRITE``. The rewrite keeps the statement's own aliases so
-``ON``/``SET``/``VALUES`` expressions run verbatim.
+branches UNION ALL'd and written ONCE as the table's next snapshot
+(:func:`swap_snapshot`): a managed table's snapshot lands in a fresh
+directory beside it and ``ALTER TABLE … SET LOCATION`` flips the table
+onto it; an external table keeps its path and gets its files replaced in
+place. A failed write leaves the target untouched. An insert-only MERGE
+changes no existing row, so it is a plain append of the anti-join rows.
+The rewrite keeps the statement's own aliases so ``ON``/``SET``/``VALUES``
+expressions run verbatim.
 
 Supported grammar (the common warehouse shapes — Snowflake's MERGE plus
 the SQL-Server/Databricks ``BY SOURCE`` extension)::
@@ -47,22 +51,27 @@ Multiple guarded branches per match side are evaluated in statement order —
 the first branch whose guard is true applies (Snowflake's rule); a branch
 after an unguarded one on the same side is unreachable and rejected. The
 standard MERGE precondition — the source must be unique on the join key —
-is ENFORCED at runtime when any MATCHED branch exists: a pre-rewrite
-aggregate counts source matches per target row and raises, mirroring
-Snowflake's nondeterministic-merge error, instead of silently fanning out
-the LEFT JOIN.
+is ENFORCED at runtime when any MATCHED or BY SOURCE branch exists: the
+rewrite's own LEFT JOIN tags each target row with an id, a window counts
+source matches per id, and a count above one calls ``raise_error`` inside
+the same write job — mirroring Snowflake's nondeterministic-merge error
+instead of silently fanning out the join. When ``ON`` is a flat
+equi-conjunction the window is partitioned by the join keys plus the id,
+so it reuses the join's shuffle.
 
 Scale notes: the rewrite is two joins and a union over the snapshot — the
 same shuffle shape Delta's MERGE plans under the hood (join on the merge
-key; AQE handles skew). The staging CTAS is the price of snapshot
-isolation without a transactional table format; at 100 TB you'd point the
-identical statement at a Delta/Iceberg catalog instead.
+key; AQE handles skew). Rewriting the whole snapshot is the price of no
+transactional table format; at 100 TB you'd point the identical statement
+at a Delta/Iceberg catalog instead.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import json
 import re
+import uuid
 from dataclasses import dataclass, field
 
 from bfs_etl_sep2025_spark.plans.qualify import _top_level_positions
@@ -280,6 +289,11 @@ def parse_merge(stmt: str) -> MergeSpec:
     return spec
 
 
+#: ``raise_error`` text of the duplicate-match check; :func:`run_merge` maps
+#: it to the nondeterministic-MERGE ``ValueError``
+_DUP_MATCH = "MERGE_TARGET_ROW_MATCHES_MULTIPLE_SOURCE_ROWS"
+
+
 def _rewrite(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
     """The UNION ALL select over (kept/updated target rows) + (inserts).
     ``tgt_fields`` is [(name, spark_sql_type)] from the live table schema.
@@ -289,141 +303,114 @@ def _rewrite(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
     expression is inlined wherever needed — Catalyst's common-subexpression
     elimination shares it, and the whole matched side stays ONE left join
     over the snapshot regardless of branch count (same shuffle shape Delta
-    plans for a multi-branch MERGE)."""
+    plans for a multi-branch MERGE). The same join carries the
+    duplicate-match check: each target row gets an id, a window counts its
+    source matches, and the row filter raises when the count exceeds one."""
     t, s = spec.target_alias, spec.source_alias
-    # a non-null marker column makes "matched" testable after the LEFT JOIN
-    src = f"(SELECT *, true AS __merge_m FROM {spec.source_sql}) AS {s}"
-    branches: list[str] = []
-    only_unguarded_delete = (
-        len(spec.matched) == 1
-        and spec.matched[0].delete
-        and spec.matched[0].guard is None
-        and not spec.nm_by_source
+    # first-true-wins branch ordinal over BOTH target-side clause lists;
+    # 0 = untouched target row. The two sides' conditions are mutually
+    # exclusive (__merge_m is true iff a source row matched), so one CASE —
+    # and the single LEFT JOIN — serves both: BY SOURCE costs no extra join
+    # or shuffle.
+    sided: list[tuple[str, MatchedBranch]] = [
+        (f"{s}.__merge_m", b) for b in spec.matched
+    ] + [(f"{s}.__merge_m IS NULL", b) for b in spec.nm_by_source]
+    arms = "".join(
+        f" WHEN {cond}"
+        + (f" AND ({b.guard})" if b.guard is not None else "")
+        + f" THEN {i}"
+        for i, (cond, b) in enumerate(sided, start=1)
     )
-    if only_unguarded_delete:
-        cols = ", ".join(f"{t}.{c} AS {c}" for c, _ in tgt_fields)
-        branches.append(
-            f"SELECT {cols} FROM {spec.target} AS {t} "
-            f"LEFT ANTI JOIN {src} ON {spec.on}"
-        )
-    else:
-        # first-true-wins branch ordinal over BOTH target-side clause
-        # lists; 0 = untouched target row. The two sides' conditions are
-        # mutually exclusive (__merge_m is true iff a source row matched),
-        # so one CASE — and the single existing LEFT JOIN — serves both:
-        # BY SOURCE costs no extra join or shuffle.
-        sided: list[tuple[str, MatchedBranch]] = [
-            (f"{s}.__merge_m", b) for b in spec.matched
-        ] + [(f"{s}.__merge_m IS NULL", b) for b in spec.nm_by_source]
-        arms = "".join(
-            f" WHEN {cond}"
-            + (f" AND ({b.guard})" if b.guard is not None else "")
-            + f" THEN {i}"
-            for i, (cond, b) in enumerate(sided, start=1)
-        )
-        act = f"CASE{arms} ELSE 0 END" if arms else "0"
-        del_ids = [
-            str(i) for i, (_, b) in enumerate(sided, start=1) if b.delete
-        ]
-        cols = ", ".join(
-            (
-                f"CASE ({act})"
-                + "".join(
-                    f" WHEN {i} THEN ({b.sets[c]})"
-                    for i, (_, b) in enumerate(sided, start=1)
-                    if not b.delete and c in b.sets
-                )
-                + f" ELSE {t}.{c} END AS {c}"
+    act = f"CASE{arms} ELSE 0 END"
+    del_ids = [str(i) for i, (_, b) in enumerate(sided, start=1) if b.delete]
+    cols = ", ".join(
+        (
+            f"CASE ({act})"
+            + "".join(
+                f" WHEN {i} THEN ({b.sets[c]})"
+                for i, (_, b) in enumerate(sided, start=1)
+                if not b.delete and c in b.sets
             )
-            if any(not b.delete and c in b.sets for _, b in sided)
-            else f"{t}.{c} AS {c}"
-            for c, _ in tgt_fields
+            + f" ELSE {t}.{c} END AS {c}"
         )
-        keep = f" WHERE ({act}) NOT IN ({', '.join(del_ids)})" if del_ids else ""
-        branches.append(
-            f"SELECT {cols} FROM {spec.target} AS {t} "
-            f"LEFT JOIN {src} ON {spec.on}{keep}"
-        )
+        if any(not b.delete and c in b.sets for _, b in sided)
+        else f"{t}.{c} AS {c}"
+        for c, _ in tgt_fields
+    )
+    keep = f"({act}) NOT IN ({', '.join(del_ids)})" if del_ids else "true"
+    # window keys: target-side equi-join columns (the join already hash-
+    # distributes rows by them, so the window adds no exchange) plus the
+    # row id, which alone makes each window exactly one target row
+    keys = [
+        f"{a}.{col}"
+        for c in _split_top_and(spec.on) or []
+        if (m := _EQ_CONJUNCT.match(c))
+        for a, col in (m.group(1, 2), m.group(3, 4))
+        if a == t
+    ] + [f"{t}.__merge_rid"]
+    matched = (
+        f"SELECT {', '.join(c for c, _ in tgt_fields)} FROM ("
+        f"SELECT {cols}, {keep} AS __merge_keep, "
+        f"count({s}.__merge_m) OVER (PARTITION BY {', '.join(keys)}) "
+        f"AS __merge_n "
+        f"FROM (SELECT *, monotonically_increasing_id() AS __merge_rid "
+        f"FROM {spec.target}) AS {t} "
+        f"LEFT JOIN (SELECT *, true AS __merge_m FROM {spec.source_sql}) "
+        f"AS {s} ON {spec.on}) "
+        f"WHERE CASE WHEN __merge_n > 1 THEN raise_error('{_DUP_MATCH}') "
+        f"ELSE __merge_keep END"
+    )
     if spec.not_matched:
-        names = [c for c, _ in tgt_fields]
-        per_branch_vals: list[dict[str, str]] = []
-        for b in spec.not_matched:
-            icols = b.cols if b.cols is not None else names
-            if len(icols) != len(b.vals):
-                raise ValueError("MERGE INSERT: column/value count mismatch")
-            per_branch_vals.append(dict(zip(icols, b.vals)))
-        if len(spec.not_matched) == 1 and spec.not_matched[0].guard is None:
-            vals = per_branch_vals[0]
-            proj = ", ".join(
-                f"({vals[c]}) AS {c}"
-                if c in vals
-                else f"CAST(NULL AS {typ}) AS {c}"
-                for c, typ in tgt_fields
-            )
-            branches.append(
-                f"SELECT {proj} FROM {src} "
-                f"LEFT ANTI JOIN {spec.target} AS {t} ON {spec.on}"
-            )
-        else:
-            arms = "".join(
-                f" WHEN ({b.guard}) THEN {i}"
-                if b.guard is not None
-                else f" WHEN true THEN {i}"
-                for i, b in enumerate(spec.not_matched, start=1)
-            )
-            iact = f"CASE{arms} ELSE 0 END"
-            proj = ", ".join(
-                (
-                    f"CASE ({iact})"
-                    + "".join(
-                        f" WHEN {i} THEN ({vals[c]})"
-                        for i, vals in enumerate(per_branch_vals, start=1)
-                        if c in vals
-                    )
-                    + f" ELSE CAST(NULL AS {typ}) END AS {c}"
-                )
-                if any(c in vals for vals in per_branch_vals)
-                else f"CAST(NULL AS {typ}) AS {c}"
-                for c, typ in tgt_fields
-            )
-            branches.append(
-                f"SELECT {proj} FROM {src} "
-                f"LEFT ANTI JOIN {spec.target} AS {t} ON {spec.on} "
-                f"WHERE ({iact}) <> 0"
-            )
-    return " UNION ALL ".join(branches)
+        return f"{matched} UNION ALL {_insert_select(spec, tgt_fields)}"
+    return matched
 
 
-def _check_deterministic(spark, spec: MergeSpec) -> None:
-    """Raise if any target row matches more than one source row on the ON
-    condition — Snowflake's nondeterministic-merge error (default
-    ``ERROR_ON_NONDETERMINISTIC_MERGE=true``), which the LEFT-JOIN rewrite
-    would otherwise silently fan out. One extra join+aggregate over the
-    snapshot, the same pre-check Delta's MERGE runs; only needed (and only
-    run) when the rewrite takes the LEFT JOIN path (any MATCHED or NOT
-    MATCHED BY SOURCE branch) — insert-only merges are unaffected by
-    duplicate matches (the anti join collapses them)."""
+def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
+    """Source rows with no target match, projected to the target schema by
+    the first INSERT branch whose guard holds (missing columns become typed
+    NULLs). Duplicate source rows cannot fan target rows out here: the anti
+    join only ever drops source rows."""
     t, s = spec.target_alias, spec.source_alias
-    view = "__merge_rid_" + re.sub(r"\W", "_", spec.target)
-    from pyspark.sql import functions as F
-
-    spark.table(spec.target).withColumn(
-        "__merge_rid", F.monotonically_increasing_id()
-    ).createOrReplaceTempView(view)
-    try:
-        dup = spark.sql(
-            f"SELECT 1 AS one FROM {view} AS {t} "
-            f"JOIN {spec.source_sql} AS {s} ON {spec.on} "
-            f"GROUP BY {t}.__merge_rid HAVING count(*) > 1 LIMIT 1"
-        ).count()
-    finally:
-        spark.catalog.dropTempView(view)
-    if dup:
-        raise ValueError(
-            f"MERGE INTO {spec.target}: a target row matches multiple "
-            "source rows on the ON condition — nondeterministic MERGE "
-            "(deduplicate the source on the join key)"
+    names = [c for c, _ in tgt_fields]
+    per_branch_vals: list[dict[str, str]] = []
+    for b in spec.not_matched:
+        icols = b.cols if b.cols is not None else names
+        if len(icols) != len(b.vals):
+            raise ValueError("MERGE INSERT: column/value count mismatch")
+        per_branch_vals.append(dict(zip(icols, b.vals)))
+    anti = (
+        f"FROM {spec.source_sql} AS {s} "
+        f"LEFT ANTI JOIN {spec.target} AS {t} ON {spec.on}"
+    )
+    if len(spec.not_matched) == 1 and spec.not_matched[0].guard is None:
+        vals = per_branch_vals[0]
+        proj = ", ".join(
+            f"({vals[c]}) AS {c}" if c in vals else f"CAST(NULL AS {typ}) AS {c}"
+            for c, typ in tgt_fields
         )
+        return f"SELECT {proj} {anti}"
+    arms = "".join(
+        f" WHEN ({b.guard}) THEN {i}"
+        if b.guard is not None
+        else f" WHEN true THEN {i}"
+        for i, b in enumerate(spec.not_matched, start=1)
+    )
+    iact = f"CASE{arms} ELSE 0 END"
+    proj = ", ".join(
+        (
+            f"CASE ({iact})"
+            + "".join(
+                f" WHEN {i} THEN ({vals[c]})"
+                for i, vals in enumerate(per_branch_vals, start=1)
+                if c in vals
+            )
+            + f" ELSE CAST(NULL AS {typ}) END AS {c}"
+        )
+        if any(c in vals for vals in per_branch_vals)
+        else f"CAST(NULL AS {typ}) AS {c}"
+        for c, typ in tgt_fields
+    )
+    return f"SELECT {proj} {anti} WHERE ({iact}) <> 0"
 
 
 def _split_top_and(cond: str) -> list[str] | None:
@@ -484,7 +471,157 @@ def _part_literal(v) -> str | None:
 _MAX_TOUCHED_PARTITIONS = 128
 
 
-def _partition_pruning(spark, spec: MergeSpec):
+@dataclass(frozen=True)
+class TableMeta:
+    """Everything a rewrite needs about its target, from ONE catalog read."""
+
+    name: str  # `db`.`table`, quoted for SQL
+    table: str
+    schema: object  # pyspark StructType
+    pcols: list[str]
+    provider: str
+    managed: bool
+    bucketed: bool
+    location: str
+    options: dict[str, str]
+
+    @property
+    def fields(self) -> list[tuple[str, str]]:
+        return [(f.name, f.dataType.simpleString()) for f in self.schema.fields]
+
+
+def _quote(ident: str) -> str:
+    return "`" + ident.replace("`", "``") + "`"
+
+
+def table_meta(spark, name: str) -> TableMeta:
+    """One ``getTableMetadata`` read of ``name``: partition columns,
+    provider, table type, location and schema. A catalog lookup only — it
+    neither lists files nor analyses a plan."""
+    from pyspark.sql.types import StructType
+
+    jss = spark._jsparkSession
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    ident = jss.sessionState().sqlParser().parseTableIdentifier(name)
+    meta = jss.sessionState().catalog().getTableMetadata(ident)
+    table = meta.identifier().table()
+    provider = meta.provider()
+    return TableMeta(
+        name=f"{_quote(meta.identifier().database().get())}.{_quote(table)}",
+        table=table,
+        schema=StructType.fromJson(json.loads(meta.schema().json())),
+        pcols=list(conv.asJava(meta.partitionColumnNames())),
+        provider=provider.get() if provider.isDefined() else "hive",
+        managed=meta.tableType().name() == "MANAGED",
+        bucketed=meta.bucketSpec().isDefined(),
+        location=meta.location().toString(),
+        options=dict(conv.asJava(meta.storage().properties())),
+    )
+
+
+def _store_cast(schema) -> str:
+    """The table-insert contract for a path write: each column CAST to its
+    declared type, and CHAR/VARCHAR values length-checked as ``INSERT``
+    checks them (trailing spaces past the limit are trimmed, CHAR is
+    padded, anything longer raises)."""
+    out = []
+    for f in schema.fields:
+        c = _quote(f.name)
+        e = f"CAST({c} AS {f.dataType.simpleString()})"
+        m = re.fullmatch(
+            r"(char|varchar)\((\d+)\)",
+            f.metadata.get("__CHAR_VARCHAR_TYPE_STRING", ""),
+        )
+        if m:
+            kind, n = m.groups()
+            fit = f"substr({e}, 1, {n})"
+            if kind == "char":
+                fit = f"rpad({fit}, {n}, ' ')"
+            e = (
+                f"CASE WHEN char_length(rtrim({e})) > {n} THEN raise_error("
+                f"'Exceeds char/varchar type length limitation: {n}') "
+                f"ELSE {fit} END"
+            )
+        out.append(f"{e} AS {c}")
+    return ", ".join(out)
+
+
+def _forget_partitions(spark, name: str) -> None:
+    """Drop every partition entry of ``name`` from the catalog, keeping the
+    data (``retainData``), so RECOVER PARTITIONS can re-register them from
+    a new layout."""
+    jss = spark._jsparkSession
+    jvm = spark._jvm
+    conv = jvm.scala.jdk.javaapi.CollectionConverters
+    cat = jss.sessionState().catalog()
+    ident = jss.sessionState().sqlParser().parseTableIdentifier(name)
+    parts = conv.asJava(cat.listPartitions(ident, jvm.scala.Option.empty()))
+    specs = conv.asScala([p.spec() for p in parts]).toSeq()
+    # ignoreIfNotExists, purge, retainData
+    cat.dropPartitions(ident, specs, True, False, True)
+
+
+def swap_snapshot(spark, meta: TableMeta, select: str) -> None:
+    """Make ``select`` the table's whole content with ONE Spark write.
+
+    - Managed table: the snapshot is written to a fresh directory beside
+      the table, ``ALTER TABLE … SET LOCATION`` flips the table onto it
+      (refreshing this session's cached listing), and the old directory is
+      deleted.
+    - External table: its ``LOCATION`` is part of its identity (another
+      process may re-register a table over the same path), so the snapshot
+      is written to a ``_``-prefixed directory inside the location — which
+      Spark's file index skips — and then replaces the old files there.
+      That swap is several file operations, not one: a crash inside it
+      leaves the complete new snapshot in the ``_rewrite-*`` directory.
+    - Partitioned table: the partition entries are dropped (data kept) and
+      re-registered from the new layout with RECOVER PARTITIONS.
+
+    A failed write — including a ``raise_error`` from inside ``select`` —
+    deletes the fresh directory and leaves the table untouched. Callers
+    serialize writers per table (``plans/locks.py``)."""
+    if meta.bucketed or meta.provider.lower() == "hive":
+        raise ValueError(
+            f"{meta.name}: bucketed and Hive-format tables cannot be rewritten"
+        )
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    old = Path(meta.location)
+    fs = old.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    tag = uuid.uuid4().hex[:12]
+    if meta.managed:
+        fresh = Path(old.getParent(), f"{meta.table}-{tag}")
+    else:
+        fresh = Path(old, f"_rewrite-{tag}")
+    try:
+        (
+            spark.sql(f"SELECT {_store_cast(meta.schema)} FROM ({select})")
+            .write.format(meta.provider)
+            .options(**meta.options)
+            .partitionBy(*meta.pcols)
+            .save(fresh.toString())
+        )
+    except BaseException:
+        fs.delete(fresh, True)
+        raise
+    if meta.pcols:
+        _forget_partitions(spark, meta.name)
+    if meta.managed:
+        loc = fresh.toString().replace("\\", "\\\\").replace("'", "\\'")
+        spark.sql(f"ALTER TABLE {meta.name} SET LOCATION '{loc}'")
+        fs.delete(old, True)
+    else:
+        for st in fs.listStatus(old):
+            if st.getPath().getName() != fresh.getName():
+                fs.delete(st.getPath(), True)
+        for st in fs.listStatus(fresh):
+            fs.rename(st.getPath(), Path(old, st.getPath().getName()))
+        fs.delete(fresh, True)
+        spark.catalog.refreshTable(meta.name)
+    if meta.pcols:
+        spark.sql(f"ALTER TABLE {meta.name} RECOVER PARTITIONS")
+
+
+def _partition_pruning(spark, spec: MergeSpec, meta: TableMeta):
     """Decide whether this MERGE can rewrite ONLY the target partitions the
     source actually touches (the catalog-table analog of Delta's file-level
     MERGE pruning). Safe exactly when every modified-or-inserted row is
@@ -501,22 +638,18 @@ def _partition_pruning(spark, spec: MergeSpec):
     - every INSERT assigns each partition column verbatim from the ON-
       equated source column (inserts land in touched partitions only).
 
-    Returns ``(predicate_sql, touched_rows, pcols, col_names, pin_view)``,
-    or None when pruning is ruled out BEFORE the source is pinned, or
-    ``(None, None, None, None, pin_view)`` when it's ruled out AFTER (too
-    many touched partitions, NULL/unsupported partition literal) — the
-    caller must then run the full rewrite against the already-pinned
-    source, so the one-evaluation invariant holds on that path too and the
-    pinned view never leaks unreferenced (ADVICE r6).
+    Returns ``(predicate_sql, touched_rows, pin_view)``, or None when
+    pruning is ruled out BEFORE the source is pinned, or ``(None, None,
+    pin_view)`` when it's ruled out AFTER (too many touched partitions,
+    NULL/unsupported partition literal) — the caller must then run the
+    full rewrite against the already-pinned source, so the one-evaluation
+    invariant holds on that path too and the pinned view never leaks
+    unreferenced (ADVICE r6).
     """
-    try:
-        cat_cols = spark.catalog.listColumns(spec.target)
-    except Exception:
-        return None
-    pcols = [c.name for c in cat_cols if c.isPartition]
+    pcols = meta.pcols
     if not pcols or spec.nm_by_source:
         return None
-    names = [f.name for f in spark.table(spec.target).schema.fields]
+    names = [c for c, _ in meta.fields]
     if names[-len(pcols) :] != pcols:
         return None
     conj = _split_top_and(spec.on)
@@ -557,10 +690,7 @@ def _partition_pruning(spark, spec: MergeSpec):
     spark.sql(
         f"SELECT {s_}.* FROM {spec.source_sql} AS {s_}"
     ).localCheckpoint().createOrReplaceTempView(pin_view)
-    types = {
-        f.name: f.dataType.simpleString()
-        for f in spark.table(spec.target).schema.fields
-    }
+    types = dict(meta.fields)
     sel = ", ".join(
         f"CAST({s_}.{eq[p]} AS {types[p]}) AS {p}" for p in pcols
     )
@@ -570,123 +700,122 @@ def _partition_pruning(spark, spec: MergeSpec):
         .collect()
     )
     if len(touched) > _MAX_TOUCHED_PARTITIONS:
-        return None, None, None, None, pin_view
+        return None, None, pin_view
     disj = []
     for r in touched:
         lits = []
         for p in pcols:
             lit = _part_literal(r[p])
             if lit is None:  # NULL/unsupported partition value type
-                return None, None, None, None, pin_view
+                return None, None, pin_view
             lits.append(f"{p} = {lit}")
         disj.append("(" + " AND ".join(lits) + ")")
     pred = " OR ".join(disj) if disj else "false"
-    return pred, touched, pcols, names, pin_view
+    return pred, touched, pin_view
 
 
 def run_merge(spark, stmt: str) -> None:
     """Parse + execute one MERGE INTO against the session catalog.
 
-    Partitioned targets take the PRUNED path when provably safe (see
-    :func:`_partition_pruning`): the rewrite's joins read only the touched
-    partitions, and the swap-in is a dynamic-partition INSERT OVERWRITE
-    that replaces exactly those partitions — untouched partitions are
-    neither read nor rewritten, the Delta-MERGE data-skipping behavior at
-    partition granularity. A touched partition whose merged content comes
-    back empty (everything deleted) is truncated explicitly, since dynamic
-    overwrite only replaces partitions present in the output."""
+    An insert-only MERGE changes no target row, so it appends the anti-join
+    rows and rewrites nothing. Every other shape rewrites the snapshot in
+    one write (:func:`swap_snapshot`), except that partitioned targets take
+    the PRUNED path when provably safe (see :func:`_partition_pruning`):
+    the rewrite's joins read only the touched partitions, and the swap-in
+    is a dynamic-partition INSERT OVERWRITE that replaces exactly those
+    partitions — untouched partitions are neither read nor rewritten, the
+    Delta-MERGE data-skipping behavior at partition granularity."""
     spec = parse_merge(stmt)
-    decision = _partition_pruning(spark, spec)
-    pruning = decision is not None and decision[0] is not None
-    pin_view = decision[4] if decision is not None else None
+    meta = table_meta(spark, spec.target)
+    if not (spec.matched or spec.nm_by_source):
+        spark.sql(f"INSERT INTO {meta.name} {_insert_select(spec, meta.fields)}")
+        return
+    decision = _partition_pruning(spark, spec, meta)
+    pin_view = decision[2] if decision is not None else None
+    view = "__merge_pruned_" + re.sub(r"\W", "_", spec.target)
     try:
-        _run_merge_body(spark, spec, decision, pruning, pin_view)
+        if decision is not None and decision[0] is not None:
+            _run_pruned(spark, spec, meta, decision, view)
+        else:
+            # a pruning bail AFTER pinning (>cap touched partitions, NULL
+            # partition literal) runs the full rewrite against the PINNED
+            # source, so it sees the single evaluation the probe read
+            # (ADVICE r6 — the unpinned fallback re-evaluated the source)
+            if pin_view is not None:
+                spec = dataclasses.replace(spec, source_sql=pin_view)
+            swap_snapshot(spark, meta, _rewrite(spec, meta.fields))
+    except Exception as e:
+        if _DUP_MATCH not in str(e):
+            raise
+        raise ValueError(
+            f"MERGE INTO {meta.name}: a target row matches multiple "
+            "source rows on the ON condition — nondeterministic MERGE "
+            "(deduplicate the source on the join key)"
+        ) from None
     finally:
-        # unconditional: _check_deterministic/_rewrite/CREATE TABLE stage
-        # can raise BEFORE the success path's cleanup, and the
+        # unconditional: the rewrite can raise mid-way, and the
         # localCheckpointed __merge_src_pin_* view pins RDD blocks for the
         # session lifetime if it survives (ADVICE r7)
-        view = "__merge_pruned_" + re.sub(r"\W", "_", spec.target)
         for v in (pin_view, view):
             if v is not None:
                 try:
                     spark.catalog.dropTempView(v)
                 except Exception:
                     pass
+
+
+def _run_pruned(spark, spec, meta, decision, view) -> None:
+    """Rewrite only the touched partitions: stage the pruned rewrite, then
+    dynamic-overwrite the partitions it produced. A touched partition whose
+    merged content comes back empty (everything deleted) is truncated
+    explicitly, since dynamic overwrite only replaces partitions present in
+    the output."""
+    pred, touched, pin_view = decision
+    pcols = meta.pcols
+    names = [c for c, _ in meta.fields]
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW {view} AS "
+        f"SELECT * FROM {spec.target} WHERE {pred}"
+    )
+    pspec = dataclasses.replace(spec, target=view, source_sql=pin_view)
+    select = _rewrite(pspec, meta.fields)
+    stage = f"{spec.target}__merge_stage"
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    try:
+        old = spark.conf.get(conf)
+    except Exception:
+        old = None
+    spark.sql(f"DROP TABLE IF EXISTS {stage}")
+    try:
+        spark.sql(f"CREATE TABLE {stage} AS {select}")
+        spark.conf.set(conf, "dynamic")
+        spark.sql(
+            f"INSERT OVERWRITE TABLE {spec.target} "
+            f"SELECT {', '.join(names)} FROM {stage}"
+        )
+        present = {
+            tuple(r[p] for p in pcols)
+            for r in spark.sql(
+                f"SELECT DISTINCT {', '.join(pcols)} FROM {stage}"
+            ).collect()
+        }
+        data_cols = ", ".join(n for n in names if n not in pcols)
+        for r in touched:
+            if tuple(r[p] for p in pcols) in present:
+                continue
+            part = ", ".join(f"{p} = {_part_literal(r[p])}" for p in pcols)
+            spark.sql(
+                f"INSERT OVERWRITE TABLE {spec.target} "
+                f"PARTITION ({part}) "
+                f"SELECT {data_cols} FROM {stage} WHERE false"
+            )
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+        spark.sql(f"DROP TABLE IF EXISTS {stage}")
     # drop cached file listings for the overwritten target: a reader that
     # scanned the table before this MERGE would otherwise chase deleted
     # part files (FAILED_READ_FILE on the second upsert of a stream sink)
     spark.sql(f"REFRESH TABLE {spec.target}")
-
-
-def _run_merge_body(spark, spec, decision, pruning, pin_view) -> None:
-    view = None
-    if pruning:
-        pred, touched, pcols, names, _ = decision
-        view = "__merge_pruned_" + re.sub(r"\W", "_", spec.target)
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY VIEW {view} AS "
-            f"SELECT * FROM {spec.target} WHERE {pred}"
-        )
-        pspec = dataclasses.replace(spec, target=view, source_sql=pin_view)
-    elif pin_view is not None:
-        # pruning bailed AFTER pinning (>cap touched partitions, NULL
-        # partition literal): run the full rewrite against the PINNED
-        # source so it sees the same single evaluation the pruning probe
-        # read (ADVICE r6 — the unpinned fallback re-evaluated the source)
-        pspec = dataclasses.replace(spec, source_sql=pin_view)
-    else:
-        pspec = spec
-    if spec.matched or spec.nm_by_source:
-        _check_deterministic(spark, pspec)
-    schema = spark.table(spec.target).schema
-    tgt_fields = [(f.name, f.dataType.simpleString()) for f in schema.fields]
-    select = _rewrite(pspec, tgt_fields)
-    stage = f"{spec.target}__merge_stage"
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    spark.sql(f"CREATE TABLE {stage} AS {select}")
-    try:
-        if pruning:
-            conf = "spark.sql.sources.partitionOverwriteMode"
-            try:
-                old = spark.conf.get(conf)
-            except Exception:
-                old = None
-            spark.conf.set(conf, "dynamic")
-            try:
-                cols = ", ".join(names)
-                spark.sql(
-                    f"INSERT OVERWRITE TABLE {spec.target} "
-                    f"SELECT {cols} FROM {stage}"
-                )
-                present = {
-                    tuple(r[p] for p in pcols)
-                    for r in spark.sql(
-                        f"SELECT DISTINCT {', '.join(pcols)} FROM {stage}"
-                    ).collect()
-                }
-                data_cols = ", ".join(n for n in names if n not in pcols)
-                for r in touched:
-                    if tuple(r[p] for p in pcols) in present:
-                        continue
-                    part = ", ".join(
-                        f"{p} = {_part_literal(r[p])}" for p in pcols
-                    )
-                    spark.sql(
-                        f"INSERT OVERWRITE TABLE {spec.target} "
-                        f"PARTITION ({part}) "
-                        f"SELECT {data_cols} FROM {stage} WHERE false"
-                    )
-            finally:
-                if old is None:
-                    spark.conf.unset(conf)
-                else:
-                    spark.conf.set(conf, old)
-        else:
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {spec.target} SELECT * FROM {stage}"
-            )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        # pin/pruned temp view cleanup lives in run_merge's outer finally,
-        # which also covers failures raised before this point

@@ -1036,7 +1036,8 @@ class SqlTask(Task):
                 with table_write_lock(target):
                     if is_merge(stmt):
                         # plain-parquet catalog has no native MERGE INTO;
-                        # decompose to join+union+overwrite (plans/merge.py)
+                        # decompose to join+union, written as one new
+                        # snapshot the table flips onto (plans/merge.py)
                         run_merge(spark, stmt)
                     elif is_update_or_delete(stmt):
                         # ditto UPDATE/DELETE: snapshot rewrite (plans/dml.py)

@@ -13,8 +13,11 @@ driver's weaker rows-only check — exactly as the contract permits.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,284 +57,87 @@ def query(
     return deco
 
 
-#: Names promoted to the FRONT of ``queries()``/``oracle_sql()`` iteration
-#: order. The external driver hash-checks queries in iteration order under a
-#: ~50-query/round budget; the union across rounds covers 204/207, so each
-#: round's job is to keep the OLDEST green signal fresh and to re-verify any
-#: query whose code changed since its last driver row.
-#:
-#: This list is GENERATED: run ``python scripts/staleness_ledger.py
-#: --priority`` (which diffs CORRECTNESS_r*.json into latest-round-per-query)
-#: and paste its output here, after setting the script's ``PLAN_CHANGED``
-#: tuple for any query restructured since its last green. Round-11 window
-#: (VERDICT r10 item 1): the r11 plan-changed queries lead (approx-sketch
-#: oracle upgrade, lsh_neardup zero-norm guard, incremental-store cleanup,
-#: batched BPE), then the r5/r6 stale tail — the TPC-H suite, corpus
-#: decontamination, drift checks — oldest-first. New r11 registrations are
-#: auto-detected by the ledger and must trigger a re-rotation.
-#: Names not in the registry are ignored, so this list is safe across
-#: refactors; everything else follows registration order.
-_PRIORITY: tuple[str, ...] = (
-    # --- generated by scripts/staleness_ledger.py --priority ---
-    # never externally checked:
-    # plan changed since latest green (PLAN_CHANGED):
-    'dedup_incremental_minhash',
-    'dedup_incremental_semantic',
-    'multimodal_decode_jpeg_baseline',
-    'multimodal_decode_jpeg_progressive',
-    'multimodal_decode_jpeg_lossless',
-    # stale tail, oldest external green first:
-    'text_bpe_pair_stats',  # r6
-    'text_bpe_apply',  # r6
-    'text_lm_score',  # r6
-    'text_repetition_dup_bigrams',  # r6
-    'scan_xml_roundtrip',  # r6
-    'sample_seeded',  # r6
-    'fn_try_suite',  # r6
-    'graph_link_prediction_jaccard',  # r7
-    'graph_kcore',  # r7
-    'corpus_url_dedup',  # r7
-    'funnel_ordered_steps',  # r7
-    'retention_cohorts',  # r7
-    'event_path_transitions',  # r7
-    'stream_stream_interval_join',  # r7
-    'layout_zorder_clustering',  # r7
-    'incremental_agg_merge',  # r7
-    'events_hypertable_rollup',  # r7
-    'window_ranking',  # r7
-    'window_analytic',  # r7
-    'window_row_frames',  # r7
-    'window_range_frame',  # r7
-    'window_distribution',  # r7
-    'topk_per_group',  # r7
-    'window_sessionize',  # r7
-    'scan_projection_pushdown',  # r7
-    'filter_predicates',  # r7
-    'text_bpe_first_merge',  # r7
-    'join_inner',  # r7
-    'join_left_outer',  # r7
-    'join_right_outer',  # r7
-    'join_full_outer',  # r7
-    'join_left_semi',  # r7
-    'join_left_anti',  # r7
-    'join_cross',  # r7
-    'join_broadcast_dim',  # r7
-    'join_range',  # r7
-    'dedup_simhash',  # r7
-    'dedup_simhash_pairs',  # r7
-    'dedup_ngram_jaccard',  # r7
-    'scan_jsonlines',  # r7
-    'scan_csv_roundtrip',  # r7
-    'unpivot_stack',  # r7
-    'fn_string_suite',  # r7
-    'fn_date_suite',  # r7
-    'fn_math_suite',  # r7
-    'fn_json_extraction',  # r7
-    'fn_array_suite',  # r7
-    'fn_regex_extended',  # r7
-    'fn_explode_posexplode',  # r7
-    'fn_conditional_agg',  # r7
-    'fn_null_suite',  # r7
-    'fn_string_agg',  # r7
-    'fn_date_extended',  # r7
-    'fn_string_extended',  # r7
-    'fn_bitwise',  # r7
-    'fn_map_suite',  # r7
-    'dq_mad_outliers',  # r8
-    'corpus_cdc_chunk_dedup',  # r8
-    'window_time_weighted_avg',  # r8
-    'dq_benford_digits',  # r8
-    'window_gap_fill',  # r8
-    'dedup_ngram_containment',  # r8
-    'graph_bfs_distances',  # r8
-    'join_asof_tolerance',  # r8
-    'dq_referential_integrity',  # r8
-    'corpus_epoch_shuffle',  # r8
-    'corpus_mixture_interleave',  # r8
-    'window_period_over_period',  # r8
-    'scan_schema_evolution',  # r8
-    'text_ngram_novelty',  # r8
-    'graph_link_prediction_cn',  # r8
-    'graph_triangle_count',  # r8
-    'dedup_semantic_embedding',  # r8
-    'join_asof',  # r8
-    'join_salted_skew',  # r8
-    'q9_product_profit',  # r8
-    'project_computed_columns',  # r8
-    'null_safe_equality',  # r8
-    'sink_partitioned_roundtrip',  # r8
-    'cdc_latest_per_key',  # r8
-    'scd2_intervals',  # r8
-    'setop_union_all',  # r8
-    'setop_union_distinct',  # r8
-    'setop_intersect',  # r8
-    'subquery_scalar',  # r8
-    'subquery_in',  # r8
-    'subquery_exists_correlated',  # r8
-    'subquery_correlated_scalar',  # r8
-    'lateral_view_explode',  # r8
-    'similarity_topk_bruteforce',  # r8
-    'similarity_topk_lsh',  # r8
-    'similarity_ann_ivf',  # r8
-    'embedding_quantize_int8',  # r8
-    'text_token_stats',  # r8
-    'text_language_id',  # r8
-    'text_language_id_ngram',  # r8
-    'text_quality_score',  # r8
-    'text_fingerprint',  # r8
-    'text_term_scores',  # r8
-    'text_top_bigrams',  # r8
-    'stream_typed_state_profile',  # r9
-    'window_ohlc_downsample',  # r9
-    'similarity_threshold_sweep',  # r9
-    'sample_stratified',  # r9
-    'corpus_soft_dedup_weights',  # r9
-    'corpus_quality_prune_curve',  # r9
-    'similarity_cosine_neardup',  # r9
-    'graph_connected_components',  # r9
-    'corpus_duplicate_spans',  # r9
-    'corpus_span_removal',  # r9
-    'text_gopher_rules',  # r9
-    'text_bpe_pretokenize',  # r9
-    'udf_python_scalar',  # r9
-    'udf_pandas_scalar',  # r9
-    'udf_grouped_map',  # r9
-    'udf_grouped_agg',  # r9
-    'stream_tumbling_window',  # r9
-    'stream_sliding_window',  # r9
-    'stream_session_window',  # r9
-    'stream_ingest_availablenow',  # r9
-    'stream_static_join',  # r9
-    'stream_dedup_stateful',  # r9
-    'multimodal_binary_meta',  # r9
-    'multimodal_feature_extract',  # r9
-    'multimodal_frame_sample',  # r9
-    'setop_except',  # r9
-    'setop_except_all',  # r9
-    'setop_intersect_all',  # r9
-    'distinct_pairs',  # r9
-    'sort_limit_topn',  # r9
-    'scan_orc_roundtrip',  # r9
-    'corpus_pack_sequences',  # r9
-    'text_repetition_ngrams',  # r9
-    'similarity_topk_lsh_multitable',  # r9
-    'diag_table_stats',  # r9
-    'events_anomaly_burst',  # r9
-    'udf_arrow_scalar',  # r9
-    'fn_higher_order_suite',  # r9
-    'fn_array_advanced',  # r9
-    'fn_struct_collect',  # r9
-    'graph_degree_distribution',  # r9
-    'sql_recursive_cte',  # r9
-    'fn_sql_udf',  # r9
-    'fn_sql_table_udf',  # r9
-    'fn_session_variables',  # r9
-    'sql_scripting_block',  # r9
-    'dq_expectations',  # r9
-    'agg_corr_cov',  # r9
-    'similarity_incremental_ivf',  # r10
-    'dedup_cluster_canonical',  # r10
-    'sql_group_by_all',  # r10
-    'corpus_language_temperature_weights',  # r10
-    'stream_lsh_dedup_gate',  # r10
-    'agg_weighted_median',  # r10
-    'multimodal_decode_png',  # r10
-    'multimodal_decode_audio',  # r10
-    'multimodal_scene_cuts',  # r10
-    'multimodal_phash_neardup',  # r10
-    'agg_histogram',  # r10
-    'agg_heavy_hitter_tokens',  # r10
-    'agg_outliers_iqr',  # r10
-    'diag_key_skew',  # r10
-    'agg_mode_deterministic',  # r10
-    'corpus_budget_select',  # r10
-    'events_interval_concurrency',  # r10
-    'events_timeseries_gapfill',  # r10
-    'window_gaps_islands',  # r10
-    'window_ratio_to_report',  # r10
-    'window_ewma',  # r10
-    'window_cumulative_distinct',  # r10
-    'similarity_kmeans_train',  # r10
-    'embedding_random_projection',  # r10
-    'text_zipf_rank',  # r10
-    'text_pii_redact',  # r10
-    'udtf_chunk_text',  # r10
-    'join_fuzzy_levenshtein',  # r10
-    'agg_basic_stats',  # r10
-    'agg_count_distinct_multi',  # r10
-    'agg_rollup',  # r10
-    'agg_cube',  # r10
-    'agg_grouping_sets',  # r10
-    'agg_having',  # r10
-    'agg_pivot',  # r10
-    'agg_percentiles',  # r10
-    'agg_salted_two_stage',  # r10
-    'agg_grouping_id',  # r10
-    'dedup_exact',  # r10
-    'dedup_normalized',  # r10
-    'dedup_minhash_signature',  # r10
-    'dedup_minhash_lsh_pairs',  # r10
-    'similarity_threshold_sweep_lsh',  # r11
-    'sql_masking_column_policy',  # r11
-    'sql_masking_row_policy',  # r11
-    'agg_approx_count_distinct',  # r11
-    'agg_approx_percentiles',  # r11
-    'similarity_lsh_neardup',  # r11
-    'text_bpe_train',  # r11
-    'multimodal_decode_image',  # r11
-    'llm_corpus_clean',  # r11
-    'dedup_minhash_clusters',  # r11
-    'scan_text_roundtrip',  # r11
-    'fn_variant_json',  # r11
-    'graph_pagerank',  # r11
-    'dq_profile_drift',  # r11
-    'dq_ks_drift',  # r11
-    'q6_forecast_revenue',  # r11
-    'q2_min_cost_supplier',  # r11
-    'q8_market_share',  # r11
-    'q11_important_stock',  # r11
-    'q13_customer_distribution',  # r11
-    'q15_top_supplier',  # r11
-    'q16_supplier_part_count',  # r11
-    'q17_small_quantity_revenue',  # r11
-    'q20_potential_promotion',  # r11
-    'q21_suppliers_kept_waiting',  # r11
-    'corpus_split_assign',  # r11
-    'corpus_chunk_overlap',  # r11
-    'corpus_decontaminate',  # r11
-    'corpus_decontaminate_fuzzy',  # r11
-    'corpus_mixture_sample',  # r11
-    'corpus_dsir_weights',  # r11
-    'corpus_chunk_dedup',  # r11
-    'q3_shipping_priority',  # r11
-    'q5_local_supplier_volume',  # r11
-    'q10_returned_items',  # r11
-    'q4_order_priority',  # r11
-    'q7_volume_shipping',  # r11
-    'q12_priority_by_linestatus',  # r11
-    'q14_promo_revenue',  # r11
-    'q18_large_volume_customer',  # r11
-    'q19_disjunctive_predicates',  # r11
-    'q22_dormant_high_balance',  # r11
-    'events_activity_similarity',  # r11
-    'window_rolling_median',  # r11
-    'q1_pricing_summary',  # r11
-    'similarity_recall_lsh',  # r11
-    'similarity_ann_pq',  # r11
+#: Queries whose physical plan changed materially since their latest external
+#: green — they queue right after never-checked ones regardless of round age.
+#: Maintained by hand when a change restructures a query (the JSON ledger
+#: cannot see plan diffs).
+PLAN_CHANGED: tuple[str, ...] = (
+    # (the r12 entries — deferred-commit incremental syncs and the LUT JPEG
+    # decoders — were all verified green by the r12 external round and drop
+    # off the list.)
 )
+
+#: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live
+_LEDGER_DIR = Path(__file__).resolve().parent.parent
+
+
+def is_green(row: dict) -> bool:
+    """Green = hash-matched, or the driver's weaker rows-only pass.
+
+    Rows-only queries (oracle=None) come back as err="no_oracle" with a
+    spark_rows count and all three match flags None — that is the pass shape
+    the contract defines for them, not a failure.
+    """
+    if row.get("hash_match") is True:
+        return True
+    if row.get("err") == "no_oracle":
+        return row.get("spark_rows") is not None and row["spark_rows"] >= 0
+    if row.get("err"):
+        return False
+    return bool(row.get("rows_match")) and row.get("hash_match") is None
+
+
+def load_rounds(root: Path = _LEDGER_DIR) -> dict[int, dict]:
+    """``{round: {query: driver row}}`` from ``root/CORRECTNESS_r*.json``;
+    empty when no ledger is present (an installed package)."""
+    rounds: dict[int, dict] = {}
+    for p in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m:
+            rounds[int(m.group(1))] = json.loads(p.read_text())
+    return rounds
+
+
+def priority_order(
+    names: list[str],
+    rounds: dict[int, dict],
+    plan_changed: tuple[str, ...] = PLAN_CHANGED,
+) -> list[str]:
+    """The order the external driver should check ``names`` in, given its
+    past rounds. It checks ~50 queries per round in iteration order, so
+    the head of this order is the next round's window:
+
+    1. queries it has never checked;
+    2. ``plan_changed`` queries (their green predates today's plan);
+    3. everything else, oldest latest-green round first — a query whose
+       rows were never green sorts before all of them.
+
+    Ties keep ``names``' (registration) order, so with no rounds at all the
+    order is registration order."""
+    seen: set[str] = set()
+    latest: dict[str, int] = {}
+    for rnum in sorted(rounds):
+        for name, row in rounds[rnum].items():
+            seen.add(name)
+            if is_green(row):
+                latest[name] = rnum
+    pos = {n: i for i, n in enumerate(names)}
+
+    def key(n: str) -> tuple[int, int, int]:
+        if n not in seen:
+            return (0, 0, pos[n])
+        if n in plan_changed:
+            return (1, 0, pos[n])
+        return (2, latest.get(n, -1), pos[n])
+
+    return sorted(names, key=key)
 
 
 def all_specs() -> dict[str, QuerySpec]:
+    """Every registered query, in :func:`priority_order` over the committed
+    driver ledger."""
     _ensure_loaded()
-    ordered: dict[str, QuerySpec] = {}
-    for name in _PRIORITY:
-        spec = _REGISTRY.get(name)
-        if spec is not None:
-            ordered[name] = spec
-    for name, spec in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
-    return ordered
+    return {n: _REGISTRY[n] for n in priority_order(list(_REGISTRY), load_rounds())}
 
 
 def queries() -> dict[str, QueryFn]:

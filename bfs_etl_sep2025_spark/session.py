@@ -46,11 +46,24 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
+def _host_cpus() -> str:
+    """Cores this process may run on (its affinity mask, not the machine's
+    count), the default for ``SPARK_GRAFT_CPUS``."""
+    return str(len(os.sched_getaffinity(0)))
+
+
+def _host_driver_memory() -> str:
+    """Default ``spark.driver.memory``: three quarters of physical RAM, so
+    the heap never claims more than the host has."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram * 3 // 4 >> 30)}g"
+
+
 #: Shuffle parallelism. Local tests run tiny data where 200 (the Spark default)
 #: would create mostly-empty tasks; on a real cluster the AQE advisory target
 #: (64 MiB post-shuffle partitions) re-coalesces whatever initial number we
 #: pick, so a cores-sized default is right in both worlds.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
 
 
 def build_spark(
@@ -71,7 +84,7 @@ def build_spark(
     from bfs_etl_sep2025_spark.vendor import ensure_protobuf
 
     ensure_protobuf()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -103,7 +116,10 @@ def build_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- local-mode hygiene ------------------------------------------
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

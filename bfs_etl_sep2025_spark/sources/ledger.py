@@ -32,9 +32,16 @@ class LoadLedger:
         self.path = path
 
     def _read(self):
+        """The ledger rows. A missing path means nothing was loaded yet;
+        any other failure raises — reading an unreadable ledger as empty
+        would make COPY reload every file."""
+        from pyspark.errors import AnalysisException
+
         try:
             return self.spark.read.schema(_SCHEMA).parquet(self.path)
-        except Exception:  # first use: ledger dir does not exist yet
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], _SCHEMA)
 
     def loaded_files(self, table: str) -> set[str]:

@@ -1,147 +1,41 @@
 """Staleness ledger: latest external-driver round per registered query.
 
-The external driver hash-checks ~50 queries per round (iteration order of
-``__spark_entry__.queries()``, i.e. ``registry._PRIORITY`` first).  Keeping
-every query's newest external green fresh therefore requires rotating
-``_PRIORITY`` each round — and rounds 6 and 7 both recomputed the stale tail
-by hand (VERDICT r7 "what's wrong" #1 is exactly the bug manual rotation
-produces).  This script does it mechanically:
+The external driver hash-checks ~50 queries per round in the iteration
+order of ``__spark_entry__.queries()``. ``registry.all_specs()`` computes
+that order from the committed ``CORRECTNESS_r*.json`` files plus
+``registry.PLAN_CHANGED`` (see ``registry.priority_order``), so nothing
+needs pasting; this script only reports the ledger behind it:
 
-    python scripts/staleness_ledger.py            # human-readable ledger
-    python scripts/staleness_ledger.py --priority # paste-able stale tail
+    python scripts/staleness_ledger.py
 
-It diffs ``CORRECTNESS_r*.json`` into latest-round-per-query, reports
-
-  * queries NEVER externally checked (highest signal — check first),
-  * the stale tail ordered oldest-first (ties broken by registration order),
+  * queries NEVER externally checked (the head of the order),
   * any query whose latest row was NOT green (should be none, ever),
-
-and with ``--priority`` emits a Python tuple literal for the stale section of
-``registry._PRIORITY``.  Plan-changed queries cannot be detected from JSON
-alone; list them in ``PLAN_CHANGED`` below when a round restructures a query
-after its last green.
+  * the latest-green distribution and the oldest rotation candidates.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
-import re
 import sys
 from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-#: Queries whose physical plan changed materially since their latest external
-#: green — they queue right after never-checked ones regardless of round age.
-#: Maintained by hand per round (the JSON ledger cannot see plan diffs).
-PLAN_CHANGED: tuple[str, ...] = (
-    # (the r11 entries — approx sketches, lsh_neardup zero-norm guard,
-    # text_bpe_train batching, batched-DCT codec queries — were all
-    # verified green by the r11 external round and drop off the list.)
-    # r12: incremental stores restructured to deferred-commit syncs + one
-    # multi-batch upsert_many MERGE (verdicts proven identical in-session;
-    # re-verify externally per the plan-change rule).
-    "dedup_incremental_minhash",
-    "dedup_incremental_semantic",
-    # r12: JPEG entropy decode rewritten onto the 16-bit-lookahead LUT
-    # reader over destuffed scan segments (byte-identity proven by
-    # old-module A/B + snapshot suite; value path restructured, so
-    # re-verify externally per the r10/r11 codec precedent).
-    "multimodal_decode_jpeg_baseline",
-    "multimodal_decode_jpeg_progressive",
-    "multimodal_decode_jpeg_lossless",
-)
+from bfs_etl_sep2025_spark import registry  # noqa: E402
 
 
-def load_rounds() -> dict[int, dict]:
-    rounds: dict[int, dict] = {}
-    for p in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", p.name)
-        if not m:
-            continue
-        try:
-            rounds[int(m.group(1))] = json.loads(p.read_text())
-        except json.JSONDecodeError:
-            print(f"WARN: unparseable {p.name}", file=sys.stderr)
-    return rounds
-
-
-def is_green(row: dict) -> bool:
-    """Green = hash-matched, or the driver's weaker rows-only pass.
-
-    Rows-only queries (oracle=None) come back as err="no_oracle" with a
-    spark_rows count and all three match flags None — that is the pass shape
-    the contract defines for them, not a failure.
-    """
-    if row.get("hash_match") is True:
-        return True
-    if row.get("err") == "no_oracle":
-        return (row.get("spark_rows") or 0) >= 0 and row.get("spark_rows") is not None
-    if row.get("err"):
-        return False
-    return bool(row.get("rows_match")) and row.get("hash_match") is None
-
-
-def registered_names() -> list[str]:
-    sys.path.insert(0, str(REPO))
-    from bfs_etl_sep2025_spark import registry
-
-    return list(registry.all_specs())
-
-
-def build_ledger() -> tuple[dict[str, int], list[str], list[tuple[str, int]]]:
-    """Returns (latest_green_round, never_checked, latest_not_green)."""
-    rounds = load_rounds()
+def main() -> None:
+    rounds = registry.load_rounds()
     latest: dict[str, int] = {}
     latest_any: dict[str, tuple[int, bool]] = {}
     for rnum in sorted(rounds):
         for name, row in rounds[rnum].items():
-            green = is_green(row)
+            green = registry.is_green(row)
             latest_any[name] = (rnum, green)
             if green:
                 latest[name] = rnum
-    names = registered_names()
+    names = list(registry.all_specs())
     never = [n for n in names if n not in latest_any]
-    not_green = [
-        (n, latest_any[n][0])
-        for n in names
-        if n in latest_any and not latest_any[n][1]
-    ]
-    return latest, never, not_green
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument(
-        "--priority",
-        action="store_true",
-        help="emit the stale tail as a paste-able Python tuple body",
-    )
-    args = ap.parse_args()
-
-    latest, never, not_green = build_ledger()
-    names = registered_names()
-    reg_pos = {n: i for i, n in enumerate(names)}
-
-    stale = sorted(
-        (n for n in names if n in latest and n not in PLAN_CHANGED),
-        key=lambda n: (latest[n], reg_pos[n]),
-    )
-
-    if args.priority:
-        print("    # --- generated by scripts/staleness_ledger.py --priority ---")
-        print("    # never externally checked:")
-        for n in never:
-            print(f"    {n!r},")
-        if PLAN_CHANGED:
-            print("    # plan changed since latest green (PLAN_CHANGED):")
-            for n in PLAN_CHANGED:
-                print(f"    {n!r},")
-        print("    # stale tail, oldest external green first:")
-        for n in stale:
-            print(f"    {n!r},  # r{latest[n]}")
-        return
+    not_green = [(n, latest_any[n][0]) for n in names if n in latest_any and not latest_any[n][1]]
 
     print(f"registered queries: {len(names)}")
     print(f"externally checked (ever): {len(names) - len(never)}")
@@ -160,10 +54,9 @@ def main() -> None:
     print("\nlatest-green distribution:")
     for r in sorted(by_round):
         print(f"  r{r}: {by_round[r]}")
-    oldest = [n for n in stale[:60]]
-    print("\noldest 60 (rotation candidates):")
-    for n in oldest:
-        print(f"  r{latest[n]}  {n}")
+    print("\nnext driver window (first 60 of the computed order):")
+    for n in names[:60]:
+        print(f"  r{latest.get(n, '-')}  {n}")
 
 
 if __name__ == "__main__":

@@ -159,6 +159,16 @@ def test_rerun_is_idempotent(spark, pipeline, backfilled):
     assert spark.table("dev_db.prestg_product_order_trans").count() == before
 
 
+def test_ledger_missing_path_is_empty_but_unreadable_raises(spark, tmp_path):
+    """Only a ledger that does not exist yet means "nothing loaded"; a
+    ledger that cannot be read must fail the COPY, not reload every file."""
+    from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
+
+    assert LoadLedger(spark, str(tmp_path / "new")).loaded_files("t") == set()
+    with pytest.raises(Exception, match="nosuchfs"):
+        LoadLedger(spark, "nosuchfs://bucket/ledger").loaded_files("t")
+
+
 def test_option_map_coverage():
     reader, sentinels = map_file_format(FILE_FORMAT)
     assert reader["sep"] == ","

@@ -217,19 +217,20 @@ def test_merge_duplicate_source_raises(spark):
             "WHEN MATCHED THEN UPDATE SET v = s.v",
         )
     # target untouched by the failed merge
-    assert {(r.id, r.v) for r in spark.table("dev_db.u_tgt").collect()} == {
+    assert sorted((r.id, r.v) for r in spark.table("dev_db.u_tgt").collect()) == [
         (1, 10)
-    }
-    # insert-only MERGE is deterministic under duplicate matches: anti join
-    # collapses them, no guard, no error
+    ]
+    # insert-only MERGE is deterministic under duplicate matches: the anti
+    # join drops both source rows and the target row is neither fanned out
+    # nor rewritten (an append of nothing)
     run_merge(
         spark,
         "MERGE INTO dev_db.u_tgt t USING dev_db.u_src s ON t.id = s.id "
         "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)",
     )
-    assert {(r.id, r.v) for r in spark.table("dev_db.u_tgt").collect()} == {
+    assert sorted((r.id, r.v) for r in spark.table("dev_db.u_tgt").collect()) == [
         (1, 10)
-    }
+    ]
 
 
 # -- UPDATE / DELETE (plans/dml.py, same staging-rewrite machinery) ---------
@@ -566,15 +567,18 @@ def test_parse_merge_by_source_roundtrip(tgt, salias, key, cols, gval):
 # -- partition-pruned MERGE path ---------------------------------------------
 
 
-def _part_files(spark, table, part):
-    import os
-
-    loc = (
+def _location(spark, table):
+    return (
         spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
         .filter("col_name = 'Location'")
         .first()["data_type"]
-    ).replace("file:", "")
-    d = os.path.join(loc, part)
+    )
+
+
+def _part_files(spark, table, part):
+    import os
+
+    d = os.path.join(_location(spark, table).replace("file:", ""), part)
     return sorted(os.listdir(d)) if os.path.isdir(d) else []
 
 
@@ -651,6 +655,10 @@ def test_partitioned_merge_falls_back_when_unsafe(spark):
     )
     got = {(r["id"], r["v"], r["dt"]) for r in spark.table("pm_fb").collect()}
     assert got == {(1, "moved", "d9"), (2, "b", "d2")}
+    # the emptied partition is gone from the catalog, not left pointing at
+    # the replaced snapshot's directory
+    parts = sorted(r[0] for r in spark.sql("SHOW PARTITIONS pm_fb").collect())
+    assert parts == ["dt=d2", "dt=d9"]
     # BY SOURCE retire pass touches every partition; full rewrite path
     run_merge(
         spark,
@@ -889,7 +897,23 @@ def test_over_cap_bail_reuses_pin_and_drops_views(spark):
     assert (
         spark.sql("SELECT count(*) n FROM pm_cap WHERE dt = -1").first()["n"]
         == 1
-    )  # the pre-existing partition survived the full rewrite
+    )  # the pre-existing partition survived
+    # that insert-only MERGE was an append; an upsert over the same source
+    # takes the pin, bails past the cap and rewrites the whole partitioned
+    # table, which must re-register all 201 partitions
+    run_merge(
+        spark,
+        "MERGE INTO pm_cap AS t USING pm_cap_src AS s "
+        "ON t.id = s.id AND t.dt = s.dt "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v, dt) VALUES (s.id, s.v, s.dt)",
+    )
+    assert spark.table("pm_cap").count() == 201
+    assert spark.sql("SHOW PARTITIONS pm_cap").count() == 201
+    assert (
+        spark.sql("SELECT count(*) n FROM pm_cap WHERE dt = -1").first()["n"]
+        == 1
+    )
     leftover = [
         v.name
         for v in spark.catalog.listTables()
@@ -921,9 +945,190 @@ def test_null_partition_value_bails_to_full_rewrite(spark):
     )
     got = {(r["id"], r["v"], r["dt"]) for r in spark.table("pm_null").collect()}
     assert got == {(1, "a", "d1"), (2, "b", None)}
+    # an upsert takes the pin and the full rewrite: NULL never equals NULL,
+    # so the row inserts again, and the NULL partition is re-registered
+    run_merge(
+        spark,
+        "MERGE INTO pm_null AS t USING pm_null_src AS s "
+        "ON t.id = s.id AND t.dt = s.dt "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v, dt) VALUES (s.id, s.v, s.dt)",
+    )
+    got = sorted(
+        (r["id"], r["v"], r["dt"] or "") for r in spark.table("pm_null").collect()
+    )
+    assert got == [(1, "a", "d1"), (2, "b", ""), (2, "b", "")]
     assert [
         v.name
         for v in spark.catalog.listTables()
         if v.name.startswith("__merge_")
     ] == []
     spark.sql("DROP TABLE IF EXISTS pm_null")
+
+
+# -- one-write snapshot swap (merge.swap_snapshot) ----------------------------
+
+
+def _listing(path):
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def test_failed_duplicate_match_merge_leaves_everything_untouched(spark):
+    """A duplicate-match MERGE raises from inside the rewrite's own write:
+    the target keeps its rows, its location and its files, and the
+    database directory holds no leftover snapshot directory. The
+    delete-only shape runs the same counted join, so it raises too."""
+    import os
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS swap_fail_db")
+    spark.sql("DROP TABLE IF EXISTS swap_fail_db.f_tgt")
+    spark.sql("CREATE TABLE swap_fail_db.f_tgt (id INT, v INT) USING parquet")
+    spark.sql("INSERT INTO swap_fail_db.f_tgt VALUES (1, 10), (2, 20)")
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW f_src AS "
+        "SELECT * FROM VALUES (1, 100), (1, 200), (3, 300) AS t(id, v)"
+    )
+    loc = _location(spark, "swap_fail_db.f_tgt")
+    path = loc.replace("file:", "")
+    db_dir = os.path.dirname(path)
+    files, db_before = _listing(path), sorted(os.listdir(db_dir))
+    for stmt in (
+        "MERGE INTO swap_fail_db.f_tgt t USING f_src s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)",
+        "MERGE INTO swap_fail_db.f_tgt t USING f_src s ON t.id = s.id "
+        "WHEN MATCHED THEN DELETE",
+    ):
+        with pytest.raises(ValueError, match="nondeterministic"):
+            run_merge(spark, stmt)
+        rows = spark.table("swap_fail_db.f_tgt").collect()
+        assert sorted((r.id, r.v) for r in rows) == [(1, 10), (2, 20)]
+        assert _location(spark, "swap_fail_db.f_tgt") == loc
+        assert _listing(path) == files
+        assert sorted(os.listdir(db_dir)) == db_before
+    spark.sql("DROP DATABASE swap_fail_db CASCADE")
+
+
+def test_full_rewrite_is_one_write_without_staging_table(spark):
+    """MERGE, UPDATE and DELETE on a managed table issue no staging-table
+    statement: the snapshot is written once and the table flips onto it,
+    leaving one directory for the table in its database directory."""
+    import os
+
+    from bfs_etl_sep2025_spark.plans.dml import run_update_or_delete
+
+    class Recorder:
+        def __init__(self, inner):
+            self._inner, self.stmts = inner, []
+
+        def sql(self, stmt, *a, **kw):
+            self.stmts.append(stmt)
+            return self._inner.sql(stmt, *a, **kw)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS swap_one_db")
+    spark.sql("DROP TABLE IF EXISTS swap_one_db.o_tgt")
+    spark.sql("CREATE TABLE swap_one_db.o_tgt (id INT, v STRING) USING parquet")
+    spark.sql("INSERT INTO swap_one_db.o_tgt VALUES (1, 'a'), (2, 'b')")
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW o_src AS "
+        "SELECT * FROM VALUES (2, 'B'), (3, 'C') AS t(id, v)"
+    )
+    rec = Recorder(spark)
+    before = _location(spark, "swap_one_db.o_tgt")
+    run_merge(
+        rec,
+        "MERGE INTO swap_one_db.o_tgt t USING o_src s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)",
+    )
+    run_update_or_delete(rec, "UPDATE swap_one_db.o_tgt SET v = 'x' WHERE id = 1")
+    run_update_or_delete(rec, "DELETE FROM swap_one_db.o_tgt WHERE id = 3")
+    assert not [s for s in rec.stmts if "_stage" in s or "CREATE TABLE" in s]
+    rows = spark.table("swap_one_db.o_tgt").collect()
+    assert sorted((r.id, r.v) for r in rows) == [(1, "x"), (2, "B")]
+    after = _location(spark, "swap_one_db.o_tgt")
+    assert after != before
+    db_dir = os.path.dirname(after.replace("file:", ""))
+    assert os.listdir(db_dir) == [os.path.basename(after)]
+    # a managed drop still deletes the (relocated) data, and the name can
+    # be created again at its default path
+    spark.sql("DROP TABLE swap_one_db.o_tgt")
+    assert os.listdir(db_dir) == []
+    spark.sql("CREATE TABLE swap_one_db.o_tgt (id INT) USING parquet")
+    spark.sql("DROP DATABASE swap_one_db CASCADE")
+
+
+def test_external_table_rewrites_keep_location(spark, tmp_path):
+    """MERGE and DELETE on an external table replace its files in place:
+    LOCATION never moves, and a DROP plus CREATE … LOCATION over the same
+    path (what a new process does) reads the merged rows. The partitioned
+    variant re-registers its partitions from the new layout."""
+    from bfs_etl_sep2025_spark.plans.dml import run_update_or_delete
+
+    for part in ("", " PARTITIONED BY (dt)"):
+        path = str(tmp_path / f"ext{len(part)}")
+        ddl = (
+            "CREATE TABLE ext_t (id INT, v STRING, dt STRING) "
+            f"USING parquet{part} LOCATION '{path}'"
+        )
+        spark.sql("DROP TABLE IF EXISTS ext_t")
+        spark.sql(ddl)
+        spark.sql(
+            "INSERT INTO ext_t VALUES (1, 'a', 'd1'), (2, 'b', 'd1'), "
+            "(3, 'c', 'd2')"
+        )
+        if part:
+            spark.sql("ALTER TABLE ext_t RECOVER PARTITIONS")
+        loc = _location(spark, "ext_t")
+        spark.sql(
+            "CREATE OR REPLACE TEMPORARY VIEW ext_src AS SELECT * FROM "
+            "VALUES (2, 'B', 'd3'), (4, 'd', 'd3') AS t(id, v, dt)"
+        )
+        run_merge(
+            spark,
+            "MERGE INTO ext_t t USING ext_src s ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET v = s.v, dt = s.dt "
+            "WHEN NOT MATCHED THEN INSERT (id, v, dt) VALUES (s.id, s.v, s.dt)",
+        )
+        run_update_or_delete(spark, "DELETE FROM ext_t WHERE id = 1")
+        want = [(2, "B", "d3"), (3, "c", "d2"), (4, "d", "d3")]
+        got = sorted((r.id, r.v, r.dt) for r in spark.table("ext_t").collect())
+        assert got == want
+        assert _location(spark, "ext_t") == loc
+        assert not [f for f in _listing(path) if "_rewrite-" in f]
+        if part:
+            parts = [r[0] for r in spark.sql("SHOW PARTITIONS ext_t").collect()]
+            assert sorted(parts) == ["dt=d2", "dt=d3"]
+        spark.sql("DROP TABLE ext_t")  # external: the files stay
+        spark.sql(ddl)
+        if part:
+            spark.sql("ALTER TABLE ext_t RECOVER PARTITIONS")
+        got = sorted((r.id, r.v, r.dt) for r in spark.table("ext_t").collect())
+        assert got == want
+        spark.sql("DROP TABLE ext_t")
+
+
+def test_rewrite_keeps_char_varchar_insert_contract(spark):
+    """A path write skips the table-insert checks, so the rewrite applies
+    them itself: an over-long VARCHAR value raises and leaves the table
+    as it was; CHAR values are padded as INSERT pads them."""
+    from bfs_etl_sep2025_spark.plans.dml import run_update_or_delete
+
+    spark.sql("DROP TABLE IF EXISTS cv_t")
+    spark.sql("CREATE TABLE cv_t (id INT, s VARCHAR(3), c CHAR(3)) USING parquet")
+    spark.sql("INSERT INTO cv_t VALUES (1, 'ab', 'x')")
+    with pytest.raises(Exception, match="length limitation"):
+        run_update_or_delete(spark, "UPDATE cv_t SET s = 'toolong'")
+    run_update_or_delete(spark, "UPDATE cv_t SET s = 'xyz  ', c = 'y'")
+    got = [(r.s, r.c) for r in spark.table("cv_t").collect()]
+    assert got == [("xyz", "y  ")]
+    spark.sql("DROP TABLE cv_t")

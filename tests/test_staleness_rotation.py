@@ -1,99 +1,60 @@
-"""Guard: ``registry._PRIORITY`` must be rotated for the NEXT driver round.
+"""``registry.priority_order``: the driver-window order computed from the
+committed ``CORRECTNESS_r*.json`` files plus ``registry.PLAN_CHANGED``.
 
-Rounds 7 and 8 both shipped a ``_PRIORITY`` that still led with the names the
-previous driver run had just verified, so the ~50-query external window
-re-checked fresh greens while the oldest signals aged another round (VERDICT
-r7 "what's wrong" #1, VERDICT r8 #1 — the same miss twice).  This test makes
-the rotation un-forgettable: it recomputes the staleness ledger from the
-checked-in ``CORRECTNESS_r*.json`` files — exactly what
-``scripts/staleness_ledger.py`` does — and asserts the head of ``_PRIORITY``
-is dominated by the queries whose external signal is OLDEST (or that have
-none / changed plans), not by the latest round's already-green window.
-
-Red on HEAD whenever a new CORRECTNESS_r*.json lands without a re-rotation.
+The external driver checks ~50 queries per round in ``queries()`` order, so
+the head of that order must hold the queries with no green signal, then
+the plan-changed ones, then the oldest greens. The order is computed when
+``all_specs()`` runs, so landing a new ledger file re-rotates it without a
+paste step.
 """
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-from pathlib import Path
+import json
 
-REPO = Path(__file__).resolve().parent.parent
+from bfs_etl_sep2025_spark import registry
 
-# The external driver checks roughly this many queries per round (the head of
-# queries() iteration order).
-WINDOW = 40
+GREEN = {"hash_match": True}
+ROWS_ONLY = {"err": "no_oracle", "spark_rows": 3}
+RED = {"hash_match": False, "rows_match": False, "err": None}
 
 
-def _load_ledger_module():
-    spec = importlib.util.spec_from_file_location(
-        "staleness_ledger", REPO / "scripts" / "staleness_ledger.py"
+def test_priority_order_ranks_never_then_plan_changed_then_oldest():
+    names = ["a", "b", "c", "d", "e", "f", "g"]
+    rounds = {
+        1: {"a": GREEN, "b": GREEN, "c": GREEN, "d": ROWS_ONLY},
+        2: {"a": GREEN, "c": GREEN, "f": RED},
+        3: {"c": GREEN},
+    }
+    order = registry.priority_order(names, rounds, plan_changed=("c",))
+    # e, g never checked (registration order) -> c plan-changed -> f never
+    # green -> b, d last green r1 (registration order) -> a last green r2
+    assert order == ["e", "g", "c", "f", "b", "d", "a"]
+
+
+def test_priority_order_without_ledger_is_registration_order():
+    names = ["z", "y", "x"]
+    assert registry.priority_order(names, {}) == names
+
+
+def test_is_green_shapes():
+    assert registry.is_green(GREEN) and registry.is_green(ROWS_ONLY)
+    assert registry.is_green({"rows_match": True, "hash_match": None})
+    assert not registry.is_green(RED)
+    assert not registry.is_green({"err": "timeout"})
+
+
+def test_load_rounds_reads_only_ledger_files(tmp_path):
+    (tmp_path / "CORRECTNESS_r3.json").write_text(json.dumps({"q": GREEN}))
+    (tmp_path / "CORRECTNESS_r3_extra.json").write_text("not json")
+    assert registry.load_rounds(tmp_path) == {3: {"q": GREEN}}
+    assert registry.load_rounds(tmp_path / "missing") == {}
+
+
+def test_all_specs_follows_the_committed_ledger():
+    specs = registry.all_specs()
+    registered = list(registry._REGISTRY)
+    assert list(specs) == registry.priority_order(
+        registered, registry.load_rounds()
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_priority_head_is_rotated():
-    sys.path.insert(0, str(REPO))
-    from bfs_etl_sep2025_spark import registry
-
-    ledger = _load_ledger_module()
-    latest, never, not_green = ledger.build_ledger()
-    assert not not_green, f"latest external row not green for: {not_green}"
-
-    names = list(registry.all_specs())
-    rounds = sorted({r for r in latest.values()})
-    assert rounds, "no CORRECTNESS_r*.json ledger found"
-    newest = rounds[-1]
-    oldest = rounds[0]
-
-    head = names[:WINDOW]
-
-    # 1) Every never-checked query must be inside the window — a registered
-    #    query with NO external row ever is the highest-signal check.
-    missing_never = [n for n in never if n not in head]
-    assert not missing_never, (
-        f"never-externally-checked queries outside the first {WINDOW} of "
-        f"_PRIORITY: {missing_never}"
-    )
-
-    # 2) Every plan-changed query (ledger's hand-maintained list) must be in
-    #    the window — its green predates the plan it would run today.
-    missing_pc = [
-        n for n in ledger.PLAN_CHANGED if n in latest and n not in head
-    ]
-    assert not missing_pc, (
-        f"PLAN_CHANGED queries outside the first {WINDOW}: {missing_pc}"
-    )
-
-    # 3) The head must NOT be dominated by queries the newest round already
-    #    verified: if the oldest cohort still exists, the window belongs to it.
-    stale_names = [
-        n
-        for n in names
-        if n in latest and latest[n] < newest and n not in ledger.PLAN_CHANGED
-    ]
-    if stale_names or never:
-        fresh_in_head = sum(1 for n in head if latest.get(n) == newest and n not in ledger.PLAN_CHANGED)
-        budget = max(0, WINDOW - len(stale_names) - len(never) - len(ledger.PLAN_CHANGED))
-        assert fresh_in_head <= budget, (
-            f"{fresh_in_head} of the first {WINDOW} _PRIORITY entries were "
-            f"already green in the newest round r{newest} while "
-            f"{len(stale_names)} stale + {len(never)} never-checked queries "
-            f"wait outside the window — run `python scripts/staleness_ledger.py "
-            f"--priority` and paste into registry._PRIORITY"
-        )
-
-    # 4) The window must actually start with the oldest cohort: every query
-    #    whose latest green is the OLDEST round present must be in the head
-    #    (up to the window size).
-    oldest_cohort = [n for n in names if latest.get(n) == oldest]
-    if oldest < newest:
-        overflow = max(0, len(oldest_cohort) + len(never) + len(ledger.PLAN_CHANGED) - WINDOW)
-        outside = [n for n in oldest_cohort if n not in head]
-        assert len(outside) <= overflow, (
-            f"oldest-signal (r{oldest}) queries left outside the window head: "
-            f"{outside[:10]}… — rotate _PRIORITY"
-        )
+    assert sorted(specs) == sorted(registered)
