@@ -194,7 +194,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16-byte BINARY keys, not 32-char hex strings (the CLAUDE.md key-width
     # rule): halves the bytes through the broadcast hash table and the
     # count_distinct aggregate; outputs identical (gh is internal-only —
-    # r11 A/B: parity-or-better locally, scripts/ab_r11/ab_decon.py)
+    # r11 A/B: parity-or-better locally)
     eval_grams = (
         exploded_ngrams(d.filter(is_eval), n=_GRAM_N, out="g")
         .select(F.unhex(F.md5("g")).alias("gh"))

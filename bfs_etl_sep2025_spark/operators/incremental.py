@@ -56,14 +56,19 @@ from bfs_etl_sep2025_spark.operators.dedup import (
     minhash_signatures,
 )
 from bfs_etl_sep2025_spark.operators.similarity import (
+    MAX_BROADCAST_CENTROIDS,
     SEMDEDUP_STRIDE,
     SEMDEDUP_TAU,
+    _ivf_assign,
+    _norm_arr,
     _sql_dot,
     _sql_norm,
+    exact_rerank,
+    gemm_pairs,
 )
 from bfs_etl_sep2025_spark.plans.versioned import VersionedTable
 from bfs_etl_sep2025_spark.registry import query
-from bfs_etl_sep2025_spark.tables import load
+from bfs_etl_sep2025_spark.tables import load, widen
 
 #: signature-agreement threshold shared with dedup_minhash_lsh_pairs:
 #: est-Jaccard >= 0.5 <=> >= half the minhashes agree
@@ -321,108 +326,35 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sem_sync_batch(spark, batch, cent, store, pending=None):
     """One semantic-dedup sync: BLAS-assign the delta to its fixed cell,
-    rectangular GEMM-prefilter (delta x pool — store-vs-store is never
-    re-scored) per cell, exact ordered-fold rerank behind the pushdown
-    barrier, MERGE-commit the delta, return (vec_id, exemplar) verdicts.
+    GEMM-prefilter each cell in delta mode (:func:`gemm_pairs` with
+    ``delta_col`` — only delta rows are scored, so store-vs-store pairs are
+    never re-scored), exact-rerank the candidates
+    (:func:`similarity.exact_rerank`), MERGE-commit the delta, and return
+    (vec_id, exemplar) verdicts.
 
     ``pending`` switches on the same deferred-commit mode as
     :func:`sync_batch`: earlier deltas' checkpointed rows stand in for
     their (not yet committed) store versions, the delta is appended to
     ``pending``, and the caller group-commits via :func:`commit_pending`."""
-    import pandas as pd
-
-    from bfs_etl_sep2025_spark.operators.similarity import (
-        MAX_BROADCAST_CENTROIDS,
-        SEMDEDUP_TAU,
-        _dot_arr,
-        _ivf_assign,
-    )
-    from bfs_etl_sep2025_spark.operators._barrier import barrier_filter
-
     assigned = (
         _ivf_assign(batch, cent, MAX_BROADCAST_CENTROIDS)
         .filter(F.col("cr") == 1)
         .select("vec_id", "cell", "embedding", "nrm")
         .localCheckpoint(eager=True)  # feeds the pool, the rerank, the MERGE
     )
-    prior = None
-    for earlier in pending or []:
-        prior = earlier if prior is None else prior.unionByName(earlier)
-    if store.exists():
-        sread = store.read()
-        prior = sread if prior is None else prior.unionByName(sread)
-    pool = assigned if prior is None else prior.unionByName(assigned)
-    tagged = (
-        (
-            prior.withColumn("is_delta", F.lit(0))
-            if prior is not None
-            else spark.createDataFrame(
-                [], assigned.schema
-            ).withColumn("is_delta", F.lit(0))
-        )
-        .unionByName(assigned.withColumn("is_delta", F.lit(1)))
-    )
-    margin = 1e-9
-
-    def cell_rect_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
-
-        single_thread_blas()  # r11: tasks fill the cores; threaded GEMM loses
-        import numpy as _np
-
-        d = pdf[pdf["is_delta"] == 1]
-        if len(d) == 0 or len(pdf) < 2:
-            return pd.DataFrame({"u": [], "v": []}, dtype="int64")
-        idu = d["vec_id"].to_numpy()
-        idv = pdf["vec_id"].to_numpy()
-        Vd = _np.stack(d["embedding"].to_numpy()).astype(_np.float64)
-        Vp = _np.stack(pdf["embedding"].to_numpy()).astype(_np.float64)
-        nd = _np.linalg.norm(Vd, axis=1, keepdims=True)
-        npl = _np.linalg.norm(Vp, axis=1, keepdims=True)
-        # same zero-norm contract as every GEMM prefilter (ADVICE r10)
-        if not (nd > 0.0).all() or not (npl > 0.0).all():
-            raise ValueError(
-                "zero-norm embedding reached a GEMM prefilter bucket: "
-                "cosine undefined; filter degenerate vectors upstream "
-                "(symmetrically in the oracle) first"
-            )
-        G = (Vd / nd) @ (Vp / npl).T
-        iu, iv = _np.nonzero(
-            (G >= SEMDEDUP_TAU - margin) & (idv[None, :] < idu[:, None])
-        )
-        return pd.DataFrame({"u": idu[iu], "v": idv[iv]})
-
-    # r11: deliberately NOT width-forced like dedup_semantic_embedding's
-    # cell exchange — each sync sees only one delta batch (a third of the
-    # corpus here), and a measured A/B showed the fixed-width repartition
-    # LOSING ~3 s across the three syncs (64-task overhead on per-batch
-    # data AQE handles fine). The BLAS pin in the GEMM stands.
-    cand = (
-        tagged.select("cell", "vec_id", "embedding", "is_delta")
-        .groupBy("cell")
-        .applyInPandas(cell_rect_candidates, "u long, v long")
-    )
-    emb_u = pool.select(
-        F.col("vec_id").alias("u"),
-        F.col("embedding").alias("u_emb"),
-        F.col("nrm").alias("u_nrm"),
-    )
-    emb_v = pool.select(
-        F.col("vec_id").alias("v"),
-        F.col("embedding").alias("v_emb"),
-        F.col("nrm").alias("v_nrm"),
-    )
-    cos = _dot_arr("u_emb", "v_emb") / (F.col("u_nrm") * F.col("v_nrm"))
-    scored = (
-        cand.join(emb_u, "u").join(emb_v, "v").select("u", "v", cos.alias("cosine"))
-    )
-    pairs = barrier_filter(scored, F.col("cosine") >= SEMDEDUP_TAU)
-    agg = pairs.groupBy("u").agg(
-        F.min("v").cast("bigint").alias("exemplar")
+    pool = assigned.withColumn("is_delta", F.lit(True))
+    prior = list(pending or []) + ([store.read()] if store.exists() else [])
+    for earlier in prior:
+        pool = pool.unionByName(earlier.withColumn("is_delta", F.lit(False)))
+    cand = gemm_pairs(pool, ["cell"], SEMDEDUP_TAU, delta_col="is_delta")
+    agg = (
+        exact_rerank(pool, cand, SEMDEDUP_TAU)
+        .groupBy("b")
+        .agg(F.min("a").cast("bigint").alias("exemplar"))
     )
     verdicts = (
         assigned.select("vec_id")
-        .join(agg.withColumnRenamed("u", "vec_id"), "vec_id", "left")
+        .join(agg.withColumnRenamed("b", "vec_id"), "vec_id", "left")
         .select("vec_id", "exemplar")
     )
     if pending is not None:
@@ -487,12 +419,12 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_semantic_embedding`` — real deployments train k-means on an
     initial sample, same dataflow); three arrival batches (contiguous
     ``vec_id`` ranges) are each BLAS-assigned to their cell
-    (:func:`similarity._ivf_assign`, delta-only), rectangular
-    GEMM-prefiltered against the cell's pool (delta rows x store+delta
-    rows — store-vs-store pairs are never re-scored, the property that
-    makes the sync cost O(delta x cell), not O(corpus x cell)), exact
-    ordered-fold reranked behind the pushdown barrier at
-    τ={SEMDEDUP_TAU}, and MERGE-upserted into a ``VersionedTable``
+    (:func:`similarity._ivf_assign`, delta-only), GEMM-prefiltered
+    against the cell's pool in delta mode (:func:`similarity.gemm_pairs`:
+    delta rows x store+delta rows — store-vs-store pairs are never
+    re-scored, the property that makes the sync cost O(delta x cell), not
+    O(corpus x cell)), exact-reranked (:func:`similarity.exact_rerank`)
+    at τ={SEMDEDUP_TAU}, and MERGE-upserted into a ``VersionedTable``
     (vec_id, cell, embedding, nrm) store. Verdict: ``near_dup`` iff some
     SMALLER-id doc in the same cell clears τ; ``exemplar`` is the
     smallest such id. Ids are monotone and batches are id-ordered, so
@@ -502,16 +434,10 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-checked externally every round it's sampled.
 
     Scale notes (100 TB): per-sync cost is O(delta x codebook) BLAS for
-    assignment + one rectangular GEMM per touched cell (cell population
-    is the knob, as in SemDeDup) + one narrow MERGE keyed on ``vec_id``
-    (file-pruned by footer ranges); only (u, v) id-pairs leave Python,
-    and the store is read via a cell equi-join, never re-paired."""
-    from bfs_etl_sep2025_spark.operators.similarity import (
-        SEMDEDUP_STRIDE,
-        _norm_arr,
-    )
-    from bfs_etl_sep2025_spark.tables import widen
-
+    assignment + delta-rows x cell GEMMs per touched cell (cell
+    population is the knob, as in SemDeDup) + one narrow MERGE keyed on
+    ``vec_id`` (file-pruned by footer ranges); only id-pairs leave
+    Python, and the store is read via a cell equi-join, never re-paired."""
     e = widen(load(spark, sf_dir, "embeddings"))
     # r11 (guide §5): n feeds the percentile probe, the centroid slice and
     # all three delta batches, and cent's codebook is COLLECTED once per

@@ -405,18 +405,6 @@ def _jpeg_canonical(bits, vals):
 
 
 @_functools.lru_cache(maxsize=256)
-def _jpeg_canonical_inv(bits, vals):
-    """Decoder view of :func:`_jpeg_canonical` — {(code, length): symbol}
-    — cached for the same reason (the decoders inverted the dict per scan
-    per asset). Read-only-enforced like its twin."""
-    import types
-
-    return types.MappingProxyType(
-        {v: k for k, v in _jpeg_canonical(bits, vals).items()}
-    )
-
-
-@_functools.lru_cache(maxsize=256)
 def _jpeg_lut16(bits, vals):
     """16-bit-lookahead Huffman decode table (r12, VERDICT r11 item 4):
     ``lut[window] = (symbol << 5) | code_length`` for every 16-bit window

@@ -28,14 +28,23 @@ into exponential tree growth: the optimizer itself OOMs a 16 GiB driver
 before any task runs. Literal-index ``element_at`` gives the identical
 codegen'd machine code with ~3 aliases per projection.)
 
+Every near-duplicate pair (exact all-pairs, banded LSH, the threshold
+sweeps, SemDeDup and incremental SemDeDup in ``incremental.py``) comes from
+the same two functions here: :func:`gemm_pairs`, a tiled numpy GEMM
+prefilter that emits candidate id pairs per group, and
+:func:`exact_rerank`, which re-scores them with the ordered fold above. The
+BLAS pin, the zero-norm check and the tile exchange live only there.
+
 Scale notes (100 TB / billions of vectors):
 - Brute force is O(|Q|·N) with a broadcast query set — right only for small
   Q; it exists as the correctness baseline and rerank primitive.
 - The LSH path shuffles each vector ONCE by bucket key; probes only join
   their bucket (collision prob per hyperplane = 1 - θ/π). Recall is tuned
   by bits/tables, not rewrites — production would union 4-8 such tables.
-- Range search brute-forces all pairs here (oracle-checkable); at scale the
-  identical rerank runs after the same bucket join.
+- Range search scores all pairs here (oracle-checkable); at scale the
+  identical rerank runs after the same bucket grouping.
+- :func:`gemm_pairs` tiles every group into ~4k-row sub-blocks, so one
+  large bucket or cell spreads over many tasks instead of one.
 """
 
 from __future__ import annotations
@@ -47,6 +56,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from bfs_etl_sep2025_spark.operators._barrier import barrier_filter
 from bfs_etl_sep2025_spark.registry import query
@@ -162,6 +172,150 @@ def _sql_bucket(v: str, planes: list[list[float]] | None = None) -> str:
         for plane in (planes if planes is not None else PLANES)
     ]
     return " || ".join(bits)
+
+
+# -- GEMM prefilter + exact rerank (every near-duplicate pair) --------------
+
+#: rows per sub-block tile: a (TILE x DIM) float64 tile is ~2 MB, so one
+#: tile-pair task holds ~4 MB whatever the group's population.
+_GEMM_TILE = 4096
+
+#: prefilter margin below the threshold: ~1e5x the worst float64
+#: summation-order divergence of a DIM-term unit dot (~DIM·eps ≈ 1.4e-14),
+#: so every pair whose ordered-fold cosine clears τ is a candidate.
+_GEMM_MARGIN = 1e-9
+
+
+def gemm_pairs(
+    rows: DataFrame,
+    group_cols: list[str],
+    tau: float,
+    delta_col: str | None = None,
+) -> DataFrame:
+    """Candidate pairs ``(group_cols…, a, b)`` with ``a < b``: every pair of
+    rows in the same group whose BLAS cosine is at least ``tau`` minus
+    :data:`_GEMM_MARGIN`. ``rows`` carries ``group_cols``, ``vec_id`` and
+    ``embedding`` (and ``delta_col`` when given).
+
+    Each group's members hash into ``nb = ceil(population / _GEMM_TILE)``
+    sub-blocks by ``pmod(xxhash64(vec_id), nb)``; the populations come from
+    one aggregate joined back as a broadcast (one row per group, nothing
+    collected to the driver). Each member row explodes into the ``nb`` tiles
+    ``(min(sub, k), max(sub, k))`` its sub-block takes part in, and each
+    tile is one numpy GEMM over unit rows, so every unordered pair of a
+    group is scored in exactly one tile. Sub-blocks hash on the id, not its
+    value, so sparse or 64-bit id spaces cost nothing. The tile exchange
+    has no explicit partition count, for every consumer: AQE sizes it. On
+    a 4-core host at sf0.1 a fixed 2x-defaultParallelism width cost more
+    CPU-seconds on the LSH, SemDeDup and incremental queries (most on
+    per-sync deltas, where it spread a few hundred rows over 8 tasks).
+
+    With ``delta_col`` (a boolean column) only pairs whose larger id is a
+    delta row are emitted, and only delta rows are scored against the tile:
+    pairs of two non-delta rows are never computed, which keeps an
+    incremental sync O(delta x group).
+
+    Emitted ids are candidates only: BLAS summation order differs from the
+    engines' ordered fold, so callers re-score them with
+    :func:`exact_rerank`. A zero-norm embedding has no cosine, and numpy's
+    ``NaN >= tau`` is False where Spark and DuckDB order NaN above every
+    number, so the kernel raises instead of silently dropping its pairs."""
+    thr = tau - _GEMM_MARGIN
+    extra = [delta_col] if delta_col else []
+    rows = rows.select(*group_cols, "vec_id", "embedding", *extra)
+    pop = rows.groupBy(*group_cols).agg(
+        F.ceil(F.count(F.lit(1)) / _GEMM_TILE).cast("int").alias("__nb")
+    )
+    sub = F.pmod(F.xxhash64("vec_id"), F.col("__nb")).cast("int")
+    k = F.explode(F.sequence(F.lit(0), F.col("__nb") - 1))
+    tiles = (
+        rows.join(F.broadcast(pop), group_cols or None)
+        .select("*", sub.alias("__sub"), k.alias("__k"))
+        .select(
+            *group_cols,
+            F.least("__sub", "__k").alias("__ta"),
+            F.greatest("__sub", "__k").alias("__tb"),
+            "__sub",
+            "vec_id",
+            "embedding",
+            *extra,
+        )
+    )
+    keys = [*group_cols, "__ta", "__tb"]
+
+    def kernel(key, pdf):
+        from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
+
+        single_thread_blas()  # tasks fill the cores; threaded GEMM loses
+        import numpy as np
+
+        *group, ta, tb = key
+        ids = pdf["vec_id"].to_numpy()
+        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        nrm = np.linalg.norm(V, axis=1, keepdims=True)
+        if not (nrm > 0.0).all():
+            raise ValueError(
+                "zero-norm embedding reached a GEMM prefilter: cosine "
+                "undefined; filter degenerate vectors upstream "
+                "(symmetrically in the oracle) first"
+            )
+        U = V / nrm
+        sub = pdf["__sub"].to_numpy()
+        side_a, side_b = sub == ta, sub == tb
+        # (scorer rows, partner rows, keep only partner id < scorer id)
+        if delta_col is None:
+            passes = [(side_a, side_b, ta == tb)]
+        else:
+            d = pdf[delta_col].to_numpy(dtype=bool)
+            passes = [(side_a & d, side_b, True)]
+            if ta != tb:
+                passes.append((side_b & d, side_a, True))
+        us, vs = [], []
+        for r, c, ordered in passes:
+            keep = U[r] @ U[c].T >= thr
+            if ordered:
+                keep &= ids[c][None, :] < ids[r][:, None]
+            i, j = np.nonzero(keep)
+            us.append(ids[r][i])
+            vs.append(ids[c][j])
+        u, v = np.concatenate(us), np.concatenate(vs)
+        return pd.DataFrame(
+            {**dict(zip(group_cols, group)), "a": np.minimum(u, v),
+             "b": np.maximum(u, v)}
+        )
+
+    schema = StructType(
+        [rows.schema[c] for c in group_cols]
+        + [StructField("a", LongType()), StructField("b", LongType())]
+    )
+    return tiles.groupBy(*keys).applyInPandas(kernel, schema)
+
+
+def exact_rerank(vecs: DataFrame, cand: DataFrame, tau: float) -> DataFrame:
+    """Re-score candidate pairs: ``cand``'s columns plus ``cosine``, the
+    ordered-fold codegen'd dot (:func:`_dot_arr`) of ids ``a`` and ``b``
+    over their norms, kept where it is at least ``tau``. ``vecs`` carries
+    ``vec_id``, ``embedding`` and ``nrm``. The filter sits behind the
+    pushdown barrier so the 64-term chain never rides a join condition,
+    and the emitted cosine is the value the oracle folds: BLAS order never
+    reaches it."""
+    side = {
+        s: vecs.select(
+            F.col("vec_id").alias(s),
+            F.col("embedding").alias(f"__{s}_emb"),
+            F.col("nrm").alias(f"__{s}_nrm"),
+        )
+        for s in ("a", "b")
+    }
+    cos = _dot_arr("__a_emb", "__b_emb") / (
+        F.col("__a_nrm") * F.col("__b_nrm")
+    )
+    scored = (
+        cand.join(side["a"], "a")
+        .join(side["b"], "b")
+        .select(*cand.columns, cos.alias("cosine"))
+    )
+    return barrier_filter(scored, F.col("cosine") >= tau)
 
 
 # ---------------------------------------------------------------------------
@@ -558,11 +712,6 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: blocked all-pairs tile width: a (BLOCK x DIM) float64 tile is ~2 MB,
-#: so a block-pair group holds ~4 MB regardless of corpus size.
-_NEARDUP_BLOCK = 4096
-
-
 @query(
     "similarity_cosine_neardup",
     family="similarity",
@@ -582,151 +731,30 @@ _NEARDUP_BLOCK = 4096
 def similarity_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-level near-duplicate pairs (cosine >= τ=0.45 — chosen to be
     meaningful on the fixture's random vectors, whose max pairwise cosine is
-    ~0.51). EXACT all-pairs — the oracle-checkable baseline the LSH bucket
-    join above approximates — executed as a BLOCKED GEMM neighbor join
-    (r8, re-blocked r9): vectors tile into hash-assigned blocks of expected
-    size {_NEARDUP_BLOCK} (``pmod(xxhash64(vec_id), nb)`` with ``nb =
-    ceil(count / block)`` — a dense RANK-shaped assignment that never looks
-    at the id VALUE, so sparse / offset / 64-bit id spaces cost nothing;
-    the r8 shape derived nb from max(vec_id) and materialized all O(nb²)
-    block pairs as a driver-side Python list, which explodes on sparse ids
-    — ADVICE r8), the block-pair table (upper triangle of block ids) is
-    built from ``spark.range`` arithmetic with no driver materialization
-    and replicates each tile to its partners, one numpy A @ B.T per
-    block-pair emits only the (vec_a, vec_b) candidates clearing τ minus a
-    1e-9 margin (~1e5x the worst float64 summation-order divergence, so
-    the exact survivor set is provably contained), and survivors re-score
-    through the ordered-fold codegen'd dot behind the pushdown barrier —
-    the hashed cosine is the fold value, BLAS order never reaches it (the
-    semdedup contract). Hash blocks do not preserve id ordering, so the
-    tile emits each pair min/max-normalized — every unordered pair lands
-    in exactly one (ba <= bb) group, so once globally. The pre-r8 shape
-    evaluated the 64-term chain per row of the full N²/2 nested-loop
-    product: 1159 s at sf1 vs ~20 s blocked.
+    ~0.51). EXACT all-pairs: the oracle-checkable baseline that the banded
+    LSH route (:func:`similarity_lsh_neardup`) approximates. The whole
+    table is one :func:`gemm_pairs` group, so it tiles into
+    ``ceil(count / _GEMM_TILE)`` hash sub-blocks with one GEMM task per
+    sub-block pair, and :func:`exact_rerank` re-scores the survivors.
 
     Scale notes (100 TB): the N²/2 pair COUNT is the definition of the
-    query — blocking changes the constant, not the asymptotics (shuffle
-    is tiles x partner-count, compute is BLAS-rate instead of
-    row-expression-rate; per-group memory is two fixed ~2 MB expected
-    tiles at any corpus size, with multiplicative-Chernoff-tight variance
-    at thousands of rows per block). Production near-dup runs the LSH
-    candidate path (``similarity_topk_lsh`` machinery) and reranks exactly
-    the same way; this operator is the exact baseline that validates it."""
-    scored = _blocked_exact_pairs(spark, sf_dir, 0.45)
-    if scored is None:
-        return spark.createDataFrame(
-            [], "vec_a long, vec_b long, cosine double"
-        )
-    return scored.orderBy("vec_a", "vec_b")
+    query — tiling changes the constant, not the asymptotics (shuffle is
+    tiles x partner count, compute runs at BLAS rate instead of
+    row-expression rate, per-task memory is two ~2 MB tiles at any corpus
+    size). Production near-dup runs the LSH candidate path and reranks
+    exactly the same way; this operator is the exact baseline that
+    validates it."""
+    return _exact_pairs(spark, sf_dir, 0.45).orderBy("vec_a", "vec_b")
 
 
-def _blocked_exact_pairs(spark: SparkSession, sf_dir: str, tau: float):
-    """Shared blocked-GEMM all-pairs engine: every (vec_a < vec_b, cosine)
-    pair with EXACT ordered-fold cosine >= ``tau``, candidate-generated by
-    per-tile numpy GEMM at ``tau`` minus a 1e-9 margin and reranked behind
-    the pushdown barrier (contract and scale notes:
-    :func:`similarity_cosine_neardup`, whose plan this IS). Returns None
-    on an empty embeddings table."""
-    import numpy as np  # noqa: F401  (executors re-import in the UDF)
-
+def _exact_pairs(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
+    """Every ``(vec_a < vec_b, cosine)`` pair whose EXACT ordered-fold
+    cosine is at least ``tau``: the whole embeddings table as one
+    :func:`gemm_pairs` group, then :func:`exact_rerank`."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    cnt = n.count()  # 1-row action
-    if cnt == 0:
-        return None
-    nb = max(1, -(-cnt // _NEARDUP_BLOCK))
-    bp = (
-        spark.range(nb * nb)
-        .select(
-            (F.col("id") / nb).cast("int").alias("ba"),
-            (F.col("id") % nb).cast("int").alias("bb"),
-        )
-        .filter(F.col("ba") <= F.col("bb"))
-    )
-    blk = F.pmod(F.xxhash64("vec_id"), F.lit(nb)).cast("int")
-    tagged_a = (
-        n.select("vec_id", "embedding", blk.alias("ba"))
-        .join(bp, "ba")
-        .select("ba", "bb", "vec_id", "embedding", F.lit(0).alias("side"))
-    )
-    tagged_b = (
-        n.select("vec_id", "embedding", blk.alias("bb"))
-        .join(bp, "bb")
-        .select("ba", "bb", "vec_id", "embedding", F.lit(1).alias("side"))
-    )
-    margin = 1e-9
-
-    def tile_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
-
-        single_thread_blas()  # r11: tasks fill the cores; threaded GEMM loses
-        import numpy as _np
-
-        same = pdf["ba"].iloc[0] == pdf["bb"].iloc[0]
-        sa = pdf[pdf["side"] == 0]
-        sb = pdf if same else pdf[pdf["side"] == 1]
-        if len(sa) == 0 or len(sb) == 0:
-            # sparse id spaces (the sf1 replication offsets ids) can leave
-            # a tile empty on one side of a pair — nothing to compare
-            return pd.DataFrame({"vec_a": [], "vec_b": []}, dtype="int64")
-        ia = sa["vec_id"].to_numpy()
-        ib = sb["vec_id"].to_numpy()
-        oa, ob = _np.argsort(ia), _np.argsort(ib)
-        ia, ib = ia[oa], ib[ob]
-        A = _np.stack(sa["embedding"].to_numpy()[oa]).astype(_np.float64)
-        B = (
-            A
-            if same
-            else _np.stack(sb["embedding"].to_numpy()[ob]).astype(
-                _np.float64
-            )
-        )
-        A = A / _np.linalg.norm(A, axis=1, keepdims=True)
-        Bn = A if same else B / _np.linalg.norm(B, axis=1, keepdims=True)
-        G = A @ Bn.T
-        mask = G >= tau - margin
-        if same:
-            mask = _np.triu(mask, k=1)
-        iu, iv = _np.nonzero(mask)
-        # hash blocks carry arbitrary id ranges on both sides — normalize
-        # each pair to (min, max) so the output always has vec_a < vec_b
-        u, v = ia[iu], ib[iv]
-        return pd.DataFrame(
-            {"vec_a": _np.minimum(u, v), "vec_b": _np.maximum(u, v)}
-        )
-
-    # ba == bb groups carry each vector once (side 0 row from bp's (i, i));
-    # dedupe the side-1 twin so the diagonal tile is not doubled
-    union = tagged_a.unionByName(
-        tagged_b.filter(F.col("ba") != F.col("bb"))
-    )
-    # r11 (guide §2.5): explicit scale-adaptive width — the tile exchange
-    # is few-MB but each group runs a GEMM, so AQE's size-based coalescing
-    # must not shrink the stage (same fix as _lsh_band_candidates).
-    parts = 2 * spark.sparkContext.defaultParallelism
-    cand = (
-        union.repartition(parts, "ba", "bb")
-        .groupBy("ba", "bb")
-        .applyInPandas(tile_candidates, "vec_a long, vec_b long")
-    )
-    au = n.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    bv = n.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = _dot_arr("a_emb", "b_emb") / (F.col("nrm_a") * F.col("nrm_b"))
-    scored = (
-        cand.join(au, "vec_a")
-        .join(bv, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-    )
-    return barrier_filter(scored, F.col("cosine") >= tau).select(
-        "vec_a", "vec_b", "cosine"
+    return exact_rerank(n, gemm_pairs(n, [], tau), tau).select(
+        F.col("a").alias("vec_a"), F.col("b").alias("vec_b"), "cosine"
     )
 
 
@@ -758,86 +786,43 @@ def _blocked_exact_pairs(spark: SparkSession, sf_dir: str, tau: float):
 )
 def similarity_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION near-duplicate route: BANDED random-hyperplane LSH
-    candidates + exact rerank at τ=0.45 — the plan the exact blocked-GEMM
-    baseline (:func:`similarity_cosine_neardup`) exists to validate, now
-    oracled in its own right. The 8 sign bits split into two 4-bit bands;
-    a pair is a candidate if it agrees on EITHER band (minhash-style
-    banding — the single 8-bit bucket catches ~(1-θ/π)^8 ≈ 3% of τ=0.45
-    pairs, the 2x4 OR ≈ 33%, and the fixture measures 9 of the exact 14).
-    Candidates come from two EQUI-JOINS on the band keys unioned and
-    de-duplicated (the hot-path rule: never a cross join, never an
-    OR-join — Spark would plan OR as BroadcastNestedLoopJoin); survivors
-    re-score through the codegen'd ordered-fold dot behind the pushdown
-    barrier, so every emitted cosine is bit-identical to the exact
-    baseline's — LSH changes RECALL (which pairs are seen), never a
-    value. Both engines compute identical band strings (sign of the same
-    left-folded plane dots), hence identical candidate sets.
+    candidates + exact rerank at τ=0.45 — the plan the exact baseline
+    (:func:`similarity_cosine_neardup`) exists to validate, oracled in its
+    own right. The 8 sign bits split into two 4-bit bands; a pair is a
+    candidate if it agrees on EITHER band (minhash-style banding — the
+    single 8-bit bucket catches ~(1-θ/π)^8 ≈ 3% of τ=0.45 pairs, the 2x4
+    OR ≈ 33%, and the fixture measures 9 of the exact 14). Each band
+    bucket is one :func:`gemm_pairs` group (never a cross join, never an
+    OR-join — Spark would plan OR as BroadcastNestedLoopJoin), and
+    :func:`exact_rerank` re-scores the deduplicated candidates, so every
+    emitted cosine is bit-identical to the exact baseline's — LSH changes
+    RECALL (which pairs are seen), never a value. Both engines compute
+    identical band strings (sign of the same left-folded plane dots),
+    hence identical candidate sets.
 
-    Scale notes (100 TB): shuffle is one exchange per band key;
-    within-band pairing is quadratic in band size — the standard LSH
-    bargain, tuned by widening bands (smaller buckets, lower recall) or
-    adding bands (higher recall, more candidates).
-    ``test_llm_ops`` pins containment: every LSH pair is an exact-baseline
-    pair with an equal cosine."""
+    Scale notes (100 TB): shuffle is linear in corpus size; within-bucket
+    pairing is quadratic in bucket size — the standard LSH bargain, tuned
+    by widening bands (smaller buckets, lower recall) or adding bands
+    (higher recall, more candidates) — and large buckets tile into many
+    GEMM tasks instead of one. ``test_llm_ops`` pins containment: every
+    LSH pair is an exact-baseline pair with an equal cosine."""
     n, cand = _lsh_band_candidates(spark, sf_dir, 0.45)
-    # r11 (CLAUDE.md r10 sort rule): the global sort's range-partition
-    # sampling would re-run the whole rerank stage (broadcast joins + the
-    # 64-term fold) a second time — checkpoint the small scored pairs so
-    # the sort samples materialized rows instead.
-    scored = _lsh_exact_rerank(n, cand, 0.45).localCheckpoint(eager=False)
-    return scored.orderBy("vec_a", "vec_b")
+    # the global sort's range-partition sampling would re-run the whole
+    # rerank stage (joins + the 64-term fold) a second time — checkpoint
+    # the small scored pairs so the sort samples materialized rows instead
+    scored = exact_rerank(n, cand, 0.45).localCheckpoint(eager=False)
+    return scored.select(
+        F.col("a").alias("vec_a"), F.col("b").alias("vec_b"), "cosine"
+    ).orderBy("vec_a", "vec_b")
 
 
 def _lsh_band_candidates(spark: SparkSession, sf_dir: str, gemm_tau: float):
-    """Shared banded-LSH candidate engine: returns ``(n, cand)`` where
-    ``n`` is the checkpointed (vec_id, embedding, nrm, band1, band2) table
-    and ``cand`` the deduped (vec_a < vec_b) id-pairs whose BLAS cosine
-    clears ``gemm_tau`` minus the containment margin within EITHER band
-    bucket. Used by :func:`similarity_lsh_neardup` (τ=0.45) and
-    :func:`similarity_threshold_sweep_lsh` (τ_min=0.30).
-
-    Within-band scoring is the semdedup GEMM-prefilter shape (r10): the
-    r9 plan materialized every within-band ordered pair as a row (25M at
-    sf1) and ran the 64-term fold chain on ALL of them — 179 s; carrying
-    ids-only through the pair join still paid ~80 s of per-pair chain
-    evaluation. Instead each band bucket's members GEMM against
-    themselves in ONE BLAS call per group (margin-widened so the
-    exact-threshold survivor set is provably contained — 1e-9 is ~1e5x
-    the float64 summation-order divergence of a 64-term unit dot), and
-    only the surviving id-pairs are re-scored by the codegen'd
-    ordered fold behind the pushdown barrier. BLAS order never touches
-    a hashed value; the candidate SET and every emitted cosine are
-    unchanged. 179 s -> ~7 s at sf1.
-
-    r11 (guide §2.2/§2.5): the candidate/rerank exchanges carry few BYTES
-    but dense COMPUTE, so AQE's size-based coalescing crushed them — the
-    bucket-GEMM stage ran 8 tasks and the dedup+rerank stage 4 tasks of
-    27 CPU-seconds on a 32-core box. Both bands now union into ONE
-    explicit repartition (scale-adaptive: 2x defaultParallelism) whose
-    partitioning the groupBy reuses (no second exchange, no AQE
-    coalescing of a user-specified count), and the candidate pairs
-    repartition the same way on (vec_a, vec_b) so the dedup aggregate
-    and the downstream broadcast-join rerank run at full width. BLAS is
-    pinned to one thread per worker (functions/blas.py): tasks already
-    occupy every core, and the pool handoff LOSES 5x outright on these
-    small bucket GEMMs. Same-session A/B at sf1: sweep 9.0 -> 5.0 s,
-    neardup 6.2 -> 5.0 s, outputs asserted identical.
-
-    Scale: one FlatMapGroupsInPandas per band bucket; bucket population
-    is the LSH knob (wider bands -> smaller buckets), and only
-    (vec_a, vec_b) id-pairs leave Python.
-
-    r12 (VERDICT r11 item 7): the band keys are 4-bit, so there are at
-    most 2x16 buckets — the groupBy bounds candidate-stage parallelism at
-    32 tasks no matter how wide the cluster, and one bucket's GEMM grows
-    quadratically with corpus size. Past ``_SUBBLOCK_MIN_ROWS`` total
-    vectors the within-bucket work is SUB-BLOCKED with the
-    ``_blocked_exact_pairs`` tile scheme (hash each member into
-    ceil(population/_SUBBLOCK_TILE) sub-blocks per bucket, one GEMM per
-    ordered sub-block pair): parallelism becomes O(sum of nb² over
-    buckets) and per-task memory is two bounded tiles. Below the guard
-    the plan is unchanged (local fixtures never trip it; the pinned test
-    forces the guard and asserts identical candidates)."""
+    """Banded-LSH candidates: returns ``(n, cand)`` where ``n`` is the
+    checkpointed ``(vec_id, embedding, nrm, band1, band2)`` table and
+    ``cand`` the deduplicated ``(a < b)`` id pairs whose BLAS cosine clears
+    ``gemm_tau`` within EITHER band bucket (one :func:`gemm_pairs` group
+    per band number and key). Used by :func:`similarity_lsh_neardup`
+    (τ=0.45) and :func:`similarity_threshold_sweep_lsh` (τ_min=0.30)."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select(
         "vec_id",
@@ -847,36 +832,6 @@ def _lsh_band_candidates(spark: SparkSession, sf_dir: str, gemm_tau: float):
         _bucket_arr("embedding", PLANES[4:]).alias("band2"),
     )
     n = n.localCheckpoint(eager=True)  # scanned by both bands AND the rerank
-    parts = 2 * spark.sparkContext.defaultParallelism
-    margin = 1e-9
-
-    def bucket_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
-
-        single_thread_blas()
-        import numpy as _np
-
-        ids = pdf["vec_id"].to_numpy()
-        order = _np.argsort(ids)
-        ids = ids[order]
-        V = _np.stack(pdf["embedding"].to_numpy()[order]).astype(_np.float64)
-        nrm = _np.linalg.norm(V, axis=1, keepdims=True)
-        # ADVICE r10: a zero-norm vector makes the cosine NaN, and numpy's
-        # `G >= tau` is False for NaN while Spark/DuckDB order NaN ABOVE
-        # every number in `>=` — the prefilter would silently drop a pair
-        # the oracle (and the exact rerank) emits. No such vector exists in
-        # any fixture; fail loudly if one ever appears rather than diverge.
-        if not (nrm > 0.0).all():
-            raise ValueError(
-                "zero-norm embedding reached a GEMM prefilter bucket: "
-                "cosine undefined; filter degenerate vectors upstream "
-                "(symmetrically in the oracle) first"
-            )
-        U = V / nrm
-        G = U @ U.T
-        iu, iv = _np.nonzero(_np.triu(G >= gemm_tau - margin, k=1))
-        return pd.DataFrame({"vec_a": ids[iu], "vec_b": ids[iv]})
-
     tagged = n.select(
         F.lit(0).alias("bno"), F.col("band1").alias("band"),
         "vec_id", "embedding",
@@ -886,165 +841,13 @@ def _lsh_band_candidates(spark: SparkSession, sf_dir: str, gemm_tau: float):
             "vec_id", "embedding",
         )
     )
-    if n.count() >= _SUBBLOCK_MIN_ROWS:  # cheap job: n is checkpointed
-        raw = _subblocked_bucket_candidates(
-            spark, tagged, parts, gemm_tau, margin
-        )
-    else:
-        raw = (
-            tagged.repartition(parts, "bno", "band")
-            .groupBy("bno", "band")
-            .applyInPandas(bucket_candidates, "vec_a long, vec_b long")
-        )
+    # a pair agreeing on both bands is a candidate twice
     cand = (
-        raw.repartition(parts, "vec_a", "vec_b")
-        .dropDuplicates(["vec_a", "vec_b"])
+        gemm_pairs(tagged, ["bno", "band"], gemm_tau)
+        .select("a", "b")
+        .dropDuplicates(["a", "b"])
     )
     return n, cand
-
-
-#: total-vector guard for within-bucket GEMM sub-blocking: below this the
-#: per-bucket GEMMs are small and the plain groupBy is cheaper (every local
-#: fixture, incl. sf1's ~50k vectors, stays below); above it one bucket's
-#: members would exceed tile memory and serialize a whole-cluster stage into
-#: <=32 tasks. Production knob — override via conf if the corpus profile
-#: says otherwise.
-_SUBBLOCK_MIN_ROWS = 200_000
-#: target rows per sub-block: two ~4k x 64-double tiles (~2 MB each) per
-#: task, the same budget as _NEARDUP_BLOCK's expected tile size
-_SUBBLOCK_TILE = 4096
-
-
-def _subblocked_bucket_candidates(spark, tagged, parts, gemm_tau, margin):
-    """Within-bucket tile sub-blocking (big-corpus regime of
-    :func:`_lsh_band_candidates`): members of each (bno, band) bucket are
-    hashed into ``nb = ceil(population / _SUBBLOCK_TILE)`` sub-blocks and
-    every ordered sub-block pair GEMMs as its own task — identical
-    candidate SET to the one-GEMM-per-bucket shape (each unordered pair
-    lands in exactly one tile; min/max normalization keeps vec_a < vec_b),
-    with parallelism O(sum nb²) instead of O(#buckets)."""
-    import math
-
-    sizes = (
-        tagged.groupBy("bno", "band").agg(F.count(F.lit(1)).alias("n_b"))
-        .collect()
-    )  # bounded by band cardinality (2 x 16 here), never by rows
-    nb_rows = [
-        (r["bno"], r["band"], max(1, math.ceil(r["n_b"] / _SUBBLOCK_TILE)))
-        for r in sizes
-    ]
-    nbdf = spark.createDataFrame(nb_rows, "bno int, band string, nb int")
-    tile_rows = [
-        (bno, band, i, j)
-        for bno, band, nb in nb_rows
-        for i in range(nb)
-        for j in range(i, nb)
-    ]
-    tiles = spark.createDataFrame(
-        tile_rows, "t_bno int, t_band string, sa int, sb int"
-    )
-    t = tagged.join(F.broadcast(nbdf), ["bno", "band"]).select(
-        "bno",
-        "band",
-        "vec_id",
-        "embedding",
-        F.pmod(F.xxhash64("vec_id"), F.col("nb")).cast("int").alias("sub"),
-    )
-    # pure equi-joins against the broadcast tile list: each member row
-    # replicates into exactly the tiles its sub-block participates in
-    side_a = t.join(
-        F.broadcast(tiles),
-        (F.col("bno") == F.col("t_bno"))
-        & (F.col("band") == F.col("t_band"))
-        & (F.col("sub") == F.col("sa")),
-    ).select(
-        "bno", "band", "sa", "sb", "vec_id", "embedding",
-        F.lit(0).alias("side"),
-    )
-    side_b = t.join(
-        F.broadcast(tiles.filter(F.col("sa") != F.col("sb"))),
-        (F.col("bno") == F.col("t_bno"))
-        & (F.col("band") == F.col("t_band"))
-        & (F.col("sub") == F.col("sb")),
-    ).select(
-        "bno", "band", "sa", "sb", "vec_id", "embedding",
-        F.lit(1).alias("side"),
-    )
-
-    def tile_bucket_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
-
-        single_thread_blas()
-        import numpy as _np
-
-        same = pdf["sa"].iloc[0] == pdf["sb"].iloc[0]
-        sa_rows = pdf[pdf["side"] == 0]
-        sb_rows = pdf if same else pdf[pdf["side"] == 1]
-        if len(sa_rows) == 0 or len(sb_rows) == 0:
-            return pd.DataFrame({"vec_a": [], "vec_b": []}, dtype="int64")
-        ia = sa_rows["vec_id"].to_numpy()
-        ib = sb_rows["vec_id"].to_numpy()
-        oa, ob = _np.argsort(ia), _np.argsort(ib)
-        ia, ib = ia[oa], ib[ob]
-        A = _np.stack(sa_rows["embedding"].to_numpy()[oa]).astype(_np.float64)
-        B = (
-            A
-            if same
-            else _np.stack(sb_rows["embedding"].to_numpy()[ob]).astype(
-                _np.float64
-            )
-        )
-        na = _np.linalg.norm(A, axis=1, keepdims=True)
-        nb_ = na if same else _np.linalg.norm(B, axis=1, keepdims=True)
-        if not (na > 0.0).all() or not (nb_ > 0.0).all():
-            raise ValueError(
-                "zero-norm embedding reached a GEMM prefilter bucket: "
-                "cosine undefined; filter degenerate vectors upstream "
-                "(symmetrically in the oracle) first"
-            )
-        U = A / na
-        Vn = U if same else B / nb_
-        G = U @ Vn.T
-        mask = G >= gemm_tau - margin
-        if same:
-            mask = _np.triu(mask, k=1)
-        iu, iv = _np.nonzero(mask)
-        u, v = ia[iu], ib[iv]
-        return pd.DataFrame(
-            {"vec_a": _np.minimum(u, v), "vec_b": _np.maximum(u, v)}
-        )
-
-    return (
-        side_a.unionByName(side_b)
-        .repartition(parts, "bno", "band", "sa", "sb")
-        .groupBy("bno", "band", "sa", "sb")
-        .applyInPandas(tile_bucket_candidates, "vec_a long, vec_b long")
-    )
-
-
-def _lsh_exact_rerank(n, cand, tau: float):
-    """Exact ordered-fold rescoring of LSH candidate id-pairs: every
-    emitted cosine is the codegen'd fold value (bit-identical to the exact
-    baseline's), filtered at ``tau`` behind the pushdown barrier."""
-    emb_a = n.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    emb_b = n.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("b_emb"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = _dot_arr("a_emb", "b_emb") / (F.col("nrm_a") * F.col("nrm_b"))
-    scored = (
-        cand.join(emb_a, "vec_a")
-        .join(emb_b, "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-    )
-    return barrier_filter(scored, F.col("cosine") >= tau).select(
-        "vec_a", "vec_b", "cosine"
-    )
 
 
 @query(
@@ -1080,11 +883,12 @@ def similarity_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-threshold tuning curve: how many near-duplicate pairs each
     candidate cosine threshold would declare, computed in ONE pass — the
     question every corpus-dedup rollout asks first ("how aggressive is
-    τ?"), answered without re-running the pair scan per threshold. Reuses
-    the blocked-GEMM exact-pairs engine (:func:`_blocked_exact_pairs`) at
-    the LOWEST threshold of interest (0.30), then buckets the exact
-    ordered-fold cosines with integer-free CASE boundaries — both engines
-    bucket bit-identical doubles, so the histogram is engine-exact.
+    τ?"), answered without re-running the pair scan per threshold. Runs
+    the exact all-pairs plan of :func:`similarity_cosine_neardup`
+    (:func:`gemm_pairs` + :func:`exact_rerank`) at the LOWEST threshold of
+    interest (0.30), then buckets the exact ordered-fold cosines with
+    integer-free CASE boundaries — both engines bucket bit-identical
+    doubles, so the histogram is engine-exact.
 
     Scale notes (100 TB): identical plan to ``similarity_cosine_neardup``
     plus one map-side-combined aggregate over the surviving pairs — the
@@ -1094,11 +898,9 @@ def similarity_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same histogram over banded-LSH candidates, linear shuffle) and pins
     its per-bucket recall against this curve
     (``test_llm_ops.test_threshold_sweep_lsh_contained_in_exact``)."""
-    scored = _blocked_exact_pairs(spark, sf_dir, 0.30)
-    if scored is None:
-        return spark.createDataFrame([], "bucket string, n_pairs long")
     return (
-        scored.select(_sweep_bucket_case().alias("bucket"))
+        _exact_pairs(spark, sf_dir, 0.30)
+        .select(_sweep_bucket_case().alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .orderBy("bucket")
@@ -1153,25 +955,23 @@ def similarity_threshold_sweep_lsh(spark: SparkSession, sf_dir: str) -> DataFram
     """The PRODUCTION threshold-tuning curve (VERDICT r10 item 4): the same
     one-pass histogram as :func:`similarity_threshold_sweep`, riding the
     banded-LSH candidates of :func:`similarity_lsh_neardup` instead of the
-    N²/2 blocked-GEMM pass — band equi-joins generate candidates, the
-    per-bucket GEMM prefilter runs at the sweep's FLOOR threshold
-    (τ_min=0.30) so every bucket boundary above it sees its full LSH
-    candidate mass, survivors re-score through the codegen'd ordered fold
-    behind the pushdown barrier, and the bucketed counts aggregate
-    map-side. Both engines compute identical band strings, hence identical
-    candidate sets, hence an engine-exact histogram of bit-identical
-    doubles. The curve it reports is the LSH-visible portion of the exact
+    N²/2 exact pass — the per-bucket :func:`gemm_pairs` prefilter runs at
+    the sweep's FLOOR threshold (τ_min=0.30) so every bucket boundary above
+    it sees its full LSH candidate mass, :func:`exact_rerank` re-scores the
+    survivors, and the bucketed counts aggregate map-side. Both engines
+    compute identical band strings, hence identical candidate sets, hence
+    an engine-exact histogram of bit-identical doubles. The curve it reports is the LSH-visible portion of the exact
     curve; its per-bucket recall vs the exact sweep is pinned by
     ``test_llm_ops.test_threshold_sweep_lsh_contained_in_exact``.
 
-    Scale notes (100 TB): shuffle is one exchange per band key (linear in
-    corpus size) + one map-side-combined aggregate; within-bucket GEMM is
-    the standard LSH bargain tuned by band width. This is the route the
+    Scale notes (100 TB): shuffle is linear in corpus size, plus one
+    map-side-combined aggregate; within-bucket GEMM is the standard LSH
+    bargain tuned by band width. This is the route the
     exact sweep's own scale note says a production rollout must take."""
     n, cand = _lsh_band_candidates(spark, sf_dir, 0.30)
-    scored = _lsh_exact_rerank(n, cand, 0.30)
     return (
-        scored.select(_sweep_bucket_case().alias("bucket"))
+        exact_rerank(n, cand, 0.30)
+        .select(_sweep_bucket_case().alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .orderBy("bucket")
@@ -1995,14 +1795,14 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs 141 s for a fixed-K variant of this same query). Assignment is the
     shared guarded IVF path (:func:`_ivf_assign`): broadcast-codebook
     BLAS argmax under ``MAX_BROADCAST_CENTROIDS``, two-level coarse
-    routing past it — never a vectors x all-centroids row product. The
-    pair comparison is a per-cell BLAS GEMM prefilter (margin-widened
-    threshold, candidate ids only) followed by an exact ordered-fold
-    rerank behind a pushdown barrier — nothing all-pairs ever crosses
-    cells, and no unrolled chain ever rides a join condition. Exactness:
-    min/max aggregates carry no float accumulation and the assignment
-    argmax ties to the lowest cell like the oracle's window, so results
-    hash-match exactly."""
+    routing past it — never a vectors x all-centroids row product. Each
+    cell is one :func:`gemm_pairs` group (cells are stride-bounded, so a
+    cell is a single ~2 MB tile at any corpus size) and
+    :func:`exact_rerank` re-scores the candidates — nothing all-pairs ever
+    crosses cells, and no unrolled chain ever rides a join condition.
+    Exactness: min/max aggregates carry no float accumulation and the
+    assignment argmax ties to the lowest cell like the oracle's window, so
+    results hash-match exactly."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
     cent = n.filter(F.col("vec_id") % SEMDEDUP_STRIDE == 0).select(
@@ -2010,9 +1810,9 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("c_emb"),
         F.col("nrm").alias("c_nrm"),
     )
-    # r11 (guide §2.4/§5): members feeds THREE consumers (the cell
-    # grouping and both rerank join legs) — un-checkpointed, the
-    # assignment matmul subtree ran once per consumer (stage dump at sf1:
+    # r11 (guide §2.4/§5): members feeds FOUR consumers (the kernel's
+    # population aggregate and tiles, both rerank legs) — un-checkpointed,
+    # the assignment matmul subtree ran once per consumer (stage dump at sf1:
     # two full ArrowEvalPython assignment stages of ~12 s executor time
     # each). One eager checkpoint materializes |corpus| small rows once.
     members = (
@@ -2020,98 +1820,17 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cr") == 1)
         .localCheckpoint(eager=True)
     )
-    # Within-cell pair generation, GEMM-PREFILTERED (r8): one numpy
-    # U @ U.T per cell over unit rows emits only the (u, v) candidates
-    # whose BLAS cosine clears TAU minus a margin; the margin (1e-9) is
-    # ~1e5x the worst float64 summation-order divergence for a DIM-term
-    # dot of unit vectors (~DIM·eps ≈ 1.4e-14), so the EXACT-threshold
-    # survivor set is provably contained in the candidates. Survivors are
-    # then re-scored by the ordered-fold codegen'd dot (:func:`_dot_arr`)
-    # — the value the oracle folds — behind a pushdown barrier, so BLAS
-    # order never leaks into a hashed value (the `_assign_matmul`
-    # contract, now applied to the quadratic pass too). The previous
-    # shape evaluated the 64-term chain inside the BroadcastHashJoin
-    # condition for every within-cell ordered pair: 16.9 s at sf1 vs
-    # ~2 s for GEMM + exact rerank of the ~4% survivors.
-    #
-    # Scale: one FlatMapGroupsInPandas per cell; cell population is
-    # stride-bounded by construction (~SEMDEDUP_STRIDE members), so the
-    # per-group GEMM is a fixed few-MB block at any corpus size, and only
-    # (cell, u, v) id-triples leave Python.
-    import numpy as np  # noqa: F401  (executors re-import in the UDF)
-
-    margin = 1e-9
-
-    def cell_candidates(pdf: pd.DataFrame) -> pd.DataFrame:
-        from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
-
-        single_thread_blas()  # r11: tasks fill the cores; threaded GEMM loses
-        import numpy as _np
-
-        ids = pdf["vec_id"].to_numpy()
-        order = _np.argsort(ids)
-        ids = ids[order]
-        V = _np.stack(pdf["embedding"].to_numpy()[order]).astype(_np.float64)
-        nrm = _np.linalg.norm(V, axis=1, keepdims=True)
-        # ADVICE r10: a zero-norm vector makes the cosine NaN, and numpy's
-        # `G >= tau` is False for NaN while Spark/DuckDB order NaN ABOVE
-        # every number in `>=` — the prefilter would silently drop a pair
-        # the oracle (and the exact rerank) emits. No such vector exists in
-        # any fixture; fail loudly if one ever appears rather than diverge.
-        if not (nrm > 0.0).all():
-            raise ValueError(
-                "zero-norm embedding reached a GEMM prefilter bucket: "
-                "cosine undefined; filter degenerate vectors upstream "
-                "(symmetrically in the oracle) first"
-            )
-        U = V / nrm
-        G = U @ U.T
-        iu, iv = _np.nonzero(_np.triu(G >= SEMDEDUP_TAU - margin, k=1))
-        return pd.DataFrame(
-            {
-                "cell": pdf["cell"].iloc[0],
-                "u": ids[iu],
-                "v": ids[iv],
-            }
-        )
-
-    # r11 (guide §2.5): the cell exchange is few-MB but compute-dense —
-    # AQE's size-based coalescing ran the GEMM+rerank at 4 tasks on a
-    # 32-core box; an explicit scale-adaptive partition count keeps the
-    # stage wide (cells are stride-bounded, so counts scale with corpus).
-    parts = 2 * spark.sparkContext.defaultParallelism
-    cand = (
-        members.select("cell", "vec_id", "embedding")
-        .repartition(parts, "cell")
-        .groupBy("cell")
-        .applyInPandas(cell_candidates, "cell long, u long, v long")
-    )
-    au = members.select(
-        F.col("vec_id").alias("u"),
-        F.col("embedding").alias("a_emb"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    bv = members.select(
-        F.col("vec_id").alias("v"),
-        F.col("embedding").alias("b_emb"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cos = _dot_arr("a_emb", "b_emb") / (F.col("nrm_a") * F.col("nrm_b"))
-    pairs = barrier_filter(
-        cand.join(au, "u")
-        .join(bv, "v")
-        .select("cell", "u", "v", cos.alias("cosine")),
-        F.col("cosine") >= SEMDEDUP_TAU,
-    )
+    cand = gemm_pairs(members, ["cell"], SEMDEDUP_TAU)
+    pairs = exact_rerank(members, cand, SEMDEDUP_TAU)
     return (
-        pairs.groupBy("cell", "v")
+        pairs.groupBy("cell", "b")
         .agg(
-            F.min("u").cast("bigint").alias("kept_exemplar"),
+            F.min("a").cast("bigint").alias("kept_exemplar"),
             F.max("cosine").alias("max_cosine"),
         )
         .select(
             F.col("cell").alias("cluster_id"),
-            F.col("v").alias("vec_id_removed"),
+            F.col("b").alias("vec_id_removed"),
             "kept_exemplar",
             "max_cosine",
         )

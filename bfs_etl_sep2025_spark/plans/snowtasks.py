@@ -97,10 +97,6 @@ def task_def(name: str) -> TaskDef:
     return _TASKS[_norm(name)]
 
 
-def task_names() -> list[str]:
-    return list(_TASKS)
-
-
 def create_task(stmt: str, task_id: str) -> bool:
     """Handle CREATE TASK; returns True when the statement was one."""
     m = _CREATE_TASK_HEAD.match(stmt)

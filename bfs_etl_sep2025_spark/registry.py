@@ -62,9 +62,13 @@ def query(
 #: Maintained by hand when a change restructures a query (the JSON ledger
 #: cannot see plan diffs).
 PLAN_CHANGED: tuple[str, ...] = (
-    # (the r12 entries — deferred-commit incremental syncs and the LUT JPEG
-    # decoders — were all verified green by the r12 external round and drop
-    # off the list.)
+    # candidates from the shared tiled gemm_pairs kernel + exact_rerank
+    "similarity_cosine_neardup",
+    "similarity_threshold_sweep",
+    "similarity_lsh_neardup",
+    "similarity_threshold_sweep_lsh",
+    "dedup_semantic_embedding",
+    "dedup_incremental_semantic",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

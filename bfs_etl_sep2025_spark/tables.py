@@ -59,13 +59,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture as a temp view so SQL-surface operators
-    (the reference's pass-through contract) can address them by name."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def widen(df: DataFrame) -> DataFrame:
     """Raise a narrow scan's parallelism to the session's core count before
     heavy per-row compute (md5-per-shingle, per-token hashing, ...).

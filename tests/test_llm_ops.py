@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from bfs_etl_sep2025_spark import registry
+from tests.conftest import SF_SMOKE
 
 SF = "/root/testdata/sf0.01"
 
@@ -543,12 +544,12 @@ def test_cosine_neardup_blocked_path_matches_oracle(spark, duck):
     import bfs_etl_sep2025_spark.operators.similarity as sim
 
     spec = registry.all_specs()["similarity_cosine_neardup"]
-    old = sim._NEARDUP_BLOCK
-    sim._NEARDUP_BLOCK = 257  # 2000 ids -> 8 blocks, 36 tile pairs
+    old = sim._GEMM_TILE
+    sim._GEMM_TILE = 257  # 500 ids -> 2 blocks, 3 tile pairs
     try:
         got = spec.fn(spark, SF).toPandas()
     finally:
-        sim._NEARDUP_BLOCK = old
+        sim._GEMM_TILE = old
     want = duck.execute(spec.oracle).fetchdf()
     cols = sorted(got.columns)
     gs = (
@@ -586,13 +587,13 @@ def test_cosine_neardup_sparse_64bit_ids(spark, tmp_path):
         """
     )
     spec = registry.all_specs()["similarity_cosine_neardup"]
-    old = sim._NEARDUP_BLOCK
-    sim._NEARDUP_BLOCK = 101  # force multi-block even at sf0.001
+    old = sim._GEMM_TILE
+    sim._GEMM_TILE = 101  # force multi-block even at sf0.001
     try:
         got = spec.fn(spark, sparse).toPandas()
         base = spec.fn(spark, "/root/testdata/sf0.001").toPandas()
     finally:
-        sim._NEARDUP_BLOCK = old
+        sim._GEMM_TILE = old
     assert len(got) == len(base)
     got_shift = got.assign(
         vec_a=got.vec_a - 1099511627776, vec_b=got.vec_b - 1099511627776
@@ -681,3 +682,107 @@ def test_incremental_semantic_equals_full_rescan(spark):
     }
     assert inc, "fixture is known to contain semantic near-duplicates"
     assert inc == full
+
+
+#: the near-duplicate queries whose candidates come from gemm_pairs, keyed
+#: by candidate generator: (module that calls gemm_pairs, query)
+_GEMM_GENERATORS = {
+    "exact": ("similarity", "similarity_cosine_neardup"),
+    "lsh_bands": ("similarity", "similarity_lsh_neardup"),
+    "semdedup_cells": ("similarity", "dedup_semantic_embedding"),
+    "incremental_delta": ("incremental", "dedup_incremental_semantic"),
+}
+
+
+def _gemm_candidates(spark, monkeypatch, generator):
+    """Run the generator's query, recording each gemm_pairs call's sorted
+    candidate rows and executed plan."""
+    import importlib
+
+    import bfs_etl_sep2025_spark.operators.similarity as sim
+
+    mod, name = _GEMM_GENERATORS[generator]
+    module = importlib.import_module(f"bfs_etl_sep2025_spark.operators.{mod}")
+    real, calls = sim.gemm_pairs, []
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        calls.append((sorted(tuple(r) for r in out.collect()), plan))
+        return out
+
+    with monkeypatch.context() as mp:
+        mp.setattr(module, "gemm_pairs", spy)
+        registry.all_specs()[name].fn(spark, SF_SMOKE).collect()
+    return calls
+
+
+@pytest.mark.parametrize("generator", sorted(_GEMM_GENERATORS))
+def test_gemm_pairs_forced_tiles_identical(spark, monkeypatch, generator):
+    """A 7-row tile splits every group (the whole table, each LSH band
+    bucket, each SemDeDup cell, each incremental sync's cells) into many
+    sub-blocks: the candidate set must equal the default tile's, and the
+    tile pairs must be enumerated on executors, never shipped from a
+    driver-built list (a LocalTableScan in the plan)."""
+    import bfs_etl_sep2025_spark.operators.similarity as sim
+
+    base = _gemm_candidates(spark, monkeypatch, generator)
+    monkeypatch.setattr(sim, "_GEMM_TILE", 7)
+    forced = _gemm_candidates(spark, monkeypatch, generator)
+    assert [c for c, _ in forced] == [c for c, _ in base]
+    assert any(c for c, _ in base)  # the fixture has near-dup candidates
+    for _, plan in forced:
+        assert "LocalTableScan" not in plan, plan
+
+
+def test_gemm_exchange_is_keyed_on_tiles(spark):
+    """Balancing is at the tile level: the kernel's one exchange
+    hash-partitions on the group AND tile keys, so one large LSH bucket
+    spreads over many tasks, and the kernel's groupBy reuses that
+    partitioning. The exchange has no fixed width — AQE sizes it, the one
+    policy for every gemm_pairs consumer."""
+    import re
+
+    from bfs_etl_sep2025_spark.operators.similarity import (
+        _lsh_band_candidates,
+    )
+
+    n, cand = _lsh_band_candidates(spark, SF_SMOKE, 0.45)
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    assert re.search(
+        r"hashpartitioning\(bno#\d+, band#\d+, __ta#\d+, __tb#\d+", plan
+    ), plan
+    assert plan.count("hashpartitioning(bno#") == 2, plan  # pop + tiles
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "similarity_cosine_neardup",
+        "similarity_threshold_sweep",
+        "similarity_lsh_neardup",
+        "similarity_threshold_sweep_lsh",
+        "dedup_semantic_embedding",
+        "dedup_incremental_semantic",
+    ],
+)
+def test_zero_norm_embedding_raises(spark, tmp_path, name):
+    """A zero vector has no cosine, and numpy's NaN >= tau is False where
+    Spark and DuckDB order NaN above every number: every consumer of the
+    GEMM prefilter must raise instead of silently dropping its pairs."""
+    import duckdb
+
+    src = f"{SF_SMOKE}/embeddings.parquet"
+    duckdb.execute(
+        f"""
+        COPY (SELECT vec_id,
+                     CASE WHEN vec_id = 7
+                          THEN list_transform(embedding, x -> 0.0::FLOAT)
+                          ELSE embedding END AS embedding
+              FROM read_parquet('{src}'))
+        TO '{tmp_path}/embeddings.parquet' (FORMAT PARQUET)
+        """
+    )
+    with pytest.raises(Exception, match="zero-norm embedding reached a GEMM"):
+        _q(name)(spark, str(tmp_path)).collect()

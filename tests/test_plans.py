@@ -550,8 +550,10 @@ _SANCTIONED_BNLJ = {
     # condition — verified by assert_no_join_pushdown below)
     "similarity_topk_bruteforce": "bounded-Q exact scoring pass",
     "similarity_recall_lsh": "bounded-Q truth pass",
-    # guarded dense-regime all-pairs (see operators/_barrier.py)
-    "similarity_cosine_neardup": "dense-regime all-pairs, barrier-guarded",
+    # the exact path is one gemm_pairs group: its population is a 1-row
+    # aggregate attached to every row (tile pairs are equi-grouped)
+    "similarity_cosine_neardup": "1-row tile-count scalar attach",
+    "similarity_threshold_sweep": "1-row tile-count scalar attach",
     "graph_degree_distribution": "bitmap-regime broadcast popcount pass",
     "graph_triangle_count": "bitmap-regime broadcast popcount pass",
     "graph_link_prediction_cn": "bitmap-regime broadcast popcount pass",

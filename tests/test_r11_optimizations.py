@@ -3,8 +3,7 @@
 These do not re-test query RESULTS (oracle parity and the family tests own
 that); they pin the optimization MECHANISMS so a refactor cannot silently
 undo them: the materialized-projection detector behind the upsert
-checkpoint skip, the BLAS pin's idempotence, and the explicit
-scale-adaptive width of the LSH candidate exchanges.
+checkpoint skip and the BLAS pin's idempotence.
 """
 
 from __future__ import annotations
@@ -38,19 +37,3 @@ def test_single_thread_blas_idempotent():
     single_thread_blas()
     assert os.environ.get("OPENBLAS_NUM_THREADS", "1") == "1"
 
-
-def test_lsh_candidate_exchanges_are_explicit_width(spark):
-    """The band-GEMM and pair-dedup exchanges must keep the explicit
-    2x-defaultParallelism width (r11: AQE's size-based coalescing starved
-    the compute-dense stages down to 4-8 tasks on a 32-core box)."""
-    from bfs_etl_sep2025_spark.operators.similarity import (
-        _lsh_band_candidates,
-    )
-
-    parts = 2 * spark.sparkContext.defaultParallelism
-    n, cand = _lsh_band_candidates(spark, "/root/testdata/sf0.001", 0.45)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    # both user repartitions present at the pinned width, and the dedup
-    # aggregate reuses the (vec_a, vec_b) partitioning (no third exchange)
-    assert f"hashpartitioning(bno#" in plan or "hashpartitioning(bno" in plan
-    assert plan.count(f", {parts}), REPARTITION_BY_NUM") == 2, plan

@@ -143,25 +143,6 @@ def test_upsert_many_single_source_delegates(spark, tmp_path):
     assert _rows(t.read()) == [(1, "a2")]
 
 
-def test_lsh_subblocked_candidates_identical(spark, monkeypatch):
-    """VERDICT r11 item 7: forcing the bucket-population guard must swap
-    in the within-bucket tile sub-blocking (visible as the 4-key exchange
-    in the plan) WITHOUT changing the candidate set — recall is pinned by
-    equality with the unguarded shape."""
-    from bfs_etl_sep2025_spark.operators import similarity as sim
-
-    n0, cand0 = sim._lsh_band_candidates(spark, "/root/testdata/sf0.001", 0.45)
-    base = _rows(cand0)
-
-    monkeypatch.setattr(sim, "_SUBBLOCK_MIN_ROWS", 1)
-    monkeypatch.setattr(sim, "_SUBBLOCK_TILE", 7)  # force multi-tile buckets
-    n1, cand1 = sim._lsh_band_candidates(spark, "/root/testdata/sf0.001", 0.45)
-    plan = cand1._jdf.queryExecution().executedPlan().toString()
-    assert "sa#" in plan and "sb#" in plan  # sub-block keys in the exchange
-    assert _rows(cand1) == base
-    assert len(base) > 0  # the fixture has known near-dup candidates
-
-
 def test_incremental_deferred_commit_equals_immediate(spark, tmp_path):
     """The deferred-commit sync mode (pending list + one multi-batch
     MERGE) must produce identical verdicts AND an identical final store
