@@ -272,7 +272,8 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH counts AS (
           SELECT user_id, event_type, count(*) AS cnt
-          FROM events GROUP BY user_id, event_type
+          FROM events WHERE event_type IS NOT NULL
+          GROUP BY user_id, event_type
         ), ranked AS (
           SELECT user_id, event_type,
                  row_number() OVER (
@@ -282,33 +283,34 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM counts
         ), agg AS (
           SELECT user_id,
-                 CAST(sum(cnt) AS BIGINT) AS n_events,
-                 CAST(count(*) AS INT) AS n_types
-          FROM counts GROUP BY user_id
+                 CAST(count(*) AS BIGINT) AS n_events,
+                 CAST(count(DISTINCT event_type) AS INT) AS n_types
+          FROM events GROUP BY user_id
         )
         SELECT a.user_id, a.n_events, a.n_types, r.event_type AS top_type
-        FROM agg a JOIN ranked r ON r.user_id = a.user_id AND r.rn = 1
+        FROM agg a LEFT JOIN ranked r
+          ON r.user_id IS NOT DISTINCT FROM a.user_id AND r.rn = 1
         ORDER BY a.user_id
     """,
 )
 def stream_typed_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL ``transformWithStateInPandas`` run (r9 — the protobuf env-gap
-    is closed by ``vendor/protoshim``, so the typed-state server protocol
-    executes in-container): ValueState running totals + MapState per-type
-    counters over the event stream, drained with AvailableNow into a
-    memory sink. Update mode emits one profile row per (user, batch); the
-    LAST update per user is the converged profile (n_events strictly
-    increases whenever a user appears in a batch), which must equal the
-    batch/oracle per-user aggregate — the typed-state twin of
-    ``stream_ingest_availablenow``'s convergence contract. ``total_value``
-    (a float running sum whose addition order is the arrival order) is
-    intentionally not part of the checked columns — cross-engine float
-    policy (functions/portable.py).
+    """REAL stateful streaming run of the per-user profile
+    (``streaming.jobs.stream_user_profile_tws``: one Update-mode
+    aggregation holding count, value sum, type set and type counts in the
+    state store), drained with AvailableNow into a memory sink. Update
+    mode emits one profile row per (user, batch); the LAST update per user
+    is the converged profile (n_events strictly increases whenever a user
+    appears in a batch), which must equal the batch/oracle per-user
+    aggregate — the stateful twin of ``stream_ingest_availablenow``'s
+    convergence contract. NULL event types count as events but not as
+    types; an all-NULL user has ``n_types = 0`` and a NULL ``top_type``.
+    ``total_value`` (a float running sum whose addition order is the
+    arrival order) is intentionally not part of the checked columns —
+    cross-engine float policy (functions/portable.py).
 
-    Scale notes: state shuffles by user_id once; the RocksDB provider is
-    required (typed variables are column families), and each state
-    variable updates independently — a MapState bump does not rewrite the
-    ValueState blob."""
+    Scale notes: state shuffles by user_id once and runs on the session's
+    state store provider (HDFS-backed or RocksDB); per-user state grows
+    with that user's distinct event types."""
     from pyspark.sql import Window as W
 
     from bfs_etl_sep2025_spark.streaming.jobs import (
@@ -317,24 +319,9 @@ def stream_typed_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _stage_events(spark, sf_dir)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    out = _drain(
+        spark, stream_user_profile_tws(stream_events(spark, src)), "update"
     )
-    try:
-        out = _drain(
-            spark,
-            stream_user_profile_tws(stream_events(spark, src)),
-            "update",
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.select("*", F.row_number().over(w).alias("rn"))

@@ -69,6 +69,8 @@ PLAN_CHANGED: tuple[str, ...] = (
     "similarity_threshold_sweep_lsh",
     "dedup_semantic_embedding",
     "dedup_incremental_semantic",
+    # per-user profile: built-in streaming aggregation, no Python handler
+    "stream_typed_state_profile",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

@@ -20,15 +20,16 @@ unbounded keys need the watermark or state grows forever. maxFilesPerTrigger
 bounds micro-batch size; sinks should be ``foreachBatch`` into a
 transactional table for exactly-once.
 
-API-coverage note: custom stateful processing is provided here through
-``applyInPandasWithState`` (:func:`stream_running_user_totals`). Spark 4's
-successor API ``transformWithStateInPandas`` (typed state variables,
-timers, TTL, RocksDB-backed) was probed in this environment and its Python
-driver worker crashes on import: it requires ``google.protobuf``, which is
-not installed in this container (environment-imposed, like the absent
-Delta/Iceberg jars and compressed-media codecs). The migration is
-mechanical when the dependency exists — the per-key handle/state shape
-below maps 1:1 onto a ``StatefulProcessor.handleInputRows``.
+API-coverage note: custom stateful processing comes in two generations.
+``applyInPandasWithState`` (:func:`stream_running_user_totals`) packs a
+key's state into one tuple; Spark 4's ``transformWithStateInPandas``
+(typed state variables, timers, TTL; RocksDB state store) runs the
+streaming LSH near-dup gate (:func:`stream_lsh_band_dedup`) — its protobuf
+state-server protocol executes in-container through the vendored
+pure-Python wire runtime (``vendor/protoshim``). A stateful stream whose
+state fits built-in aggregates uses them instead
+(:func:`stream_user_profile_tws`): no Python worker or state-server calls
+per micro-batch.
 """
 
 from __future__ import annotations
@@ -350,96 +351,40 @@ def run_stream_profile_monitor(
 
 
 def stream_user_profile_tws(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState``
-    (:func:`stream_running_user_totals`) with TYPED state variables: a
-    ValueState holds the per-user running (count, total) and a MapState
-    holds per-event-type counts, which the old API could only fake by
-    packing everything into one tuple. Each micro-batch emits the user's
-    updated profile (running totals + distinct-type count + current
-    top type with deterministic name tie-break).
+    """Per-user running profile as ONE built-in Update-mode streaming
+    aggregation: running event count, running value sum, distinct-type
+    count and the current top type (ties broken by the larger name — the
+    ``mode() WITHIN GROUP (ORDER BY event_type DESC)`` rule). Each
+    micro-batch emits one row per user touched in that batch, carrying the
+    profile accumulated over every batch so far.
 
-    Scale notes: same state-store discipline as the older API (per-key
-    state shuffled by user_id, RocksDB-backed in production); typed
-    variables let the store track/evict each state independently (TTL is
-    per-variable — ``ttlDurationMs``), and MapState avoids rewriting one
-    monolithic blob per update when only one event type's counter moved.
+    NULL ``event_type``: counts in ``n_events`` but in neither ``n_types``
+    nor ``top_type`` (``collect_set`` and ``mode`` skip NULLs); a user
+    whose events are all NULL-typed gets ``n_types = 0`` and a NULL
+    ``top_type``. ``total_value`` is a float running sum in arrival order
+    (NULL while every value seen is NULL) and is not cross-engine exact.
 
-    Environment note (r9): the transformWithState Python protocol talks
-    to the JVM state server over protobuf (``pyspark/sql/streaming/
-    proto``). ``google.protobuf`` is not installed in this container, so
-    r8 stub-gated this operator; r9 removed the gate by vendoring a
-    minimal pure-Python wire-format runtime
-    (``bfs_etl_sep2025_spark/vendor/protoshim`` — implemented from the
-    public encoding spec) that executes PySpark's generated
-    ``StateMessage_pb2`` unchanged. ``session.build_spark`` activates it
-    (sys.path + worker PYTHONPATH) only when the real package is absent;
-    with protobuf installed nothing changes.
+    Why not a Python state handler: the aggregate buffers hold the same
+    state a ValueState + MapState handler would (count, sum, the type set
+    and a type→count map) inside the JVM operator, so a round pays no
+    Python pre-init worker at query start, no per-key pandas frames and no
+    state-server round trips. It runs on the HDFS-backed and the RocksDB
+    state store alike. Custom typed state stays for logic aggregates
+    cannot express (:func:`stream_lsh_band_dedup`).
+
+    Scale notes: state is per user, shuffled once by user_id, and has no
+    eviction (no watermark). Each user's buffer grows with the number of
+    distinct event types that user has sent — the type set and the count
+    map are re-serialized on every update — so a high-cardinality type
+    column needs bucketing before it reaches this operator. Checkpoints
+    written by the earlier ``transformWithStateInPandas`` version of this
+    operator cannot be resumed (Spark rejects the changed state schema).
     """
-    from bfs_etl_sep2025_spark.vendor import ensure_protobuf_on_workers
-
-    ensure_protobuf_on_workers(events.sparkSession)
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE"
-            )
-            self._by_type = handle.getMapState(
-                "by_type", "event_type STRING", "cnt BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            # r11 (optimization guide §4): every ValueState/MapState call
-            # is a synchronous socket round-trip through the state server
-            # — at sf1 this handler ran ~3 + 3*|types| trips per (user,
-            # batch) (exists+get, then containsKey+getValue+updateValue
-            # per type, then a full iterator rescan for the top-type).
-            # Same state semantics with the minimum trips: one get()
-            # (None encodes absence), ONE iterator() pass to load the
-            # persisted map, merges in plain Python, and one updateValue
-            # per type SEEN IN THIS BATCH (the MapState contract — only
-            # touched counters are rewritten).
-            tot = self._totals.get()
-            n, total = tot if tot is not None else (0, 0.0)
-            batch_counts: dict = {}
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                for et, cnt in pdf.groupby("event_type").size().items():
-                    batch_counts[et] = batch_counts.get(et, 0) + int(cnt)
-            counts = {k[0]: v[0] for k, v in self._by_type.iterator()}
-            for et, cnt in batch_counts.items():
-                counts[et] = counts.get(et, 0) + cnt
-                self._by_type.updateValue((et,), (counts[et],))
-            self._totals.update((n, total))
-            top = max(counts.items(), key=lambda kv: (kv[1], kv[0]))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "n_types": [len(counts)],
-                    "top_type": [top[0]],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfile(),
-        outputStructType=(
-            "user_id bigint, n_events bigint, total_value double, "
-            "n_types int, top_type string"
-        ),
-        outputMode="Update",
-        timeMode="None",
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("total_value"),
+        F.size(F.collect_set("event_type")).cast("int").alias("n_types"),
+        F.expr("mode() WITHIN GROUP (ORDER BY event_type DESC)").alias("top_type"),
     )
 
 

@@ -12,8 +12,9 @@ from bfs_etl_sep2025_spark.streaming.jobs import (
     stream_windowed_counts,
 )
 
-#: slow tier (r12): every test drains a real structured-streaming query
-pytestmark = pytest.mark.slow
+#: slow tier (r12): tests that drain real structured-streaming queries are
+#: marked one by one; the small NULL-type profile test runs in the default tier
+slow = pytest.mark.slow
 
 SCHEMA = (
     "event_id bigint, ts timestamp_ntz, user_id bigint, "
@@ -47,6 +48,7 @@ def _read_stream(spark, src):
     )
 
 
+@slow
 def test_watermark_drops_late_events(stream_env):
     """A run advances the watermark; a later-arriving event older than the
     watermark must be dropped from the aggregation (the late-data policy
@@ -75,6 +77,7 @@ def test_watermark_drops_late_events(stream_env):
     assert merged[(12, 0)] == 2  # events 2 and 3
 
 
+@slow
 def test_checkpoint_skips_processed_files(stream_env):
     """Re-running with the same checkpoint must not re-ingest old files —
     the engine-managed twin of the CsvCopyTask ledger."""
@@ -93,6 +96,7 @@ def test_checkpoint_skips_processed_files(stream_env):
     assert got == {3}  # duplicate suppressed by state, new event passes
 
 
+@slow
 def test_stateful_running_totals_across_batches(stream_env):
     """applyInPandasWithState: per-user state must ACCUMULATE across
     micro-batches (file 1 then file 2), emitting updated running totals."""
@@ -118,6 +122,7 @@ def test_stateful_running_totals_across_batches(stream_env):
     assert got[1] == (4, 4.0)
 
 
+@slow
 def test_incremental_converges_to_batch(stream_env):
     """Multi-micro-batch streaming aggregation == one-shot batch answer."""
     from pyspark.sql import functions as F
@@ -140,6 +145,7 @@ def test_incremental_converges_to_batch(stream_env):
     assert final == {(r.event_type, r.n_events) for r in batch}
 
 
+@slow
 def test_session_window_exact_gap_boundary(spark):
     """Two events EXACTLY 30 minutes apart MERGE into one session: Spark's
     session window accepts an event at precisely last+gap (measured here,
@@ -171,6 +177,7 @@ def test_session_window_exact_gap_boundary(spark):
     assert per_user[2] == [1, 1]  # split one second past it
 
 
+@slow
 def test_stream_stream_interval_join(stream_env):
     """Real two-readStream watermarked interval join: purchases pair with
     the same user's click within 1h; a purchase 90 minutes out must NOT
@@ -221,6 +228,7 @@ def test_stream_stream_interval_join(stream_env):
     ) == got
 
 
+@slow
 def test_foreachbatch_merge_upsert_sink(stream_env):
     """Streaming upsert: each micro-batch MERGEs into a catalog table via
     foreachBatch (latest value per user wins within the batch; the MERGE
@@ -284,6 +292,7 @@ def test_foreachbatch_merge_upsert_sink(stream_env):
     assert rows == {(1, 13, 5.0), (2, 12, 9.0)}
 
 
+@slow
 def test_stream_merge_full_sync_mirror(stream_env):
     """run_stream_merge_upsert with a WHEN NOT MATCHED BY SOURCE DELETE
     branch: each micro-batch is treated as the full upstream truth, so the
@@ -355,6 +364,7 @@ def test_stream_merge_full_sync_mirror(stream_env):
     assert rows == {(2, 20.0), (3, 3.0)}
 
 
+@slow
 def test_stream_profile_monitor_appends_versioned_metrics(stream_env, tmp_path):
     """Per-micro-batch profile rows land as versioned appends; checkpoint
     recovery means a re-run with no new files appends nothing; a gate
@@ -399,12 +409,69 @@ def test_stream_profile_monitor_appends_versioned_metrics(stream_env, tmp_path):
     assert [h["op"] for h in vt.history()] == ["create", "append"]
 
 
-def test_transform_with_state_typed_profile(stream_env):
-    """transformWithStateInPandas (Spark 4 typed-state API): ValueState
-    running totals AND a MapState per-event-type counter must both
-    accumulate across micro-batches, and the profile must survive a
-    checkpoint restart — the successor API to applyInPandasWithState
-    exercised end-to-end."""
+_STATE_PROVIDERS = {
+    "hdfs": "HDFSBackedStateStoreProvider",
+    "rocksdb": "RocksDBStateStoreProvider",
+}
+
+
+@pytest.fixture(params=sorted(_STATE_PROVIDERS))
+def state_provider(request, spark):
+    """Run under each state store provider; the session's own provider is
+    restored afterwards."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    old = spark.conf.get(key)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        + _STATE_PROVIDERS[request.param],
+    )
+    yield _STATE_PROVIDERS[request.param]
+    spark.conf.set(key, old)
+
+
+#: plan nodes that mean rows cross into a Python worker
+_PYTHON_NODES = (
+    "TransformWithStateInPySpark",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+)
+
+
+def _profiles(batches):
+    """Per non-empty micro-batch: ``{user_id: (n_events, n_types,
+    top_type)}`` of the rows it emitted."""
+    return [
+        {r.user_id: (r.n_events, r.n_types, r.top_type) for r in rows}
+        for _, rows in batches
+        if rows
+    ]
+
+
+def _executed_plan(job, ckpt):
+    """Physical plan of ``job``'s last micro-batch, drained once into a
+    no-op sink under its own checkpoint."""
+    q = (
+        job.writeStream.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q._jsq.explainInternal(False)
+
+
+@slow
+def test_user_profile_stream_accumulates_and_survives_restart(
+    stream_env, tmp_path, state_provider
+):
+    """The per-user profile stream (one built-in Update-mode aggregation)
+    must accumulate counts and per-type counters across micro-batches,
+    emit only the users a batch touched, break top-type ties by name, and
+    keep every user's state across a checkpoint restart — on the
+    HDFS-backed and the RocksDB state store alike, with no Python worker
+    in the executed plan."""
     from datetime import datetime
 
     from bfs_etl_sep2025_spark.streaming.jobs import stream_user_profile_tws
@@ -425,66 +492,102 @@ def test_transform_with_state_typed_profile(stream_env):
     ]
     _write_batch(spark, src, rows1)
     _write_batch(spark, src, rows2)
-    # typed state needs per-variable column families, which only the
-    # (in-box) RocksDB state store supports — scope the provider switch to
-    # this test so HDFS-backed checkpoints elsewhere stay untouched
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    job = stream_user_profile_tws(_read_stream(spark, src))
+    batches = run_stream_collect(job, ckpt, output_mode="update")
+    per_batch = _profiles(batches)
+    assert len(per_batch) == 2  # maxFilesPerTrigger=1 -> one per file
+    # after file 1: 3 events, 2 types, 'view' leads 2-1
+    assert per_batch[0][1] == (3, 2, "view")
+    assert per_batch[0][2] == (1, 1, "view")
+    # after file 2: 5 events, clicks now lead 3-2 — type counts accumulated
+    assert per_batch[1][1] == (5, 2, "click")
+    # update mode emits only TOUCHED keys: user 2 had no batch-2 rows,
+    # so re-emitting (or worse, recomputing) their profile here would
+    # mean the operator walks all state per batch instead of per key
+    assert 2 not in per_batch[1]
+    # restart from checkpoint: a tie (view=3 vs click=3) breaks by NAME;
+    # user 2 returns after sitting out a batch AND a restart — their
+    # state must have survived untouched (not been recomputed from the
+    # visible micro-batch, which would give (1,1))
+    _write_batch(
+        spark,
+        src,
+        [
+            (6, datetime(2024, 1, 1, 12, 0), 1, "view", 1.0, "{}"),
+            (8, datetime(2024, 1, 1, 12, 1), 2, "click", 1.0, "{}"),
+        ],
     )
-    try:
-        job = stream_user_profile_tws(_read_stream(spark, src))
-        batches = run_stream_collect(job, ckpt, output_mode="update")
-        per_batch = [
-            {r.user_id: (r.n_events, r.n_types, r.top_type) for r in rows}
-            for _, rows in batches
-            if rows
-        ]
-        assert len(per_batch) == 2  # maxFilesPerTrigger=1 -> one per file
-        # after file 1: 3 events, 2 types, 'view' leads 2-1
-        assert per_batch[0][1] == (3, 2, "view")
-        assert per_batch[0][2] == (1, 1, "view")
-        # after file 2: 5 events, clicks now lead 3-2 — MapState accumulated
-        assert per_batch[1][1] == (5, 2, "click")
-        # update mode emits only TOUCHED keys: user 2 had no batch-2 rows,
-        # so re-emitting (or worse, recomputing) their profile here would
-        # mean the operator walks all state per batch instead of per key
-        assert 2 not in per_batch[1]
-        # restart from checkpoint: a tie (view=3 vs click=3) breaks by NAME;
-        # user 2 returns after sitting out a batch AND a restart — their
-        # ValueState/MapState must have survived untouched (not been
-        # recomputed from the visible micro-batch, which would give (1,1))
+    more = run_stream_collect(job, ckpt, output_mode="update")
+    got = {r.user_id: (r.n_events, r.n_types, r.top_type)
+           for _, rows in more for r in rows}
+    assert got[1] == (6, 2, "view")
+    # 2 events, 2 types, view/click tie at 1-1 -> same name tie-break
+    assert got[2] == (2, 2, "view")
+    # the checkpoint pins the provider the state was written with
+    with open(f"{ckpt}/offsets/0") as f:
+        assert state_provider in f.read()
+    plan = _executed_plan(job, str(tmp_path / "plan_ckpt"))
+    assert "StateStoreSave" in plan
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+
+
+def test_user_profile_stream_null_event_types(stream_env, tmp_path):
+    """NULL ``event_type`` counts as an event but never as a type: a mixed
+    user's NULLs add to ``n_events`` only, an all-NULL user has
+    ``n_types = 0`` and a NULL ``top_type`` (until a typed event arrives),
+    and count ties break by the larger name — per batch, across two
+    checkpoint restarts, and in the converged profile the registered
+    query's DuckDB oracle computes from the same files."""
+    from datetime import datetime
+
+    import duckdb
+
+    from bfs_etl_sep2025_spark import registry
+    from bfs_etl_sep2025_spark.streaming.jobs import stream_user_profile_tws
+
+    spark, src, ckpt = stream_env
+    t = datetime(2024, 1, 1, 10, 0)
+
+    def run(events):
         _write_batch(
-            spark,
-            src,
-            [
-                (6, datetime(2024, 1, 1, 12, 0), 1, "view", 1.0, "{}"),
-                (8, datetime(2024, 1, 1, 12, 1), 2, "click", 1.0, "{}"),
-            ],
+            spark, src, [(i, t, u, et, 1.0, "{}") for i, u, et in events]
         )
-        more = run_stream_collect(job, ckpt, output_mode="update")
-        got = {r.user_id: (r.n_events, r.n_types, r.top_type)
-               for _, rows in more for r in rows}
-        assert got[1] == (6, 2, "view")
-        # 2 events, 2 types, view/click tie at 1-1 -> same name tie-break
-        assert got[2] == (2, 2, "view")
+        job = stream_user_profile_tws(_read_stream(spark, src))
+        return _profiles(run_stream_collect(job, ckpt, output_mode="update"))
+
+    # user 1 mixed, user 2 all-NULL, user 3 a 1-1 tie
+    b1 = run([(1, 1, "click"), (2, 1, None), (3, 1, "view"), (4, 1, "view"),
+              (5, 2, None), (6, 2, None), (7, 3, "a"), (8, 3, "b")])
+    assert b1 == [{1: (4, 2, "view"), 2: (2, 0, None), 3: (2, 2, "b")}]
+    # restart 1: user 2 stays all-NULL; clicks overtake views for user 1
+    b2 = run([(9, 2, None), (10, 1, "click"), (11, 1, "click")])
+    assert b2 == [{1: (6, 2, "click"), 2: (3, 0, None)}]
+    # restart 2: user 2's first typed event; user 3's tie resolves
+    b3 = run([(12, 2, "x"), (13, 3, "a"), (14, 1, None)])
+    assert b3 == [{1: (7, 2, "click"), 2: (4, 1, "x"), 3: (3, 2, "a")}]
+
+    converged = {**b1[0], **b2[0], **b3[0]}
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW events AS SELECT * FROM read_parquet('{src}/*.parquet')"
+        )
+        oracle = registry.all_specs()["stream_typed_state_profile"].oracle
+        want = {r[0]: tuple(r[1:]) for r in con.execute(oracle).fetchall()}
     finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
+        con.close()
+    assert converged == want
 
 
+@slow
 def test_protobuf_fallback_activates_and_speaks_the_wire_format():
     """The r8 stub-gate is gone: without the real google.protobuf the
     vendored protoshim must activate (sys.path + worker PYTHONPATH) and
     execute PySpark's generated StateMessage_pb2 — construction,
     serialization to spec-exact wire bytes, and response parsing. The
-    typed-state e2e above is the integration proof (the JVM parses these
-    bytes); this pins the unit surface and the env plumbing."""
+    LSH-gate typed-state e2e below is the integration proof (the JVM
+    parses these bytes); this pins the unit surface and the env
+    plumbing."""
     import os
 
     from bfs_etl_sep2025_spark.vendor import PROTOSHIM_DIR, ensure_protobuf
@@ -526,6 +629,7 @@ def test_protobuf_fallback_activates_and_speaks_the_wire_format():
     assert resp.statusCode == 0 and resp.errorMessage == ""
 
 
+@slow
 def test_lsh_dedup_gate_retroactive_flip_out_of_order(stream_env):
     """The streaming LSH gate's order-invariance contract (r10): when a
     SMALLER doc_id reaches a band bucket in a LATER micro-batch, the
