@@ -7,25 +7,30 @@ statement splitter already recognizes ``MERGE INTO`` as a write head for
 lock serialization — this module makes the statement actually execute.
 
 Spark's SQL ``MERGE INTO`` needs a v2 table provider (Delta/Iceberg, jars
-absent here), but MERGE semantics decompose into plain relational algebra
-over the snapshot:
+absent here), but MERGE semantics decompose into ONE join over the
+snapshot: the target, each row tagged with an id, joins the source, each
+row tagged with a match marker, on ``ON`` — a FULL OUTER join when the
+statement has INSERT branches, a LEFT join otherwise. Each output row is
+one of three kinds:
 
-- matched + UPDATE  -> target LEFT JOIN source, CASE per assigned column
-- matched + DELETE  -> the same left join, filtering the matched rows out
-- not matched + INSERT -> source LEFT ANTI JOIN target, projected to the
-  target schema (missing columns become typed NULLs)
-- not matched BY SOURCE + UPDATE/DELETE -> the SAME left join: a target
-  row whose join marker is NULL has no source match, so the branch CASE
-  dispatches on ``marker IS NULL`` — no extra join or shuffle
+- matched (id and marker set) -> the first true WHEN MATCHED branch
+  UPDATEs (a CASE per assigned column) or DELETEs (filtered out)
+- target only (marker NULL) -> the first true NOT MATCHED BY SOURCE
+  branch UPDATEs or DELETEs it; otherwise it is kept as-is
+- source only (id NULL, FULL OUTER only) -> the first true INSERT branch
+  projects it to the target schema (missing columns become typed NULLs);
+  it is dropped when no branch applies
 
-branches UNION ALL'd and written ONCE as the table's next snapshot
+The select is written ONCE as the table's next snapshot
 (:func:`swap_snapshot`): a managed table's snapshot lands in a fresh
 directory beside it and ``ALTER TABLE … SET LOCATION`` flips the table
 onto it; an external table keeps its path and gets its files replaced in
-place. A failed write leaves the target untouched. An insert-only MERGE
-changes no existing row, so it is a plain append of the anti-join rows.
-The rewrite keeps the statement's own aliases so ``ON``/``SET``/``VALUES``
-expressions run verbatim.
+place. A failed write leaves the target untouched. Each input is read and
+evaluated once, so a nondeterministic source is seen once too. An
+insert-only MERGE changes no existing row, so it is a plain append of the
+source rows a ``LEFT ANTI JOIN`` finds unmatched. The rewrite keeps the
+statement's own aliases so ``ON``/``SET``/``VALUES`` expressions run
+verbatim.
 
 Supported grammar (the common warehouse shapes — Snowflake's MERGE plus
 the SQL-Server/Databricks ``BY SOURCE`` extension)::
@@ -51,17 +56,21 @@ Multiple guarded branches per match side are evaluated in statement order —
 the first branch whose guard is true applies (Snowflake's rule); a branch
 after an unguarded one on the same side is unreachable and rejected. The
 standard MERGE precondition — the source must be unique on the join key —
-is ENFORCED at runtime when any MATCHED or BY SOURCE branch exists: the
-rewrite's own LEFT JOIN tags each target row with an id, a window counts
-source matches per id, and a count above one calls ``raise_error`` inside
-the same write job — mirroring Snowflake's nondeterministic-merge error
-instead of silently fanning out the join. When ``ON`` is a flat
-equi-conjunction the window is partitioned by the join keys plus the id,
-so it reuses the join's shuffle.
+is ENFORCED at runtime when any MATCHED or BY SOURCE branch exists: a
+matched row whose target row matches more than one source row calls
+``raise_error`` inside the same write job — mirroring Snowflake's
+nondeterministic-merge error instead of silently fanning out the join.
+When ``ON`` is a flat conjunction of ``t.col = s.col`` with same-typed
+sides, the matches are counted in the source subquery, partitioned by its
+join columns, so the count reuses the source's own exchange and the target
+is never shuffled for it. Any other ``ON`` (an extra non-equi conjunct, a
+type-coerced key) counts per target row over the join output.
 
-Scale notes: the rewrite is two joins and a union over the snapshot — the
-same shuffle shape Delta's MERGE plans under the hood (join on the merge
-key; AQE handles skew). Rewriting the whole snapshot is the price of no
+Scale notes: an update-only MERGE keeps the LEFT join, so a small daily
+source stays broadcast and the target is scanned once, unshuffled; a MERGE
+with inserts shuffles the target once for the FULL OUTER join — the join
+shape Delta's MERGE plans under the hood (join on the merge key; AQE
+handles skew). Rewriting the whole snapshot is the price of no
 transactional table format; at 100 TB you'd point the identical statement
 at a Delta/Iceberg catalog instead.
 """
@@ -294,24 +303,34 @@ def parse_merge(stmt: str) -> MergeSpec:
 _DUP_MATCH = "MERGE_TARGET_ROW_MATCHES_MULTIPLE_SOURCE_ROWS"
 
 
-def _rewrite(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
-    """The UNION ALL select over (kept/updated target rows) + (inserts).
+def _rewrite(
+    spark, spec: MergeSpec, tgt_fields: list[tuple[str, str]]
+) -> str:
+    """The merged snapshot as ONE join of the target and the source.
     ``tgt_fields`` is [(name, spark_sql_type)] from the live table schema.
 
-    Guarded branches compile to one first-true-wins ``CASE`` selecting a
-    branch ordinal (0 = no branch applies, keep the row as-is); the ordinal
+    The target (tagged with a row id) joins the source (tagged with a match
+    marker) on ``ON`` — a FULL OUTER join when the statement inserts, a LEFT
+    join otherwise. A row without a target id is an unmatched source row:
+    the first INSERT branch whose guard holds projects it, and it is dropped
+    when none does. Every other row is a target row; its matched and BY
+    SOURCE branches compile to one first-true-wins ``CASE`` selecting a
+    branch ordinal (0 = no branch applies, keep the row as-is). The ordinal
     expression is inlined wherever needed — Catalyst's common-subexpression
-    elimination shares it, and the whole matched side stays ONE left join
-    over the snapshot regardless of branch count (same shuffle shape Delta
-    plans for a multi-branch MERGE). The same join carries the
-    duplicate-match check: each target row gets an id, a window counts its
-    source matches, and the row filter raises when the count exceeds one."""
+    elimination shares it — so the plan stays one join whatever the branch
+    count, the shape Delta plans for a multi-branch MERGE.
+
+    The same select carries the duplicate-match check, and a matched row
+    whose target row matches several source rows raises from inside the
+    write. Where :func:`_source_count_keys` allows, the count is taken on
+    the source side, partitioned by its join keys, so it reuses the
+    source's own exchange and never shuffles the target; otherwise a window
+    over the join output counts the matches of each target row."""
     t, s = spec.target_alias, spec.source_alias
     # first-true-wins branch ordinal over BOTH target-side clause lists;
     # 0 = untouched target row. The two sides' conditions are mutually
-    # exclusive (__merge_m is true iff a source row matched), so one CASE —
-    # and the single LEFT JOIN — serves both: BY SOURCE costs no extra join
-    # or shuffle.
+    # exclusive (__merge_m is true iff a source row matched), so one CASE
+    # serves both.
     sided: list[tuple[str, MatchedBranch]] = [
         (f"{s}.__merge_m", b) for b in spec.matched
     ] + [(f"{s}.__merge_m IS NULL", b) for b in spec.nm_by_source]
@@ -323,7 +342,7 @@ def _rewrite(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
     )
     act = f"CASE{arms} ELSE 0 END"
     del_ids = [str(i) for i, (_, b) in enumerate(sided, start=1) if b.delete]
-    cols = ", ".join(
+    updated = [
         (
             f"CASE ({act})"
             + "".join(
@@ -331,46 +350,68 @@ def _rewrite(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
                 for i, (_, b) in enumerate(sided, start=1)
                 if not b.delete and c in b.sets
             )
-            + f" ELSE {t}.{c} END AS {c}"
+            + f" ELSE {t}.{c} END"
         )
         if any(not b.delete and c in b.sets for _, b in sided)
-        else f"{t}.{c} AS {c}"
+        else f"{t}.{c}"
         for c, _ in tgt_fields
-    )
+    ]
     keep = f"({act}) NOT IN ({', '.join(del_ids)})" if del_ids else "true"
-    # window keys: target-side equi-join columns (the join already hash-
-    # distributes rows by them, so the window adds no exchange) plus the
-    # row id, which alone makes each window exactly one target row
-    keys = [
-        f"{a}.{col}"
-        for c in _split_top_and(spec.on) or []
-        if (m := _EQ_CONJUNCT.match(c))
-        for a, col in (m.group(1, 2), m.group(3, 4))
-        if a == t
-    ] + [f"{t}.__merge_rid"]
-    matched = (
-        f"SELECT {', '.join(c for c, _ in tgt_fields)} FROM ("
-        f"SELECT {cols}, {keep} AS __merge_keep, "
-        f"count({s}.__merge_m) OVER (PARTITION BY {', '.join(keys)}) "
-        f"AS __merge_n "
+    src = "*, true AS __merge_m"
+    unmatched = f"{t}.__merge_rid IS NULL"
+    src_keys = _source_count_keys(spark, spec, tgt_fields)
+    if src_keys is not None:
+        src += (
+            ", count(1) OVER (PARTITION BY "
+            f"{', '.join(map(_quote, src_keys))}) AS __merge_n"
+        )
+        dup = f"{t}.__merge_rid IS NOT NULL AND {s}.__merge_n > 1"
+    else:
+        # one window per target row; target-side equi-join columns lead
+        # the keys so a shuffled join's distribution serves the window, and
+        # each unmatched source row gets a window of its own
+        keys = [f"{t}.{tcol}" for tcol, _ in _equi_pairs(spec)[0]]
+        keys.append(f"{t}.__merge_rid")
+        if spec.not_matched:
+            src += ", monotonically_increasing_id() AS __merge_sid"
+            keys.append(f"CASE WHEN {unmatched} THEN {s}.__merge_sid END")
+        dup = (
+            f"count({s}.__merge_m) OVER (PARTITION BY {', '.join(keys)}) > 1"
+        )
+    if spec.not_matched:
+        inserted, applies = _insert_cols(spec, tgt_fields)
+        # both arms share one output column: the inserted value takes the
+        # column's type here, as the snapshot's store cast gives it anyway
+        cols = [
+            f"CASE WHEN {unmatched} THEN CAST({ins} AS {typ}) "
+            f"ELSE {upd} END"
+            for (_, typ), ins, upd in zip(tgt_fields, inserted, updated)
+        ]
+        keep = f"CASE WHEN {unmatched} THEN {applies} ELSE {keep} END"
+        join = "FULL OUTER JOIN"
+    else:
+        cols, join = updated, "LEFT JOIN"
+    names = [c for c, _ in tgt_fields]
+    proj = ", ".join(f"{e} AS {c}" for e, c in zip(cols, names))
+    return (
+        f"SELECT {', '.join(names)} FROM ("
+        f"SELECT {proj}, {keep} AS __merge_keep, {dup} AS __merge_dup "
         f"FROM (SELECT *, monotonically_increasing_id() AS __merge_rid "
         f"FROM {spec.target}) AS {t} "
-        f"LEFT JOIN (SELECT *, true AS __merge_m FROM {spec.source_sql}) "
-        f"AS {s} ON {spec.on}) "
-        f"WHERE CASE WHEN __merge_n > 1 THEN raise_error('{_DUP_MATCH}') "
+        f"{join} (SELECT {src} FROM {spec.source_sql}) AS {s} "
+        f"ON {spec.on}) "
+        f"WHERE CASE WHEN __merge_dup THEN raise_error('{_DUP_MATCH}') "
         f"ELSE __merge_keep END"
     )
-    if spec.not_matched:
-        return f"{matched} UNION ALL {_insert_select(spec, tgt_fields)}"
-    return matched
 
 
-def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
-    """Source rows with no target match, projected to the target schema by
-    the first INSERT branch whose guard holds (missing columns become typed
-    NULLs). Duplicate source rows cannot fan target rows out here: the anti
-    join only ever drops source rows."""
-    t, s = spec.target_alias, spec.source_alias
+def _insert_cols(
+    spec: MergeSpec, tgt_fields: list[tuple[str, str]]
+) -> tuple[list[str], str]:
+    """Per target column, the value an unmatched source row is inserted
+    with: the first INSERT branch whose guard holds gives it, a typed NULL
+    when that branch lists no value for the column. Also returns the
+    condition that some branch applies."""
     names = [c for c, _ in tgt_fields]
     per_branch_vals: list[dict[str, str]] = []
     for b in spec.not_matched:
@@ -378,17 +419,12 @@ def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
         if len(icols) != len(b.vals):
             raise ValueError("MERGE INSERT: column/value count mismatch")
         per_branch_vals.append(dict(zip(icols, b.vals)))
-    anti = (
-        f"FROM {spec.source_sql} AS {s} "
-        f"LEFT ANTI JOIN {spec.target} AS {t} ON {spec.on}"
-    )
     if len(spec.not_matched) == 1 and spec.not_matched[0].guard is None:
         vals = per_branch_vals[0]
-        proj = ", ".join(
-            f"({vals[c]}) AS {c}" if c in vals else f"CAST(NULL AS {typ}) AS {c}"
+        return [
+            f"({vals[c]})" if c in vals else f"CAST(NULL AS {typ})"
             for c, typ in tgt_fields
-        )
-        return f"SELECT {proj} {anti}"
+        ], "true"
     arms = "".join(
         f" WHEN ({b.guard}) THEN {i}"
         if b.guard is not None
@@ -396,7 +432,7 @@ def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
         for i, b in enumerate(spec.not_matched, start=1)
     )
     iact = f"CASE{arms} ELSE 0 END"
-    proj = ", ".join(
+    return [
         (
             f"CASE ({iact})"
             + "".join(
@@ -404,13 +440,26 @@ def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
                 for i, vals in enumerate(per_branch_vals, start=1)
                 if c in vals
             )
-            + f" ELSE CAST(NULL AS {typ}) END AS {c}"
+            + f" ELSE CAST(NULL AS {typ}) END"
         )
         if any(c in vals for vals in per_branch_vals)
-        else f"CAST(NULL AS {typ}) AS {c}"
+        else f"CAST(NULL AS {typ})"
         for c, typ in tgt_fields
+    ], f"({iact}) <> 0"
+
+
+def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
+    """The insert-only MERGE's rows: source rows with no target match,
+    projected to the target schema by :func:`_insert_cols`. Duplicate
+    source rows cannot fan target rows out here: the anti join only ever
+    drops source rows."""
+    t, s = spec.target_alias, spec.source_alias
+    inserted, applies = _insert_cols(spec, tgt_fields)
+    proj = ", ".join(f"{e} AS {c}" for e, (c, _) in zip(inserted, tgt_fields))
+    return (
+        f"SELECT {proj} FROM {spec.source_sql} AS {s} "
+        f"LEFT ANTI JOIN {spec.target} AS {t} ON {spec.on} WHERE {applies}"
     )
-    return f"SELECT {proj} {anti} WHERE ({iact}) <> 0"
 
 
 def _split_top_and(cond: str) -> list[str] | None:
@@ -448,6 +497,52 @@ def _split_top_and(cond: str) -> list[str] | None:
 
 
 _EQ_CONJUNCT = re.compile(r"^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$")
+
+
+def _equi_pairs(spec: MergeSpec) -> tuple[list[tuple[str, str]], bool]:
+    """The ``(target col, source col)`` pair of each ``t.col = s.col``
+    conjunct of ``ON`` (either side first), and whether ``ON`` is a flat
+    conjunction of nothing but such conjuncts."""
+    conj = _split_top_and(spec.on)
+    if conj is None:
+        return [], False
+    t, s = spec.target_alias, spec.source_alias
+    pairs = []
+    for c in conj:
+        if m := _EQ_CONJUNCT.match(c):
+            aal, acol, bal, bcol = m.groups()
+            if (aal, bal) == (t, s):
+                pairs.append((acol, bcol))
+            elif (aal, bal) == (s, t):
+                pairs.append((bcol, acol))
+    return pairs, len(pairs) == len(conj)
+
+
+def _source_count_keys(
+    spark, spec: MergeSpec, tgt_fields: list[tuple[str, str]]
+) -> list[str] | None:
+    """The source columns the duplicate-match count may partition by, or
+    None when the count must be taken per target row.
+
+    Two source rows match one target row exactly when they agree on these
+    columns if ``ON`` is a flat conjunction of ``t.col = s.col`` whose two
+    sides have one type. A coerced pair breaks that: against a ``BIGINT``
+    target key the ``STRING`` source keys ``'1'`` and ``'01'`` differ, yet
+    both match the target row ``1``. The source types come from analysing
+    the source, which runs no job."""
+    pairs, flat = _equi_pairs(spec)
+    if not flat:
+        return None
+    tgt = {c.lower(): typ for c, typ in tgt_fields}
+    src = {
+        f.name.lower(): f.dataType.simpleString()
+        for f in spark.sql(f"SELECT * FROM {spec.source_sql}").schema.fields
+    }
+    for tcol, scol in pairs:
+        typ = tgt.get(tcol.lower())
+        if typ is None or typ != src.get(scol.lower()):
+            return None
+    return list(dict.fromkeys(scol for _, scol in pairs))
 
 
 def _part_literal(v) -> str | None:
@@ -497,25 +592,33 @@ def _quote(ident: str) -> str:
 def table_meta(spark, name: str) -> TableMeta:
     """One ``getTableMetadata`` read of ``name``: partition columns,
     provider, table type, location and schema. A catalog lookup only — it
-    neither lists files nor analyses a plan."""
+    neither lists files nor analyses a plan.
+
+    Scala collections are read by size and index, never through a Java
+    iterator: py4j ends every iteration with a JVM exception."""
     from pyspark.sql.types import StructType
 
     jss = spark._jsparkSession
-    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
     ident = jss.sessionState().sqlParser().parseTableIdentifier(name)
     meta = jss.sessionState().catalog().getTableMetadata(ident)
     table = meta.identifier().table()
     provider = meta.provider()
+    props = meta.storage().properties().toSeq()
     return TableMeta(
         name=f"{_quote(meta.identifier().database().get())}.{_quote(table)}",
         table=table,
         schema=StructType.fromJson(json.loads(meta.schema().json())),
-        pcols=list(conv.asJava(meta.partitionColumnNames())),
+        pcols=StructType.fromJson(
+            json.loads(meta.partitionSchema().json())
+        ).names,
         provider=provider.get() if provider.isDefined() else "hive",
         managed=meta.tableType().name() == "MANAGED",
         bucketed=meta.bucketSpec().isDefined(),
         location=meta.location().toString(),
-        options=dict(conv.asJava(meta.storage().properties())),
+        options={
+            kv._1(): kv._2()
+            for kv in (props.apply(i) for i in range(props.size()))
+        },
     )
 
 
@@ -552,11 +655,12 @@ def _forget_partitions(spark, name: str) -> None:
     a new layout."""
     jss = spark._jsparkSession
     jvm = spark._jvm
-    conv = jvm.scala.jdk.javaapi.CollectionConverters
     cat = jss.sessionState().catalog()
     ident = jss.sessionState().sqlParser().parseTableIdentifier(name)
-    parts = conv.asJava(cat.listPartitions(ident, jvm.scala.Option.empty()))
-    specs = conv.asScala([p.spec() for p in parts]).toSeq()
+    parts = cat.listPartitions(ident, jvm.scala.Option.empty())
+    specs = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
+        [parts.apply(i).spec() for i in range(parts.size())]
+    ).toSeq()
     # ignoreIfNotExists, purge, retainData
     cat.dropPartitions(ident, specs, True, False, True)
 
@@ -652,22 +756,11 @@ def _partition_pruning(spark, spec: MergeSpec, meta: TableMeta):
     names = [c for c, _ in meta.fields]
     if names[-len(pcols) :] != pcols:
         return None
-    conj = _split_top_and(spec.on)
-    if conj is None:
+    pairs, flat = _equi_pairs(spec)
+    if not flat:
         return None
-    t_, s_ = spec.target_alias, spec.source_alias
-    eq: dict[str, str] = {}
-    for c in conj:
-        m = _EQ_CONJUNCT.match(c)
-        if not m:
-            return None
-        aal, acol, bal, bcol = m.groups()
-        if aal == t_ and bal == s_:
-            eq[acol] = bcol
-        elif aal == s_ and bal == t_:
-            eq[bcol] = acol
-        else:
-            return None
+    s_ = spec.source_alias
+    eq = dict(pairs)
     if not all(p in eq for p in pcols):
         return None
     for b in spec.matched:
@@ -721,7 +814,7 @@ def run_merge(spark, stmt: str) -> None:
     rows and rewrites nothing. Every other shape rewrites the snapshot in
     one write (:func:`swap_snapshot`), except that partitioned targets take
     the PRUNED path when provably safe (see :func:`_partition_pruning`):
-    the rewrite's joins read only the touched partitions, and the swap-in
+    the rewrite's join reads only the touched partitions, and the swap-in
     is a dynamic-partition INSERT OVERWRITE that replaces exactly those
     partitions — untouched partitions are neither read nor rewritten, the
     Delta-MERGE data-skipping behavior at partition granularity."""
@@ -743,7 +836,7 @@ def run_merge(spark, stmt: str) -> None:
             # (ADVICE r6 — the unpinned fallback re-evaluated the source)
             if pin_view is not None:
                 spec = dataclasses.replace(spec, source_sql=pin_view)
-            swap_snapshot(spark, meta, _rewrite(spec, meta.fields))
+            swap_snapshot(spark, meta, _rewrite(spark, spec, meta.fields))
     except Exception as e:
         if _DUP_MATCH not in str(e):
             raise
@@ -778,7 +871,7 @@ def _run_pruned(spark, spec, meta, decision, view) -> None:
         f"SELECT * FROM {spec.target} WHERE {pred}"
     )
     pspec = dataclasses.replace(spec, target=view, source_sql=pin_view)
-    select = _rewrite(pspec, meta.fields)
+    select = _rewrite(spark, pspec, meta.fields)
     stage = f"{spec.target}__merge_stage"
     conf = "spark.sql.sources.partitionOverwriteMode"
     try:

@@ -207,9 +207,11 @@ class VersionedTable:
         commit's manifest are read — the file-level diff Delta's CDF does —
         so untouched dirs (the overwhelming majority under append/upsert
         workloads) are never scanned. Rows common to a rewritten dir pair
-        cancel in the multiset ``exceptAll``. Schema evolution is aligned
-        per commit by NULL-filling each side to the union of the two
-        committed schemas."""
+        cancel in one aggregation per commit: each distinct row's count in
+        the added dirs minus its count in the removed ones, which is the
+        multiset rule of ``exceptAll`` in both directions. Schema evolution
+        is aligned per commit by NULL-filling each side to the union of the
+        two committed schemas."""
         from pyspark.sql import functions as F
 
         hi = self.current_version() if to_version is None else to_version
@@ -256,24 +258,34 @@ class VersionedTable:
                     ]
                 )
 
-            empty = new_side if new_side is not None else old_side
-            a_new = aligned(new_side) if new_side is not None else aligned(
-                empty
-            ).limit(0)
-            a_old = aligned(old_side) if old_side is not None else aligned(
-                empty
-            ).limit(0)
-            for frame, kind in (
-                (a_new.exceptAll(a_old), "insert"),
-                (a_old.exceptAll(a_new), "delete"),
-            ):
-                parts.append(
-                    frame.select(
-                        "*",
-                        F.lit(kind).alias("_change_type"),
-                        F.lit(v).cast("int").alias("_commit_version"),
-                    )
+            # one aggregation nets the commit: new rows count +1, old rows
+            # -1, and each distinct row with a nonzero net surfaces |net|
+            # times — exceptAll's multiset rule for both directions at once
+            signed = [
+                aligned(side).withColumn("__change_n", F.lit(sign))
+                for side, sign in ((new_side, 1), (old_side, -1))
+                if side is not None
+            ]
+            tagged = signed[0]
+            if len(signed) == 2:
+                tagged = tagged.unionByName(signed[1])
+            net = F.col("__change_n")
+            parts.append(
+                tagged.groupBy(*cols)
+                .agg(F.sum(net).alias("__change_n"))
+                .where(net != 0)
+                .select(
+                    *cols,
+                    F.when(net > 0, "insert")
+                    .otherwise("delete")
+                    .alias("_change_type"),
+                    F.lit(v).cast("int").alias("_commit_version"),
+                    F.explode(
+                        F.array_repeat(F.lit(0), F.abs(net).cast("int"))
+                    ).alias("__change_rep"),
                 )
+                .drop("__change_rep")
+            )
         if not parts:
             # hi may be 0 (the valid empty pre-create range): version 1 is
             # the earliest manifest that exists for the schema read

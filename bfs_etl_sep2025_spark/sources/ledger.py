@@ -31,24 +31,20 @@ class LoadLedger:
         self.spark = spark
         self.path = path
 
-    def _read(self):
-        """The ledger rows. A missing path means nothing was loaded yet;
-        any other failure raises — reading an unreadable ledger as empty
-        would make COPY reload every file."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            return self.spark.read.schema(_SCHEMA).parquet(self.path)
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return self.spark.createDataFrame([], _SCHEMA)
-
     def loaded_files(self, table: str) -> set[str]:
+        """The files recorded for ``table``. A missing ledger means nothing
+        was loaded yet; any other failure raises — reading an unreadable
+        ledger as empty would make COPY reload every file."""
         from pyspark.sql import functions as F
 
+        jvm = self.spark._jvm
+        path = jvm.org.apache.hadoop.fs.Path(self.path)
+        conf = self.spark._jsparkSession.sessionState().newHadoopConf()
+        if not path.getFileSystem(conf).exists(path):
+            return set()
         rows = (
-            self._read()
+            self.spark.read.schema(_SCHEMA)
+            .parquet(self.path)
             .filter(F.col("table_name") == table)
             .select("file_name")
             .collect()
@@ -56,9 +52,17 @@ class LoadLedger:
         return {r.file_name for r in rows}
 
     def record(self, table: str, files: list[str], loaded_at: datetime) -> None:
+        """Append one row per file. The rows are built as a one-partition
+        literal relation in the JVM, so no Python worker serializes them."""
+        from pyspark.sql import functions as F
+
         if not files:
             return
-        df = self.spark.createDataFrame(
-            [(table, f, loaded_at) for f in files], _SCHEMA
+        df = self.spark.range(1, numPartitions=1).select(
+            F.lit(table).alias("table_name"),
+            F.explode(F.array(*map(F.lit, files))).alias("file_name"),
+            F.lit(loaded_at.isoformat(sep=" "))
+            .cast("timestamp_ntz")
+            .alias("loaded_at"),
         )
         df.write.mode("append").parquet(self.path)

@@ -267,7 +267,7 @@ def run_stream_merge_upsert(
     the MATCHED branch instead of duplicating — idempotent upserts, the
     exactly-once-style sink pattern.
 
-    Scale notes: each micro-batch costs the MERGE's two joins over the
+    Scale notes: each micro-batch costs the MERGE's one join over the
     target snapshot (the no-transactional-format price; see
     ``plans/merge.py``); the stream's own state is file-tracking only.
     ``target`` is taken for lock serialization via the statement head, so

@@ -169,6 +169,37 @@ def test_ledger_missing_path_is_empty_but_unreadable_raises(spark, tmp_path):
         LoadLedger(spark, "nosuchfs://bucket/ledger").loaded_files("t")
 
 
+def test_ledger_records_in_the_jvm_and_round_trips(spark, tmp_path, monkeypatch):
+    """``record`` writes a literal relation built in the JVM — no Python RDD
+    whose rows a Python worker pickles — and a round trip keeps a file name
+    with quotes and the exact ``timestamp_ntz`` load time."""
+    from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
+
+    frame = type(spark.range(1))
+    written, write = [], frame.write
+    monkeypatch.setattr(
+        frame, "write", property(lambda df: written.append(df) or write.fget(df))
+    )
+    path = str(tmp_path / "ledger")
+    ledger = LoadLedger(spark, path)
+    at = datetime(2022, 7, 13, 7, 5, 9, 123456)
+    files = ["it's.csv", 'say "hi".csv', "plain.csv"]
+    ledger.record("db.t", files, at)
+    ledger.record("db.other", ["other.csv"], at)
+    assert len(written) == 2
+    for df in written:
+        assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
+    assert ledger.loaded_files("db.t") == set(files)
+    assert ledger.loaded_files("db.none") == set()
+    rows = spark.read.parquet(path).collect()
+    assert sorted((r.table_name, r.file_name) for r in rows) == sorted(
+        [("db.t", f) for f in files] + [("db.other", "other.csv")]
+    )
+    assert {r.loaded_at for r in rows} == {at}
+    assert spark.read.parquet(path).schema["loaded_at"].dataType.simpleString() \
+        == "timestamp_ntz"
+
+
 def test_option_map_coverage():
     reader, sentinels = map_file_format(FILE_FORMAT)
     assert reader["sep"] == ","

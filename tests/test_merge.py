@@ -233,6 +233,116 @@ def test_merge_duplicate_source_raises(spark):
     ]
 
 
+def _dup_rows(spark):
+    return sorted(
+        ((r.id, r.v) for r in spark.table("dup_db.tgt").collect()),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize(
+    "tgt_key, src_rows, on, raises",
+    [
+        # MATCHED + NOT MATCHED: the one-join rewrite's FULL OUTER path
+        pytest.param(
+            "INT", "(1, 100), (1, 200), (3, 300)", "t.id = s.id", True,
+            id="matched_and_not_matched",
+        ),
+        # a non-equi conjunct: the count is taken per target row
+        pytest.param(
+            "INT", "(1, 100), (1, 200)", "t.id = s.id AND s.v > t.v", True,
+            id="extra_non_equi_conjunct",
+        ),
+        # '1' and '01' differ as strings but both equal the BIGINT key 1:
+        # a count keyed on the raw source column would miss the duplicate
+        pytest.param(
+            "BIGINT", "('1', 100), ('01', 200)", "t.id = s.id", True,
+            id="type_coerced_keys",
+        ),
+        # NULL keys never match, so they are not duplicates: both insert
+        pytest.param(
+            "INT", "(NULL, 100), (NULL, 200), (1, 300)", "t.id = s.id", False,
+            id="null_source_keys",
+        ),
+    ],
+)
+def test_merge_duplicate_match_per_on_shape(
+    spark, tgt_key, src_rows, on, raises
+):
+    """The duplicate-match check holds on every ``ON`` shape of an upsert:
+    when a target row matches two source rows it raises inside the write
+    and leaves the target untouched; NULL source keys match nothing, so
+    their rows are inserted."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS dup_db")
+    spark.sql("DROP TABLE IF EXISTS dup_db.tgt")
+    spark.sql(f"CREATE TABLE dup_db.tgt (id {tgt_key}, v INT) USING parquet")
+    spark.sql("INSERT INTO dup_db.tgt VALUES (1, 10), (2, 20)")
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW dup_src AS "
+        f"SELECT * FROM VALUES {src_rows} AS x(id, v)"
+    )
+    stmt = (
+        f"MERGE INTO dup_db.tgt t USING dup_src s ON {on} "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
+    )
+    if raises:
+        with pytest.raises(ValueError, match="nondeterministic"):
+            run_merge(spark, stmt)
+        assert _dup_rows(spark) == [(1, 10), (2, 20)]
+    else:
+        run_merge(spark, stmt)
+        assert _dup_rows(spark) == sorted(
+            [(1, 300), (2, 20), (None, 100), (None, 200)], key=repr
+        )
+
+
+def test_merge_rewrite_plan_is_one_join(spark):
+    """The rewrite reads each table once through one join. A flat equi
+    ``ON`` counts duplicate matches on the source side, so no exchange is
+    keyed on the target row id; other shapes count per target row."""
+    import re
+
+    from bfs_etl_sep2025_spark.plans.merge import _rewrite, table_meta
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS shape_db")
+    for name in ("tgt", "src"):
+        spark.sql(f"DROP TABLE IF EXISTS shape_db.{name}")
+        spark.sql(
+            f"CREATE TABLE shape_db.{name} (id INT, v STRING) USING parquet"
+        )
+        spark.sql(f"INSERT INTO shape_db.{name} VALUES (1, 'a'), (2, 'b')")
+    fields = table_meta(spark, "shape_db.tgt").fields
+
+    def plan(on: str, inserts: bool) -> str:
+        stmt = (
+            f"MERGE INTO shape_db.tgt t USING shape_db.src s ON {on} "
+            "WHEN MATCHED THEN UPDATE SET v = s.v"
+        )
+        if inserts:
+            stmt += " WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
+        df = spark.sql(_rewrite(spark, parse_merge(stmt), fields))
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    joins = re.compile(
+        r"\b(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|"
+        r"BroadcastNestedLoopJoin|CartesianProduct)\b"
+    )
+    rid_exchange = re.compile(r"hashpartitioning\([^\n]*__merge_rid")
+    upsert = plan("t.id = s.id", inserts=True)
+    assert len(joins.findall(upsert)) == 1
+    assert "FullOuter" in upsert
+    for table in ("tgt", "src"):
+        assert len(re.findall(rf"FileScan parquet \S*shape_db\.{table}\[",
+                              upsert)) == 1
+    assert not rid_exchange.search(upsert)
+    update = plan("s.id = t.id", inserts=False)
+    assert len(joins.findall(update)) == 1 and "LeftOuter" in update
+    assert not rid_exchange.search(update)
+    # the per-target-row count (here a non-equi conjunct) is keyed on it
+    assert rid_exchange.search(plan("t.id = s.id AND s.v > t.v", True))
+
+
 # -- UPDATE / DELETE (plans/dml.py, same staging-rewrite machinery) ---------
 
 
@@ -1132,3 +1242,43 @@ def test_rewrite_keeps_char_varchar_insert_contract(spark):
     got = [(r.s, r.c) for r in spark.table("cv_t").collect()]
     assert got == [("xyz", "y  ")]
     spark.sql("DROP TABLE cv_t")
+
+
+def test_catalog_reads_raise_no_jvm_exceptions(spark, monkeypatch):
+    """``table_meta`` and ``_forget_partitions`` read Scala collections by
+    size and index: the catalog reads convert no JVM exception, and the
+    metadata of a partitioned table with options is read in full."""
+    import pyspark.errors.exceptions.captured as captured
+
+    from bfs_etl_sep2025_spark.plans.merge import (
+        _forget_partitions,
+        table_meta,
+    )
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS meta_db")
+    spark.sql("DROP TABLE IF EXISTS meta_db.pt")
+    spark.sql(
+        "CREATE TABLE meta_db.pt (id INT, v STRING, d INT, h STRING) "
+        "USING parquet PARTITIONED BY (d, h) "
+        "OPTIONS ('compression' 'zstd', 'x.y' 'z')"
+    )
+    spark.sql("INSERT INTO meta_db.pt VALUES (1, 'a', 1, 'x'), (2, 'b', 2, 'y')")
+    real, calls = captured.convert_exception, []
+    monkeypatch.setattr(
+        captured,
+        "convert_exception",
+        lambda e: calls.append(e) or real(e),
+    )
+    meta = table_meta(spark, "meta_db.pt")
+    assert meta.pcols == ["d", "h"]
+    assert meta.options == {"compression": "zstd", "x.y": "z"}
+    assert meta.fields == [
+        ("id", "int"), ("v", "string"), ("d", "int"), ("h", "string")
+    ]
+    assert (meta.provider, meta.managed, meta.bucketed) == (
+        "parquet", True, False
+    )
+    _forget_partitions(spark, "meta_db.pt")
+    assert calls == []
+    assert spark.sql("SHOW PARTITIONS meta_db.pt").collect() == []
+    spark.sql("DROP DATABASE meta_db CASCADE")

@@ -865,10 +865,26 @@ def test_changes_feed_across_mutations(spark, tmp_path):
     with pytest.raises(ValueError, match="outside committed range"):
         vt.changes(0, 99)
 
+    # duplicate identical rows in one commit keep their multiplicity: each
+    # surfaces once per copy, and a rewrite that keeps both copies nets
+    # them out while the one removed row surfaces once
+    vt.append(
+        spark.createDataFrame(
+            [(7, "g"), (7, "g"), (8, "h")], "id INT, v STRING"
+        )
+    )  # v7
+    assert feed(6, 7) == [
+        (7, "insert", 7, "g"), (7, "insert", 7, "g"), (7, "insert", 8, "h")
+    ]
+    vt.delete_where("id = 8")  # v8: rewrites the dir, keeping both 7s
+    assert feed(7, 8) == [(8, "delete", 8, "h")]
+    vt.delete_where("id = 7")  # v9
+    assert feed(8, 9) == [(9, "delete", 7, "g"), (9, "delete", 7, "g")]
+
 
 def test_changes_feed_aligns_schema_evolution(spark, tmp_path):
     """A commit on either side of a schema evolution NULL-fills the
-    missing column instead of failing the exceptAll alignment."""
+    missing column instead of failing the feed's alignment."""
     vt = VersionedTable(spark, str(tmp_path / "cdf_evo"))
     vt.create(spark.createDataFrame([(1, "a")], "id INT, v STRING"))
     vt.append(
