@@ -103,9 +103,10 @@ def fingerprint_batch(docs: DataFrame) -> DataFrame:
 def commit_pending(
     store: VersionedTable, pending: list[DataFrame], keys: list[str]
 ) -> None:
-    """Commit a deferred sync run's delta batches: MERGE semantics per
-    batch (later batches win on a shared key), one lock/manifest round
-    for the whole group via :meth:`VersionedTable.upsert_many`."""
+    """Commit sync delta batches (one immediate batch, or a deferred
+    run's group): the first batch creates a missing store, the rest
+    MERGE with later batches winning on a shared key, in one
+    lock/manifest round via :meth:`VersionedTable.upsert_many`."""
     if not pending:
         return
     batches = pending
@@ -223,10 +224,8 @@ def sync_batch(
     # (deferred mode hands the delta to the caller's group commit instead)
     if pending is not None:
         pending.append(fp)
-    elif store.exists():
-        store.upsert(fp, keys=["doc_id"])
     else:
-        store.create(fp)
+        commit_pending(store, [fp], keys=["doc_id"])
     return verdicts
 
 
@@ -359,10 +358,8 @@ def _sem_sync_batch(spark, batch, cent, store, pending=None):
     )
     if pending is not None:
         pending.append(assigned)
-    elif store.exists():
-        store.upsert(assigned, keys=["vec_id"])
     else:
-        store.create(assigned)
+        commit_pending(store, [assigned], keys=["vec_id"])
     return verdicts
 
 

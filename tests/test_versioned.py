@@ -274,8 +274,9 @@ def test_versioned_random_op_sequences_match_model(spark, tmp_path):
 # -- multi-process contention (VERDICT r5 item 4) ---------------------------
 #
 # The in-process table_write_lock serializes threads; ACROSS processes the
-# only protection is the commit protocol itself (O_CREAT|O_EXCL manifest
-# claim + atomic _CURRENT replace). Worker processes race real append
+# only protection is the commit protocol itself (the manifest body written
+# to a temp name, then linked to v<N>.json: create-if-absent, and the
+# link is the commit point). Worker processes race real append
 # commits against each other — no coordination beyond the protocol — and
 # module-level so multiprocessing's spawn start method can pickle it
 # (spawn, not fork: the parent holds a live JVM).
@@ -355,6 +356,141 @@ def test_multiprocess_commit_contention(spark, tmp_path):
     assert len(head_dirs) == 2 * n_wins + 1
     assert vt.read().count() == 2 * n_wins + 1
 
+
+
+# -- crash safety: a writer killed mid-commit never blocks the next one ----
+
+
+def _crash_commit(root: str, seed_dir: str, point: str) -> None:
+    """Spawned child: start an append commit and die at ``point`` with no
+    cleanup at all (``os._exit`` skips ``finally`` blocks and atexit)."""
+    import shutil
+    import uuid
+
+    from bfs_etl_sep2025_spark.plans.versioned import VersionedTable
+
+    vt = VersionedTable(None, root)  # filesystem protocol only, no Spark
+    parent = vt.current_version()
+    dirname = f"v{parent + 1:05d}-{uuid.uuid4().hex[:8]}"
+    shutil.copytree(seed_dir, os.path.join(root, "data", dirname))
+    if point == "after_data":
+        os._exit(17)
+    # in_manifest_fsync: the only fsync of a commit is the manifest body's
+    os.fsync = lambda fd: os._exit(17)
+    dirs = vt._manifest(parent)["dirs"] + [dirname]
+    vt._commit(parent + 1, parent, dirs, "append")
+    os._exit(0)  # not reached
+
+
+@pytest.mark.parametrize("point", ["after_data", "in_manifest_fsync"])
+def test_crashed_writer_never_blocks_the_next(spark, tmp_path, point):
+    import multiprocessing as mp
+    import time
+
+    root = str(tmp_path / "crash")
+    vt = VersionedTable(spark, root)
+    vt.create(spark.createDataFrame([(1, "a"), (2, "b")], "id INT, v STRING"))
+    seed_dir = os.path.join(root, "data", vt._manifest(1)["dirs"][0])
+    p = mp.get_context("spawn").Process(
+        target=_crash_commit, args=(root, seed_dir, point)
+    )
+    p.start()
+    p.join(timeout=120)
+    assert p.exitcode == 17
+
+    # readers still see the old snapshot, and only committed versions
+    assert vt.current_version() == 1
+    assert [h["version"] for h in vt.history()] == [1]
+    assert vt.version_at(time.time_ns() // 1000) == 1
+    assert _rows(vt.read()) == [(1, "a"), (2, "b")]
+    # the next writer commits v2 over the crashed writer's debris
+    new_rows = spark.createDataFrame([(3, "c")], "id INT, v STRING")
+    assert vt.append(new_rows) == 2
+    assert [h["version"] for h in vt.history()] == [1, 2]
+    assert vt.version_at(time.time_ns() // 1000) == vt.current_version() == 2
+    assert _rows(vt.read()) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_head_orders_versions_by_number(tmp_path):
+    """v{N:05d} grows a sixth digit at 100000: the head, history and time
+    travel must order manifests by number, not by name."""
+    import time
+
+    vt = VersionedTable(None, str(tmp_path / "long"))  # no Spark needed
+    vt._commit(99999, 0, [], "append")
+    vt._commit(100000, 99999, [], "append")
+    assert vt.current_version() == 100000
+    assert [h["version"] for h in vt.history()] == [99999, 100000]
+    assert vt.version_at(time.time_ns() // 1000) == 100000
+
+
+def test_vacuum_spares_in_flight_writer(vt, spark):
+    """A dir named for a version above the head may belong to a writer in
+    another process that has not committed yet: vacuum keeps it. An
+    unreferenced dir at or below the head can never commit: reclaimed."""
+    head = vt.current_version()
+    orphan = vt._write_data_dir(
+        spark.createDataFrame([(8, "o")], "id INT, v STRING"), head
+    )
+    in_flight = vt._write_data_dir(
+        spark.createDataFrame([(9, "p")], "id INT, v STRING"), head + 1
+    )
+    removed = vt.vacuum()
+    assert orphan in removed and in_flight not in removed
+    dirs = vt._manifest(head)["dirs"] + [in_flight]
+    vt._commit(head + 1, head, dirs, "append")
+    assert _rows(vt.read()) == [(1, "a"), (2, "b"), (9, "p")]
+
+
+# batches per shape; the table starts as {1: a, 2: b, 10: c}
+_UPSERT_BATCHES = {
+    # pairwise-disjoint batch key ranges, still replacing existing rows
+    "disjoint": [[(1, "x"), (4, "y")], [(10, "p")], [(30, "q"), (31, "r")]],
+    # overlapping ranges: a later batch wins on a shared key
+    "overlap": [
+        [(1, "x"), (3, "y")], [(3, "z"), (2, "w")], [(1, "u"), (10, "v")]
+    ],
+    # NULL keys never match, so each one inserts; an empty batch is a no-op
+    "null_and_empty": [[(None, "n1"), (2, "x")], [], [(None, "n2"), (2, "y")]],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_UPSERT_BATCHES))
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_upsert_and_upsert_many_match_python_model(spark, tmp_path, n, shape):
+    """``upsert`` is the one-source case of ``upsert_many``, so neither
+    can serve as the other's reference: both are checked against a
+    plain-Python MERGE — later batch wins per non-NULL key, NULL-key rows
+    accumulate."""
+    schema = "id INT, v STRING"
+    base = [(1, "a"), (2, "b"), (10, "c")]
+    batches = _UPSERT_BATCHES[shape][:n]
+    want = base
+    for batch in batches:
+        keys = {k for k, _ in batch if k is not None}
+        want = [r for r in want if r[0] not in keys] + batch
+
+    def table(name):
+        t = VersionedTable(spark, str(tmp_path / name))
+        t.create(spark.createDataFrame(base, schema))
+        return t
+
+    seq = table("seq")
+    for batch in batches:
+        seq.upsert(spark.createDataFrame(batch, schema), keys=["id"])
+    many = table("many")
+    many.upsert_many(
+        [spark.createDataFrame(b, schema) for b in batches], keys=["id"]
+    )
+    for t in (seq, many):
+        assert sorted(map(tuple, t.read().collect()), key=repr) == sorted(
+            want, key=repr
+        )
+    assert [h["op"] for h in seq.history()] == ["create"] + ["upsert"] * n
+    assert [h["op"] for h in many.history()] == [
+        "create",
+        "upsert" if n == 1 else f"upsert_many({n})",
+    ]
 
 def test_upsert_prunes_disjoint_dirs(spark, tmp_path):
     """Delta-style MERGE file pruning at dir granularity: a data dir whose
