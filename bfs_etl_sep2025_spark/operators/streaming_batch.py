@@ -356,13 +356,13 @@ def stream_typed_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_lsh_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING near-dup candidate gate, REAL typed-state run (r10 —
-    the streaming/LLM-ops crossover): per-document LSH band rows stream
-    through ``transformWithStateInPandas`` keyed by band bucket, whose
-    state is ONE BIGINT (smallest doc_id seen); a doc is flagged iff any
-    bucket already holds a smaller id. The job's retroactive-flip
-    emission makes ``bool_or(dup)`` per doc invariant to arrival order
-    and batching, so the drained stream must converge to the batch rule
+    """STREAMING near-dup candidate gate (the streaming/LLM-ops
+    crossover): per-document LSH band rows stream through
+    ``applyInPandasWithState`` keyed by band bucket, whose state is ONE
+    BIGINT (smallest doc_id seen); a doc is flagged iff any bucket already
+    holds a smaller id. The job's retroactive-flip emission makes
+    ``bool_or(dup)`` per doc invariant to arrival order and batching, so
+    the drained stream must converge to the batch rule
     "exists a smaller doc_id sharing a band" — the recall-first gate in
     front of exact reranking (``dedup_minhash_lsh_pairs`` scores the
     survivors' pairs; this gate never computes a value, so LSH recall is
@@ -371,8 +371,9 @@ def stream_lsh_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes: band rows are computed batch-side (the same shingle
     pipeline the batch queries use) and staged as the landing files a
     crawler would drop; streaming state is 8 bytes/bucket, shuffled once
-    by bucket; the final verdict aggregate runs batch-side on the
-    drained updates."""
+    by bucket, on the session's state store provider (HDFS-backed or
+    RocksDB); the final verdict aggregate runs batch-side on the drained
+    updates."""
     from bfs_etl_sep2025_spark.operators.incremental import (
         fingerprint_batch,
     )
@@ -392,20 +393,7 @@ def stream_lsh_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema("bucket string, doc_id bigint").parquet(
         staged
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = _drain(spark, stream_lsh_band_dedup(stream), "update")
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
+    out = _drain(spark, stream_lsh_band_dedup(stream), "update")
     verdicts = out.groupBy("doc_id").agg(F.max("dup").alias("near_dup"))
     return (
         d.select("doc_id")

@@ -71,6 +71,8 @@ PLAN_CHANGED: tuple[str, ...] = (
     "dedup_incremental_semantic",
     # per-user profile: built-in streaming aggregation, no Python handler
     "stream_typed_state_profile",
+    # LSH band gate: per-bucket state through applyInPandasWithState
+    "stream_lsh_dedup_gate",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

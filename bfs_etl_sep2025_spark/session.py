@@ -77,13 +77,6 @@ def build_spark(
     One long-lived session is intended per process (driver contract and bench
     both reuse it); ``getOrCreate`` makes repeated calls cheap.
     """
-    # protobuf fallback must be on PYTHONPATH BEFORE the JVM launches:
-    # Spark's Python workers inherit the JVM env, which inherits ours —
-    # this makes transformWithStateInPandas's state-server protocol work
-    # in containers without google.protobuf (vendor/protoshim).
-    from bfs_etl_sep2025_spark.vendor import ensure_protobuf
-
-    ensure_protobuf()
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus()
     builder = (
         SparkSession.builder.appName(app_name)

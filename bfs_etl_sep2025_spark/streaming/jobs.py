@@ -20,16 +20,14 @@ unbounded keys need the watermark or state grows forever. maxFilesPerTrigger
 bounds micro-batch size; sinks should be ``foreachBatch`` into a
 transactional table for exactly-once.
 
-API-coverage note: custom stateful processing comes in two generations.
-``applyInPandasWithState`` (:func:`stream_running_user_totals`) packs a
-key's state into one tuple; Spark 4's ``transformWithStateInPandas``
-(typed state variables, timers, TTL; RocksDB state store) runs the
-streaming LSH near-dup gate (:func:`stream_lsh_band_dedup`) — its protobuf
-state-server protocol executes in-container through the vendored
-pure-Python wire runtime (``vendor/protoshim``). A stateful stream whose
-state fits built-in aggregates uses them instead
-(:func:`stream_user_profile_tws`): no Python worker or state-server calls
-per micro-batch.
+State note: a stateful stream whose state fits built-in aggregates uses
+them (:func:`stream_user_profile_tws`): no Python worker per micro-batch.
+Logic that aggregates cannot express goes through
+``applyInPandasWithState`` (:func:`stream_running_user_totals`, the LSH
+near-dup gate :func:`stream_lsh_band_dedup`): each key's state is one
+tuple that travels inline with the key's Arrow batch, so there is no state
+server to call and no pre-init worker at query start, and both state
+stores (HDFS-backed, RocksDB) run it.
 """
 
 from __future__ import annotations
@@ -45,19 +43,9 @@ EVENTS_SCHEMA = (
 
 
 def stream_events(spark: SparkSession, source: str) -> DataFrame:
-    """File-stream over parquet event files (schema mandatory on streams).
-
-    The file source monitors a *directory*; a single-file fixture path is
-    staged into one via symlink so the same entry point serves both the
-    fixtures and a real landing directory.
-    """
-    import os
-    import tempfile
-
-    if os.path.isfile(source):
-        staged = tempfile.mkdtemp(prefix="bfs_stream_src_")
-        os.symlink(os.path.abspath(source), os.path.join(staged, "part-0.parquet"))
-        source = staged
+    """File-stream over the parquet event files in the directory
+    ``source`` (schema mandatory on streams; the file source monitors a
+    directory, not a file)."""
     return (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)  # one file = one micro-batch
@@ -369,7 +357,7 @@ def stream_user_profile_tws(events: DataFrame) -> DataFrame:
     and a type→count map) inside the JVM operator, so a round pays no
     Python pre-init worker at query start, no per-key pandas frames and no
     state-server round trips. It runs on the HDFS-backed and the RocksDB
-    state store alike. Custom typed state stays for logic aggregates
+    state store alike. A Python state handler stays for logic aggregates
     cannot express (:func:`stream_lsh_band_dedup`).
 
     Scale notes: state is per user, shuffled once by user_id, and has no
@@ -377,8 +365,8 @@ def stream_user_profile_tws(events: DataFrame) -> DataFrame:
     distinct event types that user has sent — the type set and the count
     map are re-serialized on every update — so a high-cardinality type
     column needs bucketing before it reaches this operator. Checkpoints
-    written by the earlier ``transformWithStateInPandas`` version of this
-    operator cannot be resumed (Spark rejects the changed state schema).
+    written by the earlier typed-state version of this operator cannot be
+    resumed (Spark rejects the changed state schema).
     """
     return events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -389,8 +377,8 @@ def stream_user_profile_tws(events: DataFrame) -> DataFrame:
 
 
 def stream_lsh_band_dedup(band_rows: DataFrame) -> DataFrame:
-    """Streaming NEAR-dup gate over LSH band buckets — typed state via
-    ``transformWithStateInPandas`` (r10): the input stream carries one
+    """Streaming NEAR-dup gate over LSH band buckets, through
+    ``applyInPandasWithState``: the input stream carries one
     ``(bucket, doc_id)`` row per (document, minhash band); state per
     bucket is ONE BIGINT — the smallest doc_id ever seen there — and a
     document is flagged the moment any of its buckets already holds a
@@ -404,51 +392,34 @@ def stream_lsh_band_dedup(band_rows: DataFrame) -> DataFrame:
     Scale notes: this is the recall-first candidate gate of a streaming
     ingest (exact rerank happens offline over flagged pairs —
     ``dedup_minhash_lsh_pairs`` semantics); state is 8 bytes per distinct
-    band bucket regardless of corpus size, shuffled once by bucket; each
+    band bucket regardless of corpus size, shuffled once by bucket, and
+    travels inline with each bucket's Arrow batch (no state server); each
     flip emission is bounded by the number of strict min decreases, so
-    output rows <= input rows x 2. RocksDB provider required (typed
-    state = column families)."""
-    from bfs_etl_sep2025_spark.vendor import ensure_protobuf_on_workers
+    output rows <= input rows x 2. Runs on the HDFS-backed and the
+    RocksDB state store alike. Checkpoints written by the earlier
+    typed-state version of this operator cannot be resumed (Spark rejects
+    the changed stateful operator)."""
+    import pandas as pd  # imported lazily: executors pickle this closure
 
-    ensure_protobuf_on_workers(band_rows.sparkSession)
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class BandMin(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._min = handle.getValueState("min_doc", "min_doc BIGINT")
-
-        def handleInputRows(self, key, rows, timerValues):
-            ids: list[int] = []
-            for pdf in rows:
-                ids.extend(int(x) for x in pdf["doc_id"])
-            # one get() round-trip; None encodes absence (guide §4 — the
-            # exists()+get() pair paid two state-server trips per bucket)
-            prev = self._min.get()
-            old = prev[0] if prev is not None else None
-            new_min = min(ids) if old is None else min(old, min(ids))
-            out = [(d, d > new_min) for d in ids]
-            if old is not None and old > new_min:
-                # the previous minimum was the bucket's only unflagged
-                # doc — retroactively flip it (order invariance)
-                out.append((old, True))
-            self._min.update((new_min,))
-            yield pd.DataFrame(
-                {
-                    "doc_id": [d for d, _ in out],
-                    "dup": [f for _, f in out],
-                }
+    def gate(key, pdfs, state):
+        ids = pd.concat([pdf["doc_id"] for pdf in pdfs], ignore_index=True)
+        old = state.get[0] if state.exists else None
+        new_min = int(ids.min()) if old is None else min(old, int(ids.min()))
+        out = pd.DataFrame({"doc_id": ids, "dup": ids > new_min})
+        if old is not None and old > new_min:
+            # the previous minimum was the bucket's only unflagged doc —
+            # retroactively flip it (order invariance)
+            out = pd.concat(
+                [out, pd.DataFrame({"doc_id": [old], "dup": [True]})],
+                ignore_index=True,
             )
+        state.update((new_min,))
+        yield out
 
-        def close(self) -> None:
-            pass
-
-    return band_rows.groupBy("bucket").transformWithStateInPandas(
-        statefulProcessor=BandMin(),
+    return band_rows.groupBy("bucket").applyInPandasWithState(
+        gate,
         outputStructType="doc_id bigint, dup boolean",
-        outputMode="Update",
-        timeMode="None",
+        stateStructType="min_doc bigint",
+        outputMode="update",
+        timeoutConf="NoTimeout",
     )

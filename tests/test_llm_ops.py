@@ -786,3 +786,16 @@ def test_zero_norm_embedding_raises(spark, tmp_path, name):
     )
     with pytest.raises(Exception, match="zero-norm embedding reached a GEMM"):
         _q(name)(spark, str(tmp_path)).collect()
+
+
+def test_single_thread_blas_idempotent():
+    """The BLAS pin the GEMM kernels call is callable repeatedly from any
+    process state; after the first call the thread-count env contract
+    holds for late numpy imports."""
+    import os
+
+    from bfs_etl_sep2025_spark.functions.blas import single_thread_blas
+
+    single_thread_blas()
+    single_thread_blas()
+    assert os.environ.get("OPENBLAS_NUM_THREADS", "1") == "1"

@@ -753,3 +753,43 @@ def test_masked_read_pushes_filters_down(spark):
     assert "LessThanOrEqual(c_custkey,200)" in plan
     plan = _plan(spark, "sql_masking_row_policy")
     assert "In(c_mktsegment, [BUILDING,MACHINERY])" in plan
+
+
+def test_materialized_projection_detector(spark):
+    """The detector behind the upsert checkpoint skip
+    (``plans/versioned.py``): only a plain projection over an already
+    materialized scan may skip the pin-one-evaluation checkpoint."""
+    from pyspark.sql import functions as F
+
+    from bfs_etl_sep2025_spark.plans.versioned import _is_materialized_projection
+
+    df = spark.range(10).selectExpr("id AS k", "cast(id AS string) AS v")
+    # a live lineage (Range + projections) must NOT be treated as
+    # materialized — the upsert checkpoint must still happen
+    assert not _is_materialized_projection(df)
+    ck = df.localCheckpoint(eager=True)
+    # a pure column projection over the checkpointed scan IS materialized:
+    # re-evaluation is deterministic, the extra checkpoint would be a copy
+    assert _is_materialized_projection(ck.select("k", "v"))
+    assert _is_materialized_projection(ck)
+    # anything beyond plain projection (a filter) drops back to False
+    assert not _is_materialized_projection(ck.filter(F.col("k") > 3))
+
+
+def test_materialized_projection_rejects_nondeterministic(spark):
+    """A nondeterministic projection over a checkpointed scan must NOT
+    skip the pin-one-evaluation checkpoint — re-evaluating ``rand()``
+    yields different rows, the exact hazard the checkpoint exists to
+    prevent."""
+    from pyspark.sql import functions as F
+
+    from bfs_etl_sep2025_spark.plans.versioned import _is_materialized_projection
+
+    ck = spark.range(10).selectExpr("id AS k").localCheckpoint(eager=True)
+    assert _is_materialized_projection(ck.select("k"))
+    assert not _is_materialized_projection(
+        ck.select("k", (F.rand() * 10).alias("x"))
+    )
+    assert not _is_materialized_projection(
+        ck.select("k", F.expr("uuid()").alias("u"))
+    )

@@ -580,62 +580,16 @@ def test_user_profile_stream_null_event_types(stream_env, tmp_path):
 
 
 @slow
-def test_protobuf_fallback_activates_and_speaks_the_wire_format():
-    """The r8 stub-gate is gone: without the real google.protobuf the
-    vendored protoshim must activate (sys.path + worker PYTHONPATH) and
-    execute PySpark's generated StateMessage_pb2 — construction,
-    serialization to spec-exact wire bytes, and response parsing. The
-    LSH-gate typed-state e2e below is the integration proof (the JVM
-    parses these bytes); this pins the unit surface and the env
-    plumbing."""
-    import os
-
-    from bfs_etl_sep2025_spark.vendor import PROTOSHIM_DIR, ensure_protobuf
-
-    mode = ensure_protobuf()
-    import google.protobuf as gp
-
-    if mode == "shim":
-        assert getattr(gp, "PROTOSHIM", False)
-        # workers must inherit the shim dir through the JVM env
-        assert PROTOSHIM_DIR in os.environ.get("PYTHONPATH", "").split(
-            os.pathsep
-        )
-    import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
-
-    req = sm.StateRequest(
-        statefulProcessorCall=sm.StatefulProcessorCall(
-            setHandleState=sm.SetHandleState(state=sm.CREATED)
-        )
-    )
-    # hand-derived from the public wire spec: field 2 (len 4) -> field 1
-    # (len 2) -> field 1 varint CREATED=1
-    assert req.SerializeToString().hex() == "12040a020801"
-    rt = sm.StateRequest()
-    rt.ParseFromString(req.SerializeToString())
-    assert rt.statefulProcessorCall.setHandleState.state == sm.CREATED
-    # negative int64 must be 10-byte two's complement on the wire
-    ttl = sm.TTLConfig(durationMs=-1)
-    assert ttl.SerializeToString().hex() == "08ffffffffffffffffff01"
-    # repeated bytes + bool response shape (what the JVM sends back)
-    resp = sm.StateResponseWithMapKeysOrValues()
-    resp.ParseFromString(
-        sm.StateResponseWithMapKeysOrValues(
-            value=[b"\x01\x02", b"\x03"], requireNextFetch=True
-        ).SerializeToString()
-    )
-    assert resp.value == [b"\x01\x02", b"\x03"]
-    assert resp.requireNextFetch is True
-    assert resp.statusCode == 0 and resp.errorMessage == ""
-
-
-@slow
-def test_lsh_dedup_gate_retroactive_flip_out_of_order(stream_env):
-    """The streaming LSH gate's order-invariance contract (r10): when a
-    SMALLER doc_id reaches a band bucket in a LATER micro-batch, the
-    previous bucket minimum — the only stored doc that was not already
-    flagged — must be retroactively re-emitted as a duplicate, so
-    bool_or(dup) per doc equals the batch rule under any arrival order."""
+def test_lsh_dedup_gate_retroactive_flip_out_of_order(
+    stream_env, tmp_path, state_provider
+):
+    """The streaming LSH gate's order-invariance contract: when a SMALLER
+    doc_id reaches a band bucket in a LATER micro-batch, the previous
+    bucket minimum — the only stored doc that was not already flagged —
+    must be retroactively re-emitted as a duplicate, so bool_or(dup) per
+    doc equals the batch rule under any arrival order. The per-bucket
+    minimum must survive a checkpoint restart, on the HDFS-backed and the
+    RocksDB state store alike, through ``applyInPandasWithState``."""
     from bfs_etl_sep2025_spark.streaming.jobs import stream_lsh_band_dedup
 
     spark, src, ckpt = stream_env
@@ -646,41 +600,54 @@ def test_lsh_dedup_gate_retroactive_flip_out_of_order(stream_env):
             "append"
         ).parquet(src)
 
+    def drain():
+        return [
+            sorted((r.doc_id, r.dup) for r in rows)
+            for _, rows in run_stream_collect(job, ckpt, output_mode="update")
+            if rows
+        ]
+
     # batch 1: docs 5 and 9 share bucket A (9 flagged, 5 kept); doc 7 alone
     write([("A", 5), ("A", 9), ("B", 7)])
     # batch 2: doc 3 arrives LATE into bucket A -> 5 must flip to dup
     write([("A", 3), ("B", 8)])
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        batches = run_stream_collect(
-            stream_lsh_band_dedup(stream), ckpt, output_mode="update"
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-    per_batch = [
-        sorted((r.doc_id, r.dup) for r in rows) for _, rows in batches if rows
-    ]
+    job = stream_lsh_band_dedup(stream)
+    per_batch = drain()
     assert len(per_batch) == 2
     assert per_batch[0] == [(5, False), (7, False), (9, True)]
     # the flip: 3 arrives (kept), 5 re-emitted as dup; 8 flagged behind 7
     assert per_batch[1] == [(3, False), (5, True), (8, True)]
+    # restart from checkpoint: both buckets' minima (3, 7) come back from
+    # the state store and are flipped by the smaller ids 1 and 6
+    write([("A", 1), ("B", 6)])
+    restarted = drain()
+    assert restarted == [[(1, False), (3, True), (6, False), (7, True)]]
     final = {}
-    for b in per_batch:
+    for b in per_batch + restarted:
         for d, f in b:
             final[d] = final.get(d, False) or f
     # batch rule on the union: smaller-id-in-bucket exists
-    assert final == {3: False, 5: True, 7: False, 8: True, 9: True}
+    assert final == {
+        1: False, 3: True, 5: True, 6: False, 7: True, 8: True, 9: True
+    }
+    with open(f"{ckpt}/offsets/0") as f:
+        assert state_provider in f.read()
+    plan = _executed_plan(job, str(tmp_path / "plan_ckpt"))
+    assert "FlatMapGroupsInPandasWithState" in plan, plan
+    assert "TransformWithStateInPySpark" not in plan, plan
+
+
+def test_build_spark_leaves_no_protobuf_shim(spark):
+    """Building the session edits neither the worker ``PYTHONPATH`` nor
+    ``sys.path``, and the package ships no vendored protobuf runtime."""
+    import importlib
+    import os
+    import sys
+
+    assert "protoshim" not in os.environ.get("PYTHONPATH", "")
+    assert not [p for p in sys.path if "protoshim" in p]
+    with pytest.raises(ImportError):
+        importlib.import_module("bfs_etl_sep2025_spark.vendor")
