@@ -38,6 +38,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -176,25 +177,24 @@ def _edges_bucket_join(occ: DataFrame) -> DataFrame:
     )
 
 
-#: one cached DataFrame per (SparkContext, sf_dir, tag): the edge list plus
-#: the per-query mask tables (symmetric adjacency, higher-neighbor
-#: adjacency). Every graph query calls these builders independently —
-#: without the memo each call re-cached its masks/edges, accumulating
-#: unbounded cache entries over a long driver session (ADVICE r4 for the
-#: edge list, ADVICE r6 for the jaccard masks — the same leak class).
-#: Entries from PREVIOUS sessions (stale applicationId) are evicted on
-#: access, concurrent first callers are races resolved by ``setdefault``
-#: (the loser unpersists its build), and :func:`clear_edge_memo` lets a
-#: long-lived driver drop everything between fixture-dir generations
-#: (ADVICE r5).
-_DF_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+#: one cached DataFrame per (SparkContext, sf_dir, tag, file identity): the
+#: edge list plus the per-query mask tables (symmetric adjacency,
+#: higher-neighbor adjacency). Every graph query calls these builders
+#: independently — without the memo each call re-cached its masks/edges,
+#: accumulating unbounded cache entries over a long driver session.
+#: The file identity (:func:`_file_identity`) keys out stale data: once a
+#: file under ``sf_dir`` changes, the next call builds afresh and the old
+#: entry is unpersisted. Entries from PREVIOUS sessions (stale
+#: applicationId) are evicted on access, concurrent first callers are races
+#: resolved by ``setdefault`` (the loser unpersists its build), and
+#: :func:`clear_edge_memo` lets a long-lived driver drop everything.
+_DF_MEMO: dict[tuple, DataFrame] = {}
 _EDGE_LOCK = threading.Lock()
 
 
 def clear_edge_memo() -> None:
     """Unpersist and forget every memoized graph DataFrame (edge lists AND
-    mask tables) — call after a fixture dir is regenerated in-process, or
-    between sweeps over many sf_dirs."""
+    mask tables) — e.g. between sweeps over many sf_dirs."""
     with _EDGE_LOCK:
         entries = list(_DF_MEMO.values())
         _DF_MEMO.clear()
@@ -205,18 +205,37 @@ def clear_edge_memo() -> None:
             pass
 
 
+def _file_identity(sf_dir: str) -> tuple:
+    """``(relative path, size, mtime_ns)`` of every file under ``sf_dir``,
+    sorted; empty when ``sf_dir`` is not a local directory."""
+    out = []
+    for d, _, files in os.walk(sf_dir):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            rel = os.path.relpath(os.path.join(d, f), sf_dir)
+            out.append((rel, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def _memoized(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
     """Session-scoped cache registry: return the memoized DataFrame for
-    ``(applicationId, sf_dir, tag)``, building (and caching) it once."""
+    ``(applicationId, sf_dir, tag)`` over the files ``sf_dir`` holds now,
+    building (and caching) it once."""
     app = spark.sparkContext.applicationId
-    key = (app, sf_dir, tag)
+    key = (app, sf_dir, tag, _file_identity(sf_dir))
     with _EDGE_LOCK:
         # entries keyed by a dead session's applicationId reference plans
         # that can never run again — drop them instead of pinning them for
-        # the process lifetime
+        # the process lifetime; an entry over since-changed files is
+        # unpersisted as well
+        outdated = [
+            _DF_MEMO.pop(k) for k in list(_DF_MEMO) if k[:3] == key[:3] and k != key
+        ]
         for stale in [k for k in _DF_MEMO if k[0] != app]:
             del _DF_MEMO[stale]
         memo = _DF_MEMO.get(key)
+    for df in outdated:
+        df.unpersist()
     if memo is not None:
         return memo
     df = build()

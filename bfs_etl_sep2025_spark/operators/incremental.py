@@ -103,10 +103,10 @@ def fingerprint_batch(docs: DataFrame) -> DataFrame:
 def commit_pending(
     store: VersionedTable, pending: list[DataFrame], keys: list[str]
 ) -> None:
-    """Commit sync delta batches (one immediate batch, or a deferred
-    run's group): the first batch creates a missing store, the rest
-    MERGE with later batches winning on a shared key, in one
-    lock/manifest round via :meth:`VersionedTable.upsert_many`."""
+    """Commit the delta batches a sync run collected in ``pending``: the
+    first batch creates a missing store, the rest MERGE with later batches
+    winning on a shared key, in one lock/manifest round via
+    :meth:`VersionedTable.upsert_many`."""
     if not pending:
         return
     batches = pending
@@ -121,28 +121,22 @@ def sync_batch(
     spark: SparkSession,
     batch_docs: DataFrame,
     store: VersionedTable,
-    pending: list[DataFrame] | None = None,
+    pending: list[DataFrame],
 ) -> DataFrame:
-    """Dedup one delta batch against the persisted fingerprint store,
-    commit the batch's fingerprints (MERGE-upsert on ``doc_id`` —
-    idempotent under re-sync), and return per-doc verdicts
-    ``(doc_id, exact_dup, near_dup, keep)``.
+    """Dedup one delta batch against the persisted fingerprint store and
+    the uncommitted earlier deltas in ``pending``, append the batch's
+    fingerprints to ``pending``, and return per-doc verdicts
+    ``(doc_id, exact_dup, near_dup, keep)``. The caller ends the sync run
+    with ONE :func:`commit_pending` (a MERGE-upsert on ``doc_id``,
+    idempotent under re-sync).
 
-    The batch's fingerprints are localCheckpoint'd once: they feed the
-    store join, the within-batch join, and the store MERGE — without the
-    checkpoint the shingle/minhash pipeline (the dominant cost) would run
-    three times.
-
-    DEFERRED-COMMIT mode (r12, VERDICT r11 item 2): with ``pending`` (a
-    caller-owned list of earlier deltas' checkpointed fingerprints), the
-    prior pool is store + pending — identical rows to what the store
-    would hold had they been committed, read from the in-memory
-    checkpoints instead of a parquet round-trip — and this batch's
-    fingerprints are APPENDED to ``pending`` instead of committed. The
-    caller ends the sync run with ONE multi-batch MERGE
-    (``store.upsert_many(pending, keys=["doc_id"])``), collapsing N×
-    (dup-check job + write job + manifest commit) into one commit cycle.
-    Verdicts are unchanged by construction (same pool rows, same rule)."""
+    The prior pool is store + pending: the rows the store would hold had
+    the deltas been committed, read from their in-memory checkpoints
+    instead of a parquet round-trip, so verdicts do not depend on when the
+    commit happens. The batch's fingerprints are localCheckpoint'd once:
+    they feed the store join, the within-batch join, and the commit —
+    without the checkpoint the shingle/minhash pipeline (the dominant
+    cost) would run three times."""
     fp = fingerprint_batch(batch_docs).localCheckpoint(eager=True)
 
     # everything seen so far that may outrank a batch doc: the store
@@ -150,7 +144,7 @@ def sync_batch(
     # the doc_id < filter makes double-listing harmless and the verdicts
     # batching-invariant
     pool = fp
-    for earlier in pending or []:
+    for earlier in pending:
         pool = pool.unionByName(earlier)
     if store.exists():
         pool = pool.unionByName(store.read())
@@ -219,13 +213,7 @@ def sync_batch(
         )
     )
 
-    # commit the batch's fingerprints — MERGE semantics: a re-run of the
-    # same batch replaces its own rows instead of double-inserting
-    # (deferred mode hands the delta to the caller's group commit instead)
-    if pending is not None:
-        pending.append(fp)
-    else:
-        commit_pending(store, [fp], keys=["doc_id"])
+    pending.append(fp)
     return verdicts
 
 
@@ -297,11 +285,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
         d.filter(F.col("doc_id") > t2),
     )
-    # r12 (VERDICT r11 item 2): deferred-commit syncs — per-batch verdicts
-    # are computed against the identical prior pool (earlier deltas ride
-    # their in-memory checkpoints instead of a store re-read), then the
-    # whole run commits in ONE multi-batch MERGE instead of three
-    # write+dup-check+commit cycles.
+    # per-batch verdicts come from the identical prior pool (earlier deltas
+    # ride their in-memory checkpoints instead of a store re-read), then
+    # the whole run commits in ONE multi-batch MERGE
     pending: list[DataFrame] = []
     verdicts = None
     for batch in parts:
@@ -323,18 +309,16 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # full-rescan verdict, which is exactly what the oracle recomputes.
 
 
-def _sem_sync_batch(spark, batch, cent, store, pending=None):
+def _sem_sync_batch(spark, batch, cent, store, pending):
     """One semantic-dedup sync: BLAS-assign the delta to its fixed cell,
     GEMM-prefilter each cell in delta mode (:func:`gemm_pairs` with
     ``delta_col`` — only delta rows are scored, so store-vs-store pairs are
     never re-scored), exact-rerank the candidates
-    (:func:`similarity.exact_rerank`), MERGE-commit the delta, and return
-    (vec_id, exemplar) verdicts.
-
-    ``pending`` switches on the same deferred-commit mode as
-    :func:`sync_batch`: earlier deltas' checkpointed rows stand in for
-    their (not yet committed) store versions, the delta is appended to
-    ``pending``, and the caller group-commits via :func:`commit_pending`."""
+    (:func:`similarity.exact_rerank`), and return (vec_id, exemplar)
+    verdicts. As in :func:`sync_batch`, earlier deltas' checkpointed rows in
+    ``pending`` stand in for their uncommitted store versions, the delta is
+    appended to ``pending``, and the caller commits via
+    :func:`commit_pending`."""
     assigned = (
         _ivf_assign(batch, cent, MAX_BROADCAST_CENTROIDS)
         .filter(F.col("cr") == 1)
@@ -342,7 +326,7 @@ def _sem_sync_batch(spark, batch, cent, store, pending=None):
         .localCheckpoint(eager=True)  # feeds the pool, the rerank, the MERGE
     )
     pool = assigned.withColumn("is_delta", F.lit(True))
-    prior = list(pending or []) + ([store.read()] if store.exists() else [])
+    prior = pending + ([store.read()] if store.exists() else [])
     for earlier in prior:
         pool = pool.unionByName(earlier.withColumn("is_delta", F.lit(False)))
     cand = gemm_pairs(pool, ["cell"], SEMDEDUP_TAU, delta_col="is_delta")
@@ -356,10 +340,7 @@ def _sem_sync_batch(spark, batch, cent, store, pending=None):
         .join(agg.withColumnRenamed("b", "vec_id"), "vec_id", "left")
         .select("vec_id", "exemplar")
     )
-    if pending is not None:
-        pending.append(assigned)
-    else:
-        commit_pending(store, [assigned], keys=["vec_id"])
+    pending.append(assigned)
     return verdicts
 
 
@@ -453,8 +434,7 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(vec_id, array(0.3333333333, 0.6666666666))")
     ).first()[0]
     store = VersionedTable(spark, scratch_dir("sem_store_"))
-    # r12: deferred-commit syncs + one multi-batch MERGE (see
-    # dedup_incremental_minhash) — verdicts identical by construction.
+    # one multi-batch MERGE per run, as in dedup_incremental_minhash
     pending: list[DataFrame] = []
     verdicts = None
     for batch in (

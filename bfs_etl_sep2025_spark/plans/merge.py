@@ -21,11 +21,9 @@ one of three kinds:
   projects it to the target schema (missing columns become typed NULLs);
   it is dropped when no branch applies
 
-The select is written ONCE as the table's next snapshot
-(:func:`swap_snapshot`): a managed table's snapshot lands in a fresh
-directory beside it and ``ALTER TABLE … SET LOCATION`` flips the table
-onto it; an external table keeps its path and gets its files replaced in
-place. A failed write leaves the target untouched. Each input is read and
+The select is written ONCE as the table's next snapshot, or as the next
+content of just the partitions the source touches (:func:`swap_snapshot`);
+a failed write leaves the target untouched. Each input is read and
 evaluated once, so a nondeterministic source is seen once too. An
 insert-only MERGE changes no existing row, so it is a plain append of the
 source rows a ``LEFT ANTI JOIN`` finds unmatched. The rewrite keeps the
@@ -78,6 +76,7 @@ at a Delta/Iceberg catalog instead.
 from __future__ import annotations
 
 import dataclasses
+import datetime
 import json
 import re
 import uuid
@@ -546,19 +545,24 @@ def _source_count_keys(
 
 
 def _part_literal(v) -> str | None:
-    import datetime as _dt
-
+    """``v`` as a SQL literal, or None for a partition value pruning cannot
+    name (NULL, '', or a type other than integer, string and date)."""
     if isinstance(v, bool) or v is None:
         return None
     if isinstance(v, int):
         return str(v)
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+    if isinstance(v, str):  # '' lands in the NULL (Hive default) partition
+        return "'" + v.replace("'", "''") + "'" if v else None
     # DATE partitions are the most common real layout; datetime.date is
     # NOT a datetime (checked in that order — datetime is a date subclass)
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+    if isinstance(v, datetime.date) and not isinstance(v, datetime.datetime):
         return f"DATE'{v.isoformat()}'"
     return None
+
+
+def _part_string(v) -> str:
+    """A partition value as its directory name spells it, before escaping."""
+    return v.isoformat() if isinstance(v, datetime.date) else str(v)
 
 
 #: cap on distinct touched partitions before pruning stops paying for its
@@ -571,12 +575,14 @@ class TableMeta:
     """Everything a rewrite needs about its target, from ONE catalog read."""
 
     name: str  # `db`.`table`, quoted for SQL
+    database: str
     table: str
     schema: object  # pyspark StructType
     pcols: list[str]
     provider: str
     managed: bool
-    bucketed: bool
+    #: (bucket count, bucket columns, sort columns); None = not bucketed
+    buckets: tuple[int, list[str], list[str]] | None
     location: str
     options: dict[str, str]
 
@@ -584,28 +590,37 @@ class TableMeta:
     def fields(self) -> list[tuple[str, str]]:
         return [(f.name, f.dataType.simpleString()) for f in self.schema.fields]
 
+    @property
+    def bucketed(self) -> bool:
+        return self.buckets is not None
+
 
 def _quote(ident: str) -> str:
     return "`" + ident.replace("`", "``") + "`"
 
 
+def _seq(s) -> list:
+    """A Scala ``Seq`` as a list, read by size and index: py4j ends every
+    Java-iterator walk with a JVM exception."""
+    return [s.apply(i) for i in range(s.size())]
+
+
 def table_meta(spark, name: str) -> TableMeta:
     """One ``getTableMetadata`` read of ``name``: partition columns,
-    provider, table type, location and schema. A catalog lookup only — it
-    neither lists files nor analyses a plan.
-
-    Scala collections are read by size and index, never through a Java
-    iterator: py4j ends every iteration with a JVM exception."""
+    provider, table type, bucket spec, location and schema. A catalog
+    lookup only — it neither lists files nor analyses a plan."""
     from pyspark.sql.types import StructType
 
     jss = spark._jsparkSession
     ident = jss.sessionState().sqlParser().parseTableIdentifier(name)
     meta = jss.sessionState().catalog().getTableMetadata(ident)
+    database = meta.identifier().database().get()
     table = meta.identifier().table()
     provider = meta.provider()
-    props = meta.storage().properties().toSeq()
+    b = meta.bucketSpec().get() if meta.bucketSpec().isDefined() else None
     return TableMeta(
-        name=f"{_quote(meta.identifier().database().get())}.{_quote(table)}",
+        name=f"{_quote(database)}.{_quote(table)}",
+        database=database,
         table=table,
         schema=StructType.fromJson(json.loads(meta.schema().json())),
         pcols=StructType.fromJson(
@@ -613,11 +628,14 @@ def table_meta(spark, name: str) -> TableMeta:
         ).names,
         provider=provider.get() if provider.isDefined() else "hive",
         managed=meta.tableType().name() == "MANAGED",
-        bucketed=meta.bucketSpec().isDefined(),
+        buckets=b and (
+            b.numBuckets(),
+            _seq(b.bucketColumnNames()),
+            _seq(b.sortColumnNames()),
+        ),
         location=meta.location().toString(),
         options={
-            kv._1(): kv._2()
-            for kv in (props.apply(i) for i in range(props.size()))
+            kv._1(): kv._2() for kv in _seq(meta.storage().properties().toSeq())
         },
     )
 
@@ -659,67 +677,118 @@ def _forget_partitions(spark, name: str) -> None:
     ident = jss.sessionState().sqlParser().parseTableIdentifier(name)
     parts = cat.listPartitions(ident, jvm.scala.Option.empty())
     specs = jvm.scala.jdk.javaapi.CollectionConverters.asScala(
-        [parts.apply(i).spec() for i in range(parts.size())]
+        [p.spec() for p in _seq(parts)]
     ).toSeq()
     # ignoreIfNotExists, purge, retainData
     cat.dropPartitions(ident, specs, True, False, True)
 
 
-def swap_snapshot(spark, meta: TableMeta, select: str) -> None:
-    """Make ``select`` the table's whole content with ONE Spark write.
+def _write(spark, meta: TableMeta, select: str, path: str) -> None:
+    """Write ``select`` under ``path`` in the table's layout: by column
+    name, cast as :func:`_store_cast` casts, partitioned and bucketed like
+    the table. A path write cannot bucket, so bucketed files go through a
+    throwaway external table over ``path``, dropped at once."""
+    w = (
+        spark.sql(f"SELECT {_store_cast(meta.schema)} FROM ({select})")
+        .write.format(meta.provider)
+        .options(**meta.options)
+        .partitionBy(*meta.pcols)
+    )
+    if meta.buckets is None:
+        w.save(path)
+        return
+    n, cols, sort = meta.buckets
+    w = w.bucketBy(n, *cols)
+    if sort:
+        w = w.sortBy(*sort)
+    entry = f"{_quote(meta.database)}.{_quote('__swap_' + uuid.uuid4().hex)}"
+    try:
+        w.saveAsTable(entry, path=path)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {entry}")
 
-    - Managed table: the snapshot is written to a fresh directory beside
-      the table, ``ALTER TABLE … SET LOCATION`` flips the table onto it
-      (refreshing this session's cached listing), and the old directory is
-      deleted.
-    - External table: its ``LOCATION`` is part of its identity (another
-      process may re-register a table over the same path), so the snapshot
-      is written to a ``_``-prefixed directory inside the location — which
-      Spark's file index skips — and then replaces the old files there.
-      That swap is several file operations, not one: a crash inside it
-      leaves the complete new snapshot in the ``_rewrite-*`` directory.
-    - Partitioned table: the partition entries are dropped (data kept) and
-      re-registered from the new layout with RECOVER PARTITIONS.
+
+def swap_snapshot(spark, meta: TableMeta, select: str, partitions=None) -> None:
+    """Make ``select`` the table's new content with ONE Spark write
+    (:func:`_write`) — the only way a catalog table is rewritten.
+
+    Without ``partitions``, ``select`` is the whole table. A managed table
+    flips onto a fresh directory beside it with ``SET LOCATION``. An
+    external table keeps its ``LOCATION`` (another process may re-register
+    a table over the path): the snapshot is written to a ``_rewrite-*``
+    directory inside it, which Spark's file index skips, and replaces the
+    old files from there. Partition entries are re-registered from the new
+    layout with RECOVER PARTITIONS.
+
+    With ``partitions`` — the touched partition values, one tuple each in
+    partition-column order — ``select`` is the new content of just those
+    partitions, written to ``_rewrite-*``. Each one's old directory is
+    deleted and the new one renamed in if the write produced it; the
+    touched entries are dropped and the produced ones added back at that
+    path, so an emptied partition leaves the catalog. Nothing else is read,
+    written or re-registered.
 
     A failed write — including a ``raise_error`` from inside ``select`` —
-    deletes the fresh directory and leaves the table untouched. Callers
-    serialize writers per table (``plans/locks.py``)."""
-    if meta.bucketed or meta.provider.lower() == "hive":
-        raise ValueError(
-            f"{meta.name}: bucketed and Hive-format tables cannot be rewritten"
-        )
+    leaves the table untouched; a crash inside a file swap leaves the whole
+    new content in ``_rewrite-*``. Callers serialize writers per table
+    (``plans/locks.py``)."""
+    if meta.provider.lower() == "hive":
+        raise ValueError(f"{meta.name}: Hive-format tables cannot be rewritten")
     Path = spark._jvm.org.apache.hadoop.fs.Path
     old = Path(meta.location)
     fs = old.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
     tag = uuid.uuid4().hex[:12]
-    if meta.managed:
+    beside = meta.managed and partitions is None
+    if beside:
         fresh = Path(old.getParent(), f"{meta.table}-{tag}")
     else:
         fresh = Path(old, f"_rewrite-{tag}")
     try:
-        (
-            spark.sql(f"SELECT {_store_cast(meta.schema)} FROM ({select})")
-            .write.format(meta.provider)
-            .options(**meta.options)
-            .partitionBy(*meta.pcols)
-            .save(fresh.toString())
-        )
+        _write(spark, meta, select, fresh.toString())
     except BaseException:
         fs.delete(fresh, True)
         raise
+
+    def move_in(rels) -> list[str]:
+        moved = []
+        for rel in rels:
+            dst, src = Path(old, rel), Path(fresh, rel)
+            fs.delete(dst, True)
+            if fs.exists(src):
+                fs.mkdirs(dst.getParent())
+                fs.rename(src, dst)
+                moved.append(rel)
+        fs.delete(fresh, True)
+        return moved
+
+    if partitions is not None:
+        utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        specs = {}  # relative partition path -> PARTITION clause
+        for values in partitions:
+            pairs = list(zip(meta.pcols, values))
+            rel = "/".join(
+                utils.getPartitionPathString(p, _part_string(v)) for p, v in pairs
+            )
+            lits = ", ".join(f"{_quote(p)} = {_part_literal(v)}" for p, v in pairs)
+            specs[rel] = f"PARTITION ({lits})"
+        if specs:  # a managed table's DROP deletes the old directories too
+            drop = ", ".join(specs.values())
+            spark.sql(f"ALTER TABLE {meta.name} DROP IF EXISTS {drop}")
+        if added := [specs[rel] for rel in move_in(specs)]:
+            add = " ".join(added)
+            spark.sql(f"ALTER TABLE {meta.name} ADD IF NOT EXISTS {add}")
+        spark.catalog.refreshTable(meta.name)
+        return
     if meta.pcols:
         _forget_partitions(spark, meta.name)
-    if meta.managed:
+    if beside:
         loc = fresh.toString().replace("\\", "\\\\").replace("'", "\\'")
         spark.sql(f"ALTER TABLE {meta.name} SET LOCATION '{loc}'")
         fs.delete(old, True)
     else:
-        for st in fs.listStatus(old):
-            if st.getPath().getName() != fresh.getName():
-                fs.delete(st.getPath(), True)
-        for st in fs.listStatus(fresh):
-            fs.rename(st.getPath(), Path(old, st.getPath().getName()))
-        fs.delete(fresh, True)
+        names = {st.getPath().getName() for st in fs.listStatus(old)}
+        names |= {st.getPath().getName() for st in fs.listStatus(fresh)}
+        move_in(names - {fresh.getName()})
         spark.catalog.refreshTable(meta.name)
     if meta.pcols:
         spark.sql(f"ALTER TABLE {meta.name} RECOVER PARTITIONS")
@@ -731,30 +800,25 @@ def _partition_pruning(spark, spec: MergeSpec, meta: TableMeta):
     MERGE pruning). Safe exactly when every modified-or-inserted row is
     provably confined to partitions named by the source:
 
-    - the target is partitioned and its schema lists partition cols last
-      (the INSERT OVERWRITE column contract);
+    - the target is partitioned;
     - no NOT MATCHED BY SOURCE branch (those touch rows in ANY partition);
     - the ON condition is a flat conjunction of ``t.col = s.col``
       equalities covering every partition column (so matched rows live in
       source-named partitions);
     - no MATCHED UPDATE assigns a partition column (rows cannot migrate
-      into an untouched partition, which dynamic overwrite would clobber);
+      into an untouched partition, which the swap would not pick up);
     - every INSERT assigns each partition column verbatim from the ON-
       equated source column (inserts land in touched partitions only).
 
-    Returns ``(predicate_sql, touched_rows, pin_view)``, or None when
-    pruning is ruled out BEFORE the source is pinned, or ``(None, None,
-    pin_view)`` when it's ruled out AFTER (too many touched partitions,
-    NULL/unsupported partition literal) — the caller must then run the
-    full rewrite against the already-pinned source, so the one-evaluation
-    invariant holds on that path too and the pinned view never leaks
-    unreferenced (ADVICE r6).
+    Returns ``(predicate_sql, touched, pin_view)``, ``touched`` as
+    :func:`swap_snapshot` takes it; None when pruning is ruled out BEFORE
+    the source is pinned; ``(None, None, pin_view)`` when it's ruled out
+    AFTER (over ``_MAX_TOUCHED_PARTITIONS`` touched, a partition value with
+    no literal) — the caller then runs the full rewrite against the pinned
+    source, so the one-evaluation invariant holds there too.
     """
     pcols = meta.pcols
     if not pcols or spec.nm_by_source:
-        return None
-    names = [c for c, _ in meta.fields]
-    if names[-len(pcols) :] != pcols:
         return None
     pairs, flat = _equi_pairs(spec)
     if not flat:
@@ -766,6 +830,7 @@ def _partition_pruning(spark, spec: MergeSpec, meta: TableMeta):
     for b in spec.matched:
         if any(p in b.sets for p in pcols):
             return None
+    names = [c for c, _ in meta.fields]
     for b in spec.not_matched:
         bcols = b.cols if b.cols is not None else names
         for p in pcols:
@@ -775,10 +840,10 @@ def _partition_pruning(spark, spec: MergeSpec, meta: TableMeta):
             if v not in (f"{s_}.{eq[p]}", eq[p]):
                 return None
     # pin ONE evaluation of the source: the touched-partition decision and
-    # the stage rewrite must see identical data, or a nondeterministic
-    # source could emit a partition the pruning view never read and the
-    # dynamic overwrite would replace it with only the new rows (the same
-    # one-evaluation invariant VersionedTable.upsert pins)
+    # the rewrite must see identical data, or a nondeterministic source
+    # could emit a partition the pruning view never read, and the swap
+    # would drop its rows (the same one-evaluation invariant
+    # VersionedTable.upsert pins)
     pin_view = "__merge_src_pin_" + re.sub(r"\W", "_", spec.target)
     spark.sql(
         f"SELECT {s_}.* FROM {spec.source_sql} AS {s_}"
@@ -787,56 +852,50 @@ def _partition_pruning(spark, spec: MergeSpec, meta: TableMeta):
     sel = ", ".join(
         f"CAST({s_}.{eq[p]} AS {types[p]}) AS {p}" for p in pcols
     )
-    touched = (
+    touched = (  # Rows: tuples in partition-column order
         spark.sql(f"SELECT DISTINCT {sel} FROM {pin_view} AS {s_}")
         .limit(_MAX_TOUCHED_PARTITIONS + 1)
         .collect()
     )
-    if len(touched) > _MAX_TOUCHED_PARTITIONS:
+    lits = [[_part_literal(v) for v in r] for r in touched]
+    # over the cap, or a NULL/''/unsupported partition value
+    if len(touched) > _MAX_TOUCHED_PARTITIONS or any(None in r for r in lits):
         return None, None, pin_view
-    disj = []
-    for r in touched:
-        lits = []
-        for p in pcols:
-            lit = _part_literal(r[p])
-            if lit is None:  # NULL/unsupported partition value type
-                return None, None, pin_view
-            lits.append(f"{p} = {lit}")
-        disj.append("(" + " AND ".join(lits) + ")")
-    pred = " OR ".join(disj) if disj else "false"
-    return pred, touched, pin_view
+    pred = " OR ".join(
+        "(" + " AND ".join(f"{p} = {v}" for p, v in zip(pcols, r)) + ")"
+        for r in lits
+    )
+    return pred or "false", touched, pin_view
 
 
 def run_merge(spark, stmt: str) -> None:
     """Parse + execute one MERGE INTO against the session catalog.
 
     An insert-only MERGE changes no target row, so it appends the anti-join
-    rows and rewrites nothing. Every other shape rewrites the snapshot in
-    one write (:func:`swap_snapshot`), except that partitioned targets take
-    the PRUNED path when provably safe (see :func:`_partition_pruning`):
-    the rewrite's join reads only the touched partitions, and the swap-in
-    is a dynamic-partition INSERT OVERWRITE that replaces exactly those
-    partitions — untouched partitions are neither read nor rewritten, the
-    Delta-MERGE data-skipping behavior at partition granularity."""
+    rows and rewrites nothing. Every other shape is one
+    :func:`swap_snapshot` of the rewrite: of the touched partitions only
+    when :func:`_partition_pruning` proves that safe — untouched partitions
+    are neither read nor rewritten, the Delta-MERGE data-skipping behavior
+    at partition granularity — else of the whole snapshot."""
     spec = parse_merge(stmt)
     meta = table_meta(spark, spec.target)
     if not (spec.matched or spec.nm_by_source):
         spark.sql(f"INSERT INTO {meta.name} {_insert_select(spec, meta.fields)}")
         return
+    pin_view = touched = None
     decision = _partition_pruning(spark, spec, meta)
-    pin_view = decision[2] if decision is not None else None
-    view = "__merge_pruned_" + re.sub(r"\W", "_", spec.target)
+    if decision is not None:
+        # a pruning bail AFTER pinning (>cap touched partitions, NULL
+        # partition literal) still runs against the PINNED source, so the
+        # full rewrite sees the single evaluation the probe read
+        pred, touched, pin_view = decision
+        spec = dataclasses.replace(spec, source_sql=pin_view)
+        if pred is not None:
+            spec = dataclasses.replace(
+                spec, target=f"(SELECT * FROM {spec.target} WHERE {pred})"
+            )
     try:
-        if decision is not None and decision[0] is not None:
-            _run_pruned(spark, spec, meta, decision, view)
-        else:
-            # a pruning bail AFTER pinning (>cap touched partitions, NULL
-            # partition literal) runs the full rewrite against the PINNED
-            # source, so it sees the single evaluation the probe read
-            # (ADVICE r6 — the unpinned fallback re-evaluated the source)
-            if pin_view is not None:
-                spec = dataclasses.replace(spec, source_sql=pin_view)
-            swap_snapshot(spark, meta, _rewrite(spark, spec, meta.fields))
+        swap_snapshot(spark, meta, _rewrite(spark, spec, meta.fields), touched)
     except Exception as e:
         if _DUP_MATCH not in str(e):
             raise
@@ -848,67 +907,6 @@ def run_merge(spark, stmt: str) -> None:
     finally:
         # unconditional: the rewrite can raise mid-way, and the
         # localCheckpointed __merge_src_pin_* view pins RDD blocks for the
-        # session lifetime if it survives (ADVICE r7)
-        for v in (pin_view, view):
-            if v is not None:
-                try:
-                    spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
-
-
-def _run_pruned(spark, spec, meta, decision, view) -> None:
-    """Rewrite only the touched partitions: stage the pruned rewrite, then
-    dynamic-overwrite the partitions it produced. A touched partition whose
-    merged content comes back empty (everything deleted) is truncated
-    explicitly, since dynamic overwrite only replaces partitions present in
-    the output."""
-    pred, touched, pin_view = decision
-    pcols = meta.pcols
-    names = [c for c, _ in meta.fields]
-    spark.sql(
-        f"CREATE OR REPLACE TEMPORARY VIEW {view} AS "
-        f"SELECT * FROM {spec.target} WHERE {pred}"
-    )
-    pspec = dataclasses.replace(spec, target=view, source_sql=pin_view)
-    select = _rewrite(spark, pspec, meta.fields)
-    stage = f"{spec.target}__merge_stage"
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        old = spark.conf.get(conf)
-    except Exception:
-        old = None
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    try:
-        spark.sql(f"CREATE TABLE {stage} AS {select}")
-        spark.conf.set(conf, "dynamic")
-        spark.sql(
-            f"INSERT OVERWRITE TABLE {spec.target} "
-            f"SELECT {', '.join(names)} FROM {stage}"
-        )
-        present = {
-            tuple(r[p] for p in pcols)
-            for r in spark.sql(
-                f"SELECT DISTINCT {', '.join(pcols)} FROM {stage}"
-            ).collect()
-        }
-        data_cols = ", ".join(n for n in names if n not in pcols)
-        for r in touched:
-            if tuple(r[p] for p in pcols) in present:
-                continue
-            part = ", ".join(f"{p} = {_part_literal(r[p])}" for p in pcols)
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {spec.target} "
-                f"PARTITION ({part}) "
-                f"SELECT {data_cols} FROM {stage} WHERE false"
-            )
-    finally:
-        if old is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, old)
-        spark.sql(f"DROP TABLE IF EXISTS {stage}")
-    # drop cached file listings for the overwritten target: a reader that
-    # scanned the table before this MERGE would otherwise chase deleted
-    # part files (FAILED_READ_FILE on the second upsert of a stream sink)
-    spark.sql(f"REFRESH TABLE {spec.target}")
+        # session lifetime if it survives
+        if pin_view is not None:
+            spark.catalog.dropTempView(pin_view)

@@ -885,35 +885,20 @@ class SqlTask(Task):
             ),
             out,
         )
-        consumed: list[tuple[str, int]] = []
-        target = self._write_target(out)
-        for name in names:
-            if target is not None and target.strip('`"').lower() == name:
-                raise ValueError(
-                    f"sql task {self.task_id!r}: stream {name!r} is a "
-                    "change feed and cannot be a write target"
-                )
-            pat = re.compile(rf"(?i)(?<![\w.`\"]){re.escape(name)}\b")
-            unq = set(_unquoted_positions(out))
-            # only matches sitting in TABLE-REFERENCE positions count — a
-            # column/alias sharing the stream's name is left alone
-            hits = [
-                m
-                for m in pat.finditer(out)
-                if m.start() in unq
-                and self._is_table_ref_position(out, m.start())
-            ]
-            if not hits:
-                continue
-            view, ver = _streams.resolve_stream_view(ctx.spark, name)
-            hit_starts = {m.start() for m in hits}
-            out = sub_unquoted(
-                pat,
-                lambda m: view if m.start() in hit_starts else m.group(0),
-                out,
+        target = (self._write_target(out) or "").strip('`"').lower()
+        if target in names:
+            raise ValueError(
+                f"sql task {self.task_id!r}: stream {target!r} is a "
+                "change feed and cannot be a write target"
             )
+        consumed: list[tuple[str, int]] = []
+
+        def resolve(name: str) -> str:
+            view, ver = _streams.resolve_stream_view(ctx.spark, name)
             consumed.append((name, ver))
-        return out, consumed
+            return view
+
+        return self._route_table_refs(out, names, resolve), consumed
 
     def _rewrite_masked(self, stmt: str, ctx: RunContext) -> str:
         """Route reads of masked tables through their policy views
@@ -926,29 +911,35 @@ class SqlTask(Task):
         tables = _masking.masked_tables()
         if not tables:
             return stmt
-        out = stmt
-        target = self._write_target(out)
-        for t in tables:
-            if target is not None and target.strip('`"').lower() == t:
-                continue
-            pat = re.compile(rf"(?i)(?<![\w.`\"]){re.escape(t)}\b")
-            unq = set(_unquoted_positions(out))
-            hits = [
-                m
-                for m in pat.finditer(out)
+        target = (self._write_target(stmt) or "").strip('`"').lower()
+        return self._route_table_refs(
+            stmt,
+            [t for t in tables if t != target],
+            lambda t: _masking.resolve_masked_view(ctx.spark, t),
+        )
+
+    def _route_table_refs(self, stmt: str, names, resolve) -> str:
+        """Replace each unquoted reference to one of ``names`` that sits in
+        TABLE-REFERENCE position (a column or alias sharing the name is left
+        alone) with the view ``resolve(name)`` returns; ``resolve`` runs only
+        for the names the statement references."""
+        for name in names:
+            pat = re.compile(rf"(?i)(?<![\w.`\"]){re.escape(name)}\b")
+            unq = set(_unquoted_positions(stmt))
+            hits = {
+                m.start()
+                for m in pat.finditer(stmt)
                 if m.start() in unq
-                and self._is_table_ref_position(out, m.start())
-            ]
-            if not hits:
-                continue
-            view = _masking.resolve_masked_view(ctx.spark, t)
-            hit_starts = {m.start() for m in hits}
-            out = sub_unquoted(
-                pat,
-                lambda m: view if m.start() in hit_starts else m.group(0),
-                out,
-            )
-        return out
+                and self._is_table_ref_position(stmt, m.start())
+            }
+            if hits:
+                view = resolve(name)
+                stmt = sub_unquoted(
+                    pat,
+                    lambda m: view if m.start() in hits else m.group(0),
+                    stmt,
+                )
+        return stmt
 
     def _bind(self, stmt: str) -> str:
         def sub(m: re.Match[str]) -> str:

@@ -66,7 +66,10 @@ def _batch_bounds(spark, sf_dir, n_batches):
 
 def ingest_fn(spark, batch_no=0, sf_dir=SF_DIR, store_root=None,
               corpus_root=None, **_):
-    from bfs_etl_sep2025_spark.operators.incremental import sync_batch
+    from bfs_etl_sep2025_spark.operators.incremental import (
+        commit_pending,
+        sync_batch,
+    )
     from bfs_etl_sep2025_spark.tables import load
 
     bounds = _batch_bounds(spark, sf_dir, N_BATCHES)
@@ -77,7 +80,10 @@ def ingest_fn(spark, batch_no=0, sf_dir=SF_DIR, store_root=None,
         .filter((F.col("doc_id") > lo) & (F.col("doc_id") <= hi))
     )
     store = VersionedTable(spark, store_root)
-    verdicts = sync_batch(spark, batch, store).localCheckpoint(eager=True)
+    pending: list = []
+    verdicts = sync_batch(spark, batch, store, pending)
+    commit_pending(store, pending, keys=["doc_id"])
+    verdicts = verdicts.localCheckpoint(eager=True)
     kept = batch.join(verdicts.filter("keep").select("doc_id"), "doc_id")
     corpus = VersionedTable(spark, corpus_root)
     if corpus.exists():
@@ -100,7 +106,10 @@ def semantic_fn(spark, batch_no=0, sf_dir=SF_DIR, sem_store_root=None,
     flagged docs from the corpus. Offline codebook = the fixed
     every-SEMDEDUP_STRIDEth-vector cells, identical across syncs (the
     batching-invariance precondition)."""
-    from bfs_etl_sep2025_spark.operators.incremental import _sem_sync_batch
+    from bfs_etl_sep2025_spark.operators.incremental import (
+        _sem_sync_batch,
+        commit_pending,
+    )
     from bfs_etl_sep2025_spark.operators.similarity import (
         SEMDEDUP_STRIDE,
         _norm_arr,
@@ -124,7 +133,11 @@ def semantic_fn(spark, batch_no=0, sf_dir=SF_DIR, sem_store_root=None,
         F.col("nrm").alias("c_nrm"),
     )
     sem_store = VersionedTable(spark, sem_store_root)
-    verdicts = _sem_sync_batch(spark, n.join(kept_ids, "vec_id"), cent, sem_store)
+    pending: list = []
+    verdicts = _sem_sync_batch(
+        spark, n.join(kept_ids, "vec_id"), cent, sem_store, pending
+    )
+    commit_pending(sem_store, pending, keys=["vec_id"])
     dup_ids = sorted(
         r["vec_id"] for r in verdicts.filter("exemplar IS NOT NULL").collect()
     )  # answer-sized (the flagged docs), like the verdict counts

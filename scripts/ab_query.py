@@ -15,8 +15,11 @@ directory and ``PYTHONPATH``, so Spark's Python workers import the same
 code as the driver. It does one cold + two warm noop-sink runs and prints
 the warm wall times, the warm process-tree CPU-seconds (user + system of
 the driver, the JVM and its Python workers, read from ``/proc`` by
-``perfbench/harness.py:tree_cpu_s``) and an order-insensitive md5 of the
-collected rows, so the A/B asserts OUTPUT EQUALITY, not just speed.
+``perfbench/harness.py:tree_cpu_s``), the Spark jobs each warm run
+submitted (each run is its own job group, counted through
+``statusTracker().getJobIdsForGroup``, which needs no Spark UI) and an
+order-insensitive md5 of the collected rows, so the A/B asserts OUTPUT
+EQUALITY, not just speed.
 """
 
 from __future__ import annotations
@@ -44,18 +47,23 @@ from bfs_etl_sep2025_spark import registry
 
 spark = build_spark(app_name=f"ab-{name}")
 spec = registry.all_specs()[name]
+sc = spark.sparkContext
 
-def once():
+def once(group):
+    sc.setJobGroup(group, group)
     t0, c0 = time.perf_counter(), h.tree_cpu_s()
     spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0, h.tree_cpu_s() - c0
+    wall, cpu = time.perf_counter() - t0, h.tree_cpu_s() - c0
+    return wall, cpu, len(sc.statusTracker().getJobIdsForGroup(group))
 
-once()  # cold
-warm = [once() for _ in range(2)]
+once("cold")
+warm = [once(f"warm{i}") for i in range(2)]
+sc.setJobGroup("digest", "digest")
 rows = sorted(str(tuple(r)) for r in spec.fn(spark, sf_dir).collect())
 digest = hashlib.md5("\n".join(rows).encode()).hexdigest()
-print(json.dumps({"wall": [w for w, _ in warm], "cpu": [c for _, c in warm],
-                  "rows": len(rows), "md5": digest}))
+print(json.dumps({"wall": [w[0] for w in warm], "cpu": [w[1] for w in warm],
+                  "jobs": [w[2] for w in warm], "rows": len(rows),
+                  "md5": digest}))
 """
 
 
@@ -99,7 +107,8 @@ def main() -> None:
                 print(
                     f"{q} {label} round{r}: wall "
                     f"{['%.3f' % w for w in res['wall']]} cpu "
-                    f"{['%.2f' % c for c in res['cpu']]} rows={res['rows']}",
+                    f"{['%.2f' % c for c in res['cpu']]} jobs {res['jobs']} "
+                    f"rows={res['rows']}",
                     flush=True,
                 )
         same = len(md5s) == 1

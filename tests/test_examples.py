@@ -259,7 +259,10 @@ def test_crawl_dedup_pipeline_incremental_equals_full_rescan(spark, tmp_path):
        the store row-count unchanged and returns the same verdicts.
     """
     import crawl_dedup_pipeline as cd
-    from bfs_etl_sep2025_spark.operators.incremental import sync_batch
+    from bfs_etl_sep2025_spark.operators.incremental import (
+        commit_pending,
+        sync_batch,
+    )
     from bfs_etl_sep2025_spark.plans.versioned import VersionedTable
     from bfs_etl_sep2025_spark.tables import load
 
@@ -282,7 +285,9 @@ def test_crawl_dedup_pipeline_incremental_equals_full_rescan(spark, tmp_path):
     # full rescan: ONE sync of everything against an empty store
     docs = load(spark, cd.SF_DIR, "documents").select("doc_id", "text")
     rescan_store = VersionedTable(spark, str(tmp_path / "rescan_store"))
-    rescan = sync_batch(spark, docs, rescan_store)
+    pending: list = []
+    rescan = sync_batch(spark, docs, rescan_store, pending)
+    commit_pending(rescan_store, pending, keys=["doc_id"])
     rescan_kept = sorted(
         r["doc_id"] for r in rescan.filter("keep").collect()
     )
@@ -304,7 +309,9 @@ def test_crawl_dedup_pipeline_incremental_equals_full_rescan(spark, tmp_path):
     )
     kept_embs = n.filter(F.col("vec_id").isin([int(i) for i in rescan_kept]))
     sem_rescan_store = VersionedTable(spark, str(tmp_path / "sem_rescan"))
-    sem_verd = _sem_sync_batch(spark, kept_embs, cent, sem_rescan_store)
+    pending = []
+    sem_verd = _sem_sync_batch(spark, kept_embs, cent, sem_rescan_store, pending)
+    commit_pending(sem_rescan_store, pending, keys=["vec_id"])
     sem_removed = {
         r["vec_id"] for r in sem_verd.filter("exemplar IS NOT NULL").collect()
     }
@@ -320,7 +327,9 @@ def test_crawl_dedup_pipeline_incremental_equals_full_rescan(spark, tmp_path):
     n_before = store.read().count()
     bounds = cd._batch_bounds(spark, cd.SF_DIR, cd.N_BATCHES)
     batch0 = docs.filter(F.col("doc_id") <= bounds[1])
-    again = sync_batch(spark, batch0, store)
+    pending = []
+    again = sync_batch(spark, batch0, store, pending)
+    commit_pending(store, pending, keys=["doc_id"])
     assert store.read().count() == n_before  # replaced, not double-inserted
     verd0 = {
         r["doc_id"]: (r["exact_dup"], r["near_dup"])

@@ -1282,3 +1282,243 @@ def test_catalog_reads_raise_no_jvm_exceptions(spark, monkeypatch):
     assert calls == []
     assert spark.sql("SHOW PARTITIONS meta_db.pt").collect() == []
     spark.sql("DROP DATABASE meta_db CASCADE")
+
+
+# -- pruned MERGE as one snapshot swap of the touched partitions -------------
+
+_PM_UPSERT = (
+    "MERGE INTO {t} AS t USING {s} AS s ON {on} "
+    "WHEN MATCHED AND s.v IS NULL THEN DELETE "
+    "WHEN MATCHED THEN UPDATE SET v = s.v "
+    "WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
+)
+
+
+def _pm_table(spark, name, ddl_tail="", rows="", src=""):
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(
+        f"CREATE TABLE {name} (id INT, v STRING, dt STRING) "
+        f"USING parquet PARTITIONED BY (dt){ddl_tail}"
+    )
+    spark.sql(
+        f"INSERT INTO {name} VALUES "
+        + (rows or "(1, 'a', 'd1'), (2, 'b', 'd2'), (3, 'c', 'd3')")
+    )
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY VIEW {name}_src AS SELECT * FROM VALUES "
+        + (src or "(1, 'A', 'd1'), (3, NULL, 'd3'), (4, 'n', 'd4')")
+        + " AS t(id, v, dt)"
+    )
+    return _PM_UPSERT.format(
+        t=name,
+        s=f"{name}_src",
+        on="t.id = s.id AND t.dt = s.dt",
+        cols="id, v, dt",
+        vals="s.id, s.v, s.dt",
+    )
+
+
+def test_pruned_merge_writes_no_session_conf(spark, monkeypatch):
+    """The pruned MERGE sets and unsets no session conf: a concurrent
+    statement on another table never runs under a conf it flipped."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    for name in ("set", "unset"):
+        real = getattr(RuntimeConfig, name)
+        monkeypatch.setattr(
+            RuntimeConfig,
+            name,
+            lambda self, *a, _n=name, _r=real: calls.append((_n, a))
+            or _r(self, *a),
+        )
+    stmt = _pm_table(spark, "pm_conf")
+    before_d2 = _part_files(spark, "pm_conf", "dt=d2")
+    run_merge(spark, stmt)
+    got = {(r.id, r.v, r.dt) for r in spark.table("pm_conf").collect()}
+    assert got == {(1, "A", "d1"), (2, "b", "d2"), (4, "n", "d4")}
+    assert _part_files(spark, "pm_conf", "dt=d2") == before_d2  # pruned
+    assert calls == []
+    spark.sql("DROP TABLE pm_conf")
+
+
+def test_pruned_merge_keeps_user_table_named_like_a_stage(spark):
+    """A user table ``<target>__merge_stage`` is not the MERGE's to drop."""
+    spark.sql("DROP TABLE IF EXISTS pm_user__merge_stage")
+    spark.sql("CREATE TABLE pm_user__merge_stage (k INT) USING parquet")
+    spark.sql("INSERT INTO pm_user__merge_stage VALUES (7), (8)")
+    run_merge(spark, _pm_table(spark, "pm_user"))
+    got = sorted(r.k for r in spark.table("pm_user__merge_stage").collect())
+    assert got == [7, 8]
+    spark.sql("DROP TABLE pm_user__merge_stage")
+    spark.sql("DROP TABLE pm_user")
+
+
+def test_pruned_merge_unregisters_emptied_partition(spark):
+    """A partition the MERGE empties leaves the catalog and the disk, so no
+    later scan looks for its directory; untouched entries stay."""
+    import os
+
+    run_merge(spark, _pm_table(spark, "pm_gone"))
+    parts = sorted(r[0] for r in spark.sql("SHOW PARTITIONS pm_gone").collect())
+    assert parts == ["dt=d1", "dt=d2", "dt=d4"]
+    path = _location(spark, "pm_gone").replace("file:", "")
+    assert sorted(d for d in os.listdir(path) if d[0] not in "._") == parts
+    spark.sql("DROP TABLE pm_gone")
+
+
+@pytest.mark.parametrize("kind", ["managed", "external", "two_cols", "bucketed"])
+def test_pruned_merge_layouts_prune_and_read_back(spark, tmp_path, kind):
+    """Every target layout takes the pruned swap: the untouched partition's
+    files are the same entries afterwards, partition values needing
+    escapes ('a/b', 'x=y') or none ('sp ace') land at the paths Spark
+    itself names, and the table, its catalog entries and a fresh read of
+    its directory all agree on the merged rows."""
+    import os
+
+    h = kind == "two_cols"
+    cols = "id INT, v STRING, dt STRING" + (", h INT" if h else "")
+    tail = {
+        "external": f" LOCATION '{tmp_path / 'ext'}'",
+        "bucketed": " CLUSTERED BY (id) SORTED BY (id) INTO 4 BUCKETS",
+    }.get(kind, "")
+    spark.sql("DROP TABLE IF EXISTS pm_lay")
+    spark.sql(
+        f"CREATE TABLE pm_lay ({cols}) USING parquet "
+        f"PARTITIONED BY (dt{', h' if h else ''}){tail}"
+    )
+
+    def vals(rows):
+        return ", ".join(
+            f"({i}, {'NULL' if v is None else repr(v)}, '{d}'"
+            + (f", {i % 2})" if h else ")")
+            for i, v, d in rows
+        )
+
+    spark.sql(
+        "INSERT INTO pm_lay VALUES "
+        + vals([(1, "a", "a/b"), (2, "b", "x=y"), (3, "c", "sp ace"),
+                (4, "d", "plain"), (8, "e", "a/b")])
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW pm_lay_src AS SELECT * FROM VALUES "
+        + vals([(1, "A", "a/b"), (3, None, "sp ace"), (5, "n", "new"),
+                (6, "f", "x=y")])
+        + f" AS t(id, v, dt{', h' if h else ''})"
+    )
+    untouched = "dt=plain" + ("/h=0" if h else "")
+    before = _part_files(spark, "pm_lay", untouched)
+    assert before
+    hc = ", h" if h else ""
+    run_merge(
+        spark,
+        _PM_UPSERT.format(
+            t="pm_lay",
+            s="pm_lay_src",
+            on="t.id = s.id AND t.dt = s.dt" + (" AND t.h = s.h" if h else ""),
+            cols=f"id, v, dt{hc}",
+            vals=f"s.id, s.v, s.dt{', s.h' if h else ''}",
+        ),
+    )
+    want = {(1, "A", "a/b"), (8, "e", "a/b"), (2, "b", "x=y"),
+            (6, "f", "x=y"), (4, "d", "plain"), (5, "n", "new")}
+    got = {(r.id, r.v, r.dt) for r in spark.table("pm_lay").collect()}
+    assert got == want
+    assert _part_files(spark, "pm_lay", untouched) == before
+    path = _location(spark, "pm_lay").replace("file:", "")
+    fresh = spark.read.parquet(path)
+    assert {(r.id, r.v, str(r.dt)) for r in fresh.collect()} == want
+    dirs = {
+        f"dt={d}" + (f"/h={i % 2}" if h else "")
+        for d, i in [("a%2Fb", 1), ("a%2Fb", 8), ("x%3Dy", 2), ("x%3Dy", 6),
+                     ("plain", 4), ("new", 5)]
+    }
+    parts = {r[0] for r in spark.sql("SHOW PARTITIONS pm_lay").collect()}
+    assert parts == dirs
+    held = {
+        os.path.relpath(d, path)
+        for d, _, files in os.walk(path)
+        if any(f[0] not in "._" for f in files)
+    }
+    assert held == dirs  # no _rewrite-* leftovers, no emptied partition
+    if kind == "bucketed":
+        assert spark.sql("DESCRIBE TABLE EXTENDED pm_lay").filter(
+            "col_name = 'Num Buckets'"
+        ).first()["data_type"] == "4"
+        for d in ("dt=a%2Fb", "dt=new"):
+            assert all("_0000" in f for f in _part_files(spark, "pm_lay", d)
+                       if f.endswith(".parquet"))
+    spark.sql("DROP TABLE pm_lay")
+
+
+def test_empty_string_partition_value_bails_to_full_rewrite(spark):
+    """An empty-string partition value lands in the NULL (Hive default)
+    partition, which no partition literal names: pruning bails to the
+    full rewrite, and the row reads back with a NULL partition value."""
+    stmt = _pm_table(
+        spark, "pm_blank", rows="(1, 'a', 'd1'), (2, 'b', 'd2')",
+        src="(1, 'A', 'd1'), (3, 'e', '')",
+    )
+    run_merge(spark, stmt)
+    got = sorted(
+        (r.id, r.v, r.dt or "-") for r in spark.table("pm_blank").collect()
+    )
+    assert got == [(1, "A", "d1"), (2, "b", "d2"), (3, "e", "-")]
+    spark.sql("DROP TABLE pm_blank")
+
+
+def test_pruned_merge_rewrites_custom_partition_location(spark, tmp_path):
+    """A touched partition registered at a custom location is rewritten at
+    the table's own path and re-registered there: its merged rows read
+    back, and the untouched partition keeps its files."""
+    stmt = _pm_table(spark, "pm_loc")
+    spark.sql(
+        f"ALTER TABLE pm_loc PARTITION (dt = 'd1') "
+        f"SET LOCATION '{tmp_path / 'elsewhere'}'"
+    )
+    spark.sql("INSERT INTO pm_loc PARTITION (dt = 'd1') VALUES (1, 'a')")
+    before_d2 = _part_files(spark, "pm_loc", "dt=d2")
+    run_merge(spark, stmt)
+    got = {(r.id, r.v, r.dt) for r in spark.table("pm_loc").collect()}
+    assert got == {(1, "A", "d1"), (2, "b", "d2"), (4, "n", "d4")}
+    assert _part_files(spark, "pm_loc", "dt=d2") == before_d2
+    spark.sql("DROP TABLE pm_loc")
+
+
+def test_bucketed_rewrites_keep_join_exchange_free(spark):
+    """UPDATE and DELETE on a bucketed table write through the bucketed
+    writer: the rows are right, and a join on the bucket column of two
+    such tables still plans no Exchange."""
+    from bfs_etl_sep2025_spark.plans.dml import run_update_or_delete
+
+    for t in ("bk_a", "bk_b"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        spark.sql(
+            f"CREATE TABLE {t} (id INT, v STRING) USING parquet "
+            "CLUSTERED BY (id) SORTED BY (id) INTO 4 BUCKETS"
+        )
+        spark.sql(
+            f"INSERT INTO {t} SELECT CAST(id AS INT), CAST(id AS STRING) "
+            "FROM range(40)"
+        )
+    run_update_or_delete(spark, "UPDATE bk_a SET v = 'x' WHERE id < 10")
+    run_update_or_delete(spark, "DELETE FROM bk_b WHERE id >= 30")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = spark.sql(
+            "SELECT a.id, a.v, b.v AS w FROM bk_a a JOIN bk_b b ON a.id = b.id"
+        )
+        plan = joined._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+        assert "Exchange" not in plan
+        rows = joined.collect()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert sorted((r.id, r.v, r.w) for r in rows) == [
+        (i, "x" if i < 10 else str(i), str(i)) for i in range(30)
+    ]
+    for t in ("bk_a", "bk_b"):
+        spark.sql(f"DROP TABLE {t}")

@@ -606,9 +606,9 @@ def test_upsert_many_single_source_delegates(spark, tmp_path):
 
 
 def test_incremental_deferred_commit_equals_immediate(spark, tmp_path):
-    """The deferred-commit sync mode (pending list + one multi-batch
-    MERGE) must produce identical verdicts AND an identical final store
-    to per-batch immediate commits."""
+    """One group commit of a whole sync run (pending list + one
+    multi-batch MERGE) must produce identical verdicts AND an identical
+    final store to a sync + commit per batch."""
     from pyspark.sql import functions as F
 
     from bfs_etl_sep2025_spark.operators.incremental import (
@@ -630,7 +630,11 @@ def test_incremental_deferred_commit_equals_immediate(spark, tmp_path):
     ]
 
     imm_store = VersionedTable(spark, str(tmp_path / "imm"))
-    imm = [sync_batch(spark, b, imm_store) for b in parts]
+    imm = []
+    for b in parts:
+        one: list = []
+        imm.append(sync_batch(spark, b, imm_store, pending=one))
+        commit_pending(imm_store, one, keys=["doc_id"])
 
     def_store = VersionedTable(spark, str(tmp_path / "deferred"))
     pending: list = []
