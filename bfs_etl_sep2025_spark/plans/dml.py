@@ -27,16 +27,15 @@ from __future__ import annotations
 
 import re
 
-from bfs_etl_sep2025_spark.plans.merge import (
-    _split_top_level,
-    swap_snapshot,
-    table_meta,
+from bfs_etl_sep2025_spark.plans.merge import swap_snapshot, table_meta
+from bfs_etl_sep2025_spark.plans.sqlsplit import (
+    keyword_positions,
+    split_top_level,
 )
-from bfs_etl_sep2025_spark.plans.qualify import _top_level_positions
 
 _DELETE_HEAD = re.compile(r"(?is)^\s*DELETE\s+FROM\s+(?P<name>[\w.`\"]+)\s*")
 _UPDATE_HEAD = re.compile(r"(?is)^\s*UPDATE\s+(?P<name>[\w.`\"]+)\s+SET\s")
-_WHERE = re.compile(r"(?i)^WHERE\b")
+_WHERE = re.compile(r"(?i)WHERE\b")
 
 
 def is_update_or_delete(stmt: str) -> bool:
@@ -48,10 +47,10 @@ def _split_where(text: str) -> tuple[str, str | None]:
     paren-aware), so a WHERE inside a subquery or a string literal never
     becomes the statement boundary — unlike a lazy ``.+?`` regex, which
     splits at the first textual ' where ' regardless of nesting."""
-    for i in _top_level_positions(text):
-        if _WHERE.match(text[i:]) and (i == 0 or not text[i - 1].isalnum()):
-            return text[:i].strip(), text[i + len("WHERE") :].strip()
-    return text.strip(), None
+    i = next(keyword_positions(_WHERE, text), None)
+    if i is None:
+        return text.strip(), None
+    return text[:i].strip(), text[i + len("WHERE") :].strip()
 
 
 def run_update_or_delete(spark, stmt: str) -> None:
@@ -78,7 +77,7 @@ def run_update_or_delete(spark, stmt: str) -> None:
     meta = table_meta(spark, table)
     sets_sql, pred = _split_where(stmt[m.end() :])
     sets: dict[str, str] = {}
-    for assign in _split_top_level(sets_sql):
+    for assign in split_top_level(sets_sql):
         col, _, expr = assign.partition("=")
         if not expr:
             raise ValueError(f"bad SET assignment: {assign!r}")

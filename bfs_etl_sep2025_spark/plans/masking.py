@@ -57,7 +57,7 @@ import re
 
 from pyspark.sql import SparkSession
 
-from bfs_etl_sep2025_spark.plans.qualify import sub_unquoted
+from bfs_etl_sep2025_spark.plans.sqlsplit import sub_unquoted
 
 #: policy name (lowercased) -> {"arg": str, "body": str}
 _POLICIES: dict[str, dict] = {}

@@ -82,17 +82,22 @@ import re
 import uuid
 from dataclasses import dataclass, field
 
-from bfs_etl_sep2025_spark.plans.qualify import _top_level_positions
+from bfs_etl_sep2025_spark.plans.sqlsplit import (
+    blank_quoted,
+    keyword_positions,
+    match_close,
+    split_top_level,
+)
 
 _MERGE_HEAD = re.compile(r"(?i)^\s*MERGE\s+INTO\s+")
-_USING = re.compile(r"(?i)^USING\b")
-_ON = re.compile(r"(?i)^ON\b")
-_WHEN = re.compile(r"(?i)^WHEN\b")
+_USING = re.compile(r"(?i)USING\b")
+_ON = re.compile(r"(?i)ON\b")
+_WHEN = re.compile(r"(?i)WHEN\b")
 _WHEN_HEAD = re.compile(
     r"(?is)^WHEN\s+(?P<not>NOT\s+)?MATCHED"
     r"(?:\s+BY\s+(?P<by>SOURCE|TARGET)\b)?"
 )
-_THEN = re.compile(r"(?i)^THEN\b")
+_THEN = re.compile(r"(?i)THEN\b")
 _AND_HEAD = re.compile(r"(?is)^AND\b")
 _UPDATE_ACT = re.compile(r"(?is)^UPDATE\s+SET\s+(?P<sets>.+)$")
 _DELETE_ACT = re.compile(r"(?is)^DELETE\s*$")
@@ -158,34 +163,13 @@ class MergeSpec:
         return self.not_matched[0].vals if self.not_matched else None
 
 
-def _split_top_level(text: str, sep: str = ",") -> list[str]:
-    """Split on a separator at paren depth 0, outside quotes/comments.
-
-    ``_top_level_positions`` already returns ascending indices — iterate it
-    directly. (A ``set()`` wrapper here once scrambled iteration order for
-    sparse position lists with large values, silently mis-splitting long
-    SET/VALUES clauses; regression-tested in tests/test_merge.py.)"""
-    parts, last = [], 0
-    for i in _top_level_positions(text):
-        if text[i] == sep:
-            parts.append(text[last:i])
-            last = i + 1
-    parts.append(text[last:])
-    return [p.strip() for p in parts if p.strip()]
-
-
 def _name_and_alias(fragment: str) -> tuple[str, str]:
     """``db.tbl [AS] alias`` or ``(subquery) [AS] alias`` -> (sql, alias);
     the alias defaults to the bare table name (SQL's own scoping rule)."""
     frag = fragment.strip()
     if frag.startswith("("):
-        depth, i = 0, 0
-        for i, ch in enumerate(frag):
-            depth += ch == "("
-            depth -= ch == ")"
-            if depth == 0:
-                break
-        sql, rest = frag[: i + 1], frag[i + 1 :].strip()
+        end = match_close(frag, 0) or len(frag)
+        sql, rest = frag[:end], frag[end:].strip()
     else:
         toks = frag.split(None, 1)
         sql, rest = toks[0], (toks[1] if len(toks) > 1 else "")
@@ -199,20 +183,13 @@ def parse_merge(stmt: str) -> MergeSpec:
     if not m:
         raise ValueError("not a MERGE INTO statement")
     body = stmt[m.end() :]
-    tops = _top_level_positions(body)
-    using_at = on_at = None
-    when_ats: list[int] = []
-    for i in tops:
-        prev_ok = i == 0 or not body[i - 1].isalnum()
-        if not prev_ok:
-            continue
-        if using_at is None and _USING.match(body[i:]):
-            using_at = i
-        elif using_at is not None and on_at is None and _ON.match(body[i:]):
-            on_at = i
-        elif on_at is not None and _WHEN.match(body[i:]):
-            when_ats.append(i)
-    if using_at is None or on_at is None or not when_ats:
+    using_at = next(keyword_positions(_USING, body), None)
+    on_at = when_ats = None
+    if using_at is not None:
+        on_at = next(keyword_positions(_ON, body, using_at), None)
+    if on_at is not None:
+        when_ats = list(keyword_positions(_WHEN, body, on_at))
+    if not when_ats:
         raise ValueError(
             "unsupported MERGE shape: need USING ... ON ... WHEN ..."
         )
@@ -237,11 +214,7 @@ def parse_merge(stmt: str) -> MergeSpec:
         rest = clause[head.end() :].strip()
         # optional AND <guard> runs to the first top-level THEN
         guard: str | None = None
-        then_at = None
-        for i in _top_level_positions(rest):
-            if _THEN.match(rest[i:]) and (i == 0 or not rest[i - 1].isalnum()):
-                then_at = i
-                break
+        then_at = next(keyword_positions(_THEN, rest), None)
         if then_at is None:
             raise ValueError(f"MERGE clause missing THEN: {clause[:60]!r}")
         between = rest[:then_at].strip()
@@ -273,7 +246,7 @@ def parse_merge(stmt: str) -> MergeSpec:
             prior.append(MatchedBranch(guard=guard, delete=True))
         elif update_side and (mm := _UPDATE_ACT.match(action)):
             sets: dict[str, str] = {}
-            for assign in _split_top_level(mm.group("sets")):
+            for assign in split_top_level(mm.group("sets")):
                 col, _, expr = assign.partition("=")
                 if not expr:
                     raise ValueError(f"bad SET assignment: {assign!r}")
@@ -289,7 +262,7 @@ def parse_merge(stmt: str) -> MergeSpec:
                         if cols
                         else None
                     ),
-                    vals=_split_top_level(mm.group("vals")),
+                    vals=split_top_level(mm.group("vals")),
                 )
             )
         else:
@@ -461,37 +434,21 @@ def _insert_select(spec: MergeSpec, tgt_fields: list[tuple[str, str]]) -> str:
     )
 
 
+_BOOL_OP = re.compile(r"(?i)(AND|OR|NOT)\b")
+
+
 def _split_top_and(cond: str) -> list[str] | None:
-    """Split a condition on top-level ANDs (outside parens/quotes); None
-    when anything but a flat conjunction shows up at depth 0."""
-    parts, buf, depth, i = [], [], 0, 0
-    while i < len(cond):
-        ch = cond[i]
-        if ch == "'":  # skip string literal (Snowflake '' escaping)
-            j = i + 1
-            while j < len(cond):
-                if cond[j] == "'" and cond[j : j + 2] != "''":
-                    break
-                j += 2 if cond[j] == "'" else 1
-            buf.append(cond[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            m_and = re.match(r"(?i)\s+AND\s+", cond[i:])
-            if m_and:
-                parts.append("".join(buf))
-                buf = []
-                i += m_and.end()
-                continue
-            if re.match(r"(?i)\s+(OR|NOT)\s+", cond[i:]):
-                return None
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
+    """Split a condition on its top-level ANDs; None when a top-level OR or
+    NOT makes it more than a flat conjunction. The conjuncts come back with
+    their literals and comments blanked (:func:`blank_quoted`)."""
+    text = blank_quoted(cond)
+    parts, last = [], 0
+    for i in keyword_positions(_BOOL_OP, text):
+        if text[i : i + 3].upper() != "AND":
+            return None
+        parts.append(text[last:i])
+        last = i + 3
+    parts.append(text[last:])
     return parts
 
 
@@ -723,7 +680,8 @@ def swap_snapshot(spark, meta: TableMeta, select: str, partitions=None) -> None:
     With ``partitions`` — the touched partition values, one tuple each in
     partition-column order — ``select`` is the new content of just those
     partitions, written to ``_rewrite-*``. Each one's old directory is
-    deleted and the new one renamed in if the write produced it; the
+    deleted and the new one renamed in if the write produced it (an emptied
+    one takes its then-empty parent directories with it); the
     touched entries are dropped and the produced ones added back at that
     path, so an emptied partition leaves the catalog. Nothing else is read,
     written or re-registered.
@@ -758,6 +716,14 @@ def swap_snapshot(spark, meta: TableMeta, select: str, partitions=None) -> None:
                 fs.mkdirs(dst.getParent())
                 fs.rename(src, dst)
                 moved.append(rel)
+                continue
+            # an emptied leaf takes its emptied ancestor directories along
+            up = dst.getParent()
+            while (
+                not up.equals(old) and fs.exists(up) and not fs.listStatus(up)
+            ):
+                fs.delete(up, False)
+                up = up.getParent()
         fs.delete(fresh, True)
         return moved
 

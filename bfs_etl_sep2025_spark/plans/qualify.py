@@ -26,7 +26,9 @@ datetime).
 Scope: the QUALIFY must be top-level (not inside a subquery — Spark planning
 inside nested scopes would need a real parser); the predicate may reference
 select-list aliases or contain inline window calls, the common Snowflake
-shapes. Keyword detection is quote-, comment-, and paren-aware. Two
+shapes. Keywords are found with the dialect layer's one scanner
+(``plans/sqlsplit.py``), so a QUALIFY, SELECT or ORDER inside a literal, a
+comment or parentheses is not a clause boundary. Two
 documented restrictions (ADVICE r3): ``SELECT DISTINCT ... QUALIFY`` is
 REJECTED with ValueError — Snowflake evaluates QUALIFY before DISTINCT, but
 the wrap would run DISTINCT first and can keep different rows; and an ORDER
@@ -38,93 +40,14 @@ from __future__ import annotations
 
 import re
 
+from bfs_etl_sep2025_spark.plans.sqlsplit import keyword_positions
+
 _HELPER = "__qualify__"
 
 #: keywords that can follow the QUALIFY predicate at top level
-_TAIL_RE = re.compile(r"(?i)^(ORDER|LIMIT|OFFSET)\b")
-_QUALIFY_RE = re.compile(r"(?i)^QUALIFY\b")
-
-
-def _unquoted_positions(sql: str) -> set[int]:
-    """Indices of chars outside quotes and comments, at ANY paren depth —
-    the span where dialect keyword substitution is safe (a membership set,
-    not an ordered walk; contrast ``_top_level_positions``)."""
-    return set(_scan_positions(sql, any_depth=True))
-
-
-def _top_level_positions(sql: str) -> list[int]:
-    """Indices of chars at paren depth 0, outside quotes and comments
-    (ascending — callers rely on the order)."""
-    return _scan_positions(sql, any_depth=False)
-
-
-def _scan_positions(sql: str, any_depth: bool) -> list[int]:
-    out: list[int] = []
-    i, n, depth = 0, len(sql), 0
-    state: str | None = None
-    while i < n:
-        ch = sql[i]
-        two = sql[i : i + 2]
-        if state is None:
-            if ch in ("'", '"', "`"):
-                state = ch
-            elif two == "--":
-                state = "--"
-                i += 2
-                continue
-            elif two == "/*":
-                state = "/*"
-                i += 2
-                continue
-            elif ch == "(":
-                depth += 1
-                if any_depth:
-                    out.append(i)
-            elif ch == ")":
-                depth -= 1
-                if any_depth:
-                    out.append(i)
-            elif any_depth or depth == 0:
-                out.append(i)
-            i += 1
-        elif state in ("'", '"', "`"):
-            if ch == "\\" and state != "`" and i + 1 < n:
-                i += 2
-                continue
-            if ch == state:
-                if state == "'" and sql[i + 1 : i + 2] == "'":
-                    i += 2
-                    continue
-                state = None
-            i += 1
-        elif state == "--":
-            if ch == "\n":
-                state = None
-            i += 1
-        else:  # /*
-            if two == "*/":
-                state = None
-                i += 2
-                continue
-            i += 1
-    return out
-
-
-def sub_unquoted(pattern: re.Pattern, repl, text: str) -> str:
-    """``pattern.sub(repl, text)`` applied only to matches that START
-    outside string literals and comments, so a dialect keyword quoted as
-    data (``SELECT 'IFF(x)' AS note``) is never rewritten (ADVICE r3)."""
-    ok = _unquoted_positions(text)
-
-    def _repl(m: re.Match) -> str:
-        if m.start() not in ok:
-            return m.group(0)
-        return repl(m) if callable(repl) else m.expand(repl)
-
-    return pattern.sub(_repl, text)
-
-
-_SELECT_RE = re.compile(r"(?i)^SELECT\b")
+_TAIL_RE = re.compile(r"(?i)(ORDER|LIMIT|OFFSET)\b")
+_QUALIFY_RE = re.compile(r"(?i)QUALIFY\b")
+_SELECT_RE = re.compile(r"(?i)SELECT\b")
 
 
 def rewrite_qualify(stmt: str) -> str:
@@ -133,18 +56,11 @@ def rewrite_qualify(stmt: str) -> str:
     prefix ahead of the query block (CTAS ``CREATE TABLE ... AS``,
     ``INSERT INTO ...``) is preserved verbatim — only the SELECT body is
     wrapped."""
-    positions = _top_level_positions(stmt)
-    q_at = None
-    sel_at = None
-    for i in positions:
-        if sel_at is None and _SELECT_RE.match(stmt[i:]) and (
-            i == 0 or not stmt[i - 1].isalnum()
-        ):
-            sel_at = i
-        if _QUALIFY_RE.match(stmt[i:]) and (i == 0 or not stmt[i - 1].isalnum()):
-            q_at = i
-            break
-    if q_at is None or sel_at is None or sel_at >= q_at:
+    q_at = next(keyword_positions(_QUALIFY_RE, stmt), None)
+    if q_at is None:
+        return stmt
+    sel_at = next(keyword_positions(_SELECT_RE, stmt), None)
+    if sel_at is None or sel_at >= q_at:
         return stmt
     prefix = stmt[:sel_at]
     stmt = stmt[sel_at:]
@@ -158,11 +74,7 @@ def rewrite_qualify(stmt: str) -> str:
         )
     rest = stmt[q_at + len("QUALIFY") :]
     # find where the predicate ends (top-level ORDER BY / LIMIT / OFFSET)
-    tail_at = None
-    for i in _top_level_positions(rest):
-        if _TAIL_RE.match(rest[i:]) and (i == 0 or not rest[i - 1].isalnum()):
-            tail_at = i
-            break
+    tail_at = next(keyword_positions(_TAIL_RE, rest), None)
     pred = (rest[:tail_at] if tail_at is not None else rest).strip()
     tail = rest[tail_at:].strip() if tail_at is not None else ""
     out = (

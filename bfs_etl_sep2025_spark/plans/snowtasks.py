@@ -35,7 +35,9 @@ Mapping (the well-defined subset):
 - :func:`task_pipeline` converts a root's graph into an engine
   ``Pipeline`` with the root's schedule (cron or N-minute), so the
   existing scheduler/catchup machinery (plans/cron.py) drives it exactly
-  like the reference's Airflow schedule would.
+  like the reference's Airflow schedule would. Its tasks are the ones
+  EXECUTE TASK runs, gated on RESUME and WHEN the same way, except that a
+  scheduled run fires nothing while the root is suspended.
 
 Scale notes: the shim is pure orchestration — all data movement happens
 inside SqlTask statements, which inherit every executor discipline
@@ -50,11 +52,18 @@ from datetime import date, datetime
 
 from pyspark.sql import SparkSession
 
+from bfs_etl_sep2025_spark.plans.pipeline import Pipeline
+from bfs_etl_sep2025_spark.plans.sqlsplit import (
+    finditer_unquoted,
+    keyword_positions,
+)
+from bfs_etl_sep2025_spark.plans.tasks import SqlTask
+
 _CREATE_TASK_HEAD = re.compile(
     r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TASK\s+(?P<name>[\w.`\"]+)\s+"
     r"(?P<rest>.+)$"
 )
-_AS_KW = re.compile(r"(?i)\bAS\b")
+_AS_KW = re.compile(r"(?i)AS\b")
 _ALTER_TASK = re.compile(
     r"(?is)^\s*ALTER\s+TASK\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w.`\"]+)\s+"
     r"(?P<verb>RESUME|SUSPEND)\s*$"
@@ -104,49 +113,36 @@ def create_task(stmt: str, task_id: str) -> bool:
         return False
     # split clauses from the body at the first TOP-LEVEL unquoted AS — a
     # CAST(... AS ...) inside a parenthesized WHEN condition is body-safe
-    from bfs_etl_sep2025_spark.plans.qualify import _top_level_positions
-
     rest = m.group("rest")
-    top = set(_top_level_positions(rest))
-    split_at = None
-    for mk in _AS_KW.finditer(rest):
-        if mk.start() in top:
-            split_at = mk
-            break
+    split_at = next(keyword_positions(_AS_KW, rest), None)
     if split_at is None:
         raise ValueError(
             f"sql task {task_id!r}: CREATE TASK without an AS <statement> "
             "body"
         )
-    head = rest[: split_at.start()]
-    body_text = rest[split_at.end() :]
+    head = rest[:split_at]
+    body_text = rest[split_at + len("AS") :]
 
     # Clause extraction must respect string literals (ADVICE r8): a WHEN
     # condition containing a quoted 'AFTER x' or 'SCHEDULE =' substring
-    # must not be mis-split. Same unquoted-position filter as the AS split;
-    # WHEN is carved out FIRST, its end bounded by the next UNQUOTED
-    # SCHEDULE/AFTER clause head (the old lookahead stopped at quoted ones).
-    from bfs_etl_sep2025_spark.plans.qualify import _unquoted_positions
-
-    def _unq_search(pattern: re.Pattern, text: str):
-        ok = set(_unquoted_positions(text))
-        return next(
-            (mm for mm in pattern.finditer(text) if mm.start() in ok), None
-        )
-
+    # must not be mis-split. WHEN is carved out FIRST, its end bounded by
+    # the next UNQUOTED SCHEDULE/AFTER clause head.
     when = None
-    mw = _unq_search(_WHEN_KW, head)
+    mw = next(finditer_unquoted(_WHEN_KW, head), None)
     if mw:
-        unq = set(_unquoted_positions(head))
-        end = len(head)
-        for pat in (_SCHEDULE, _AFTER):
-            for mm in pat.finditer(head):
-                if mm.start() in unq and mm.start() > mw.end():
-                    end = min(end, mm.start())
+        end = min(
+            (
+                mm.start()
+                for pat in (_SCHEDULE, _AFTER)
+                for mm in finditer_unquoted(pat, head)
+                if mm.start() > mw.end()
+            ),
+            default=len(head),
+        )
         when = head[mw.end() : end].strip()
         head = head[: mw.start()] + head[end:]
     sched = None
-    ms = _unq_search(_SCHEDULE, head)
+    ms = next(finditer_unquoted(_SCHEDULE, head), None)
     if ms:
         raw = ms.group("sched")
         if not (_N_MINUTE.match(raw) or _USING_CRON.match(raw)):
@@ -158,7 +154,7 @@ def create_task(stmt: str, task_id: str) -> bool:
         sched = raw
         head = head[: ms.start()] + head[ms.end() :]
     after: tuple[str, ...] = ()
-    ma = _unq_search(_AFTER, head)
+    ma = next(finditer_unquoted(_AFTER, head), None)
     if ma:
         after = tuple(
             _norm(p) for p in ma.group("parents").split(",")
@@ -199,9 +195,8 @@ def alter_task(stmt: str) -> bool:
     return True
 
 
-def _subtree(root: str) -> list[TaskDef]:
-    """The root plus every descendant reachable over AFTER edges, in
-    dependency order (parents before children)."""
+def _subtree(root: str) -> set[str]:
+    """The root plus every task reachable from it over AFTER edges."""
     members = {root}
     changed = True
     while changed:
@@ -212,27 +207,57 @@ def _subtree(root: str) -> list[TaskDef]:
             ):
                 members.add(t.name)
                 changed = True
-    ordered: list[TaskDef] = []
-    placed: set[str] = set()
-    while len(placed) < len(members):
-        progress = False
-        for n in sorted(members - placed):
-            t = _TASKS[n]
-            if all(p in placed or p not in members for p in t.after):
-                ordered.append(t)
-                placed.add(n)
-                progress = True
-        if not progress:  # pragma: no cover - AFTER cannot form cycles here
-            raise ValueError(f"task graph under {root!r} has a cycle")
-    return ordered
+    return members
 
 
-def _when_passes(spark: SparkSession, ctx, sql_task, cond: str) -> bool:
-    """Evaluate a WHEN condition as one-row SQL after the stream/dialect
-    rewrites (SYSTEM$STREAM_HAS_DATA folds to its exact literal)."""
-    rewritten, _ = sql_task._rewrite_streams(f"SELECT ({cond})", ctx)
-    row = spark.sql(rewritten).collect()[0]
-    return bool(row[0])
+class _TaskObject(SqlTask):
+    """One TASK definition as an engine task. Its body runs only when the
+    task is resumed (or ``forced``: EXECUTE TASK's root), the ``root`` of a
+    scheduled run is resumed, and its WHEN holds, evaluated as one-row SQL
+    after the stream rewrite (so ``SYSTEM$STREAM_HAS_DATA`` folds to its
+    exact literal). Each WHEN evaluation is logged in ``tdef.runs``."""
+
+    def __init__(
+        self,
+        tdef: TaskDef,
+        pipeline: Pipeline,
+        forced: bool,
+        root: TaskDef | None,
+    ):
+        super().__init__(tdef.name, sql=tdef.body, pipeline=pipeline)
+        self.tdef, self.forced, self.root, self.ran = tdef, forced, root, False
+
+    def execute(self, ctx) -> None:
+        t, self.ran = self.tdef, False
+        if not (t.resumed or self.forced) or (
+            self.root is not None and not self.root.resumed
+        ):
+            return
+        if t.when is not None:
+            gate, _ = self._rewrite_streams(f"SELECT ({t.when})", ctx)
+            if not ctx.spark.sql(gate).collect()[0][0]:
+                t.runs.append("")  # evaluated, condition false -> skipped
+                return
+        super().execute(ctx)
+        t.runs.append(ctx.logical_date.isoformat())
+        self.ran = True
+
+
+def _task_graph(root: str, forced: bool, **pipeline_kw) -> Pipeline:
+    """The graph rooted at ``root`` as a Pipeline of :class:`_TaskObject`
+    wired along AFTER edges. ``forced`` (EXECUTE TASK) runs the root even if
+    suspended; otherwise (a scheduled run) nothing runs while it is."""
+    p = Pipeline(f"task_{root}", **pipeline_kw)
+    gate = None if forced else _TASKS[root]
+    objs = {
+        n: _TaskObject(_TASKS[n], p, forced and n == root, gate)
+        for n in _subtree(root)
+    }
+    for n, obj in objs.items():
+        for parent in _TASKS[n].after:
+            if parent in objs:
+                objs[parent] >> obj
+    return p
 
 
 def execute_task(
@@ -246,37 +271,9 @@ def execute_task(
     name = _norm(name)
     if name not in _TASKS:
         raise ValueError(f"EXECUTE TASK: no task {name!r}")
-    from bfs_etl_sep2025_spark.plans.pipeline import Pipeline
-    from bfs_etl_sep2025_spark.plans.tasks import SqlTask
-
-    ran: list[str] = []
-    with Pipeline(
-        f"__exec_task_{name}",
-        schedule="@daily",
-        start_date=date(2024, 1, 1),
-    ) as p:
-        # one engine task per definition keeps RunContext/templating real
-        engine_tasks = {
-            t.name: SqlTask(t.name, sql="SELECT 1") for t in _subtree(name)
-        }
-        for t in _subtree(name):
-            for parent in t.after:
-                if parent in engine_tasks:
-                    engine_tasks[parent] >> engine_tasks[t.name]
-    ctx = p.run(spark, run_date=run_date)  # no-op bodies: builds context
-    for t in _subtree(name):
-        gate = t.resumed or t.name == name
-        if not gate:
-            continue
-        st = engine_tasks[t.name]
-        if t.when is not None and not _when_passes(spark, ctx, st, t.when):
-            t.runs.append("")  # evaluated, condition false -> skipped
-            continue
-        st.sql = t.body
-        st.execute(ctx)
-        t.runs.append(ctx.logical_date.isoformat())
-        ran.append(t.name)
-    return ran
+    p = _task_graph(name, forced=True)
+    p.run(spark, run_date=run_date)
+    return [t.task_id for lvl in p.topological_order() for t in lvl if t.ran]
 
 
 def handle_statement(
@@ -293,13 +290,13 @@ def handle_statement(
     return False
 
 
-def task_pipeline(
-    root: str, start_date: date, clock=None
-) -> "Pipeline":
+def task_pipeline(root: str, start_date: date, clock=None) -> Pipeline:
     """Convert a task graph into an engine Pipeline scheduled like the
     root: '<n> MINUTE' -> cron '*/n * * * *' (n < 60) and 'USING CRON
     <expr>' -> the expr verbatim — plans/cron.py then drives catchup and
-    next-run exactly as it does for the reference's Airflow schedules."""
+    next-run exactly as it does for the reference's Airflow schedules.
+    A scheduled run fires nothing while the root is suspended; otherwise
+    each task runs when it is resumed and its WHEN holds."""
     t = _TASKS[_norm(root)]
     if t.schedule is None:
         raise ValueError(f"task {root!r} has no SCHEDULE to build from")
@@ -314,19 +311,10 @@ def task_pipeline(
         schedule = f"*/{n} * * * *"
     else:
         schedule = _USING_CRON.match(t.schedule).group("expr")
-    from bfs_etl_sep2025_spark.plans.pipeline import Pipeline
-    from bfs_etl_sep2025_spark.plans.tasks import SqlTask
-
-    kw = {"clock": clock} if clock is not None else {}
-    with Pipeline(
-        f"task_{_norm(root)}", schedule=schedule, start_date=start_date, **kw
-    ) as p:
-        engine_tasks = {
-            t2.name: SqlTask(t2.name, sql=t2.body)
-            for t2 in _subtree(_norm(root))
-        }
-        for t2 in _subtree(_norm(root)):
-            for parent in t2.after:
-                if parent in engine_tasks:
-                    engine_tasks[parent] >> engine_tasks[t2.name]
-    return p
+    return _task_graph(
+        _norm(root),
+        forced=False,
+        schedule=schedule,
+        start_date=start_date,
+        clock=clock,
+    )

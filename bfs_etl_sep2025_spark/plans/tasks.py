@@ -26,12 +26,16 @@ from datetime import datetime
 from pathlib import Path
 from typing import TYPE_CHECKING, Any
 
-from bfs_etl_sep2025_spark.plans.qualify import (
-    _unquoted_positions,
-    rewrite_qualify,
+from bfs_etl_sep2025_spark.plans.qualify import rewrite_qualify
+from bfs_etl_sep2025_spark.plans.sqlsplit import (
+    blank_quoted,
+    finditer_unquoted,
+    match_close,
+    split_statements,
+    split_top_level,
     sub_unquoted,
+    unquoted_positions,
 )
-from bfs_etl_sep2025_spark.plans.sqlsplit import split_statements
 from bfs_etl_sep2025_spark.plans.templating import build_context, render_any
 
 if TYPE_CHECKING:
@@ -283,6 +287,8 @@ _SNOW_UNSET_VAR = re.compile(r"(?is)^\s*UNSET\s+(?P<name>[A-Za-z_]\w*)\s*;?\s*$"
 #: the lookbehind keeps object-name dollars intact (``SYSTEM$STREAM_HAS_DATA``,
 #: ``METADATA$ACTION``), which the stream shim resolves at execution time.
 _DOLLAR_VAR = re.compile(r"(?<![\w$])\$([A-Za-z_]\w*)")
+_DOUBLE_DOLLAR = re.compile(r"\$\$")
+_SELECT_KW = re.compile(r"(?i)SELECT\b")
 #: Snowflake colon path extraction on VARIANT columns: ``col:a.b[0].c`` or
 #: ``alias.col:a.b`` -> ``variant_get(col, '$.a.b[0].c')`` (2-arg form:
 #: stays VARIANT, like Snowflake's GET_PATH). Guards: the left side is a
@@ -304,41 +310,17 @@ def _generic_type_spans(text: str) -> list[tuple[int, int]]:
     not VARIANT paths. A ``<`` that never closes in-statement is NOT type
     syntax (``WHERE struct < 5 AND v:a = 1`` is a comparison against a
     column named struct) — an unclosed scan must not swallow the rest of
-    the statement and suppress VARIANT translation there (ADVICE r4)."""
+    the statement and suppress VARIANT translation there (ADVICE r4).
+    Only code ``<``/``>`` count: a quoted ``'MAP<'`` opens nothing."""
     spans = []
-    for m in _GENERIC_TYPE_OPEN.finditer(text):
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "<":
-                depth += 1
-            elif text[i] == ">":
-                depth -= 1
-            i += 1
-        if depth == 0:  # require the closing '>' to call it a type
-            spans.append((m.start(), i))
+    for m in finditer_unquoted(_GENERIC_TYPE_OPEN, text):
+        # require the closing '>' to call it a type
+        if end := match_close(text, m.end() - 1, "<>"):
+            spans.append((m.start(), end))
     return spans
 
 
 _SPLIT_TO_TABLE = re.compile(r"(?i)\bSPLIT_TO_TABLE\s*\(")
-
-
-def _split_args_top_level(inner: str) -> list[str]:
-    """Split a call's argument text on top-level commas (quote- and
-    paren-aware via the shared position scanner)."""
-    parts, buf, depth = [], [], 0
-    unq = set(_unquoted_positions(inner))
-    for i, ch in enumerate(inner):
-        if i in unq and ch == "(":
-            depth += 1
-        elif i in unq and ch == ")":
-            depth -= 1
-        if i in unq and ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf).strip())
-    return parts
 
 
 def _rewrite_split_to_table(text: str) -> str:
@@ -353,26 +335,14 @@ def _rewrite_split_to_table(text: str) -> str:
     re-escaped first, the BPE-merge quoting idiom) — ``'.'``/``'|'``
     split literally instead of per-character."""
     while True:
-        unq = None
-        m = None
-        for cand in _SPLIT_TO_TABLE.finditer(text):
-            unq = _unquoted_positions(text) if unq is None else unq
-            if cand.start() in unq:
-                m = cand
-                break
+        m = next(finditer_unquoted(_SPLIT_TO_TABLE, text), None)
         if m is None:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if i in unq and text[i] == "(":
-                depth += 1
-            elif i in unq and text[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:  # unbalanced — leave for Spark's parser to complain
+        i = match_close(text, m.end() - 1)
+        if i is None:  # unbalanced — leave for Spark's parser to complain
             return text
         inner = text[m.end() : i - 1]
-        args = _split_args_top_level(inner)
+        args = split_top_level(inner)
         if len(args) == 2:
             x, d = args
             quoted = (
@@ -495,18 +465,6 @@ _RATIO_TO_REPORT = re.compile(r"(?i)\bRATIO_TO_REPORT\s*\(")
 _OVER_HEAD = re.compile(r"(?i)^\s*OVER\s*\(")
 
 
-def _walk_to_close(text: str, start: int, unq: set[int]) -> int | None:
-    """Index just past the ')' matching the '(' that precedes ``start``."""
-    depth, i = 1, start
-    while i < len(text) and depth:
-        if i in unq and text[i] == "(":
-            depth += 1
-        elif i in unq and text[i] == ")":
-            depth -= 1
-        i += 1
-    return None if depth else i
-
-
 def _rewrite_ratio_to_report(text: str) -> str:
     """Snowflake ``RATIO_TO_REPORT(x) OVER (w)`` -> ``((x) / SUM(x) OVER
     (w))`` — the share-of-window idiom Spark has no named function for.
@@ -515,23 +473,17 @@ def _rewrite_ratio_to_report(text: str) -> str:
     left untouched (Snowflake requires the clause; Spark's parser then
     reports the real error)."""
     while True:
-        unq = None
-        m = None
-        for cand in _RATIO_TO_REPORT.finditer(text):
-            unq = set(_unquoted_positions(text)) if unq is None else unq
-            if cand.start() in unq:
-                m = cand
-                break
+        m = next(finditer_unquoted(_RATIO_TO_REPORT, text), None)
         if m is None:
             return text
-        close = _walk_to_close(text, m.end(), unq)
+        close = match_close(text, m.end() - 1)
         if close is None:
             return text
         expr = text[m.end() : close - 1]
         m_over = _OVER_HEAD.match(text[close:])
         if not m_over:
             return text
-        over_close = _walk_to_close(text, close + m_over.end(), unq)
+        over_close = match_close(text, close + m_over.end() - 1)
         if over_close is None:
             return text
         win = text[close + m_over.end() : over_close - 1]
@@ -588,12 +540,10 @@ def _translate_create_function(stmt: str) -> str | None:
     m = _SNOW_CREATE_FUNC.match(stmt)
     if not m:
         return None
-    from bfs_etl_sep2025_spark.plans.merge import _split_top_level
-
     args_sql = []
     raw_args = m.group("args").strip()
     if raw_args:
-        for arg in _split_top_level(raw_args):
+        for arg in split_top_level(raw_args):
             parts = arg.strip().split(None, 1)
             if len(parts) != 2:
                 raise ValueError(
@@ -703,9 +653,7 @@ class SqlTask(Task):
         # recognize (e.g. a JavaScript stored procedure): refuse NOW, with
         # the real cause, instead of letting the $name pass mangle the body
         # into an unrelated parse error downstream (ADVICE r4).
-        if any(
-            out[i : i + 2] == "$$" for i in _unquoted_positions(out)
-        ):
+        if any(finditer_unquoted(_DOUBLE_DOLLAR, out)):
             raise ValueError(
                 f"sql task {self.task_id!r}: statement carries a "
                 "$$-delimited body the shim does not recognize (only "
@@ -726,10 +674,7 @@ class SqlTask(Task):
             # quote-aware: 'select' INSIDE a string value is data, not a
             # subquery (ADVICE-style rule; plain re.search would trip on
             # SET msg = 'please select one')
-            has_subquery = any(
-                re.match(r"(?i)SELECT\b", expr_text[i:])
-                for i in _unquoted_positions(expr_text)
-            )
+            has_subquery = any(finditer_unquoted(_SELECT_KW, expr_text))
             if has_subquery:
                 raise ValueError(
                     f"sql task {self.task_id!r}: SET {m_set.group('name')} "
@@ -790,12 +735,12 @@ class SqlTask(Task):
         identifier named AT, a clause whose operand is not ``KEY => v`` —
         passes through untouched for Spark's parser to judge."""
         while True:
-            unq = set(_unquoted_positions(text))
+            code = unquoted_positions(text)
             hit = None
             for cand in _TT_HEAD.finditer(text):
-                if cand.start() not in unq or cand.start("kind") not in unq:
+                if cand.start() not in code or cand.start("kind") not in code:
                     continue
-                close = _walk_to_close(text, cand.end(), unq)
+                close = match_close(text, cand.end() - 1)
                 if close is None:
                     continue
                 inner = _TT_INNER.match(text[cand.end() : close - 1])
@@ -825,11 +770,7 @@ class SqlTask(Task):
         r8: a column, alias, or unrelated name that merely EQUALS a
         registered stream name must not be rewritten into the change-feed
         view — word-boundary matching alone changed query semantics."""
-        unq = set(_unquoted_positions(sql))
-        masked = "".join(
-            ch if i in unq else " " for i, ch in enumerate(sql[:pos])
-        )
-        toks = re.findall(r"[\w$.]+|[(),]", masked)
+        toks = re.findall(r"[\w$.]+|[(),]", blank_quoted(sql[:pos]))
         clause_break = {
             "where", "group", "having", "order", "limit", "qualify",
             "window", "union", "intersect", "except", "select", "on",
@@ -925,19 +866,15 @@ class SqlTask(Task):
         for the names the statement references."""
         for name in names:
             pat = re.compile(rf"(?i)(?<![\w.`\"]){re.escape(name)}\b")
-            unq = set(_unquoted_positions(stmt))
             hits = {
                 m.start()
-                for m in pat.finditer(stmt)
-                if m.start() in unq
-                and self._is_table_ref_position(stmt, m.start())
+                for m in finditer_unquoted(pat, stmt)
+                if self._is_table_ref_position(stmt, m.start())
             }
             if hits:
                 view = resolve(name)
-                stmt = sub_unquoted(
-                    pat,
-                    lambda m: view if m.start() in hits else m.group(0),
-                    stmt,
+                stmt = pat.sub(
+                    lambda m: view if m.start() in hits else m.group(0), stmt
                 )
         return stmt
 

@@ -219,7 +219,7 @@ def test_create_function_quote_unescape_roundtrip(body):
 
 
 def test_colon_path_regex_translation():
-    from bfs_etl_sep2025_spark.plans.qualify import sub_unquoted
+    from bfs_etl_sep2025_spark.plans.sqlsplit import sub_unquoted
     from bfs_etl_sep2025_spark.plans.tasks import _COLON_PATH
 
     sub = lambda s: sub_unquoted(_COLON_PATH, r"variant_get(\1, '$.\2')", s)  # noqa: E731
@@ -297,6 +297,17 @@ def test_unclosed_angle_is_comparison_not_type_span():
     assert (
         _sub_colon_paths(stmt)
         == "SELECT * FROM t WHERE struct < 5 AND variant_get(v, '$.a.b') = 1"
+    )
+
+
+def test_quoted_angle_opens_no_type_span():
+    """A quoted 'MAP<' is data: it opens no type span for a later
+    comparison's '>' to close, so the colon path between them translates."""
+    from bfs_etl_sep2025_spark.plans.tasks import _sub_colon_paths
+
+    assert (
+        _sub_colon_paths("SELECT 'MAP<' AS s, v:a FROM t WHERE n > 1")
+        == "SELECT 'MAP<' AS s, variant_get(v, '$.a') FROM t WHERE n > 1"
     )
     # a CLOSED generic span after the comparison still shields its colons
     mixed = "SELECT CAST(x AS STRUCT<a:INT>) FROM t WHERE map < 3 AND v:k = 1"

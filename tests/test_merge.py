@@ -76,13 +76,47 @@ def test_split_top_level_sparse_positions_regression():
     """A long parenthesized expression leaves few-but-large top-level
     indices; iterating them through a set() once scrambled CPython's int
     iteration order and silently mis-split SET clauses (ADVICE r3, high)."""
-    from bfs_etl_sep2025_spark.plans.merge import _split_top_level
+    from bfs_etl_sep2025_spark.plans.sqlsplit import split_top_level
 
     big = "(" + " + ".join(f"col{i:05d}" for i in range(500)) + ")"
-    parts = _split_top_level(f"a = {big}, b = 2, c = 3")
+    parts = split_top_level(f"a = {big}, b = 2, c = 3")
     assert len(parts) == 3
     assert parts[0] == f"a = {big}" and parts[1] == "b = 2"
     assert parts[2] == "c = 3"
+
+
+@pytest.mark.parametrize("lit", ["')'", "'a(b'"])
+def test_quoted_paren_in_using_subquery(spark, lit):
+    """A paren inside a literal of the USING subquery neither ends nor
+    extends it: the source and its alias come out whole, and the MERGE
+    writes the literal."""
+    stmt = (
+        f"MERGE INTO qp_tgt t USING (SELECT id, {lit} AS x FROM qp_src) src "
+        "ON t.id = src.id WHEN MATCHED THEN UPDATE SET v = src.x"
+    )
+    spec = parse_merge(stmt)
+    assert spec.source_sql == f"(SELECT id, {lit} AS x FROM qp_src)"
+    assert spec.source_alias == "src"
+    spark.sql("DROP TABLE IF EXISTS qp_tgt")
+    spark.sql("CREATE TABLE qp_tgt (id INT, v STRING) USING parquet")
+    spark.sql("INSERT INTO qp_tgt VALUES (1, 'a'), (2, 'b')")
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW qp_src AS SELECT 2 AS id")
+    run_merge(spark, stmt)
+    got = sorted((r.id, r.v) for r in spark.table("qp_tgt").collect())
+    assert got == [(1, "a"), (2, lit.strip("'"))]
+    spark.sql("DROP TABLE qp_tgt")
+
+
+def test_equi_pairs_see_through_comments():
+    """A comment is not syntax: ``/* OR */`` between two equi conjuncts
+    leaves ON a flat equi-join."""
+    from bfs_etl_sep2025_spark.plans.merge import _equi_pairs
+
+    spec = parse_merge(
+        "MERGE INTO t USING s ON t.id = s.id /* OR */ AND t.k = s.k "
+        "WHEN MATCHED THEN DELETE"
+    )
+    assert _equi_pairs(spec) == ([("id", "id"), ("k", "k")], True)
 
 
 def _seed(spark, pipeline):
@@ -1372,8 +1406,9 @@ def test_pruned_merge_layouts_prune_and_read_back(spark, tmp_path, kind):
     """Every target layout takes the pruned swap: the untouched partition's
     files are the same entries afterwards, partition values needing
     escapes ('a/b', 'x=y') or none ('sp ace') land at the paths Spark
-    itself names, and the table, its catalog entries and a fresh read of
-    its directory all agree on the merged rows."""
+    itself names, no emptied partition directory is left behind, and the
+    table, its catalog entries and a fresh read of its directory all agree
+    on the merged rows."""
     import os
 
     h = kind == "two_cols"
@@ -1441,6 +1476,8 @@ def test_pruned_merge_layouts_prune_and_read_back(spark, tmp_path, kind):
         if any(f[0] not in "._" for f in files)
     }
     assert held == dirs  # no _rewrite-* leftovers, no emptied partition
+    # nor an emptied leaf's parent directory (``dt=sp ace/`` with no ``h=``)
+    assert [d for d, subs, files in os.walk(path) if not subs + files] == []
     if kind == "bucketed":
         assert spark.sql("DESCRIBE TABLE EXTENDED pm_lay").filter(
             "col_name = 'Num Buckets'"

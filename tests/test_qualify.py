@@ -159,7 +159,7 @@ def test_qualify_distinct_rejected():
 def test_dialect_substitution_skips_string_literals():
     """Keyword substitutions are quote-aware: a dialect spelling inside a
     string literal is data, not syntax (ADVICE r3)."""
-    from bfs_etl_sep2025_spark.plans.qualify import sub_unquoted
+    from bfs_etl_sep2025_spark.plans.sqlsplit import sub_unquoted
     from bfs_etl_sep2025_spark.plans.tasks import _IFF, _SYSDATE
 
     assert (

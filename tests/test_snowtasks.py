@@ -148,12 +148,45 @@ def test_task_pipeline_bridges_to_engine_cron(spark, vt_src):
         [
             "CREATE TASK t_p SCHEDULE = '15 MINUTE' AS "
             "CREATE OR REPLACE TABLE tk_p AS SELECT 41 + 1 AS answer",
+            "ALTER TASK t_p RESUME",
         ],
     )
     p = task_pipeline("t_p", start_date=date(2024, 3, 1))
     assert p.schedule.expr == "*/15 * * * *"
     p.run(spark, run_date=datetime(2024, 3, 1, 0, 15))
     assert spark.table("tk_p").collect()[0].answer == 42
+
+
+def test_scheduled_run_gates_on_resume_and_when(spark, vt_src):
+    """A scheduled run fires only resumed tasks whose WHEN holds: a
+    suspended child and a false-WHEN child keep their bodies unrun (the
+    false WHEN logged as a skip), and a suspended root fires nothing."""
+    for t in ("tk_s_root", "tk_s_off", "tk_s_no"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    _run_sql(
+        spark,
+        [
+            "CREATE TASK t_s SCHEDULE = '15 MINUTE' AS "
+            "CREATE OR REPLACE TABLE tk_s_root AS SELECT 1 AS x",
+            "CREATE TASK t_s_off AFTER t_s AS "
+            "CREATE OR REPLACE TABLE tk_s_off AS SELECT 2 AS x",
+            "CREATE TASK t_s_no AFTER t_s WHEN (1 = 0) AS "
+            "CREATE OR REPLACE TABLE tk_s_no AS SELECT 3 AS x",
+            "ALTER TASK t_s RESUME",
+            "ALTER TASK t_s_no RESUME",
+        ],
+    )
+    p = task_pipeline("t_s", start_date=date(2024, 3, 1))
+    p.run(spark, run_date=datetime(2024, 3, 1, 0, 15))
+    assert spark.table("tk_s_root").collect()[0].x == 1
+    assert not spark.catalog.tableExists("tk_s_off")
+    assert not spark.catalog.tableExists("tk_s_no")
+    assert task_def("t_s_off").runs == []
+    assert task_def("t_s_no").runs == [""]
+    _run_sql(spark, "ALTER TASK t_s SUSPEND")
+    p.run(spark, run_date=datetime(2024, 3, 1, 0, 30))
+    assert len(task_def("t_s").runs) == 1
+    assert task_def("t_s_no").runs == [""]
 
 
 def test_when_with_cast_as_inside_condition(spark, vt_src):
