@@ -29,15 +29,17 @@ Scale notes (100 TB):
 - Triangles / common neighbors are 2-hop equi-joins shuffling on node ids.
   The worst enemy is a hub node (degree d -> d^2 wedge rows): real
   deployments cap or sample hub adjacency; here degrees are bounded by the
-  bucket rule. Label-propagation connected components over the same edge
-  list are first-class (graph_connected_components, the
-  dedup_minhash_clusters fixpoint engine applied to the user graph).
+  bucket rule.
+- PageRank, connected components, k-core and BFS iterate on
+  ``_fixpoint.fixpoint``: one loop and one lineage cut, reliable when a
+  checkpoint directory is set, so a lost executor does not lose the state.
 - Everything emitted is integer (counts, degrees, node ids) — zero float
   parity surface.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import threading
 
@@ -45,6 +47,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bfs_etl_sep2025_spark.operators._barrier import barrier_filter
+from bfs_etl_sep2025_spark.operators._fixpoint import (
+    broadcasts,
+    fixpoint,
+    materialize,
+    min_label_components,
+    symmetric,
+)
 from bfs_etl_sep2025_spark.registry import query
 from bfs_etl_sep2025_spark.tables import load, widen
 
@@ -620,26 +629,6 @@ _PR_ITERS = 3
 _PR_SCALE = 1_000_000_000_000
 
 
-#: broadcast guard for per-node iteration state (rank vectors, CC labels):
-#: under this many nodes the (node, value) table broadcasts (~16 B/row ->
-#: <=80 MB framed at the cap, far inside Spark's 8 GB broadcast limit) and
-#: every fixpoint round becomes a BroadcastHashJoin over the big edge list
-#: with ZERO edge-side exchange + a map-side partial aggregate — r11
-#: measured 150 MB of symmetric-edge shuffle per round (|E|=12M at sf1)
-#: collapsing to KBs of aggregate partials. Past the guard the shuffle
-#: join is the only correct plan (billions of nodes cannot broadcast).
-_MAX_BROADCAST_NODES = 5_000_000
-
-#: ...AND the broadcast regime must also be WORTH it: each round pays a
-#: fixed broadcast build + checkpoint (~0.3-0.5 s on this box), which only
-#: repays when the per-round edge exchange it removes is large. Interleaved
-#: A/B (r11): at |2E| = 238k rows (sf0.1, ~2 MB/round) the shuffle join
-#: WINS (pagerank 1.7 vs 3.0 s, CC 2.7 vs 3.4 s); at |2E| = 24M rows
-#: (sf1, ~150 MB/round) broadcast wins 2.3-2.6x. Dispatch on the symmetric
-#: edge-row count, two orders of magnitude between the measured points.
-_MIN_BROADCAST_EDGE_ROWS = 2_000_000
-
-
 def _pr_iter_sql(prev: str) -> str:
     """One unrolled PageRank round over the symmetric edge list (DuckDB)."""
     return f"""
@@ -691,47 +680,32 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     r11 (guide §3.1/§2.3): the rank-plus-degree table is PER-NODE state
     (|V| rows) while the symmetric edge list is |2E| rows — at sf1 the old
     plan exchanged the 24M-row edge list (~150 MB) EVERY round to meet the
-    15k-row rank table. Under ``_MAX_BROADCAST_NODES`` the rank table now
-    broadcasts instead (checkpointed per round so each broadcast builds
-    from materialized rows, not the prior rounds' lineage), the edge scan
-    stays exchange-free, and the contribution sum partial-aggregates
-    map-side — per-round shuffle drops from ~150 MB to the KB-sized
-    aggregate partials (measured 11.5 s -> 4.4 s median, same-session
-    interleaved A/B at sf1). Past the guard (node count itself huge) the
-    original shuffle join is the only correct plan and is kept verbatim.
+    15k-row rank table. Under the two-leg guard (``_fixpoint.broadcasts``)
+    the rank table now broadcasts instead (``fixpoint`` materializes every
+    round, so each broadcast builds from materialized rows, not the prior
+    rounds' lineage), the edge scan stays exchange-free, and the
+    contribution sum partial-aggregates map-side — per-round shuffle drops
+    from ~150 MB to the KB-sized aggregate partials (measured 11.5 s ->
+    4.4 s median, same-session interleaved A/B at sf1). Below the edge leg
+    (small graphs) or past the node leg (billions of nodes) the shuffle
+    join is the plan.
     Cross-engine exactness: contributions are fixed-point BIGINTs
     (``_PR_SCALE``), so the per-node sums are order-independent and the
     closing ``0.15 + 0.85 * (sum / scale)`` is the same IEEE sequence both
     engines — ranks match hash-exactly, not approximately."""
     from pyspark.sql import Window as W
 
-    e = _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionAll(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    deg = deg.localCheckpoint(eager=True)  # referenced every round
-    # both guard legs: nodes must fit a broadcast AND the per-round edge
-    # exchange being removed must be big enough to repay the per-round
-    # broadcast+checkpoint fixed cost (see _MIN_BROADCAST_EDGE_ROWS);
-    # e is the memoized cached edge list, so the count is a cache scan
-    small = (
-        deg.count() <= _MAX_BROADCAST_NODES
-        and 2 * e.count() >= _MIN_BROADCAST_EDGE_ROWS
-    )
-    r = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("r"))
-    for _ in range(_PR_ITERS):
-        rd = r.join(deg.withColumnRenamed("src", "node"), "node")
-        rd = rd.withColumnRenamed("node", "src")
-        contrib = sym.join(
-            F.broadcast(rd) if small else rd, "src"
-        ).select(
-            "dst",
-            F.expr(
-                f"CAST(floor((r / d) * {_PR_SCALE}.0) AS BIGINT)"
-            ).alias("q"),
+    sym = symmetric(_edges(spark, sf_dir))
+    deg = materialize(sym.groupBy("s").agg(F.count(F.lit(1)).alias("deg")))
+    small = broadcasts(sym, deg)
+
+    def power_step(r: DataFrame) -> DataFrame:
+        rd = r.withColumnRenamed("node", "s").join(deg, "s")
+        q = F.expr(f"CAST(floor((r / deg) * {_PR_SCALE}.0) AS BIGINT)")
+        contrib = sym.join(F.broadcast(rd) if small else rd, "s").select(
+            "d", q.alias("q")
         )
-        r = contrib.groupBy("dst").agg(
+        return contrib.groupBy(F.col("d").alias("node")).agg(
             (
                 F.lit(0.15)
                 + F.lit(0.85)
@@ -740,11 +714,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.lit(float(_PR_SCALE))
                 )
             ).alias("r")
-        ).withColumnRenamed("dst", "node")
-        if small:
-            # truncate lineage so the next round's broadcast materializes
-            # |V| rows instead of re-deriving every earlier round
-            r = r.localCheckpoint(eager=True)
+        )
+
+    r = fixpoint(
+        deg.select(F.col("s").alias("node"), F.lit(1.0).alias("r")),
+        power_step,
+        _PR_ITERS,
+    )
     w = W.orderBy(F.col("r").desc(), F.col("node"))
     return (
         r.select(
@@ -783,79 +759,17 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     by its component's minimum user_id — the grouping primitive behind
     transitive dedup, community rollups, and fraud-ring detection.
 
-    Spark has no recursive CTE, so this is the iterative min-label
-    propagation loop (the ``dedup_minhash_clusters`` fixpoint engine,
-    ``operators/dedup.py``, applied to the user graph): per round one
-    equi-join of the fixed symmetric edge frontier against the current
-    labels + a min-aggregate, lineage truncated per round, iterations
-    bounded by component diameter. The oracle computes the same fixpoint
-    as DuckDB's WITH RECURSIVE transitive closure — two unrelated
-    fixpoint engines agreeing on every component. Labels are integers
-    throughout: nothing floating anywhere, so agreement is exact.
-
-    r9: the symmetric list needs NO distinct — ``_edges`` emits unique
-    (u, v) pairs with u < v, so the (u→v) and (v→u) union branches are
-    disjoint by construction and the old ``.distinct()`` was a full
-    2|E|-row shuffle for nothing (2.5 s of cc's ~10 s at sf1).
-    Convergence is now detected by the label-sum invariant: every round
-    takes elementwise ``least``, so sum(label) is monotonically
-    non-increasing and strictly decreases iff any label changed — one
-    map-side aggregate over the checkpointed labels instead of a
-    new-vs-old join per round (DECIMAL(38) accumulator: ids are bounded
-    by the 100k-user bitmap guard but sums of arbitrary bigint ids must
-    not overflow)."""
-    e = _edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .unionByName(e.select(F.col("v").alias("s"), F.col("u").alias("d")))
-        .localCheckpoint()
-    )
-    labels = sym.select("s").distinct().select(
-        F.col("s").alias("node"), F.col("s").alias("label")
-    ).localCheckpoint(eager=True)
-    # r11 (guide §3.1/§2.3, the graph_pagerank rewrite applied to the CC
-    # fixpoint): labels are per-node state while sym is |2E| rows — under
-    # the node-count guard broadcast the label table each round so the
-    # checkpointed edge list is never exchanged and the min-label
-    # aggregate partial-aggregates map-side; past the guard keep the
-    # shuffle join. Second guard leg as in graph_pagerank: broadcast only
-    # when the per-round edge exchange is large enough to repay the
-    # per-round broadcast build (measured losing at sf0.1's 238k rows).
-    small = (
-        labels.count() <= _MAX_BROADCAST_NODES
-        and 2 * e.count() >= _MIN_BROADCAST_EDGE_ROWS
-    )
-    label_sum = None
-    for _ in range(20):  # diameter bound; co-occurrence comps are shallow
-        lbl = F.broadcast(labels) if small else labels
-        nbr = (
-            sym.join(lbl, sym.d == lbl.node)
-            .groupBy("s")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr, labels.node == nbr.s, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nbr_label"), F.col("label")),
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        new_sum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        labels = new_labels
-        if new_sum == label_sum:
-            break
-        label_sum = new_sum
-    else:
-        raise RuntimeError(
-            "label propagation did not converge in 20 rounds — component "
-            "diameter exceeds the bound; raise the round cap"
-        )
+    Spark has no recursive CTE, so this is min-label propagation
+    (``_fixpoint.min_label_components``, the engine
+    ``dedup_minhash_clusters`` also runs): per round one equi-join of the
+    fixed symmetric edge list against the current labels + a
+    min-aggregate, lineage cut per round, convergence detected by the
+    label-sum probe, iterations bounded by component diameter. The oracle
+    computes the same fixpoint as DuckDB's WITH RECURSIVE transitive
+    closure — two unrelated fixpoint engines agreeing on every component.
+    Labels are integers throughout: nothing floating anywhere, so
+    agreement is exact."""
+    labels = min_label_components(_edges(spark, sf_dir))
     return labels.select(
         F.col("node").alias("user_id"),
         F.col("label").cast("bigint").alias("component"),
@@ -1276,7 +1190,7 @@ def _kcore_round_sql(prev: str) -> str:
 #: each round references the previous one TWICE (both join sides), so an
 #: inlined CTE chain doubles the plan per round — 2^12 base scans blew
 #: DuckDB's file-handle budget. AS MATERIALIZED pins each round to one
-#: evaluation (exactly what the Spark loop's localCheckpoint does).
+#: evaluation (exactly what the Spark loop's per-round materialize does).
 _KCORE_CHAIN = ",\n".join(
     f"r{i} AS MATERIALIZED ({_kcore_round_sql(f'r{i - 1}')})"
     for i in range(1, _KCORE_ROUNDS + 1)
@@ -1311,52 +1225,37 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard dense-community extractor (peeling, Matula & Beck 1983;
     public algorithm), emitted as (user_id, degree-within-core).
 
-    Third fixpoint engine in the family (PageRank: unrolled power
-    iteration; connected components: min-label propagation; here: monotone
-    set shrinking). Each round is one equi-join of the symmetric edge list
-    against the current alive set plus a count aggregate — shuffles only
-    (node, neighbor) ids, lineage truncated per round via localCheckpoint,
-    convergence detected by the alive count (the set only shrinks, so
-    equal counts == fixpoint). The oracle unrolls {_KCORE_ROUNDS} rounds,
-    which is exact for any run the Spark guard admits because peeling is
-    idempotent at the fixpoint — two different termination rules, same
-    set. Everything is integers; agreement is exact."""
-    e = _edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .unionAll(e.select(F.col("v").alias("s"), F.col("u").alias("d")))
-        .localCheckpoint()
-    )
-    alive = sym.select(F.col("s").alias("node")).distinct().localCheckpoint()
-    n_alive = alive.count()
-    for _ in range(_KCORE_ROUNDS):
-        nxt = (
+    Monotone set shrinking on the shared ``_fixpoint.fixpoint`` loop. Each
+    round is one equi-join of the symmetric edge list against the current
+    alive set plus a count aggregate — shuffles only (node, neighbor) ids,
+    lineage cut per round, convergence detected by the alive count (the
+    set only shrinks, so equal counts == fixpoint). The oracle unrolls
+    {_KCORE_ROUNDS} rounds, which is exact for any run the Spark guard
+    admits because peeling is idempotent at the fixpoint — two different
+    termination rules, same set. Everything is integers; agreement is
+    exact."""
+    sym = symmetric(_edges(spark, sf_dir))
+
+    def core_degree(alive: DataFrame) -> DataFrame:
+        """(s, core_degree): each alive node's alive-neighbor count."""
+        return (
             sym.join(alive.withColumnRenamed("node", "s"), "s")
-            .join(
-                alive.select(F.col("node").alias("d")),
-                "d",
-            )
+            .join(alive.select(F.col("node").alias("d")), "d")
             .groupBy("s")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= _KCORE_K)
-            .select(F.col("s").alias("node"))
-            .localCheckpoint()
+            .agg(F.count(F.lit(1)).alias("core_degree"))
         )
-        n_next = nxt.count()
-        if n_next == n_alive:
-            break
-        alive, n_alive = nxt, n_next
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not converge in {_KCORE_ROUNDS} rounds — "
-            "raise _KCORE_ROUNDS (and regenerate the oracle chain) for "
-            "this graph's diameter"
-        )
+
+    alive = fixpoint(
+        materialize(sym.select(F.col("s").alias("node")).distinct()),
+        lambda alive: core_degree(alive)
+        .filter(F.col("core_degree") >= _KCORE_K)
+        .select(F.col("s").alias("node")),
+        _KCORE_ROUNDS,
+        DataFrame.count,
+        "k-core peeling",
+    )
     return (
-        sym.join(alive.withColumnRenamed("node", "s"), "s")
-        .join(alive.select(F.col("node").alias("d")), "d")
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+        core_degree(alive)
         .select(F.col("s").alias("user_id"), "core_degree")
         .orderBy("user_id")
     )
@@ -1402,26 +1301,22 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     user from the influencer core" primitive behind influence radius,
     notification fan-out tiers, and landmark-based distance sketches.
 
-    Fourth fixpoint engine in the family (PageRank: power iteration;
-    components: min-label; k-core: monotone shrink; here: FRONTIER
-    EXPANSION). The frontier formulation is the scale-correct BFS: each
-    round joins only the NEWLY settled nodes (not the whole distance
-    table) against the symmetric edge list, left-anti-joins out already
-    settled nodes, and unions one (node, k) layer — every edge is relaxed
-    at most once per endpoint settle, so total shuffle across all rounds
-    is O(E + V) ids, not O(rounds * E). Lineage truncated per round via
-    localCheckpoint; early exit on an empty frontier. The oracle's
-    recursive CTE does the same expansion with UNION dedup and the same
-    {_BFS_MAX}-hop guard, so nodes farther than the cap (or unreachable)
-    are absent from BOTH engines. Integers everywhere; agreement exact."""
+    FRONTIER EXPANSION on the shared ``_fixpoint.fixpoint`` loop. The
+    frontier formulation is the scale-correct BFS: each round joins only
+    the NEWLY settled nodes (the last layer, not the whole distance table)
+    against the symmetric edge list, left-anti-joins out already settled
+    nodes, and unions one (node, k) layer — every edge is relaxed at most
+    once per endpoint settle, so total shuffle across all rounds is
+    O(E + V) ids, not O(rounds * E). Lineage cut per round; early exit
+    when a round settles nothing (the settled count stops growing). The
+    hop cap is query semantics, so reaching it returns, never raises. The
+    oracle's recursive CTE does the same expansion with UNION dedup and
+    the same {_BFS_MAX}-hop guard, so nodes farther than the cap (or
+    unreachable) are absent from BOTH engines. Integers everywhere;
+    agreement exact."""
     from pyspark.sql import Window as W
 
-    e = _edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .unionAll(e.select(F.col("v").alias("s"), F.col("u").alias("d")))
-        .localCheckpoint()
-    )
+    sym = symmetric(_edges(spark, sf_dir))
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("dg"))
     seeds = (
         deg.withColumn(
@@ -1431,26 +1326,26 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .filter(F.col("rn") <= _BFS_SEEDS)
-        .select(F.col("s").alias("node"))
+        .select(
+            F.col("s").alias("node"), F.lit(0).cast("bigint").alias("dist")
+        )
     )
-    settled = seeds.select(
-        "node", F.lit(0).cast("bigint").alias("dist")
-    ).localCheckpoint()
-    frontier = settled.select("node")
-    for k in range(1, _BFS_MAX + 1):
-        nxt = (
-            sym.join(frontier.withColumnRenamed("node", "s"), "s")
+    hops = itertools.count(1)
+
+    def expand(settled: DataFrame) -> DataFrame:
+        k = next(hops)
+        frontier = settled.filter(F.col("dist") == k - 1)
+        reached = (
+            sym.join(frontier.select(F.col("node").alias("s")), "s")
             .select(F.col("d").alias("node"))
             .distinct()
             .join(settled.select("node"), "node", "left_anti")
-            .localCheckpoint()
         )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(
-            nxt.select("node", F.lit(k).cast("bigint").alias("dist"))
-        ).localCheckpoint()
-        frontier = nxt
+        return settled.unionByName(
+            reached.select("node", F.lit(k).cast("bigint").alias("dist"))
+        )
+
+    settled = fixpoint(materialize(seeds), expand, _BFS_MAX, DataFrame.count)
     return settled.select(
         F.col("node").alias("user_id"), "dist"
     ).orderBy("user_id")

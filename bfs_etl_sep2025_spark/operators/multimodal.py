@@ -711,71 +711,24 @@ _DCT_COS = tuple(
 _DCT_C = (1 / _math.sqrt(2),) + (1.0,) * 7
 
 
-def _round_half_away(x: float) -> int:
-    """Deterministic round-half-away-from-zero (Python's round() is
-    banker's; the codec must round identically on every platform)."""
-    return int(_math.floor(x + 0.5)) if x >= 0 else -int(_math.floor(-x + 0.5))
-
-
-def _fdct8x8(block: list[int]) -> list[float]:
-    """2D forward DCT (T.81 A.3.3), separable row/column passes."""
-    tmp = [0.0] * 64
-    for r in range(8):  # rows: spatial -> frequency (u)
-        row = block[r * 8 : r * 8 + 8]
-        for u in range(8):
-            tmp[r * 8 + u] = (
-                _DCT_C[u]
-                / 2
-                * sum(row[x] * _DCT_COS[u][x] for x in range(8))
-            )
-    out = [0.0] * 64
-    for u in range(8):  # columns
-        for v in range(8):
-            out[v * 8 + u] = (
-                _DCT_C[v]
-                / 2
-                * sum(tmp[y * 8 + u] * _DCT_COS[v][y] for y in range(8))
-            )
-    return out
-
-
-def _idct8x8(coef: list[float]) -> list[float]:
-    """2D inverse DCT (T.81 A.3.3), separable."""
-    tmp = [0.0] * 64
-    for u in range(8):  # columns: frequency (v) -> spatial (y)
-        for y in range(8):
-            tmp[y * 8 + u] = sum(
-                _DCT_C[v] / 2 * coef[v * 8 + u] * _DCT_COS[v][y]
-                for v in range(8)
-            )
-    out = [0.0] * 64
-    for y in range(8):  # rows
-        for x in range(8):
-            out[y * 8 + x] = sum(
-                _DCT_C[u] / 2 * tmp[y * 8 + u] * _DCT_COS[u][x]
-                for u in range(8)
-            )
-    return out
-
-
-# -- batched DCT twins (r11) -------------------------------------------------
+# -- batched DCTs (r11) ------------------------------------------------------
 #
-# The scalar DCTs above are the REFERENCE semantics; profiling showed they
-# were ~80% of every codec query's wall time (the entropy coders are cheap
-# on these rasters). The numpy twins below vectorize over the BLOCK axis
-# while replaying the scalar versions' exact IEEE-754 operation order per
-# element — every inner 8-term sum is an explicit left-to-right fold, every
-# product keeps the scalar parenthesization ((C/2)*coef)*cos — so the
-# outputs are BIT-IDENTICAL to the scalar functions (pinned by
-# tests/test_codecs.py::test_batched_dct_bit_identical), and the oracles'
+# Per-block scalar DCTs were ~80% of every codec query's wall time (the
+# entropy coders are cheap on these rasters). The numpy DCTs below
+# vectorize over the BLOCK axis while replaying the scalar T.81 A.3.3
+# definition's exact IEEE-754 operation order per element — every inner
+# 8-term sum is an explicit left-to-right fold, every product keeps the
+# scalar parenthesization ((C/2)*coef)*cos — so the outputs are
+# BIT-IDENTICAL to the scalar reference kept in
+# tests/test_codecs.py::test_batched_dct_bit_identical, and the oracles'
 # pixel digests are untouched. numpy's own dot/einsum reductions are NOT
 # usable here: their pairwise/SIMD summation reorders the adds, which can
-# flip a _round_half_away at an exact .5 boundary.
+# flip a round-half-away at an exact .5 boundary.
 
 
 def _fdct_blocks(blocks):
-    """Batched bit-exact twin of :func:`_fdct8x8`: (N, 8, 8) float64
-    spatial blocks -> (N, 8, 8) coefficients indexed [n, v, u]."""
+    """2D forward DCT (T.81 A.3.3, separable row/column passes), batched:
+    (N, 8, 8) float64 spatial blocks -> (N, 8, 8) coefficients [n, v, u]."""
     import numpy as np
 
     n = blocks.shape[0]
@@ -795,7 +748,7 @@ def _fdct_blocks(blocks):
 
 
 def _idct_blocks(coefs):
-    """Batched bit-exact twin of :func:`_idct8x8`: (N, 8, 8) float64
+    """2D inverse DCT (T.81 A.3.3, separable), batched: (N, 8, 8) float64
     coefficients indexed [n, v, u] -> (N, 8, 8) spatial [n, y, x]."""
     import numpy as np
 
@@ -818,7 +771,8 @@ def _idct_blocks(coefs):
 
 
 def _round_half_away_arr(x):
-    """Vectorized :func:`_round_half_away` (same floor arithmetic)."""
+    """Deterministic round-half-away-from-zero (numpy's rint is banker's;
+    the codec must round identically on every platform)."""
     import numpy as np
 
     return np.where(
@@ -829,8 +783,8 @@ def _round_half_away_arr(x):
 def _pixels_to_quantized_zz(pixels: bytes, width: int, height: int, quant):
     """Shared encoder front half: raster bytes -> per-block zigzag-ordered
     quantized coefficient lists (ints), blocks in raster (by, bx) order.
-    Bit-identical to the scalar extract -> _fdct8x8 -> _round_half_away ->
-    zigzag pipeline it replaces."""
+    Bit-identical to a per-block extract -> scalar DCT -> round -> zigzag
+    pipeline."""
     import numpy as np
 
     arr = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
@@ -847,8 +801,8 @@ def _pixels_to_quantized_zz(pixels: bytes, width: int, height: int, quant):
 
 def _zz_to_raster(coefs, quant, w: int, h: int) -> bytes:
     """Shared decoder back half: per-block zigzag coefficient lists (raster
-    block order) -> reconstructed raster bytes. Bit-identical to the scalar
-    dequantize -> _idct8x8 -> _round_half_away -> clamp pipeline."""
+    block order) -> reconstructed raster bytes. Bit-identical to a
+    per-block dequantize -> scalar IDCT -> round -> clamp pipeline."""
     import numpy as np
 
     zz = np.asarray(coefs, dtype=np.int64)  # (N, 64), zigzag order
@@ -928,8 +882,8 @@ def encode_jpeg_baseline(
     pred = 0
     n_blocks = (height // 8) * (width // 8)
     mcu = 0
-    # batched front half (bit-identical to per-block _fdct8x8 — see the
-    # batched-DCT twins); only entropy coding remains per-block Python
+    # batched front half (see the batched DCTs); only entropy coding
+    # remains per-block Python
     zz_blocks = _pixels_to_quantized_zz(pixels, width, height, quant)
     for by in range(height // 8):
         for bx in range(width // 8):
@@ -1156,8 +1110,7 @@ def decode_jpeg_baseline(payload: bytes) -> tuple[int, int, bytes]:
                 zz[k] = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
                 k += 1
             zz_blocks.append(zz)
-    # batched back half (bit-identical to per-block _idct8x8 — see the
-    # batched-DCT twins)
+    # batched back half (see the batched DCTs)
     return w, h, _zz_to_raster(zz_blocks, quant, w, h)
 
 
@@ -1196,8 +1149,7 @@ def encode_jpeg_progressive(
         )
     if len(pixels) != width * height:
         raise ValueError(f"need {width * height} bytes, got {len(pixels)}")
-    # batched front half (bit-identical to per-block _fdct8x8 — see the
-    # batched-DCT twins)
+    # batched front half (see the batched DCTs)
     blocks: list[list[int]] = _pixels_to_quantized_zz(
         pixels, width, height, quant
     )
@@ -1214,7 +1166,7 @@ def encode_jpeg_progressive_batch(
     profile at 32x32, r11 — and a WHOLE-batch pass thrashes DRAM under a
     32-worker pool; see the constant). Stacking the rasters is exact: blocks come
     out in raster (by, bx) order, so the tall stack's block list is each
-    asset's block list concatenated in order, and the DCT twins are
+    asset's block list concatenated in order, and the batched DCTs are
     elementwise over the block axis (bit-identical at any N)."""
     if not rasters:
         return []
@@ -1492,8 +1444,8 @@ def decode_jpeg_progressive(payload: bytes) -> tuple[int, int, bytes]:
     on sequential input (route through :func:`decode_jpeg`), restart
     intervals, or a scan referencing an undeclared table."""
     w, h, coefs, quant = _decode_jpeg_progressive_coefs(payload)
-    # batched back half (bit-identical to per-block _idct8x8 — see the
-    # batched-DCT twins); `coefs` is already in raster block order
+    # batched back half (see the batched DCTs); `coefs` is already in
+    # raster block order
     return w, h, _zz_to_raster(coefs, quant, w, h)
 
 

@@ -57,7 +57,11 @@ import re
 
 from pyspark.sql import SparkSession
 
-from bfs_etl_sep2025_spark.plans.sqlsplit import sub_unquoted
+from bfs_etl_sep2025_spark.plans.sqlsplit import (
+    match_close,
+    split_top_level,
+    sub_unquoted,
+)
 
 #: policy name (lowercased) -> {"arg": str, "body": str}
 _POLICIES: dict[str, dict] = {}
@@ -72,15 +76,15 @@ _ROLE: str = "PUBLIC"
 #: one live masked view per table (previous read's view is replaced)
 _LIVE_VIEWS: dict[str, str] = {}
 
+#: policy head up to ``AS (``; the arguments run to their balanced close, so
+#: types such as ``DECIMAL(10,2)`` parse, and ``_POLICY_TAIL`` reads the rest
 CREATE_POLICY = re.compile(
-    r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?MASKING\s+POLICY\s+"
-    r"(?P<name>[\w.`\"]+)\s+AS\s*\(\s*(?P<arg>\w+)\s+(?P<atype>\w+)\s*\)\s*"
-    r"RETURNS\s+\w+\s*->\s*(?P<body>.+?)\s*$"
+    r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?"
+    r"(?P<kind>MASKING|ROW\s+ACCESS)\s+POLICY\s+(?P<name>[\w.`\"]+)\s+AS\s*\("
 )
-CREATE_ROW_POLICY = re.compile(
-    r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?ROW\s+ACCESS\s+POLICY\s+"
-    r"(?P<name>[\w.`\"]+)\s+AS\s*\((?P<args>[^)]+)\)\s*"
-    r"RETURNS\s+BOOLEAN\s*->\s*(?P<body>.+?)\s*$"
+_POLICY_TAIL = re.compile(
+    r"(?is)\s*RETURNS\s+(?P<rtype>\w+)(?:\s*\([\d\s,]*\))?\s*->\s*"
+    r"(?P<body>.+?)\s*$"
 )
 DROP_ROW_POLICY = re.compile(
     r"(?is)^\s*DROP\s+ROW\s+ACCESS\s+POLICY\s+(?:IF\s+EXISTS\s+)?"
@@ -117,15 +121,35 @@ def _norm(name: str) -> str:
     return name.strip('`"').lower()
 
 
+def _parse_create_policy(stmt: str):
+    """``(kind, name, arg names, body)`` of a CREATE MASKING POLICY with
+    one argument or a CREATE ROW ACCESS POLICY returning BOOLEAN; None for
+    any other statement."""
+    m = CREATE_POLICY.match(stmt)
+    close = m and match_close(stmt, m.end() - 1)
+    tail = close and _POLICY_TAIL.match(stmt, close)
+    if not tail:
+        return None
+    kind = m.group("kind").split()[0].upper()
+    args = [a.split()[0] for a in split_top_level(stmt[m.end() : close - 1])]
+    if kind == "MASKING" and len(args) != 1:
+        return None
+    if kind == "ROW" and tail.group("rtype").upper() != "BOOLEAN":
+        return None
+    body = tail.group("body").rstrip("; \n")
+    return kind, _norm(m.group("name")), args, body
+
+
 def handle_statement(spark: SparkSession, stmt: str, task_id: str) -> bool:
     """Consume masking DDL / USE ROLE. True = statement fully handled."""
     global _ROLE
-    m = CREATE_POLICY.match(stmt)
-    if m:
-        _POLICIES[_norm(m.group("name"))] = {
-            "arg": m.group("arg"),
-            "body": m.group("body").rstrip("; \n"),
-        }
+    policy = _parse_create_policy(stmt)
+    if policy is not None:
+        kind, name, args, body = policy
+        if kind == "MASKING":
+            _POLICIES[name] = {"arg": args[0], "body": body}
+        else:
+            _ROW_POLICIES[name] = {"args": args, "body": body}
         return True
     m = DROP_POLICY.match(stmt)
     if m:
@@ -160,16 +184,6 @@ def handle_statement(spark: SparkSession, stmt: str, task_id: str) -> bool:
         _BINDINGS.get(t, {}).pop(_norm(m.group("col")), None)
         if not _BINDINGS.get(t):
             _BINDINGS.pop(t, None)
-        return True
-    m = CREATE_ROW_POLICY.match(stmt)
-    if m:
-        args = [
-            a.strip().split()[0] for a in m.group("args").split(",")
-        ]
-        _ROW_POLICIES[_norm(m.group("name"))] = {
-            "args": args,
-            "body": m.group("body").rstrip("; \n"),
-        }
         return True
     m = DROP_ROW_POLICY.match(stmt)
     if m:

@@ -380,6 +380,7 @@ def _resolve_time_travel(
         resolve_versioned_table,
     )
 
+    name = re.sub(r'[`"]', "", name)  # identifier quotes
     vt = resolve_versioned_table(spark, name)
     if vt is None or not vt.exists():
         raise ValueError(
@@ -738,7 +739,10 @@ class SqlTask(Task):
             code = unquoted_positions(text)
             hit = None
             for cand in _TT_HEAD.finditer(text):
-                if cand.start() not in code or cand.start("kind") not in code:
+                head = cand.start()  # a quoted name opens on a non-code quote
+                if cand.start("kind") not in code or (
+                    head not in code and text[head] not in '`"'
+                ):
                     continue
                 close = match_close(text, cand.end() - 1)
                 if close is None:
@@ -754,7 +758,7 @@ class SqlTask(Task):
             view = _resolve_time_travel(
                 ctx.spark,
                 self.task_id,
-                cand.group("name").strip('`"'),
+                cand.group("name"),
                 cand.group("kind").upper(),
                 inner.group("key").upper(),
                 inner.group("val"),

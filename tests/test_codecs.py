@@ -641,20 +641,58 @@ def test_jpeg_progressive_rejects_malformed():
 
 
 def test_batched_dct_bit_identical():
-    """The r11 numpy-batched DCT twins must be BIT-identical to the scalar
-    reference implementations on arbitrary block content — they replay the
-    same IEEE-754 operation order per element, so equality is ==, not
-    allclose. Non-constant random-ish blocks exercise every basis term."""
+    """The r11 numpy-batched DCTs must be BIT-identical to the scalar
+    reference implementations below (T.81 A.3.3, separable) on arbitrary
+    block content — they replay the same IEEE-754 operation order per
+    element, so equality is ==, not allclose. Non-constant random-ish
+    blocks exercise every basis term."""
     import hashlib
 
     import numpy as np
 
     from bfs_etl_sep2025_spark.operators.multimodal import (
-        _fdct8x8,
+        _DCT_C,
+        _DCT_COS,
         _fdct_blocks,
-        _idct8x8,
         _idct_blocks,
     )
+
+    def _fdct8x8(block):
+        tmp = [0.0] * 64
+        for r in range(8):  # rows: spatial -> frequency (u)
+            row = block[r * 8 : r * 8 + 8]
+            for u in range(8):
+                tmp[r * 8 + u] = (
+                    _DCT_C[u]
+                    / 2
+                    * sum(row[x] * _DCT_COS[u][x] for x in range(8))
+                )
+        out = [0.0] * 64
+        for u in range(8):  # columns
+            for v in range(8):
+                out[v * 8 + u] = (
+                    _DCT_C[v]
+                    / 2
+                    * sum(tmp[y * 8 + u] * _DCT_COS[v][y] for y in range(8))
+                )
+        return out
+
+    def _idct8x8(coef):
+        tmp = [0.0] * 64
+        for u in range(8):  # columns: frequency (v) -> spatial (y)
+            for y in range(8):
+                tmp[y * 8 + u] = sum(
+                    _DCT_C[v] / 2 * coef[v * 8 + u] * _DCT_COS[v][y]
+                    for v in range(8)
+                )
+        out = [0.0] * 64
+        for y in range(8):  # rows
+            for x in range(8):
+                out[y * 8 + x] = sum(
+                    _DCT_C[u] / 2 * tmp[y * 8 + u] * _DCT_COS[u][x]
+                    for u in range(8)
+                )
+        return out
 
     raw = b"".join(
         hashlib.sha256(i.to_bytes(4, "big")).digest() for i in range(32)

@@ -9,7 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bfs_etl_sep2025_spark.operators import graph
+from bfs_etl_sep2025_spark import registry
+from bfs_etl_sep2025_spark.operators import _fixpoint, graph
 from bfs_etl_sep2025_spark.operators._barrier import (
     PLAN_ASSERT_CONF,
     assert_no_join_pushdown,
@@ -57,6 +58,27 @@ def test_allpairs_join_condition_carries_no_popcount(spark):
     assert join_lines, "expected a broadcast all-pairs join in the plan"
     for line in join_lines:
         assert "bit_count" not in line, "popcount pushed into join condition"
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["graph_pagerank", "graph_connected_components", "dedup_minhash_clusters"],
+)
+def test_fixpoint_broadcast_regime_matches_shuffle(spark, monkeypatch, name):
+    """No fixture is big enough to pass the broadcast guard's edge-row leg
+    (2M symmetric rows), so the sf0.01 graphs run the shuffle join. With
+    the leg forced to 0 the per-node state is broadcast every round (the
+    spy sees it: the graph memo is already built, so every broadcast in
+    the second run is the fixpoint's), and the rows must be identical."""
+    fn = registry.all_specs()[name].fn
+    want = [tuple(r) for r in fn(spark, SF).collect()]
+    hints = []
+    real = F.broadcast
+    monkeypatch.setattr(F, "broadcast", lambda df: hints.append(df) or real(df))
+    monkeypatch.setattr(_fixpoint, "_MIN_BROADCAST_EDGE_ROWS", 0)
+    got = [tuple(r) for r in fn(spark, SF).collect()]
+    assert hints, "the forced regime did not broadcast"
+    assert got == want and len(want) > 0
 
 
 def test_triangle_wedge_fallback_matches_bitmap(spark, monkeypatch):

@@ -221,3 +221,21 @@ def test_policy_body_literals_survive_substitution(spark, users):
         (1, "a@x.com", "free"),
         (2, "b@y.org", "pro"),
     ]
+
+
+def test_parenthesized_argument_types(spark, users):
+    """Policy signatures with parenthesized types (``VARCHAR(20)``,
+    ``DECIMAL(10,2)``) are parsed and applied, not passed to Spark."""
+    _run_sql(
+        spark,
+        [
+            "CREATE MASKING POLICY short_mask AS (v VARCHAR(20)) "
+            "RETURNS VARCHAR(20) -> CONCAT(LEFT(v, 1), '***')",
+            "CREATE ROW ACCESS POLICY low_id AS (k DECIMAL(10,2)) "
+            "RETURNS BOOLEAN -> k < 1.5",
+            f"ALTER TABLE {users} MODIFY COLUMN email "
+            "SET MASKING POLICY short_mask",
+            f"ALTER TABLE {users} ADD ROW ACCESS POLICY low_id ON (id)",
+        ],
+    )
+    assert _emails(spark, users) == [(1, "a***", "free")]

@@ -71,6 +71,19 @@ def test_at_version_reads_snapshot(spark, tt_table):
     assert _ids(spark, "tt_v1") == [1, 2]
 
 
+@pytest.mark.parametrize("name", ["tt_orders", "`tt_orders`", '"tt_orders"'])
+def test_quoted_name_reads_snapshot(spark, tt_table, name):
+    """A backquoted or double-quoted table name is time-travelled like a
+    bare one: its opening quote is not a code position, but the AT keyword
+    is, and the resolver strips the identifier quotes."""
+    _run_sql(
+        spark,
+        "CREATE OR REPLACE TEMPORARY VIEW tt_q AS "
+        f"SELECT * FROM {name} AT(VERSION => 1)",
+    )
+    assert _ids(spark, "tt_q") == [1, 2]
+
+
 def test_at_statement_is_commit_version(spark, tt_table):
     _run_sql(
         spark,
