@@ -597,7 +597,7 @@ def table_meta(spark, name: str) -> TableMeta:
     )
 
 
-def _store_cast(schema) -> str:
+def _store_cast(schema) -> list[str]:
     """The table-insert contract for a path write: each column CAST to its
     declared type, and CHAR/VARCHAR values length-checked as ``INSERT``
     checks them (trailing spaces past the limit are trimmed, CHAR is
@@ -621,7 +621,7 @@ def _store_cast(schema) -> str:
                 f"ELSE {fit} END"
             )
         out.append(f"{e} AS {c}")
-    return ", ".join(out)
+    return out
 
 
 def _forget_partitions(spark, name: str) -> None:
@@ -640,13 +640,22 @@ def _forget_partitions(spark, name: str) -> None:
     cat.dropPartitions(ident, specs, True, False, True)
 
 
-def _write(spark, meta: TableMeta, select: str, path: str) -> None:
-    """Write ``select`` under ``path`` in the table's layout: by column
-    name, cast as :func:`_store_cast` casts, partitioned and bucketed like
-    the table. A path write cannot bucket, so bucketed files go through a
-    throwaway external table over ``path``, dropped at once."""
+def table_fs(spark, meta: TableMeta):
+    """The table location as a Hadoop ``Path``, and its ``FileSystem``."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(meta.location)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return root, root.getFileSystem(conf)
+
+
+def _write(spark, meta: TableMeta, select, path: str) -> None:
+    """Write ``select`` (SQL text or a DataFrame) under ``path`` in the
+    table's layout: by column name, cast as :func:`_store_cast` casts,
+    partitioned and bucketed like the table. A path write cannot bucket, so
+    bucketed files go through a throwaway external table over ``path``,
+    dropped at once."""
+    src = spark.sql(select) if isinstance(select, str) else select
     w = (
-        spark.sql(f"SELECT {_store_cast(meta.schema)} FROM ({select})")
+        src.selectExpr(*_store_cast(meta.schema))
         .write.format(meta.provider)
         .options(**meta.options)
         .partitionBy(*meta.pcols)
@@ -693,8 +702,7 @@ def swap_snapshot(spark, meta: TableMeta, select: str, partitions=None) -> None:
     if meta.provider.lower() == "hive":
         raise ValueError(f"{meta.name}: Hive-format tables cannot be rewritten")
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    old = Path(meta.location)
-    fs = old.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    old, fs = table_fs(spark, meta)
     tag = uuid.uuid4().hex[:12]
     beside = meta.managed and partitions is None
     if beside:

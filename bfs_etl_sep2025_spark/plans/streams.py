@@ -48,24 +48,36 @@ Documented divergences (ADVICE r8):
   mechanics; gate tasks re-translate per run, so the supported
   WHEN-gated incremental pattern is unaffected).
 
+Offsets are durable: each stream is a commit log
+(``plans/commitlog.py``) at ``<table root>/_streams/<name>/`` whose head
+entry is ``{offset, append_only}``. CREATE [OR REPLACE] and every advance
+append an entry, and DROP removes the directory. A new session that has
+run ``register_versioned_table`` finds the stream by name under the
+table's root; a name found under two registered tables raises.
+
 Scale notes: a stream read IS ``VersionedTable.changes`` — per commit it
 scans only the data dirs that commit added/removed (file-level diff), so
 consuming a stream on a 100 TB table costs the changed files, never the
-table. The registry is session-level, like ``register_versioned_table``.
+table.
 """
 
 from __future__ import annotations
 
-import hashlib
+import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bfs_etl_sep2025_spark.plans.versioned import resolve_versioned_table
+from bfs_etl_sep2025_spark.plans.commitlog import CommitLog, ConcurrentWriteError
+from bfs_etl_sep2025_spark.plans.versioned import (
+    _SQL_REGISTRY,
+    VersionedTable,
+    resolve_versioned_table,
+)
 
-#: stream name (lowercased) -> {"table": sql name, "offset": int,
-#: "append_only": bool}
-_STREAMS: dict[str, dict] = {}
+#: stream name (lowercased) -> the temp view of this session's last read
+_STREAMS: dict[str, str] = {}
 
 
 CREATE_STREAM = re.compile(
@@ -83,6 +95,35 @@ def _norm(name: str) -> str:
     return name.strip('`"').lower()
 
 
+def _logs() -> dict[str, dict[str, CommitLog]]:
+    """Stream name -> {table root: offset log}, over the registered tables."""
+    out: dict[str, dict[str, CommitLog]] = {}
+    for root in set(_SQL_REGISTRY.values()):
+        base = os.path.join(root, "_streams")
+        for name in os.listdir(base) if os.path.isdir(base) else ():
+            if (log := CommitLog(os.path.join(base, name))).head():
+                out.setdefault(name, {})[root] = log
+    return out
+
+
+def _find(name: str) -> tuple[str, CommitLog] | None:
+    """(table root, offset log) of stream ``name``, or None."""
+    hits = _logs().get(_norm(name), {})
+    if len(hits) > 1:
+        raise ValueError(f"stream {name!r} exists under more than one "
+                         f"registered table: {sorted(hits)}")
+    return next(iter(hits.items()), None)
+
+
+def _state(name: str) -> tuple[str, CommitLog, int, dict]:
+    """(table root, log, head, head entry) of stream ``name``."""
+    if (found := _find(name)) is None:
+        raise ValueError(f"no stream {name!r} on a registered versioned table")
+    root, log = found
+    head = log.head()
+    return root, log, head, log.read(head)
+
+
 def create_stream(
     spark: SparkSession, stmt: str, task_id: str
 ) -> bool:
@@ -91,7 +132,8 @@ def create_stream(
     if not m:
         return False
     name, table = _norm(m.group("name")), m.group("table").strip('`"')
-    if m.group("ine") and name in _STREAMS:
+    old = _find(name)
+    if m.group("ine") and old:
         return True
     opts = dict(
         (k.upper(), v.upper() == "TRUE")
@@ -112,12 +154,13 @@ def create_stream(
             "tracking; create the table as a plans.versioned.VersionedTable "
             "and expose it via register_versioned_table(name, root)"
         )
-    offset = 0 if opts.get("SHOW_INITIAL_ROWS") else vt.current_version()
-    _STREAMS[name] = {
-        "table": table,
-        "offset": offset,
+    if old and old[0] != vt.root:  # replaced onto another table
+        shutil.rmtree(old[1].root)
+    log = CommitLog(os.path.join(vt.root, "_streams", name))
+    log.append(log.head() + 1, {
+        "offset": 0 if opts.get("SHOW_INITIAL_ROWS") else vt.current_version(),
         "append_only": bool(opts.get("APPEND_ONLY")),
-    }
+    })
     return True
 
 
@@ -125,38 +168,38 @@ def drop_stream(stmt: str) -> bool:
     m = DROP_STREAM.match(stmt)
     if not m:
         return False
-    _STREAMS.pop(_norm(m.group("name")), None)
+    name = _norm(m.group("name"))
+    if found := _find(name):
+        shutil.rmtree(found[1].root)
+    _STREAMS.pop(name, None)
     return True
 
 
 def stream_names() -> list[str]:
-    return list(_STREAMS)
+    return sorted(_logs())
 
 
 def stream_offset(name: str) -> int:
-    return _STREAMS[_norm(name)]["offset"]
+    return _state(name)[3]["offset"]
 
 
 def clear_streams() -> None:
-    """Test hook: forget every registered stream."""
+    """Forget this session's stream views; the streams themselves persist."""
     _STREAMS.clear()
 
 
-def _feed(spark: SparkSession, name: str) -> tuple[DataFrame, int]:
-    info = _STREAMS[_norm(name)]
-    vt = resolve_versioned_table(spark, info["table"])
-    if vt is None:
-        raise ValueError(
-            f"stream {name!r}: its table {info['table']!r} is no longer a "
-            "registered versioned table"
-        )
+def _feed(spark: SparkSession, name: str) -> tuple[DataFrame, int, int]:
+    """The stream's pending changes, its offset and the table version the
+    changes run to."""
     from pyspark.sql import functions as F
 
+    root, _, _, info = _state(name)
+    vt = VersionedTable(spark, root)
     cur = vt.current_version()
     df = vt.changes(info["offset"], cur)
     if info["append_only"]:
         df = df.filter(F.col("_change_type") == "insert")
-    return df, cur
+    return df, info["offset"], cur
 
 
 def resolve_stream_view(
@@ -167,8 +210,7 @@ def resolve_stream_view(
     advance the offset to on a successful DML."""
     from pyspark.sql import functions as F
 
-    info = _STREAMS[_norm(name)]
-    df, cur = _feed(spark, name)
+    df, offset, cur = _feed(spark, name)
     data_cols = [
         c for c in df.columns if c not in ("_change_type", "_commit_version")
     ]
@@ -184,31 +226,35 @@ def resolve_stream_view(
             )
         ).alias("METADATA$ROW_ID"),
     )
-    key = hashlib.md5(
-        f"{info['table']}:{info['offset']}:{cur}".encode()
-    ).hexdigest()[:12]
-    view = f"__stream_{_norm(name)}_{key}"
+    view = f"__stream_{_norm(name)}_{offset}_{cur}"
     # one live view per stream: drop the previous (offset, version) view so
     # a long session does not leak a catalog entry per read (ADVICE r8).
     # A view embedded in a longer-lived object (CREATE VIEW ... FROM s) is
     # NOT protected here — see the module-contract note on folding.
-    prev = info.get("last_view")
+    prev = _STREAMS.get(_norm(name))
     if prev is not None and prev != view:
         spark.catalog.dropTempView(prev)
     out.createOrReplaceTempView(view)
-    info["last_view"] = view
+    _STREAMS[_norm(name)] = view
     return view, cur
 
 
 def advance_stream(name: str, to_version: int) -> None:
-    info = _STREAMS[_norm(name)]
-    info["offset"] = max(info["offset"], to_version)
+    """Append ``max(offset, to_version)`` to the stream's log (nothing when
+    the offset is already there)."""
+    while True:
+        _, log, head, info = _state(name)
+        if to_version <= info["offset"]:
+            return
+        try:
+            log.append(head + 1, {**info, "offset": to_version})
+            return
+        except ConcurrentWriteError:  # another consumer advanced: re-read
+            continue
 
 
 def stream_has_data(spark: SparkSession, name: str) -> bool:
     """Exact SYSTEM$STREAM_HAS_DATA: probes the feed for one row (a
     net-zero commit — e.g. OPTIMIZE — correctly reports no data)."""
-    if _norm(name) not in _STREAMS:
-        raise ValueError(f"SYSTEM$STREAM_HAS_DATA: no stream {name!r}")
-    df, _ = _feed(spark, name)
+    df, _, _ = _feed(spark, name)
     return len(df.take(1)) > 0

@@ -1,7 +1,7 @@
 """Manifest-based versioned parquet tables: snapshot isolation, atomic
 commit, time travel, rollback, and append-without-rewrite on a plain
 filesystem — the transactional-table subset that does not need Delta or
-Iceberg jars (absent from this environment; VERDICT r2-r3 gap item).
+Iceberg jars (absent from this environment).
 
 The reference gets these properties for free from Snowflake (transient
 tables aside, every table is transactional and time-travels —
@@ -22,22 +22,11 @@ Layout::
         v00001.json   {"version":1,"parent":0,"dirs":[...],"op":"create"}
         v00002.json   {"version":2,"parent":1,"dirs":[...],"op":"append"}
 
-The manifest chain is the only record of the head: the current version is
-the highest committed ``v<N>.json`` (the Delta-log rule — the newest log
-entry IS the table version).
-
-Commit protocol (the whole trick):
-
-1. Write the new data directory(ies) fully — invisible to readers, since
-   readers only follow the manifest.
-2. Write the manifest json to a temp name in ``_manifest/``, fsync it,
-   then ``os.link`` it to ``v{N}.json``: an atomic create-if-absent with
-   the full content. The link is the commit point. OPTIMISTIC
-   concurrency: if another writer committed vN first the link fails, and
-   the loser raises ``ConcurrentWriteError`` and retries from fresh
-   state, never clobbering. A writer that dies anywhere before the link
-   leaves only an unreferenced data dir and at most a temp manifest, so
-   readers still see the old head and the next writer commits vN.
+The manifest chain is a commit log (``plans/commitlog.py``, which holds
+the commit protocol): the current version is the highest committed
+``v<N>.json`` (the Delta-log rule — the newest log entry IS the table
+version). Data directories are written in full before their manifest is
+linked, so readers, which follow only manifests, never see them early.
 
 Scale notes (100 TB):
 - ``append`` commits a manifest that lists the previous dirs plus the new
@@ -57,10 +46,9 @@ Scale notes (100 TB):
   version counter) — at 100 TB you point the same statements at
   Delta/Iceberg and keep the semantics.
 - Manifests are O(#dirs) json, not O(rows); ``vacuum`` bounds history.
-- The filesystem must give an atomic create-if-absent of the manifest
-  name: ``link`` on POSIX, a no-overwrite rename on HDFS, a conditional
-  put (``If-None-Match: *``) on object stores — the same caveat every
-  manifest-based format carries.
+- The manifest log needs an atomic create-if-absent (see
+  ``plans/commitlog.py``) — the same caveat every manifest-based format
+  carries.
 """
 
 from __future__ import annotations
@@ -73,6 +61,10 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bfs_etl_sep2025_spark.plans.commitlog import (  # noqa: F401 (re-export)
+    CommitLog,
+    ConcurrentWriteError,
+)
 from bfs_etl_sep2025_spark.plans.locks import table_write_lock
 
 #: logical-plan node names that make a DataFrame a deterministic pure
@@ -123,16 +115,11 @@ def _is_materialized_projection(df: DataFrame) -> bool:
         return False
 
 
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed the version this commit was based on."""
-
-
 #: SQL-name -> root registry: lets the Snowflake dialect shim
 #: (plans/tasks.py) resolve ``SELECT ... FROM t AT(TIMESTAMP => ...)`` /
 #: ``CREATE TABLE c CLONE t AT(...)`` to a :class:`VersionedTable`
-#: snapshot read (VERDICT r6 item 2 — the last chokepoint-reachable
-#: Snowflake feature whose engine capability existed but was unreachable
-#: from SQL). Names are case-insensitive like SQL identifiers.
+#: snapshot read, and STREAMs find their offset logs under the roots.
+#: Names are case-insensitive like SQL identifiers.
 _SQL_REGISTRY: dict[str, str] = {}
 
 
@@ -160,36 +147,21 @@ class VersionedTable:
         self.root = os.path.abspath(root)
         self._data = os.path.join(self.root, "data")
         self._manifests = os.path.join(self.root, "_manifest")
+        self._log = CommitLog(self._manifests)
 
     # ---------------- read side ----------------
 
-    def _versions(self) -> list[int]:
-        """Committed versions, ascending by number. Only ``v<N>.json``
-        names count: temp manifests of writers that never linked are
-        ignored. Sorting by the integer keeps v100000 after v99999."""
-        try:
-            names = os.listdir(self._manifests)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(m.group(1))
-            for m in map(re.compile(r"v(\d+)\.json").fullmatch, names)
-            if m
-        )
-
     def exists(self) -> bool:
-        return bool(self._versions())
+        return bool(self._log.head())
 
     def current_version(self) -> int:
-        versions = self._versions()
-        if not versions:
+        head = self._log.head()
+        if not head:
             raise FileNotFoundError(f"no committed version of {self.root}")
-        return versions[-1]
+        return head
 
     def _manifest(self, version: int) -> dict:
-        path = os.path.join(self._manifests, f"v{version:05d}.json")
-        with open(path) as f:
-            return json.load(f)
+        return self._log.read(version)
 
     def _read_dirs(self, dirs: list[str], schema_json: str | None) -> DataFrame:
         """Multi-dir parquet read under the snapshot's COMMITTED schema.
@@ -329,8 +301,8 @@ class VersionedTable:
         manifest file's mtime. Raises when the table had no committed
         version yet at that instant (Snowflake errors identically)."""
         best = None
-        for v in self._versions():
-            path = os.path.join(self._manifests, f"v{v:05d}.json")
+        for v in self._log.versions():
+            path = self._log.path(v)
             with open(path) as f:
                 commit_us = json.load(f).get("ts_us")
             if commit_us is None:
@@ -355,7 +327,7 @@ class VersionedTable:
                 "op": m["op"],
                 "n_dirs": len(m["dirs"]),
             }
-            for m in map(self._manifest, self._versions())
+            for m in self._log.entries()
         ]
 
     def detail(self, version: int | None = None) -> dict:
@@ -401,8 +373,6 @@ class VersionedTable:
         schema: str | None = None,
         constraints: list[str] | None = None,
     ) -> int:
-        os.makedirs(self._manifests, exist_ok=True)
-        manifest = os.path.join(self._manifests, f"v{version:05d}.json")
         import time as _time
 
         entry = {
@@ -427,26 +397,7 @@ class VersionedTable:
             entry["schema"] = schema
         if constraints:
             entry["constraints"] = constraints
-        # the body goes fully to a temp name first, then ONE link publishes
-        # it as vN: create-if-absent, so vN is claimable exactly once and
-        # never visible torn or empty. The link is the commit point.
-        tmp = os.path.join(
-            self._manifests, f".v{version}-{uuid.uuid4().hex[:8]}.tmp"
-        )
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, manifest)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"version {version} of {self.root} was committed by another "
-                "writer; re-read and retry"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        return version
+        return self._log.append(version, entry)
 
     def _check_constraints(
         self, df: DataFrame, constraints: list[str] | None
@@ -1005,53 +956,44 @@ class VersionedTable:
 
         return sink
 
+    def _rewrite_touched(self, condition: str, rewrite, op: str) -> int:
+        """Commit the snapshot in which the dirs holding a row where
+        ``condition`` is TRUE become one dir of ``rewrite(rows, manifest)``;
+        every other dir is referenced unchanged, never read twice nor
+        rewritten."""
+        with table_write_lock(self.root):
+            parent = self.current_version()
+            pm = self._manifest(parent)
+            touched = self._touched_dirs(pm["dirs"], condition, pm.get("schema"))
+            dirs = [d for d in pm["dirs"] if d not in touched]
+            if touched:
+                df = self._read_dirs(sorted(touched), pm.get("schema"))
+                dirs.append(self._write_data_dir(rewrite(df, pm), parent + 1))
+            return self._commit(parent + 1, parent, dirs, op)
+
     def delete_where(self, condition: str) -> int:
         """SQL DELETE semantics: rows where ``condition`` is TRUE are
         removed; FALSE and NULL rows are kept (``filter(~cond)`` would
         silently drop NULL-condition rows — the classic three-valued-logic
-        trap). Dirs with no matching row are referenced unchanged in the
-        new manifest, never read twice nor rewritten."""
+        trap)."""
         from pyspark.sql import functions as F
 
         keep = ~F.coalesce(F.expr(condition), F.lit(False))
-        with table_write_lock(self.root):
-            parent = self.current_version()
-            pm = self._manifest(parent)
-            dirs = pm["dirs"]
-            touched = self._touched_dirs(dirs, condition, pm.get("schema"))
-            untouched = [d for d in dirs if d not in touched]
-            new_dirs = untouched
-            if touched:
-                sub = self._read_dirs(sorted(touched), pm.get("schema"))
-                d = self._write_data_dir(sub.filter(keep), parent + 1)
-                new_dirs = untouched + [d]
-            return self._commit(parent + 1, parent, new_dirs, "delete")
+        return self._rewrite_touched(condition, lambda df, pm: df.filter(keep), "delete")
 
     def update_where(self, condition: str, sets: dict[str, str]) -> int:
-        """UPDATE ... SET ... WHERE: only dirs containing a matching row
-        are rewritten (NULL/FALSE-condition rows keep their values via the
-        ``otherwise`` branch, so untouched dirs are byte-identical by
-        construction and safe to reference unchanged)."""
+        """UPDATE ... SET ... WHERE (NULL/FALSE-condition rows keep their
+        values via the ``otherwise`` branch, so untouched dirs are
+        byte-identical by construction and safe to reference unchanged)."""
         from pyspark.sql import functions as F
 
         cond = F.expr(condition)
-        with table_write_lock(self.root):
-            parent = self.current_version()
-            pm = self._manifest(parent)
-            dirs = pm["dirs"]
-            cols = self.read().columns
-            touched = self._touched_dirs(dirs, condition, pm.get("schema"))
-            untouched = [d for d in dirs if d not in touched]
-            new_dirs = untouched
-            if touched:
-                df = self._read_dirs(sorted(touched), pm.get("schema"))
-                for col, expr in sets.items():
-                    df = df.withColumn(
-                        col, F.when(cond, F.expr(expr)).otherwise(F.col(col))
-                    )
-                self._check_constraints(
-                    df.select(*cols), pm.get("constraints")
-                )
-                d = self._write_data_dir(df.select(*cols), parent + 1)
-                new_dirs = untouched + [d]
-            return self._commit(parent + 1, parent, new_dirs, "update")
+
+        def rewrite(df: DataFrame, pm: dict) -> DataFrame:
+            cols = df.columns
+            for col, expr in sets.items():
+                df = df.withColumn(col, F.when(cond, F.expr(expr)).otherwise(F.col(col)))
+            self._check_constraints(df.select(*cols), pm.get("constraints"))
+            return df.select(*cols)
+
+        return self._rewrite_touched(condition, rewrite, "update")

@@ -1,15 +1,15 @@
-"""Ingestion sources: bulk CSV COPY-INTO semantics and the load ledger."""
+"""Ingestion sources: bulk CSV COPY-INTO semantics with a load ledger."""
 
 from bfs_etl_sep2025_spark.sources.csv_copy import (
     CsvCopyTask,
+    ledger,
     map_file_format,
     parse_file_format_clause,
 )
-from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
 
 __all__ = [
     "CsvCopyTask",
-    "LoadLedger",
+    "ledger",
     "map_file_format",
     "parse_file_format_clause",
 ]

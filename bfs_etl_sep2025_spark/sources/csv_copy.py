@@ -13,29 +13,46 @@ rebuilds each piece:
                   ``DataFrameReader.csv`` options, plus the multi-valued
                   NULL_IF gap which Spark cannot express natively (one
                   nullValue only) -> post-read sentinel map.
-- load history -> :class:`~bfs_etl_sep2025_spark.sources.ledger.LoadLedger`.
+- load history -> one commit log per target table under ``ledger_path``
+                  (:func:`ledger`, ``plans/commitlog.py``), one entry
+                  ``{files, loaded_at, dir}`` per loaded batch.
 - audit column -> ``load_utc_ts`` from the pipeline's injectable clock
                   (the reference's tables carry the same column,
                   ``dags/dev_db_test.sql:1``).
 
+A COPY commits once, at its ledger link, and rolls forward: (1) the batch
+is written with ``merge._write`` (by name, in the table's layout) into
+``<location>/_copy-v<N>-<hex>``, N = ledger head + 1 — Spark's file index
+skips ``_``-prefixed directories; (2) ledger entry N, naming that
+directory, is linked — the commit point; (3) the staged partitions are
+registered and the staged *files* renamed into place. Each COPY of the
+table first finishes (3) for any committed entry whose directory is still
+there and deletes any ``_copy-v<N>-*`` with N at or below the head that no
+entry names (``VersionedTable.vacuum``'s rule; a higher N may be a writer
+in another process). Documented divergence: a crash inside (3) leaves part
+of the batch visible until the next COPY of the table finishes it —
+Spark's own append job commit also renames file by file. Without a
+``ledger_path`` every run loads its files.
+
 Scale notes (100 TB): the executor-parallel CSV scan is the data path —
-one Spark task per file split; the driver only renders names and consults
-the ledger. Appends go through ``insertInto`` so the target table's own
-partitioning governs layout. File-per-run naming preserves the reference's
-manual partition pruning (each run reads exactly its own file).
+one Spark task per file split; the driver renders names, reads the ledger
+(a few json files, no Spark job) and renames the batch's files. File-per-
+run naming preserves the reference's manual partition pruning.
 """
 
 from __future__ import annotations
 
-from pathlib import Path
+import os
+import re
+import uuid
 from typing import TYPE_CHECKING, Any
 
+from bfs_etl_sep2025_spark.plans import merge
+from bfs_etl_sep2025_spark.plans.commitlog import CommitLog
 from bfs_etl_sep2025_spark.plans.tasks import RunContext, Task
 
 if TYPE_CHECKING:
     from bfs_etl_sep2025_spark.plans.pipeline import Pipeline
-
-import re
 
 #: one `key = value` item of a FILE_FORMAT clause; value is a parenthesized
 #: list, a quoted string, or a bare token. The reference's own clause mixes
@@ -118,6 +135,54 @@ def _truthy(val: Any) -> bool:
     return str(val).strip().lower() in ("true", "1", "yes")
 
 
+#: a staged batch directory inside the table location
+_STAGED = re.compile(r"_copy-v(\d+)-[0-9a-f]+")
+
+
+def ledger(ledger_path: str, table: str) -> CommitLog:
+    """The load history of ``table``. A missing log means nothing is loaded
+    yet; a path it cannot commit on raises instead of reading as empty."""
+    return CommitLog(os.path.join(ledger_path, table))
+
+
+def _partition_spec(utils, rel: str) -> str:
+    """``PARTITION (...)`` for a partition directory like ``d=2022-07-13``
+    (the catalog casts each string value to its column's type)."""
+    pairs = []
+    for seg in rel.split("/"):
+        key, val = map(utils.unescapePathName, seg.split("=", 1))
+        esc = val.replace("\\", "\\\\").replace("'", "\\'")
+        lit = "NULL" if val == utils.DEFAULT_PARTITION_NAME() else f"'{esc}'"
+        pairs.append(f"{merge._quote(key)} = {lit}")
+    return f"PARTITION ({', '.join(pairs)})"
+
+
+def _land(spark, meta, staged: str) -> None:
+    """Move a staged batch into the table: register its partitions, rename
+    each file to the same relative path under the location, drop the
+    emptied directory, refresh. Files an interrupted call already moved
+    are no longer listed."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    root, fs = merge.table_fs(spark, meta)
+    src = Path(root, staged)
+    prefix, files, it = src.toUri().getPath() + "/", [], fs.listFiles(src, True)
+    while it.hasNext():
+        path = it.next().getPath()
+        if not path.getName().startswith(("_", ".")):
+            files.append(path.toUri().getPath()[len(prefix):])
+    if parts := sorted({f.rpartition("/")[0] for f in files} - {""}):
+        utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        specs = " ".join(_partition_spec(utils, rel) for rel in parts)
+        spark.sql(f"ALTER TABLE {meta.name} ADD IF NOT EXISTS {specs}")
+        for rel in parts:
+            fs.mkdirs(Path(root, rel))
+    for rel in files:
+        if not fs.rename(Path(src, rel), Path(root, rel)):
+            raise OSError(f"COPY into {meta.name}: cannot move {staged}/{rel}")
+    fs.delete(src, True)
+    spark.catalog.refreshTable(meta.name)
+
+
 class CsvCopyTask(Task):
     """Bulk-load staged CSV files into a pre-created catalog table."""
 
@@ -150,34 +215,14 @@ class CsvCopyTask(Task):
     def _qualified(self) -> str:
         return f"{self.schema}.{self.table}" if self.schema else self.table
 
-    def execute(self, ctx: RunContext) -> None:
+    def _read(self, spark, meta, files: list[str], now):
+        """The staged CSV files as rows of the target's schema."""
         from pyspark.sql import functions as F
 
-        from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
-
-        spark = ctx.spark
-        if self.schema:
-            spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.schema}")
-        target = self._qualified()
-        # Target must pre-exist (COPY INTO semantics: schema comes from the
-        # table, never inferred from files).
-        target_schema = spark.table(target).schema
-
-        names = [ctx.render(f) for f in self.files]
-        ledger = (
-            LoadLedger(spark, self.ledger_path) if self.ledger_path else None
-        )
-        already = ledger.loaded_files(self._qualified()) if ledger else set()
-        todo = [n for n in names if n not in already]
-        self.skipped = [n for n in names if n in already]
-        self.loaded = []
-        if not todo:
-            return
-
         reader_opts, sentinels = map_file_format(self.file_format)
-        data_cols = [f for f in target_schema.fields if f.name != self.audit_column]
+        data_cols = [f for f in meta.schema.fields if f.name != self.audit_column]
         read_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in data_cols)
-        paths = [str(Path(self.stage_path) / n) for n in todo]
+        paths = [os.path.join(self.stage_path, n) for n in files]
         df = spark.read.schema(read_schema).options(**reader_opts).csv(paths)
         # Multi-valued NULL_IF post-map (Spark supports one nullValue; the
         # remaining sentinels nullify string columns here — non-string
@@ -191,20 +236,62 @@ class CsvCopyTask(Task):
                             F.col(f.name)
                         ),
                     )
-        now = ctx.clock()
-        if any(f.name == self.audit_column for f in target_schema.fields):
+        if any(f.name == self.audit_column for f in meta.schema.fields):
             df = df.withColumn(
                 self.audit_column,
                 F.lit(now.isoformat(sep=" ")).cast("timestamp_ntz"),
             )
-        # insertInto matches by POSITION: reorder to the target's declared
-        # column order so a mid-schema audit column can't silently land data
-        # in the wrong columns (ADVICE r01) — withColumn appended it last.
-        df = df.select([f.name for f in target_schema.fields if f.name in df.columns])
+        return df
+
+    def execute(self, ctx: RunContext) -> None:
         from bfs_etl_sep2025_spark.plans.locks import table_write_lock
 
+        spark = ctx.spark
+        if self.schema:
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.schema}")
+        # Target must pre-exist (COPY INTO semantics: schema comes from the
+        # table, never inferred from files).
+        meta = merge.table_meta(spark, self._qualified())
+        log = ledger(self.ledger_path, self._qualified()) if self.ledger_path else None
+        names = [ctx.render(f) for f in self.files]
+        Path = spark._jvm.org.apache.hadoop.fs.Path
+        root, fs = merge.table_fs(spark, meta)
         with table_write_lock(self._qualified()):
-            df.write.insertInto(target, overwrite=False)
-        if ledger:
-            ledger.record(self._qualified(), todo, now)
-        self.loaded = todo
+            # roll committed batches forward, drop ones that cannot commit
+            versions = log.versions() if log else []
+            entries = [log.read(v) for v in versions]
+            head = versions[-1] if versions else 0
+            for st in fs.globStatus(Path(root, "_copy-v*")) or []:
+                name = st.getPath().getName()
+                m = _STAGED.fullmatch(name)
+                if any(e["dir"] == name for e in entries):
+                    _land(spark, meta, name)
+                elif m and int(m.group(1)) <= head:
+                    fs.delete(st.getPath(), True)
+            already = {f for e in entries for f in e["files"]}
+            todo = [n for n in names if n not in already]
+            self.skipped = [n for n in names if n in already]
+            self.loaded = []
+            if not todo:
+                return
+            # with no ledger nothing commits: v0 is at or below any head, so
+            # the next COPY deletes a batch this run leaves staged
+            n = head + 1 if log else 0
+            staged = f"_copy-v{n:05d}-{uuid.uuid4().hex[:8]}"
+            now = ctx.clock()
+            try:
+                merge._write(
+                    spark, meta, self._read(spark, meta, todo, now),
+                    Path(root, staged).toString(),
+                )
+                if log:
+                    log.append(n, {"files": todo, "loaded_at": now.isoformat(sep=" "), "dir": staged})
+            except BaseException:
+                fs.delete(Path(root, staged), True)
+                raise
+            _land(spark, meta, staged)
+            # a batch staged for vN by a writer that died before linking can
+            # never commit now that vN is taken
+            for st in fs.globStatus(Path(root, f"_copy-v{n:05d}-*")) or []:
+                fs.delete(st.getPath(), True)
+            self.loaded = todo

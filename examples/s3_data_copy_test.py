@@ -60,7 +60,9 @@ if __name__ == "__main__":
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {SCHEMA}")
     # External LOCATION: the demo session uses an in-memory catalog, so a
     # re-run in a new process must re-register the table OVER the existing
-    # data (the ledger, not the catalog, is what prevents double-loading).
+    # data. The ledger, not the catalog, prevents double-loading: a batch
+    # commits when its ledger entry is linked, and a batch committed by a
+    # run that died is moved into the table by the next run.
     spark.sql(
         f"""CREATE TABLE IF NOT EXISTS {SCHEMA}.prestg_product_order_trans (
               trans_id BIGINT, product_id BIGINT, customer_id BIGINT,

@@ -12,7 +12,7 @@ from datetime import date, datetime
 import pytest
 
 from bfs_etl_sep2025_spark.plans import Pipeline
-from bfs_etl_sep2025_spark.sources import CsvCopyTask, map_file_format
+from bfs_etl_sep2025_spark.sources import CsvCopyTask, ledger, map_file_format
 
 FROZEN = datetime(2022, 7, 20, 7, 0, 0)
 
@@ -159,45 +159,207 @@ def test_rerun_is_idempotent(spark, pipeline, backfilled):
     assert spark.table("dev_db.prestg_product_order_trans").count() == before
 
 
-def test_ledger_missing_path_is_empty_but_unreadable_raises(spark, tmp_path):
+def test_ledger_missing_path_is_empty_but_unreadable_raises(spark, stage, tmp_path):
     """Only a ledger that does not exist yet means "nothing loaded"; a
     ledger that cannot be read must fail the COPY, not reload every file."""
-    from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
+    assert ledger(str(tmp_path / "new"), "t").entries() == []
+    with pytest.raises(ValueError, match="nosuchfs"):
+        ledger("nosuchfs://bucket/ledger", "t")
+    _target(spark, "dev_db.prestg_bad_ledger")
+    with pytest.raises(ValueError, match="nosuchfs"):
+        _copy(spark, stage, "prestg_bad_ledger", "nosuchfs://bucket/ledger")
+    assert spark.table("dev_db.prestg_bad_ledger").count() == 0
 
-    assert LoadLedger(spark, str(tmp_path / "new")).loaded_files("t") == set()
-    with pytest.raises(Exception, match="nosuchfs"):
-        LoadLedger(spark, "nosuchfs://bucket/ledger").loaded_files("t")
 
-
-def test_ledger_records_in_the_jvm_and_round_trips(spark, tmp_path, monkeypatch):
-    """``record`` writes a literal relation built in the JVM — no Python RDD
-    whose rows a Python worker pickles — and a round trip keeps a file name
-    with quotes and the exact ``timestamp_ntz`` load time."""
-    from bfs_etl_sep2025_spark.sources.ledger import LoadLedger
-
-    frame = type(spark.range(1))
-    written, write = [], frame.write
-    monkeypatch.setattr(
-        frame, "write", property(lambda df: written.append(df) or write.fget(df))
+def _target(spark, name: str, cols: str = "", tail: str = ""):
+    """A COPY target shaped like the reference's prestg table, with extra
+    ``cols`` and a ``tail`` after ``USING parquet``."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS dev_db")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(
+        f"""CREATE TABLE {name} (
+              trans_id BIGINT, product_id BIGINT, customer_id BIGINT,
+              quantity INT, unit_price DOUBLE, trans_ts TIMESTAMP_NTZ,
+              channel STRING, load_utc_ts TIMESTAMP_NTZ{cols}
+            ) USING parquet{tail}"""
     )
-    path = str(tmp_path / "ledger")
-    ledger = LoadLedger(spark, path)
+
+
+def _copy(spark, stage, table, ledger_path, files=("product_order_trans_{{ ds[5:7] + ds[8:10] + ds[0:4] }}.csv",),
+          clock=lambda: FROZEN, run_date=datetime(2022, 7, 13, 7)):
+    """Run one COPY of ``files`` into ``dev_db.<table>`` and return the task."""
+    with Pipeline("copy_once", schedule="0 7 * * *", start_date=date(2022, 7, 13),
+                  clock=clock) as p:
+        task = CsvCopyTask("copy", table=table, schema="dev_db", stage_path=str(stage),
+                           files=list(files), file_format=FILE_FORMAT,
+                           ledger_path=ledger_path)
+    p.run(spark, run_date=run_date)
+    return task
+
+
+def test_ledger_round_trips_as_a_log(spark, stage, tmp_path):
+    """Each COPY links one ledger entry per target table: file names with
+    quotes and the exact microsecond load time come back as written, the
+    two tables keep separate logs, and a replay starts no Spark job."""
+    import shutil
+
     at = datetime(2022, 7, 13, 7, 5, 9, 123456)
     files = ["it's.csv", 'say "hi".csv', "plain.csv"]
-    ledger.record("db.t", files, at)
-    ledger.record("db.other", ["other.csv"], at)
-    assert len(written) == 2
-    for df in written:
-        assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
-    assert ledger.loaded_files("db.t") == set(files)
-    assert ledger.loaded_files("db.none") == set()
-    rows = spark.read.parquet(path).collect()
-    assert sorted((r.table_name, r.file_name) for r in rows) == sorted(
-        [("db.t", f) for f in files] + [("db.other", "other.csv")]
+    for name in files:
+        shutil.copyfile(stage / "product_order_trans_07132022.csv", tmp_path / name)
+    path = str(tmp_path / "ledger")
+    for table, names in (("ledger_t", files), ("ledger_other", files[2:])):
+        _target(spark, f"dev_db.{table}")
+        assert _copy(spark, tmp_path, table, path, names, clock=lambda: at).loaded == names
+    assert ledger(path, "dev_db.ledger_t").entries() == [
+        {"files": files, "loaded_at": "2022-07-13 07:05:09.123456",
+         "dir": ledger(path, "dev_db.ledger_t").read(1)["dir"]}
+    ]
+    other = ledger(path, "dev_db.ledger_other").entries()
+    assert [e["files"] for e in other] == [["plain.csv"]]
+    assert datetime.fromisoformat(other[0]["loaded_at"]) == at
+    assert {r.load_utc_ts for r in spark.table("dev_db.ledger_t").collect()} == {at}
+    assert ledger(path, "dev_db.none").entries() == []
+
+    sc = spark.sparkContext
+    sc.setJobGroup("copy_replay", "replayed COPY")
+    try:
+        replay = _copy(spark, tmp_path, "ledger_t", path, files)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert replay.loaded == [] and replay.skipped == files
+    assert list(sc.statusTracker().getJobIdsForGroup("copy_replay")) == []
+    assert spark.table("dev_db.ledger_t").count() == 3 * ROWS_PER_DAY["07132022"]
+
+
+def test_partitioned_target_registers_partitions(spark, tmp_path):
+    """A ``PARTITIONED BY (biz_date)`` target: each day lands in its own
+    partition, SHOW PARTITIONS lists both, and a catch-up re-run loads
+    nothing."""
+    header = "trans_id,product_id,customer_id,quantity,unit_price,trans_ts,channel,biz_date"
+    for day, ids in (("07132022", (1, 2)), ("07142022", (3, 4, 5))):
+        iso = f"2022-{day[:2]}-{day[2:4]}"
+        rows = [f"{i},{i},{i},1,1.5,{iso}T08:00:00,web,{iso}" for i in ids]
+        (tmp_path / f"product_order_trans_{day}.csv").write_text(
+            "\n".join([header, *rows]) + "\n"
+        )
+    _target(spark, "dev_db.prestg_by_day", ", biz_date DATE", " PARTITIONED BY (biz_date)")
+    path = str(tmp_path / "ledger")
+    with Pipeline("copy_by_day", schedule="0 7 * * *", start_date=date(2022, 7, 13),
+                  end_date=datetime(2022, 7, 14, 23, 59), catchup=True,
+                  clock=lambda: FROZEN) as p:
+        task = CsvCopyTask(
+            "copy", table="prestg_by_day", schema="dev_db", stage_path=str(tmp_path),
+            files=["product_order_trans_{{ ds[5:7] + ds[8:10] + ds[0:4] }}.csv"],
+            file_format=FILE_FORMAT, ledger_path=path)
+    p.backfill(spark)
+    assert task.loaded == ["product_order_trans_07142022.csv"]
+    parts = [r[0] for r in spark.sql("SHOW PARTITIONS dev_db.prestg_by_day").collect()]
+    assert parts == ["biz_date=2022-07-13", "biz_date=2022-07-14"]
+    df = spark.table("dev_db.prestg_by_day")
+    assert sorted((r.trans_id, r.biz_date.isoformat()) for r in df.collect()) == [
+        (1, "2022-07-13"), (2, "2022-07-13"),
+        (3, "2022-07-14"), (4, "2022-07-14"), (5, "2022-07-14"),
+    ]
+    p.backfill(spark)
+    assert task.loaded == [] and task.skipped == ["product_order_trans_07142022.csv"]
+    assert df.count() == 5
+    assert len(ledger(path, "dev_db.prestg_by_day").versions()) == 2
+
+
+# -- crash safety: a COPY killed at any point loads each file exactly once ---
+#
+# The child is a separate process with its own Spark session and catalog,
+# so the target is an external table both sessions register over one
+# location. Module-level so multiprocessing's spawn can pickle it (spawn,
+# not fork: the parent holds a live JVM).
+
+
+def _crash_copy(stage, ledger_path, location, warehouse, point) -> None:
+    """Spawned child: COPY both days and die at ``point`` with no cleanup
+    (``os._exit`` skips ``finally`` blocks and atexit)."""
+    import os
+
+    from bfs_etl_sep2025_spark.plans import commitlog, merge
+    from bfs_etl_sep2025_spark.session import build_spark
+
+    spark = build_spark(app_name="copy-crash", shuffle_partitions=2, extra_conf={
+        "spark.sql.warehouse.dir": warehouse,
+        # split each small CSV so the batch lands as several files
+        "spark.sql.files.maxPartitionBytes": "256",
+    })
+    _target(spark, "dev_db.prestg_crash", tail=f" LOCATION '{location}'")
+    append = commitlog.CommitLog.append
+    if point == "after_staged_write":  # the link is the next step
+        commitlog.CommitLog.append = lambda self, n, entry: os._exit(17)
+    elif point == "after_ledger_link":
+        def die_after_link(self, n, entry):
+            append(self, n, entry)
+            os._exit(17)
+
+        commitlog.CommitLog.append = die_after_link
+    else:
+        table_fs = merge.table_fs
+
+        class DieAfterRename:
+            def __init__(self, fs):
+                self.fs = fs
+
+            def __getattr__(self, name):
+                return getattr(self.fs, name)
+
+            def rename(self, src, dst):
+                self.fs.rename(src, dst)
+                os._exit(17)
+
+        merge.table_fs = lambda s, meta: (table_fs(s, meta)[0], DieAfterRename(table_fs(s, meta)[1]))
+    _copy(spark, stage, "prestg_crash", ledger_path, _BOTH_DAYS)
+    os._exit(0)  # not reached
+
+
+_BOTH_DAYS = ("product_order_trans_07132022.csv", "product_order_trans_07142022.csv")
+
+
+@pytest.mark.parametrize(
+    "point", ["after_staged_write", "after_ledger_link", "after_first_rename"]
+)
+def test_crashed_copy_rolls_forward_exactly_once(spark, stage, tmp_path, point):
+    import multiprocessing as mp
+    import os
+
+    location, path = str(tmp_path / "prestg"), str(tmp_path / "ledger")
+    _target(spark, "dev_db.prestg_crash", tail=f" LOCATION '{location}'")
+    _copy(spark, stage, "prestg_crash", path, _BOTH_DAYS[:1])
+    old = ROWS_PER_DAY["07132022"]
+    child = mp.get_context("spawn").Process(
+        target=_crash_copy,
+        args=(stage, path, location, str(tmp_path / "wh"), point),
     )
-    assert {r.loaded_at for r in rows} == {at}
-    assert spark.read.parquet(path).schema["loaded_at"].dataType.simpleString() \
-        == "timestamp_ntz"
+    child.start()
+    child.join(timeout=300)
+    assert child.exitcode == 17
+
+    def staged() -> list[str]:
+        return [d for d in os.listdir(location) if d.startswith("_copy-")]
+
+    assert staged(), "the crashed batch is still staged"
+    spark.catalog.refreshTable("dev_db.prestg_crash")
+    seen = spark.table("dev_db.prestg_crash").count()
+    if point == "after_first_rename":  # the documented partial batch
+        assert old < seen < old + ROWS_PER_DAY["07142022"]
+    else:
+        assert seen == old
+    task = _copy(spark, stage, "prestg_crash", path, _BOTH_DAYS)
+    if point == "after_staged_write":
+        assert task.loaded == list(_BOTH_DAYS[1:])
+    else:
+        assert task.loaded == []
+    assert task.skipped == [f for f in _BOTH_DAYS if f not in task.loaded]
+    df = spark.table("dev_db.prestg_crash")
+    assert df.count() == old + ROWS_PER_DAY["07142022"]
+    assert df.select("trans_id").distinct().count() == df.count()
+    assert staged() == []
+    assert len(ledger(path, "dev_db.prestg_crash").versions()) == 2
 
 
 def test_option_map_coverage():

@@ -24,6 +24,7 @@ import pytest
 from bfs_etl_sep2025_spark.plans import Pipeline, SqlTask
 from bfs_etl_sep2025_spark.plans.streams import (
     clear_streams,
+    stream_has_data,
     stream_names,
     stream_offset,
 )
@@ -256,3 +257,54 @@ def test_stream_views_do_not_leak_across_reads(spark, s_table):
         if t.name.startswith("__stream_s_leak_")
     ]
     assert len(views) == 1, views
+
+
+def test_stream_offset_survives_a_new_session(spark, s_table):
+    """The offset lives in a commit log under the table root: with the
+    session's stream state forgotten and the table registered again, the
+    offset, SYSTEM$STREAM_HAS_DATA and IF NOT EXISTS all see the persisted
+    stream."""
+    _run_sql(spark, "CREATE STREAM s_dur ON TABLE st_orders")
+    s_table.append(spark.createDataFrame([(3, "c")], "id INT, v STRING"))
+    _run_sql(spark, "CREATE OR REPLACE TABLE dur_staged AS SELECT id FROM s_dur")
+    consumed = stream_offset("s_dur")
+    assert consumed == s_table.current_version()
+
+    clear_streams()
+    unregister_versioned_table("st_orders")
+    assert "s_dur" not in stream_names()
+    register_versioned_table("st_orders", s_table.root)
+    assert "s_dur" in stream_names()
+    assert stream_offset("s_dur") == consumed
+    assert not stream_has_data(spark, "s_dur")
+    _run_sql(
+        spark,
+        "CREATE STREAM IF NOT EXISTS s_dur ON TABLE st_orders "
+        "SHOW_INITIAL_ROWS = TRUE",
+    )
+    assert stream_offset("s_dur") == consumed
+    s_table.append(spark.createDataFrame([(4, "d")], "id INT, v STRING"))
+    _run_sql(
+        spark,
+        "CREATE OR REPLACE TEMPORARY VIEW dur_gate AS "
+        "SELECT SYSTEM$STREAM_HAS_DATA('s_dur') AS has_data",
+    )
+    assert spark.table("dur_gate").collect()[0].has_data is True
+
+
+def test_stream_name_under_two_tables_raises(spark, s_table, tmp_path):
+    other = VersionedTable(spark, str(tmp_path / "other_v"))
+    other.create(spark.createDataFrame([(1, "a")], "id INT, v STRING"))
+    _run_sql(spark, "CREATE STREAM s_twice ON TABLE st_orders")
+    register_versioned_table("st_other", other.root)
+    try:
+        # a stream log copied in by hand: CREATE itself would move it
+        import shutil
+
+        shutil.copytree(
+            f"{s_table.root}/_streams/s_twice", f"{other.root}/_streams/s_twice"
+        )
+        with pytest.raises(ValueError, match="more than one registered table"):
+            stream_offset("s_twice")
+    finally:
+        unregister_versioned_table("st_other")

@@ -411,6 +411,46 @@ def test_crashed_writer_never_blocks_the_next(spark, tmp_path, point):
     assert _rows(vt.read()) == [(1, "a"), (2, "b"), (3, "c")]
 
 
+def _crash_vacuum(root: str) -> None:
+    """Spawned child: vacuum, dying right after its first ``rmtree``."""
+    import shutil
+
+    from bfs_etl_sep2025_spark.plans.versioned import VersionedTable
+
+    rmtree = shutil.rmtree
+
+    def rmtree_then_die(path, *a, **kw):
+        rmtree(path, *a, **kw)
+        os._exit(17)
+
+    shutil.rmtree = rmtree_then_die
+    VersionedTable(None, root).vacuum(keep_last=2)
+    os._exit(0)  # not reached
+
+
+def test_crash_mid_vacuum_keeps_every_kept_version(spark, tmp_path):
+    """A vacuum killed between two directory deletions leaves every version
+    it keeps readable, and the next vacuum finishes the job."""
+    import multiprocessing as mp
+
+    root = str(tmp_path / "vac")
+    vt = VersionedTable(spark, root)
+    vt.create(spark.createDataFrame([(1, "a")], "id INT, v STRING"))
+    for i in (2, 3, 4):
+        vt.overwrite(spark.createDataFrame([(i, "x")], "id INT, v STRING"))
+    before = sorted(os.listdir(os.path.join(root, "data")))
+    p = mp.get_context("spawn").Process(target=_crash_vacuum, args=(root,))
+    p.start()
+    p.join(timeout=120)
+    assert p.exitcode == 17
+
+    assert len(os.listdir(os.path.join(root, "data"))) == len(before) - 1
+    assert [_rows(vt.read(v)) for v in (3, 4)] == [[(3, "x")], [(4, "x")]]
+    assert len(vt.vacuum(keep_last=2)) == 1
+    assert sorted(os.listdir(os.path.join(root, "data"))) == before[2:]
+    assert [_rows(vt.read(v)) for v in (3, 4)] == [[(3, "x")], [(4, "x")]]
+
+
 def test_head_orders_versions_by_number(tmp_path):
     """v{N:05d} grows a sixth digit at 100000: the head, history and time
     travel must order manifests by number, not by name."""
