@@ -226,7 +226,8 @@ def resolve_stream_view(
             )
         ).alias("METADATA$ROW_ID"),
     )
-    view = f"__stream_{_norm(name)}_{offset}_{cur}"
+    # a temp view name is one identifier: ``db.s`` reads as ``db_s``
+    view = "__stream_{}_{}_{}".format(re.sub(r"\W", "_", _norm(name)), offset, cur)
     # one live view per stream: drop the previous (offset, version) view so
     # a long session does not leak a catalog entry per read (ADVICE r8).
     # A view embedded in a longer-lived object (CREATE VIEW ... FROM s) is

@@ -219,6 +219,14 @@ def test_stream_name_as_column_or_alias_is_not_rewritten(spark, s_table):
     assert {r.id for r in spark.table("s_reads").collect()} == {3}
 
 
+def test_qualified_stream_name_reads(spark, s_table):
+    """A schema-qualified stream name resolves to its change feed (its
+    temp view must still be a one-part name)."""
+    _run_sql(spark, "CREATE STREAM db1.s_q ON TABLE st_orders SHOW_INITIAL_ROWS = TRUE")
+    _run_sql(spark, "CREATE OR REPLACE TEMPORARY VIEW q_now AS SELECT id FROM db1.s_q")
+    assert sorted(r.id for r in spark.table("q_now").collect()) == [1, 2]
+
+
 def test_stream_resolves_in_comma_join(spark, s_table):
     """Table-reference positions beyond plain FROM: the comma-join slot
     must still resolve the stream to its change feed."""
