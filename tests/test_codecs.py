@@ -765,3 +765,79 @@ def test_jpeg_progressive_batch_twins_identical():
     # degenerate inputs
     assert encode_jpeg_progressive_batch([], 32, 32) == []
     assert decode_jpeg_progressive_batch([]) == []
+
+
+def test_jpeg_encoders_golden_bytes():
+    """Encoder output is pinned byte for byte, and each payload's decoded
+    raster pixel for pixel, by md5: round trips alone would let an
+    encoder change its bytes while still decoding to the same raster.
+    Covers lossless, baseline at two quants and with restart markers,
+    and progressive at two quants on a block-constant and a random
+    raster."""
+    import hashlib
+    import random
+
+    from bfs_etl_sep2025_spark.operators.multimodal import (
+        decode_jpeg,
+        encode_jpeg_progressive,
+    )
+
+    def md5(b: bytes) -> str:
+        return hashlib.md5(b).hexdigest()
+
+    rng = random.Random(2024)
+    rand = bytes(rng.randrange(256) for _ in range(32 * 32))
+    bc = _block_constant_raster(list(hashlib.md5(b"golden").digest()))
+    ramp = bytes((i * 37 + (i * i) % 11) % 256 for i in range(192))
+    payloads = {
+        "lossless": encode_jpeg_lossless(ramp, 24, 8),
+        "baseline_q1": encode_jpeg_baseline(rand, 32, 32, quant=1),
+        "baseline_q16": encode_jpeg_baseline(rand, 32, 32, quant=16),
+        "baseline_rst3": encode_jpeg_baseline(
+            rand, 32, 32, restart_interval=3
+        ),
+        "progressive_bc_q1": encode_jpeg_progressive(bc, 32, 32, quant=1),
+        "progressive_bc_q3": encode_jpeg_progressive(bc, 32, 32, quant=3),
+        "progressive_rand_q1": encode_jpeg_progressive(rand, 32, 32, quant=1),
+        "progressive_rand_q3": encode_jpeg_progressive(rand, 32, 32, quant=3),
+    }
+    got = {k: (md5(v), md5(decode_jpeg(v)[2])) for k, v in payloads.items()}
+    assert got == GOLDEN_JPEG_MD5
+
+
+#: (payload md5, decoded-raster md5) per case of
+#: test_jpeg_encoders_golden_bytes
+GOLDEN_JPEG_MD5 = {
+    "lossless": (
+        "697addacd74f8c8c2e49714b0000cd71",
+        "9181e2218572653a192835f159841ac6",
+    ),
+    "baseline_q1": (
+        "20cac130a0d3b12a230b4d2e2f53322f",
+        "40f09f8228709651beeb4838e00beb41",
+    ),
+    "baseline_q16": (
+        "3dac92ca876ad1b5ee9022093fdf6a16",
+        "9ddc6283f88696120ece99073daf9832",
+    ),
+    "baseline_rst3": (
+        "08a5445a50af78a6c83fd4c219e2d978",
+        "40f09f8228709651beeb4838e00beb41",
+    ),
+    "progressive_bc_q1": (
+        "d1e7d06664f86abe9aa55626ea08b342",
+        "a102a54aaad77271f9db951fff313bf9",
+    ),
+    "progressive_bc_q3": (
+        "8b034e26a3b35cdb65d34c1fe2bd0640",
+        "a102a54aaad77271f9db951fff313bf9",
+    ),
+    "progressive_rand_q1": (
+        "3c8194c5097f3893cfba985822b8ffef",
+        "40f09f8228709651beeb4838e00beb41",
+    ),
+    "progressive_rand_q3": (
+        "dcbfb71ad17568ee4e1c4bef5f5cf2c7",
+        "cd215b477d21efe32f27bcddf4c03218",
+    ),
+}
