@@ -235,10 +235,19 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate pairs via banded LSH (:func:`minhash_lsh_pairs`),
+    ordered for output."""
+    return minhash_lsh_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs via banded LSH: docs sharing any full band of 4
     minhashes become candidates (equi-join — THE property that scales this
     to 100 TB: no all-pairs comparison ever happens), then candidates are
-    scored by signature agreement and kept at est-Jaccard >= 0.5."""
+    scored by signature agreement and kept at est-Jaccard >= 0.5.
+    Unordered: the consumers (:func:`llm_corpus_clean`,
+    :func:`dedup_minhash_clusters`) join or aggregate it, and a global sort
+    here costs them a range-sampling job and a sort."""
     d = load(spark, sf_dir, "documents")
     sigs = minhash_signatures(d)
     bands = sigs.select(
@@ -291,14 +300,8 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.max("n_eq").alias("n_eq"))
     )
-    return (
-        scored.filter(F.col("n_eq") >= N_HASHES // 2)
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_eq") / float(N_HASHES)).alias("est_jaccard"),
-        )
-        .orderBy("doc_a", "doc_b")
+    return scored.filter(F.col("n_eq") >= N_HASHES // 2).select(
+        "doc_a", "doc_b", (F.col("n_eq") / float(N_HASHES)).alias("est_jaccard")
     )
 
 
@@ -385,7 +388,7 @@ def llm_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     near_losers = (
-        dedup_minhash_lsh_pairs(spark, sf_dir)
+        minhash_lsh_pairs(spark, sf_dir)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -451,7 +454,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join. The oracle computes the same fixpoint with DuckDB's
     WITH RECURSIVE — two unrelated fixpoint engines agreeing on every
     component."""
-    pairs = dedup_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = min_label_components(pairs)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")

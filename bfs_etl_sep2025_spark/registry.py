@@ -73,6 +73,11 @@ PLAN_CHANGED: tuple[str, ...] = (
     "stream_typed_state_profile",
     # LSH band gate: per-bucket state through applyInPandasWithState
     "stream_lsh_dedup_gate",
+    # one JPEG core: chunked FDCT/IDCT and one shared UDF pipeline
+    "multimodal_decode_jpeg_baseline",
+    "multimodal_decode_jpeg_progressive",
+    # LSH pairs feed the min-label engine unsorted
+    "dedup_minhash_clusters",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

@@ -540,6 +540,45 @@ def test_jpeg_truncated_entropy_stream_raises_value_error():
             dec(cut)
 
 
+def test_jpeg_corrupt_header_bytes_raise_value_error():
+    """Every header byte (SOI through the first SOS header), zeroed or
+    complemented, either still decodes or raises ValueError —
+    never struct.error or IndexError — through the process decoder and
+    decode_jpeg, for all three processes and a restart-interval stream.
+    Two probes must refuse: a zeroed SOF length (byte 74 of a 32x32
+    baseline payload) and a DHT BITS count past its symbol list (byte
+    89); so must a stream of nothing but fill bytes."""
+    from bfs_etl_sep2025_spark.operators.multimodal import (
+        decode_jpeg,
+        decode_jpeg_progressive,
+        encode_jpeg_progressive,
+    )
+
+    # block-constant: a short entropy segment keeps the ~2k decodes fast
+    px = _block_constant_raster([3, 250, 128, 77, 19])
+    baseline = encode_jpeg_baseline(px, 32, 32)
+    for buf, dec in (
+        (baseline, decode_jpeg_baseline),
+        (encode_jpeg_baseline(px, 32, 32, restart_interval=3),
+         decode_jpeg_baseline),
+        (encode_jpeg_progressive(px, 32, 32), decode_jpeg_progressive),
+        (encode_jpeg_lossless(px[:192]), decode_jpeg_lossless),
+    ):
+        for i in range(2, buf.index(b"\xff\xda") + 10):
+            for v in {0, buf[i] ^ 0xFF}:
+                bad = buf[:i] + bytes((v,)) + buf[i + 1 :]
+                for f in (dec, decode_jpeg):
+                    try:
+                        f(bad)
+                    except ValueError:
+                        pass
+    for i, v in ((74, 0), (89, 1)):
+        with pytest.raises(ValueError):
+            decode_jpeg_baseline(baseline[:i] + bytes((v,)) + baseline[i + 1 :])
+    with pytest.raises(ValueError):
+        decode_jpeg(b"\xff\xd8" + b"\xff" * 4)
+
+
 # -- progressive JPEG: T.81 Annex G over the baseline machinery (r9) ---------
 
 
@@ -711,20 +750,24 @@ def test_batched_dct_bit_identical():
         assert ib[b].tolist() == scalar, f"idct block {b} diverged"
 
 def test_jpeg_progressive_batch_twins_identical():
-    """The r11 batch twins (one FDCT/IDCT across an equal-geometry batch)
-    must be BYTE-identical per asset to the per-asset functions — payload
-    bytes from the encoder, raster bytes from the decoder — on
-    block-constant fixtures, arbitrary rasters, several quants, and mixed
-    batches (which fall back to per-asset back halves)."""
+    """The chunked batch paths (one FDCT or IDCT per
+    ``_DCT_CHUNK_BLOCKS``-block group of assets) must be BYTE-identical
+    per asset to one-image calls — payload bytes on the encode side,
+    raster bytes on the decode side — for both DCT processes, on
+    block-constant fixtures and arbitrary rasters in a batch spanning
+    two chunks, and on a mixed batch (several quants and processes,
+    which splits into runs)."""
     import hashlib
     import random
 
     from bfs_etl_sep2025_spark.operators.multimodal import (
         _block_constant_raster,
-        decode_jpeg_progressive,
-        decode_jpeg_progressive_batch,
+        _jpeg_baseline_payload,
+        _jpeg_dct_blocks,
+        _jpeg_decode,
+        _jpeg_progressive_payload,
+        decode_jpeg,
         encode_jpeg_progressive,
-        encode_jpeg_progressive_batch,
     )
 
     digests = [
@@ -736,35 +779,32 @@ def test_jpeg_progressive_batch_twins_identical():
         bytes(rng.randrange(256) for _ in range(32 * 32)) for _ in range(8)
     ]
 
-    batch_payloads = encode_jpeg_progressive_batch(rasters, 32, 32)
+    blocks = list(_jpeg_dct_blocks(rasters, 32, 32, 1))
+    batch_payloads = [_jpeg_progressive_payload(b, 32, 32, 1) for b in blocks]
     assert batch_payloads == [
         encode_jpeg_progressive(r, 32, 32) for r in rasters
     ]
-    batch_decoded = decode_jpeg_progressive_batch(batch_payloads)
-    assert [
-        (w, h, bytes(px)) for w, h, px in batch_decoded
-    ] == [
-        (w, h, bytes(px))
-        for w, h, px in map(decode_jpeg_progressive, batch_payloads)
+    assert [_jpeg_baseline_payload(b, 32, 32, 1) for b in blocks] == [
+        encode_jpeg_baseline(r, 32, 32) for r in rasters
+    ]
+    assert _jpeg_decode(batch_payloads) == [
+        decode_jpeg(p) for p in batch_payloads
     ]
 
-    # mixed-quant batch: the uniform fast path must not fire, and the
-    # fallback must still match per-asset decoding exactly
+    # mixed batch: runs of one geometry and quant share a pass, and every
+    # asset still matches its one-image decode
     mixed = [
         encode_jpeg_progressive(rasters[0], 32, 32, quant=1),
         encode_jpeg_progressive(rasters[1], 32, 32, quant=3),
+        encode_jpeg_baseline(rasters[2], 32, 32, quant=3),
+        encode_jpeg_lossless(rasters[3], 32, 32),
+        encode_jpeg_baseline(rasters[4], 32, 32, quant=1),
     ]
-    assert [
-        (w, h, bytes(px))
-        for w, h, px in decode_jpeg_progressive_batch(mixed)
-    ] == [
-        (w, h, bytes(px))
-        for w, h, px in map(decode_jpeg_progressive, mixed)
-    ]
+    assert _jpeg_decode(mixed) == [decode_jpeg(p) for p in mixed]
 
     # degenerate inputs
-    assert encode_jpeg_progressive_batch([], 32, 32) == []
-    assert decode_jpeg_progressive_batch([]) == []
+    assert list(_jpeg_dct_blocks([], 32, 32, 1)) == []
+    assert _jpeg_decode([]) == []
 
 
 def test_jpeg_encoders_golden_bytes():

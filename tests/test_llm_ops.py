@@ -121,9 +121,9 @@ def test_ivf_codebook_over_guard_uses_two_level(spark, monkeypatch):
 
 def test_multimodal_decode_is_stubbed():
     """Only genuinely library-less codecs stay stubbed: an UNKNOWN format
-    raises the honest STUB marker, while PPM/PNG/JPEG (baseline AND
-    lossless, as of r8) decode for real (tests/test_codecs.py), and a
-    JPEG with an unsupported process names the real cause."""
+    raises the honest STUB marker, while PPM, PNG and JPEG (lossless,
+    baseline and progressive) decode for real (tests/test_codecs.py), and
+    a JPEG stream without a frame header names the real cause."""
     from bfs_etl_sep2025_spark.operators.multimodal import decode_image
 
     with pytest.raises(NotImplementedError, match="STUB"):
