@@ -301,7 +301,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("n_eq").alias("n_eq"))
     )
     return scored.filter(F.col("n_eq") >= N_HASHES // 2).select(
-        "doc_a", "doc_b", (F.col("n_eq") / float(N_HASHES)).alias("est_jaccard")
+        "doc_a",
+        "doc_b",
+        (F.col("n_eq") / float(N_HASHES)).alias("est_jaccard"),
     )
 
 

@@ -542,8 +542,8 @@ def test_jpeg_truncated_entropy_stream_raises_value_error():
 
 def test_jpeg_corrupt_header_bytes_raise_value_error():
     """Every header byte (SOI through the first SOS header), zeroed or
-    complemented, either still decodes or raises ValueError —
-    never struct.error or IndexError — through the process decoder and
+    complemented, either still decodes or raises ValueError — never
+    struct.error or IndexError — through the process decoder and
     decode_jpeg, for all three processes and a restart-interval stream.
     Two probes must refuse: a zeroed SOF length (byte 74 of a 32x32
     baseline payload) and a DHT BITS count past its symbol list (byte
@@ -573,8 +573,9 @@ def test_jpeg_corrupt_header_bytes_raise_value_error():
                     except ValueError:
                         pass
     for i, v in ((74, 0), (89, 1)):
+        bad = baseline[:i] + bytes((v,)) + baseline[i + 1 :]
         with pytest.raises(ValueError):
-            decode_jpeg_baseline(baseline[:i] + bytes((v,)) + baseline[i + 1 :])
+            decode_jpeg_baseline(bad)
     with pytest.raises(ValueError):
         decode_jpeg(b"\xff\xd8" + b"\xff" * 4)
 
