@@ -1,10 +1,11 @@
 """One fixpoint driver for the iterative operators.
 
-Spark has no recursive CTE, so PageRank, connected components, k-core,
-BFS (``graph.py``) and the near-duplicate clusters (``dedup.py``) iterate
-a DataFrame to a fixpoint from the driver, all through :func:`fixpoint`,
-with one lineage cut (:func:`materialize`) and one min-label engine
-(:func:`min_label_components`) for both component operators.
+Spark has no recursive CTE, so PageRank, connected components, k-core
+(``graph.py``) and the near-duplicate clusters (``dedup.py``) iterate a
+DataFrame to a fixpoint from the driver, all through :func:`fixpoint`,
+with one lineage cut (:func:`materialize`, which BFS's layer loop uses
+too) and one min-label engine (:func:`min_label_components`) for both
+component operators.
 """
 
 from __future__ import annotations
@@ -61,7 +62,7 @@ def fixpoint(
     each round costs one probe. Without ``probe`` every round runs. With
     ``name``, reaching the bound unconverged raises, since the last state
     would be a silently wrong answer; without it the bound is part of the
-    query (BFS's hop cap) and the last state is the result."""
+    query (PageRank's iteration count) and the last state is the result."""
     last = probe(state) if probe is not None else None
     for _ in range(rounds):
         state = materialize(step(state))

@@ -30,16 +30,16 @@ Scale notes (100 TB):
   The worst enemy is a hub node (degree d -> d^2 wedge rows): real
   deployments cap or sample hub adjacency; here degrees are bounded by the
   bucket rule.
-- PageRank, connected components, k-core and BFS iterate on
-  ``_fixpoint.fixpoint``: one loop and one lineage cut, reliable when a
-  checkpoint directory is set, so a lost executor does not lose the state.
+- PageRank, connected components and k-core iterate on
+  ``_fixpoint.fixpoint``, and BFS expands layer by layer; all cut lineage
+  with ``_fixpoint.materialize``, reliable when a checkpoint directory is
+  set, so a lost executor does not lose the state.
 - Everything emitted is integer (counts, degrees, node ids) — zero float
   parity surface.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
 import threading
 
@@ -1301,16 +1301,16 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     user from the influencer core" primitive behind influence radius,
     notification fan-out tiers, and landmark-based distance sketches.
 
-    FRONTIER EXPANSION on the shared ``_fixpoint.fixpoint`` loop. The
-    frontier formulation is the scale-correct BFS: each round joins only
-    the NEWLY settled nodes (the last layer, not the whole distance table)
-    against the symmetric edge list, left-anti-joins out already settled
-    nodes, and unions one (node, k) layer — every edge is relaxed at most
-    once per endpoint settle, so total shuffle across all rounds is
-    O(E + V) ids, not O(rounds * E). Lineage cut per round; early exit
-    when a round settles nothing (the settled count stops growing). The
-    hop cap is query semantics, so reaching it returns, never raises. The
-    oracle's recursive CTE does the same expansion with UNION dedup and
+    FRONTIER EXPANSION, one hop layer per round. The frontier
+    formulation is the scale-correct BFS: each round joins only the NEWLY
+    settled nodes (the last layer, not the whole distance table) against
+    the symmetric edge list, left-anti-joins out already settled nodes,
+    and unions one (node, k) layer — every edge is relaxed at most once
+    per endpoint settle, so total shuffle across all rounds is O(E + V)
+    ids, not O(rounds * E). Lineage cut per round
+    (``_fixpoint.materialize``); early exit at the first empty layer,
+    found by a limit-1 test of the newest layer. The hop cap is query
+    semantics, so reaching it returns, never raises. The oracle's recursive CTE does the same expansion with UNION dedup and
     the same {_BFS_MAX}-hop guard, so nodes farther than the cap (or
     unreachable) are absent from BOTH engines. Integers everywhere;
     agreement exact."""
@@ -1330,22 +1330,25 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s").alias("node"), F.lit(0).cast("bigint").alias("dist")
         )
     )
-    hops = itertools.count(1)
-
-    def expand(settled: DataFrame) -> DataFrame:
-        k = next(hops)
+    settled = materialize(seeds)
+    for k in range(1, _BFS_MAX + 1):
         frontier = settled.filter(F.col("dist") == k - 1)
+        # one limit-1 job (a count is two under AQE): stop at the first
+        # empty layer, which on an empty graph is the seed layer
+        if not frontier.head(1):
+            break
         reached = (
             sym.join(frontier.select(F.col("node").alias("s")), "s")
             .select(F.col("d").alias("node"))
             .distinct()
             .join(settled.select("node"), "node", "left_anti")
         )
-        return settled.unionByName(
+        # the new layer leads the union, so the next round's limit-1 test
+        # finds it in the first partitions it reads
+        settled = materialize(
             reached.select("node", F.lit(k).cast("bigint").alias("dist"))
+            .unionByName(settled)
         )
-
-    settled = fixpoint(materialize(seeds), expand, _BFS_MAX, DataFrame.count)
     return settled.select(
         F.col("node").alias("user_id"), "dist"
     ).orderBy("user_id")

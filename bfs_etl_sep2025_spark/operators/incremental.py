@@ -56,9 +56,9 @@ from bfs_etl_sep2025_spark.operators.dedup import (
     minhash_signatures,
 )
 from bfs_etl_sep2025_spark.operators.similarity import (
-    MAX_BROADCAST_CENTROIDS,
     SEMDEDUP_STRIDE,
     SEMDEDUP_TAU,
+    _codebook,
     _ivf_assign,
     _norm_arr,
     _sql_dot,
@@ -97,6 +97,24 @@ def fingerprint_batch(docs: DataFrame) -> DataFrame:
         docs.select("doc_id", F.md5("text").alias("h_exact"))
         .join(sigs, "doc_id")
         .select("doc_id", "h_exact", "sig", F.array(*band_cols).alias("bands"))
+    )
+
+
+def arrival_batches(
+    df: DataFrame, id_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The arrival simulation of the incremental queries: ``df`` split into
+    three contiguous ``id_col`` ranges at its exact tertiles (sort-based
+    ``percentile``, deterministic). Two scalars reach the driver; nothing
+    about the operator is driver-side."""
+    t1, t2 = df.agg(
+        F.expr(f"percentile({id_col}, array(0.3333333333, 0.6666666666))")
+    ).first()[0]
+    ids = F.col(id_col)
+    return (
+        df.filter(ids <= t1),
+        df.filter((ids > t1) & (ids <= t2)),
+        df.filter(ids > t2),
     )
 
 
@@ -271,26 +289,15 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     proof of the incremental path against a full rescan, re-checked by
     the external driver every round it's sampled."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # arrival simulation: three contiguous id ranges; exact percentile
-    # (sort-based, deterministic) — two scalars to the driver, nothing
-    # about the OPERATOR is driver-side
-    t1, t2 = d.agg(
-        F.expr("percentile(doc_id, array(0.3333333333, 0.6666666666))")
-    ).first()[0]
     store = VersionedTable(
         spark, scratch_dir("sig_store_")
-    )
-    parts = (
-        d.filter(F.col("doc_id") <= t1),
-        d.filter((F.col("doc_id") > t1) & (F.col("doc_id") <= t2)),
-        d.filter(F.col("doc_id") > t2),
     )
     # per-batch verdicts come from the identical prior pool (earlier deltas
     # ride their in-memory checkpoints instead of a store re-read), then
     # the whole run commits in ONE multi-batch MERGE
     pending: list[DataFrame] = []
     verdicts = None
-    for batch in parts:
+    for batch in arrival_batches(d, "doc_id"):
         v = sync_batch(spark, batch, store, pending=pending)
         verdicts = v if verdicts is None else verdicts.unionByName(v)
     commit_pending(store, pending, keys=["doc_id"])
@@ -320,7 +327,7 @@ def _sem_sync_batch(spark, batch, cent, store, pending):
     appended to ``pending``, and the caller commits via
     :func:`commit_pending`."""
     assigned = (
-        _ivf_assign(batch, cent, MAX_BROADCAST_CENTROIDS)
+        _ivf_assign(batch, cent)
         .filter(F.col("cr") == 1)
         .select("vec_id", "cell", "embedding", "nrm")
         .localCheckpoint(eager=True)  # feeds the pool, the rerank, the MERGE
@@ -425,23 +432,12 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = e.select(
         "vec_id", "embedding", _norm_arr("embedding").alias("nrm")
     ).localCheckpoint(eager=True)
-    cent = n.filter(F.col("vec_id") % SEMDEDUP_STRIDE == 0).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    ).localCheckpoint(eager=True)
-    t1, t2 = n.agg(
-        F.expr("percentile(vec_id, array(0.3333333333, 0.6666666666))")
-    ).first()[0]
+    cent = _codebook(n, SEMDEDUP_STRIDE).localCheckpoint(eager=True)
     store = VersionedTable(spark, scratch_dir("sem_store_"))
     # one multi-batch MERGE per run, as in dedup_incremental_minhash
     pending: list[DataFrame] = []
     verdicts = None
-    for batch in (
-        n.filter(F.col("vec_id") <= t1),
-        n.filter((F.col("vec_id") > t1) & (F.col("vec_id") <= t2)),
-        n.filter(F.col("vec_id") > t2),
-    ):
+    for batch in arrival_batches(n, "vec_id"):
         v = _sem_sync_batch(spark, batch, cent, store, pending=pending)
         verdicts = v if verdicts is None else verdicts.unionByName(v)
     commit_pending(store, pending, keys=["vec_id"])

@@ -1,11 +1,17 @@
 """Similarity search over the embedding column (Tier C).
 
-Three operators on ``embeddings`` (64-dim float vectors):
+Operators on ``embeddings`` (64-dim float vectors), in three families:
 
-- brute-force cosine top-k       — the exact baseline (bounded query set)
-- LSH-bucketed cosine top-k      — the scale path: random-hyperplane sketch
-                                   -> equi-join on bucket -> exact rerank
-- cosine range search (near-dup) — all pairs above a similarity threshold
+- cosine top-k search — brute force (the exact baseline over a bounded
+  query set), single- and two-table hyperplane LSH, IVF, product
+  quantization and incremental IVF, plus the LSH recall harness. Every
+  one builds its probes with :func:`_probes`, scores them with
+  :func:`_probe_scores` and ranks with :func:`_top_k`, the one place the
+  cross-engine top-k order (cosine DESC, then ``vec_id``) is written.
+- near-duplicate pairs — exact all-pairs, banded LSH, the threshold
+  sweeps and SemDeDup (below).
+- vector transforms — int8 quantization, random projection and k-means
+  codebook training.
 
 Engine-exact arithmetic: every dot product is an ORDERED left-associated
 fold of double-promoted elementwise products. Spark-side every dot/norm/
@@ -318,6 +324,47 @@ def exact_rerank(vecs: DataFrame, cand: DataFrame, tau: float) -> DataFrame:
     return barrier_filter(scored, F.col("cosine") >= tau)
 
 
+# -- probe -> score -> rank (every top-k query) ------------------------------
+
+
+def _probes(rows: DataFrame, *keys) -> DataFrame:
+    """The probe frame ``(query_id, q_emb, q_nrm, *keys)`` of ``rows``,
+    which carry ``vec_id``, ``embedding`` and ``nrm``."""
+    return rows.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        *keys,
+    )
+
+
+def _probe_scores(members: DataFrame, probes: DataFrame, on, *keep) -> DataFrame:
+    """``(query_id, vec_id, *keep, cosine)`` for every member joined to a
+    broadcast probe on ``on`` (a key name or a join condition; ``None``
+    pairs every member with every probe), the query itself excluded. The
+    cosine is the ordered-fold dot (:func:`_dot_arr`) over both norms — the
+    value the oracle folds."""
+    cosine = _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
+    return (
+        members.join(F.broadcast(probes), on)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", *keep, cosine.alias("cosine"))
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k contract every query here shares with its oracle: rank
+    each ``query_id``'s rows by cosine DESC, then ``vec_id`` (a total
+    order, so both engines pick the same rows), keep ``rnk <= k`` and
+    order by ``(query_id, rnk)``."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+    return (
+        scored.select("*", F.row_number().over(w).alias("rnk"))
+        .filter(F.col("rnk") <= k)
+        .orderBy("query_id", "rnk")
+    )
+
+
 # ---------------------------------------------------------------------------
 
 
@@ -354,27 +401,8 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     r02 item 2)."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    q = n.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    scored = (
-        n.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            (
-                _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 10)
-        .orderBy("query_id", "rnk")
-    )
+    q = _probes(n.filter(F.col("vec_id") < 5))
+    return _top_k(_probe_scores(n, q, None), 10)
 
 
 @query(
@@ -419,43 +447,30 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm_arr("embedding").alias("nrm"),
         _bucket_arr("embedding").alias("bucket"),
     )
-    q = n.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "bucket",
-    )
-    scored = (
-        n.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            (
-                _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 3)
-        .orderBy("query_id", "rnk")
-    )
+    q = _probes(n.filter(F.col("vec_id") < 20), "bucket")
+    return _top_k(_probe_scores(n, q, "bucket"), 3)
 
 
 N_PROBE = 2  # IVF cells probed per query
 CENTROID_STRIDE = 50  # vec_id % stride == 0 -> centroid (deterministic "kmeans")
-#: hard ceiling on codebook size for the broadcast assignment join — ~64k
-#: cells x (embedding + norm) stays comfortably under the 8 GB broadcast
-#: limit at dim<=4096; past this the assignment switches to the two-level
-#: codebook path (coarse-quantize the centroids, assign in two hops)
-MAX_BROADCAST_CENTROIDS = 65536
 
 
-def _assign_matmul(n, cent):
-    """Exhaustive vector->cell assignment as ONE Arrow-batched BLAS matmul
-    per partition against the broadcast codebook.
+def _codebook(n: DataFrame, stride: int) -> DataFrame:
+    """The fixed stride codebook ``(cell, c_emb)``: every ``stride``-th
+    vector of ``n`` seeds a cell named by its ``vec_id`` (a real deployment
+    trains k-means; the dataflow is identical)."""
+    return n.filter(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias("cell"), F.col("embedding").alias("c_emb")
+    )
+
+
+def _ivf_assign(n: DataFrame, cent: DataFrame) -> DataFrame:
+    """Assign every vector of ``n`` to its IVF cells, returning ``(vec_id,
+    embedding, nrm, cell, cr)`` with ``cr`` = rank of the cell by
+    similarity (1 = nearest, emitted through ``N_PROBE``; callers keep
+    ``cr == 1`` as membership and every row as a probe). One Arrow-batched
+    BLAS matmul per partition against the broadcast codebook ``cent``
+    (:func:`_codebook`).
 
     The row-expression alternative (vectors x centroids broadcast join +
     codegen'd unrolled dots) materializes |corpus| x |cells| rows and
@@ -464,7 +479,10 @@ def _assign_matmul(n, cent):
     Assignment is the one place that is a dense all-pairs product by
     definition (k-means assignment), which is exactly what a batched
     ``V @ C.T`` does ~100x faster; this is the sanctioned Pandas-UDF
-    boundary (like multimodal decode), NOT a hot-path row UDF.
+    boundary (like multimodal decode), NOT a hot-path row UDF. There is
+    no second regime for large codebooks: routing vectors through a
+    coarse codebook first would score those coarse pairs with the row
+    expression above, at ~36x this matmul's per-pair cost.
 
     Bitwise-parity note: the emitted result columns of every similarity
     query are cosines computed by the ordered-fold expressions
@@ -476,16 +494,15 @@ def _assign_matmul(n, cent):
     scale every cell's score equally and are dropped from the ranking;
     ties rank by cell id via the stable argsort over id-sorted cells.
 
-    Scale: the codebook is collected once (bounded by
-    ``MAX_BROADCAST_CENTROIDS`` ~64k cells x DIM doubles = 32 MB), shipped
-    as an explicit Spark broadcast; each executor does a
-    (batch x DIM) @ (DIM x cells) matmul per Arrow batch — compute
+    Scale: the codebook is collected once (cells x DIM doubles: 64k cells
+    are 32 MB), shipped as an explicit Spark broadcast; each executor does
+    a (batch x DIM) @ (DIM x cells) matmul per Arrow batch — compute
     proportional to corpus x cells with BLAS constants, no shuffle at all
     until the downstream cell-keyed join."""
     import numpy as np
 
     spark = n.sparkSession
-    rows = cent.select("cell", "c_emb").collect()  # codebook, guard-bounded
+    rows = cent.select("cell", "c_emb").collect()  # the codebook
     cells = np.array([r.cell for r in rows], dtype=np.int64)
     order = np.argsort(cells)
     cells = cells[order]
@@ -517,103 +534,6 @@ def _assign_matmul(n, cent):
     ).select(
         "vec_id", "embedding", "nrm", "cell",
         (F.col("__pos") + 1).cast("int").alias("cr"),
-    )
-
-
-def _ivf_assign(n, cent, max_broadcast: int):
-    """Assign every vector to its IVF cell, returning ``(vec_id, embedding,
-    nrm, cell, cr)`` with ``cr`` = rank of the cell by similarity (1 =
-    nearest, kept through ``N_PROBE``; callers keep ``cr == 1`` as
-    membership and ``cr <= N_PROBE`` as probes).
-
-    The ranking windows operate on NARROW ``(vec_id, cell, sim)`` rows —
-    the vectors x candidate-cells product must never carry the embedding
-    arrays through its shuffle/sort (at sf1 that wide window was ~4 GB of
-    shuffled arrays and 55x slower than the plan below; the arrays are
-    re-attached afterwards by one equi-join against the corpus, keyed on
-    vec_id).
-
-    - codebook fits the broadcast guard -> one Arrow-batched BLAS matmul
-      against the broadcast codebook (:func:`_assign_matmul`) — dense
-      all-pairs assignment without materializing the pair rows.
-    - larger codebook -> TWO-LEVEL: pick a coarse sub-codebook (every
-      ``group``-th centroid, deterministic by cell id), route each centroid
-      and each vector to its nearest coarse cell with a small broadcast
-      join, then rank only the centroids sharing the vector's coarse cell —
-      an equi-join on ``coarse_id``, never a vectors x all-centroids
-      product. This is the standard IVF-IMI approximation: a vector whose
-      true nearest centroid lives in a neighboring coarse cell may be
-      assigned its best WITHIN-coarse-cell centroid instead; recall is
-      recovered at query time by probing ``cr <= N_PROBE`` cells.
-    """
-    sim_vc = _dot_arr("embedding", "c_emb") / (F.col("nrm") * F.col("c_nrm"))
-    w_sim = W.partitionBy("vec_id").orderBy(
-        F.col("__sim").desc(), F.col("cell")
-    )
-    n_cells = cent.count()
-    if n_cells <= max_broadcast:
-        return _assign_matmul(n, cent)
-    else:
-        # ---- two-level path: coarse codebook of ceil(n_cells/group) cells
-        group = -(-n_cells // max_broadcast)  # centroids per coarse cell
-        # cells are vec_ids at CENTROID_STRIDE spacing -> every group-th
-        # (deterministic, no global window needed)
-        coarse = cent.filter(
-            (F.col("cell") % (CENTROID_STRIDE * group)) == 0
-        ).select(
-            F.col("cell").alias("coarse_id"),
-            F.col("c_emb").alias("g_emb"),
-            F.col("c_nrm").alias("g_nrm"),
-        )
-        # hop 1a: centroid -> nearest coarse centroid (tiny broadcast;
-        # codebook-sized input, wide rows are fine here)
-        sim_cg = _dot_arr("c_emb", "g_emb") / (
-            F.col("c_nrm") * F.col("g_nrm")
-        )
-        w_cg = W.partitionBy("cell").orderBy(
-            sim_cg.desc(), F.col("coarse_id")
-        )
-        cent_routed = (
-            cent.join(F.broadcast(coarse))
-            .select(
-                "cell", "c_emb", "c_nrm", "coarse_id",
-                F.row_number().over(w_cg).alias("gr"),
-            )
-            .filter(F.col("gr") == 1)
-            .drop("gr")
-        )
-        # hop 1b: vector -> nearest coarse centroid; narrow rank + rejoin
-        sim_vg = _dot_arr("embedding", "g_emb") / (
-            F.col("nrm") * F.col("g_nrm")
-        )
-        w_vg = W.partitionBy("vec_id").orderBy(
-            F.col("__gsim").desc(), F.col("coarse_id")
-        )
-        vec_route = (
-            n.join(F.broadcast(coarse))
-            .select("vec_id", "coarse_id", sim_vg.alias("__gsim"))
-            .select(
-                "vec_id", "coarse_id",
-                F.row_number().over(w_vg).alias("gr"),
-            )
-            .filter(F.col("gr") == 1)
-            .select("vec_id", "coarse_id")
-        )
-        # hop 2: score only the ~group centroids in the vector's coarse
-        # cell (equi-join on coarse_id re-attaches the vector's array)
-        cand = (
-            vec_route.join(n, "vec_id")
-            .join(cent_routed, "coarse_id")
-            .select("vec_id", "cell", sim_vc.alias("__sim"))
-        )
-    ranked = (
-        cand.select(
-            "vec_id", "cell", F.row_number().over(w_sim).alias("cr")
-        )
-        .filter(F.col("cr") <= N_PROBE)
-    )
-    return ranked.join(n, "vec_id").select(
-        "vec_id", "embedding", "nrm", "cell", "cr"
     )
 
 
@@ -656,60 +576,21 @@ def _ivf_assign(n, cent, max_broadcast: int):
 )
 def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: vectors are assigned to their nearest 'centroid'
-    (deterministic coarse codebook: every {CENTROID_STRIDE}th vector — a
-    real deployment trains k-means, the dataflow is identical); each query
+    (deterministic codebook: every {CENTROID_STRIDE}th vector — a real
+    deployment trains k-means, the dataflow is identical); each query
     probes its {N_PROBE} nearest cells and reranks only their members.
 
-    Scale shape: assignment is a broadcast join against the small codebook
-    + per-row argmax; search joins queries to cells on the cell id —
-    scan cost per query is |probed cells| not |corpus|, the property that
-    holds at billions of vectors.
-
-    The vectors x centroids assignment join is only safe while the codebook
-    is broadcast-sized: past ``MAX_BROADCAST_CENTROIDS`` cells,
-    :func:`_ivf_assign` switches to the two-level codebook (coarse-quantize
-    the centroids themselves, assign in two broadcast hops) instead of
-    silently planning a giant cartesian (VERDICT r01 item 6, r3 item 5).
-    At this fixture's codebook size the driver-checked path is the
-    single-hop broadcast; the two-level path is exercised by
-    ``tests/test_llm_ops.py`` with the guard lowered."""
+    Scale shape: assignment is one BLAS argmax per Arrow batch against the
+    broadcast codebook (:func:`_ivf_assign`), never a vectors x centroids
+    row product; search joins queries to cells on the cell id — scan cost
+    per query is |probed cells| not |corpus|, the property that holds at
+    billions of vectors."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    cent = n.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    assign = _ivf_assign(n, cent, MAX_BROADCAST_CENTROIDS)
-    members = assign.filter(F.col("cr") == 1).select(
-        "vec_id", "embedding", "nrm", "cell"
-    )
-    probes = (
-        assign.filter((F.col("cr") <= N_PROBE) & (F.col("vec_id") < 10))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            "cell",
-        )
-    )
-    scored = (
-        members.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            (
-                _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 3)
-        .orderBy("query_id", "rnk")
-    )
+    assign = _ivf_assign(n, _codebook(n, CENTROID_STRIDE))
+    members = assign.filter(F.col("cr") == 1)
+    probes = _probes(assign.filter(F.col("vec_id") < 10), "cell")
+    return _top_k(_probe_scores(members, probes, "cell"), 3)
 
 
 @query(
@@ -1100,35 +981,15 @@ def similarity_topk_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFram
         _bucket_arr("embedding").alias("bucket_a"),
         _bucket_arr("embedding", PLANES_B).alias("bucket_b"),
     )
-    q = n.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
+    q = _probes(
+        n.filter(F.col("vec_id") < 20),
         F.col("bucket_a").alias("qa"),
         F.col("bucket_b").alias("qb"),
     )
-    cosine = (
-        _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-    ).alias("cosine")
-
-    def branch(bucket_col: str, q_bucket: str) -> DataFrame:
-        return (
-            n.join(
-                F.broadcast(q), F.col(bucket_col) == F.col(q_bucket)
-            )
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id", cosine)
-        )
-
-    scored = branch("bucket_a", "qa").unionByName(
-        branch("bucket_b", "qb")
+    scored = _probe_scores(n, q, F.col("bucket_a") == F.col("qa")).unionByName(
+        _probe_scores(n, q, F.col("bucket_b") == F.col("qb"))
     ).distinct()
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 3)
-        .orderBy("query_id", "rnk")
-    )
+    return _top_k(scored, 3)
 
 
 @query(
@@ -1202,28 +1063,10 @@ def similarity_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm_arr("embedding").alias("nrm"),
         _bucket_arr("embedding").alias("bucket"),
     )
-    q = n.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("qb"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        (
-            _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-        ).desc(),
-        F.col("vec_id"),
-    )
-    truth = (
-        n.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 10)
-        .select("query_id", "vec_id")
-    )
-    cand = (
-        n.join(F.broadcast(q), F.col("bucket") == F.col("qb"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
+    q = _probes(n.filter(F.col("vec_id") < 20), F.col("bucket").alias("qb"))
+    truth = _top_k(_probe_scores(n, q, None), 10).select("query_id", "vec_id")
+    cand = _probe_scores(n, q, F.col("bucket") == F.col("qb")).select(
+        "query_id", "vec_id"
     )
     cand_n = cand.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_cand")
@@ -1664,9 +1507,8 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "m")
         .agg((F.min("dk") % PQ_KS).cast("int").alias("code"))
     )
-    q = n.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    nn = n.select("*", _norm_arr("embedding").alias("nrm"))
+    q = _probes(nn.filter(F.col("vec_id") < 10))
     lut = (
         q.crossJoin(F.broadcast(cb_df))
         .crossJoin(F.broadcast(ms))
@@ -1693,35 +1535,11 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).filter(F.col("srn") <= PQ_SHORTLIST)
     )
     # exact rerank of the shortlist only
-    nn = n.select(
-        "vec_id", "embedding", _norm_arr("embedding").alias("nrm")
+    pq_dist = F.col("adist_int").cast("double") / F.lit(float(_PQ_SCALE))
+    rr = _probe_scores(
+        short.join(nn, "vec_id"), q, "query_id", pq_dist.alias("pq_dist")
     )
-    qq = q.select(
-        "query_id", "q_emb", _norm_arr("q_emb").alias("q_nrm")
-    )
-    rr = (
-        short.join(F.broadcast(qq), "query_id")
-        .join(nn, "vec_id")
-        .select(
-            "query_id",
-            "vec_id",
-            (
-                _dot_arr("q_emb", "embedding")
-                / (F.col("q_nrm") * F.col("nrm"))
-            ).alias("cosine"),
-            (F.col("adist_int").cast("double") / F.lit(float(_PQ_SCALE))).alias(
-                "pq_dist"
-            ),
-        )
-    )
-    w_rnk = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        rr.select("*", F.row_number().over(w_rnk).alias("rnk"))
-        .filter(F.col("rnk") <= 3)
-        .orderBy("query_id", "rnk")
-    )
+    return _top_k(rr.select("query_id", "vec_id", "cosine", "pq_dist"), 3)
 
 
 # -- semantic deduplication (SemDeDup) ---------------------------------------
@@ -1734,9 +1552,8 @@ SEMDEDUP_TAU = 0.40
 #: with the corpus and the cell SIZE stays ~constant — the property that
 #: keeps the within-cell quadratic pass LINEAR in corpus size (a fixed K
 #: measured 141 s at sf1 vs 28 s with this stride; at 100 TB fixed K would
-#: be quadratic death). Assignment reuses the guarded IVF machinery, so
-#: past ~64k cells it dispatches to the two-level codebook path instead of
-#: a giant broadcast.
+#: be quadratic death). Assignment is the IVF BLAS argmax
+#: (:func:`_ivf_assign`) against this broadcast codebook.
 SEMDEDUP_STRIDE = 250
 
 
@@ -1793,9 +1610,8 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus while cell size stays ~constant, making the within-cell
     quadratic pass linear in corpus size overall (measured: 28 s at sf1
     vs 141 s for a fixed-K variant of this same query). Assignment is the
-    shared guarded IVF path (:func:`_ivf_assign`): broadcast-codebook
-    BLAS argmax under ``MAX_BROADCAST_CENTROIDS``, two-level coarse
-    routing past it — never a vectors x all-centroids row product. Each
+    shared IVF path (:func:`_ivf_assign`): one BLAS argmax against the
+    broadcast codebook — never a vectors x all-centroids row product. Each
     cell is one :func:`gemm_pairs` group (cells are stride-bounded, so a
     cell is a single ~2 MB tile at any corpus size) and
     :func:`exact_rerank` re-scores the candidates — nothing all-pairs ever
@@ -1805,18 +1621,13 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     results hash-match exactly."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    cent = n.filter(F.col("vec_id") % SEMDEDUP_STRIDE == 0).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
     # r11 (guide §2.4/§5): members feeds FOUR consumers (the kernel's
     # population aggregate and tiles, both rerank legs) — un-checkpointed,
     # the assignment matmul subtree ran once per consumer (stage dump at sf1:
     # two full ArrowEvalPython assignment stages of ~12 s executor time
     # each). One eager checkpoint materializes |corpus| small rows once.
     members = (
-        _ivf_assign(n, cent, MAX_BROADCAST_CENTROIDS)
+        _ivf_assign(n, _codebook(n, SEMDEDUP_STRIDE))
         .filter(F.col("cr") == 1)
         .localCheckpoint(eager=True)
     )
@@ -1883,11 +1694,12 @@ def similarity_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook shared with ``similarity_ann_ivf`` — real deployments train
     k-means on an initial sample, same dataflow); then three arrival
     batches (contiguous ``vec_id`` ranges) are each assigned against the
-    broadcast codebook (:func:`_assign_matmul` — only the DELTA is ever
-    scanned) and MERGE-upserted into a ``VersionedTable`` postings store
-    ``(vec_id, cell)``. Search quantizes the queries fresh, probes
-    {N_PROBE} cells, and reranks ONLY members read back from the
-    incrementally-built store — so oracle parity proves the store equals
+    broadcast codebook (:func:`_ivf_assign` — only the DELTA is ever
+    scanned) and the postings ``(vec_id, cell)`` commit into a
+    ``VersionedTable`` store in one multi-batch MERGE
+    (:func:`incremental.commit_pending`). Search quantizes the queries
+    fresh, probes {N_PROBE} cells, and reranks ONLY members read back from
+    the incrementally-built store — so oracle parity proves the store equals
     the one-shot index (per-vector assignment against a FIXED codebook is
     batch-invariant by construction; the store plumbing is what is being
     verified). Emitted cosines are ordered-fold expressions over the
@@ -1897,57 +1709,22 @@ def similarity_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on ``vec_id`` (file-pruned by the store's footer ranges); the
     search joins probes to members on the cell id — per-query scan cost
     is |probed cells|, independent of corpus size OR sync count."""
+    from bfs_etl_sep2025_spark.operators.incremental import (
+        arrival_batches,
+        commit_pending,
+    )
     from bfs_etl_sep2025_spark.plans.versioned import VersionedTable
     from bfs_etl_sep2025_spark.session import scratch_dir
 
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    cent = n.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    t1, t2 = n.agg(
-        F.expr("percentile(vec_id, array(0.3333333333, 0.6666666666))")
-    ).first()[0]
+    cent = _codebook(n, CENTROID_STRIDE)
     store = VersionedTable(spark, scratch_dir("ivf_store_"))
-    for batch in (
-        n.filter(F.col("vec_id") <= t1),
-        n.filter((F.col("vec_id") > t1) & (F.col("vec_id") <= t2)),
-        n.filter(F.col("vec_id") > t2),
-    ):
-        postings = (
-            _ivf_assign(batch, cent, MAX_BROADCAST_CENTROIDS)
-            .filter(F.col("cr") == 1)
-            .select("vec_id", "cell")
-        )
-        if store.exists():
-            store.upsert(postings, keys=["vec_id"])
-        else:
-            store.create(postings)
+    pending = [
+        _ivf_assign(batch, cent).filter(F.col("cr") == 1).select("vec_id", "cell")
+        for batch in arrival_batches(n, "vec_id")
+    ]
+    commit_pending(store, pending, keys=["vec_id"])
     members = store.read().join(n, "vec_id")
-    queries = n.filter(F.col("vec_id") < 12)
-    probes = _ivf_assign(queries, cent, MAX_BROADCAST_CENTROIDS).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "cell",
-    )
-    scored = (
-        members.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            "cell",
-            (
-                _dot_arr("q_emb", "embedding") / (F.col("q_nrm") * F.col("nrm"))
-            ).alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.select("*", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 5)
-        .orderBy("query_id", "rnk")
-    )
+    probes = _probes(_ivf_assign(n.filter(F.col("vec_id") < 12), cent), "cell")
+    return _top_k(_probe_scores(members, probes, "cell", "cell"), 5)

@@ -78,6 +78,14 @@ PLAN_CHANGED: tuple[str, ...] = (
     "multimodal_decode_jpeg_progressive",
     # LSH pairs feed the min-label engine unsorted
     "dedup_minhash_clusters",
+    # one IVF assignment and one probe -> score -> rank tail
+    "similarity_ann_ivf",
+    "similarity_recall_lsh",
+    "similarity_ann_pq",
+    # postings commit once through commit_pending
+    "similarity_incremental_ivf",
+    # limit-1 test of the newest hop layer, which leads the union
+    "graph_bfs_distances",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

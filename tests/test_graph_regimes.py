@@ -276,3 +276,32 @@ def test_graph_memo_sees_rewritten_files(spark, tmp_path):
     assert want != before  # the rewrite changes the answer
     assert got == want
     graph.clear_edge_memo()
+
+
+def test_bfs_stops_at_first_empty_layer_and_returns_at_the_cap(
+    spark, monkeypatch, tmp_path
+):
+    """BFS stops at its first empty hop layer: on a graph with no edges
+    that is the seed layer, and the answer is empty. A hop cap the graph
+    outruns returns the capped distances, the same rows as the uncapped
+    answer's first hops, and never raises."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_SMOKE
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf)
+    events = pq.read_table(f"{sf}/events.parquet")
+    pq.write_table(events.slice(0, 0), f"{sf}/events.parquet")
+    try:
+        assert graph.graph_bfs_distances(spark, sf).collect() == []
+    finally:
+        graph.clear_edge_memo()
+
+    full = [tuple(r) for r in graph.graph_bfs_distances(spark, SF).collect()]
+    assert max(d for _, d in full) > 1
+    monkeypatch.setattr(graph, "_BFS_MAX", 1)
+    capped = [tuple(r) for r in graph.graph_bfs_distances(spark, SF).collect()]
+    assert capped == [(u, d) for u, d in full if d <= 1]

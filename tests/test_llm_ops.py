@@ -94,31 +94,6 @@ def test_multitable_lsh_recall_dominates_single_table(spark):
         assert multi[qid] >= c
 
 
-def test_ivf_codebook_over_guard_uses_two_level(spark, monkeypatch):
-    """Past MAX_BROADCAST_CENTROIDS the assignment no longer raises (the
-    pre-r4 behavior): it switches to the two-level codebook, the full query
-    still answers every probe, and the plan never contains a vectors x
-    all-centroids cartesian (VERDICT r02 item 6, r3 item 5)."""
-    from bfs_etl_sep2025_spark.operators import similarity
-
-    baseline = _q("similarity_ann_ivf")(spark, SF)
-    base_queries = {r.query_id for r in baseline.collect()}
-    monkeypatch.setattr(similarity, "MAX_BROADCAST_CENTROIDS", 3)
-    df = _q("similarity_ann_ivf")(spark, SF)
-    rows = df.collect()
-    assert {r.query_id for r in rows} == base_queries
-    # every probe still yields a full (or capped) top-k, ranked 1..k
-    from collections import defaultdict
-
-    per_q = defaultdict(list)
-    for r in rows:
-        per_q[r.query_id].append(r.rnk)
-    for q, rnks in per_q.items():
-        assert sorted(rnks) == list(range(1, len(rnks) + 1))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
 def test_multimodal_decode_is_stubbed():
     """Only genuinely library-less codecs stay stubbed: an UNKNOWN format
     raises the honest STUB marker, while PPM, PNG and JPEG (lossless,
@@ -214,37 +189,23 @@ def test_fixpoints_with_reliable_checkpoint_dir(spark, tmp_path, name):
     assert sc.getCheckpointDir() is None
 
 
-def test_ivf_two_level_assignment_matches_numpy_oracle(spark):
-    """With the broadcast guard lowered, _ivf_assign takes the two-level
-    codebook path (VERDICT r3 item 5). An independent numpy replay of the
-    scheme — route centroids and vectors to their nearest coarse cell,
-    then argmax within the coarse cell — must agree on every vector's
-    assigned cell."""
-    import math
-
+def test_ivf_assignment_matches_numpy_oracle(spark):
+    """_ivf_assign's BLAS argmax against an independent numpy replay on
+    sf0.1's 40-cell codebook (sf0.01 has only 4 cells): every vector gets
+    ranks 1..N_PROBE, and each rank's cell is the replay's, ranking cells
+    by cosine DESC with ties to the smaller cell."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from bfs_etl_sep2025_spark.operators import similarity as sim
     from bfs_etl_sep2025_spark.tables import load
 
-    max_bc = 3
-    e = load(spark, SF, "embeddings")
+    e = load(spark, "/root/testdata/sf0.1", "embeddings")
     n = e.select(
         "vec_id", "embedding", sim._norm_arr("embedding").alias("nrm")
     )
-    cent = n.filter(F.col("vec_id") % sim.CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cell"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    got = {
-        r.vec_id: r.cell
-        for r in sim._ivf_assign(n, cent, max_bc)
-        .filter("cr = 1")
-        .select("vec_id", "cell")
-        .collect()
-    }
+    got = {}
+    for r in sim._ivf_assign(n, sim._codebook(n, sim.CENTROID_STRIDE)).collect():
+        got.setdefault(r.vec_id, {})[r.cr] = r.cell
 
     pdf = e.toPandas().sort_values("vec_id")
     ids = pdf.vec_id.to_numpy()
@@ -252,22 +213,16 @@ def test_ivf_two_level_assignment_matches_numpy_oracle(spark):
     Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
     cent_mask = ids % sim.CENTROID_STRIDE == 0
     cells, C = ids[cent_mask], Vn[cent_mask]
-    group = math.ceil(len(cells) / max_bc)
-    coarse_mask = cells % (sim.CENTROID_STRIDE * group) == 0
-    coarse_ids, G = cells[coarse_mask], C[coarse_mask]
-
-    def route(X):  # nearest coarse cell, ties -> smaller coarse_id
-        s = X @ G.T
-        return coarse_ids[np.argmax(s, axis=1)]
-
-    cent_coarse = route(C)
-    vec_coarse = route(Vn)
-    want = {}
-    for i, vid in enumerate(ids):
-        members = cent_coarse == vec_coarse[i]
-        s = Vn[i] @ C[members].T
-        want[vid] = cells[members][np.argmax(s)]
-    assert len(got) == len(ids)  # every vector assigned exactly once
+    assert len(cells) == 40
+    S = Vn @ C.T
+    want = {
+        vid: {
+            rank + 1: cells[j]
+            for rank, j in enumerate(np.lexsort((cells, -S[i]))[: sim.N_PROBE])
+        }
+        for i, vid in enumerate(ids)
+    }
+    assert got.keys() == want.keys()  # every vector assigned
     mismatches = {v: (got[v], want[v]) for v in want if got[v] != want[v]}
     assert not mismatches, f"{len(mismatches)} mismatches: {mismatches}"
 

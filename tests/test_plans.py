@@ -4,6 +4,8 @@ or un-pushes a filter fails CI here long before it shows up at 100 TB."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from bfs_etl_sep2025_spark import registry
@@ -160,6 +162,38 @@ def test_new_ops_no_interpreted_array_hofs(spark, name):
         assert node not in plan, f"{node} in {name} plan"
 
 
+#: queries that assign vectors to IVF cells: the Arrow-batched BLAS argmax
+#: (``similarity._ivf_assign``) is their one sanctioned Python node
+_ASSIGNS_CELLS = {
+    "similarity_ann_ivf",
+    "similarity_incremental_ivf",
+    "dedup_semantic_embedding",
+}
+
+#: the exact top-k scans (brute force, recall's truth side): their probe
+#: join pairs every probe with every member by definition
+_ALL_PAIRS_PROBE_JOINS = {
+    "similarity_topk_bruteforce": 1,
+    "similarity_recall_lsh": 1,
+}
+
+
+def _probe_joins(plan: str) -> list[str]:
+    """Node names of the joins in a formatted plan whose keys or condition
+    read ``query_id``: the joins that pair probes with members."""
+    nodes = []
+    for block in re.split(r"\n(?=\(\d+\) )", plan):
+        head, _, body = block.partition("\n")
+        on = [
+            line
+            for line in body.splitlines()
+            if line.startswith(("Left keys", "Right keys", "Join condition"))
+        ]
+        if "query_id" in " ".join(on):
+            nodes.append(head)
+    return nodes
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -168,25 +202,36 @@ def test_new_ops_no_interpreted_array_hofs(spark, name):
         "similarity_topk_lsh_multitable",
         "similarity_ann_ivf",
         "similarity_cosine_neardup",
+        "similarity_ann_pq",
+        "similarity_incremental_ivf",
+        "dedup_semantic_embedding",
+        "similarity_recall_lsh",
     ],
 )
 def test_similarity_scoring_is_codegen(spark, name):
     """VERDICT r02 item 2: every similarity dot/norm/bucket must be the
     unrolled literal-index element_at chain (whole-stage codegen), never an
     interpreted lambda HOF evaluated per candidate pair. The one sanctioned
-    Python node is similarity_ann_ivf's Arrow-batched BLAS cell ASSIGNMENT
-    (`_assign_matmul`, per-vector not per-pair — measured 36x faster than
-    the codegen'd all-pairs join at sf1); row-at-a-time BatchEvalPython
-    stays banned everywhere."""
+    Python node is the Arrow-batched BLAS cell ASSIGNMENT of the queries
+    that assign cells (`_ivf_assign`, per-vector not per-pair — measured
+    36x faster than the codegen'd all-pairs join at sf1); row-at-a-time
+    BatchEvalPython stays banned everywhere. No plan has a cartesian
+    product, and every probe join outside the exact scans is an equi-join
+    on its key (bucket, cell, PQ code or query), never a nested loop."""
     plan = _plan(spark, name)
     for node in ("ArrayAggregate", "ZipWith", "ArrayTransform"):
         assert node not in plan, f"{node} in {name} plan"
     assert "BatchEvalPython" not in plan, f"row-wise Python in {name} plan"
     if name == "similarity_ann_ivf":
         assert "ArrowEvalPython" in plan  # the batched assignment boundary
-    else:
+    elif name not in _ASSIGNS_CELLS:
         assert "EvalPython" not in plan, f"EvalPython in {name} plan"
     assert "lambdafunction" not in plan.lower(), name
+    assert "CartesianProduct" not in plan, name
+    nested = [
+        j for j in _probe_joins(plan) if "NestedLoop" in j or "Cartesian" in j
+    ]
+    assert len(nested) == _ALL_PAIRS_PROBE_JOINS.get(name, 0), (name, nested)
 
 
 def test_profile_single_scan(spark):
