@@ -92,7 +92,10 @@ _MAX_BITMAP_USERS = 100_000
 #: adjacency-bitmap guard (triangle counting / link prediction): 256 x
 #: 64-bit words = 16384 nodes. Past that the per-node masks stop
 #: broadcasting comfortably and the wedge join (the oracle's shape, with
-#: degree-ordered orientation) is the right plan.
+#: degree-ordered orientation) is the right plan. Below it the bitmap path
+#: pays: forced onto the wedge path at sf0.1 (warm, same process), Jaccard
+#: took 7.8-9.2 s against 3.0-4.5 s, common neighbors 7.1-8.3 s against
+#: 2.5-3.2 s and triangles 3.7-4.4 s against 2.5-3.2 s.
 _MAX_ADJ_WORDS = 256
 
 
@@ -103,6 +106,19 @@ def _dense_index(df: DataFrame, cols: list[str], out: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     return df.withColumn(out, F.row_number().over(W.orderBy(*cols)) - 1)
+
+
+def _node_index(e: DataFrame) -> tuple[DataFrame, int]:
+    """Dense index ``(node, nidx)`` over the endpoints of the edge list
+    ``e`` and the adjacency-bitmap width in 64-bit words it implies — the
+    width the 2-hop queries dispatch on (``_MAX_ADJ_WORDS``)."""
+    nodes = (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    idx = _dense_index(nodes, ["node"], "nidx")
+    return idx, max(1, (idx.count() + 63) // 64)
 
 
 def _mask_expr(idx_col: str, n_words: int) -> str:
@@ -119,49 +135,19 @@ def _mask_expr(idx_col: str, n_words: int) -> str:
 
 def _popcount_sum(left: str, right: str, n_words: int) -> str:
     """Codegen'd shared-bit count between two mask arrays: an unrolled
-    left-associated chain of ``bit_count(x & y)`` terms. For wide masks in
-    FUSED stages use :func:`_popcount_chunks` instead — one ~230-term chain
-    plus join machinery overflows Janino's 64 KB method limit and drops the
-    whole stage to interpreted mode (measured at sf1, n_words = 233)."""
+    left-associated chain of ``bit_count(x & y)`` terms. Only the edge pass
+    uses it, where ``_MAX_MASK_WORDS`` caps the chain at 16 terms. Per-pair
+    popcounts over adjacency or class masks explode the word pairs and SUM
+    codegen'd ``bit_count`` instead: an unrolled chain over their up to 256
+    words overflows Janino's 64 KB method limit inside a fused join stage
+    (measured at sf1, n_words = 233), and even at sf0.1's 24 words the
+    chain lost to the explode form (triangles 2.5-3.2 s warm against
+    1.6-1.8 s)."""
     return " + ".join(
         f"bit_count(element_at({left}, {w + 1}) & "
         f"element_at({right}, {w + 1}))"
         for w in range(n_words)
     )
-
-
-#: terms per partial popcount column — keeps every codegen'd method far
-#: under Janino's 64 KB limit even when fused with join/filter machinery
-_POPCOUNT_CHUNK = 24
-
-
-def _popcount_chunks(left: str, right: str, n_words: int) -> list[str]:
-    """Chunked popcount partials, emitted as SEPARATE projection columns
-    and summed as plain attributes one operator above (a filter between —
-    the barrier filter, in every call site — stops CollapseProject from
-    re-inlining the chains into one giant expression)."""
-    return [
-        " + ".join(
-            f"bit_count(element_at({left}, {w + 1}) & "
-            f"element_at({right}, {w + 1}))"
-            for w in range(w0, min(n_words, w0 + _POPCOUNT_CHUNK))
-        )
-        for w0 in range(0, n_words, _POPCOUNT_CHUNK)
-    ]
-
-
-def _attr_sum(prefix: str, n: int):
-    """Sum of the n chunk-partial attribute columns ``{prefix}0..{prefix}N``."""
-    col = F.col(f"{prefix}0")
-    for i in range(1, n):
-        col = col + F.col(f"{prefix}{i}")
-    return col
-
-
-#: the pushdown barrier + its optional runtime plan assertion now live in
-#: operators/_barrier.py (shared with similarity.py); re-exported here for
-#: the existing call sites and tests.
-_barrier_filter = barrier_filter
 
 
 def _edges_bucket_join(occ: DataFrame) -> DataFrame:
@@ -321,7 +307,7 @@ def _edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(F.broadcast(b), F.col("u") < F.col("v"))
     shared = F.expr(f"({_popcount_sum('ma', 'mb', n_words)})")
     e = (
-        _barrier_filter(
+        barrier_filter(
             pairs.select("u", "v", shared.alias("shared")),
             F.col("shared") >= _MIN_SHARED,
         )
@@ -391,7 +377,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per WEDGE: ~sum(deg^2) rows — 38e9 on the dense 10x graph, a
     DNF. Same dense-regime flip as ``_edges``: index nodes densely, OR
     each node's higher neighbors into ceil(N/64) BIGINT words, then one
-    broadcast pass over the EDGE list computing codegen'd
+    broadcast pass over the EDGE list summing codegen'd per-word
     ``bit_count(mask_u & mask_v)`` popcounts — cost is edges x words, not
     wedges, and nothing quadratic shuffles. Past ``_MAX_ADJ_WORDS * 64``
     nodes the per-node masks stop broadcasting comfortably and the query
@@ -399,14 +385,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right plan again on the sparser large-node-count graphs that regime
     implies."""
     e = _edges(spark, sf_dir)
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .distinct()
-    )
-    idx = _dense_index(nodes, ["node"], "nidx")
-    n_nodes = idx.count()
-    n_words = max(1, (n_nodes + 63) // 64)
+    idx, n_words = _node_index(e)
     if n_words > _MAX_ADJ_WORDS:
         tri = _tri_wedge_count(e)
     else:
@@ -419,7 +398,8 @@ def _tri_bitmap_count(
     spark: SparkSession, sf_dir: str, e: DataFrame, idx: DataFrame, n_words: int
 ) -> DataFrame:
     """Dense-regime triangle core: higher-neighbor adjacency bitmaps +
-    per-edge broadcast popcounts (see :func:`graph_triangle_count`)."""
+    per-edge broadcast popcounts (see :func:`graph_triangle_count`), one
+    exploded row per (edge, word) into one SUM aggregate."""
     ei = (
         e.join(
             F.broadcast(
@@ -458,24 +438,9 @@ def _tri_bitmap_count(
         F.col("vidx") == F.col("kv"),
         "left",
     )
-    if n_words <= _CHAIN_MAX_WORDS:
-        cnt = _popcount_sum("mu", "mv", n_words)
-        per_edge = joined.select(
-            F.expr(
-                f"CASE WHEN mv IS NULL THEN CAST(0 AS BIGINT) "
-                f"ELSE CAST(({cnt}) AS BIGINT) END"
-            ).alias("t")
-        )
-        return per_edge.agg(
-            F.coalesce(F.sum("t"), F.lit(0))
-            .cast("bigint")
-            .alias("n_triangles")
-        )
-    # wide masks: the unrolled chain (even chunked) overflows Janino's
-    # 64 KB method limit inside the fused join stage and drops it to
-    # interpreted mode — explode per-word instead and SUM codegen'd
-    # popcounts (arrays_zip of a NULL mask is NULL, so maskless edges
-    # contribute no rows; coalesce keeps the empty-graph 0)
+    # per-word explode + SUM of codegen'd popcounts (see _popcount_sum):
+    # arrays_zip of a NULL mask is NULL, so maskless edges contribute no
+    # rows, and coalesce keeps the empty graph's 0
     z = joined.select(F.explode(F.arrays_zip("mu", "mv")).alias("z"))
     return z.agg(
         F.coalesce(F.sum(F.expr("bit_count(z.mu & z.mv)")), F.lit(0))
@@ -562,56 +527,12 @@ def graph_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many neighbors they share (the classic baseline; Adamic-Adar is a
     weighted variant of the same scoring) and keep the top 20.
 
-    Dense regime: the SAME true-twin class machinery as
-    graph_link_prediction_jaccard (:func:`_twin_cand_table` — closed-
-    neighborhood collapse, memoized cached candidate table, chain/explode
-    popcount dispatch), ranked by raw common-neighbor count instead of the
-    union-normalized ratio; existing edges are excluded by a bit test,
-    zero-cn pairs dropped to mirror the wedge form's output domain, and
-    the top-k plans as TakeOrderedAndProject, never a full sort. Past
-    ``_MAX_ADJ_WORDS * 64`` nodes the query DISPATCHES to
-    :func:`_linkpred_wedge` — the symmetric wedge equi-join, the right
-    plan again on the sparser refined-bucket graphs that regime implies
-    (the dense flat pass stops being 'flat cheap' exactly when the graph
-    stops being dense)."""
-    e = _edges(spark, sf_dir)
-    adj = e.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
-    nodes = adj.select(F.col("s").alias("node")).distinct()
-    idx = _dense_index(nodes, ["node"], "nidx")
-    n_nodes = idx.count()
-    n_words = max(1, (n_nodes + 63) // 64)
-    if n_words > _MAX_ADJ_WORDS:
-        return _linkpred_wedge(e, adj)
-    cand, members = _twin_cand_table(spark, sf_dir, adj, idx, n_words)
-    return _twin_expand_topk(
-        cand, members, "common_neighbors", ["u", "v", "common_neighbors"]
-    )
-
-
-def _linkpred_wedge(e: DataFrame, adj: DataFrame) -> DataFrame:
-    """Sparse-regime common-neighbors core: the oracle's own symmetric
-    wedge shape as Spark equi-joins — count middle nodes per (u, v) pair
-    via ``adj ⋈ adj`` on the wedge center, drop adjacent pairs with one
-    anti-join on the edge list, keep top 20. Shuffles on node ids only
-    (never materializes per-node neighbor sets); a hub node contributes
-    deg^2 wedge rows, which is exactly why the DENSE regime (where hubs
-    live) uses the bitmap pass instead and this shape is reserved for the
-    sparse large-V regime. AQE's skew-join split handles residual hubs."""
-    a1 = adj.select(F.col("s").alias("u"), F.col("t").alias("mid"))
-    a2 = adj.select(F.col("t").alias("v"), F.col("s").alias("mid"))
-    wedge = (
-        a1.join(a2, "mid")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("common_neighbors"))
-    )
-    cand = wedge.join(e, ["u", "v"], "left_anti")
-    return (
-        cand.select("u", "v", "common_neighbors")
-        .orderBy(F.col("common_neighbors").desc(), "u", "v")
-        .limit(20)
+    Runs the one link-prediction path shared with
+    :func:`graph_link_prediction_jaccard` (:func:`_link_prediction`),
+    ranked by the raw common-neighbor count instead of the
+    union-normalized ratio."""
+    return _link_prediction(
+        spark, sf_dir, "common_neighbors", ["u", "v", "common_neighbors"]
     )
 
 
@@ -825,55 +746,80 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     identical in both engines (the cosine-ranking discipline), with (u, v)
     as the deterministic tie-break.
 
-    Regime dispatch, same as :func:`graph_link_prediction_cn`: dense
-    graphs (nodes fit the adjacency-bitmap guard) score every pair with
-    codegen'd popcounts — ``cn = bit_count(mu & mv)``, degrees as the
-    self-popcount — while past the guard the sparse path runs the
-    symmetric wedge equi-join plus two broadcast degree attaches. Both
-    regimes emit identical rows (regime-equivalence-tested); top-20 plans
-    as TakeOrderedAndProject either way."""
+    Runs the one link-prediction path shared with
+    :func:`graph_link_prediction_cn` (:func:`_link_prediction`); the
+    sparse regime adds the two broadcast degree attaches to the wedge
+    candidates. Both regimes emit identical rows
+    (regime-equivalence-tested)."""
+    return _link_prediction(
+        spark,
+        sf_dir,
+        "jaccard",
+        ["u", "v", "common_neighbors", "deg_u", "deg_v", "jaccard"],
+    )
+
+
+def _link_prediction(
+    spark: SparkSession, sf_dir: str, rank_col: str, out_cols: list[str]
+) -> DataFrame:
+    """The one link-prediction path: the top 20 non-adjacent node pairs
+    with common neighbors by ``rank_col`` DESC, then (u, v), as
+    ``out_cols`` of (u, v, common_neighbors, deg_u, deg_v, jaccard).
+
+    Dense graphs (nodes fit ``_MAX_ADJ_WORDS``, read at call time) score
+    true-twin CLASS pairs by per-word popcounts over closed-neighborhood
+    masks (:func:`_twin_cand_table`, one memoized cached candidate table
+    both queries rank) and re-expand the survivors to node pairs
+    (:func:`_twin_expand`). Past the guard the per-node masks stop
+    broadcasting comfortably and the path is the oracle's symmetric wedge
+    equi-join (:func:`_wedge_cand`), the right plan again on the sparser
+    refined-bucket graphs that regime implies. The top-k plans as
+    TakeOrderedAndProject either way, never a full sort."""
     e = _edges(spark, sf_dir)
     adj = e.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
         e.select(F.col("v").alias("s"), F.col("u").alias("t"))
     )
-    nodes = adj.select(F.col("s").alias("node")).distinct()
-    idx = _dense_index(nodes, ["node"], "nidx")
-    n_nodes = idx.count()
-    n_words = max(1, (n_nodes + 63) // 64)
+    idx, n_words = _node_index(e)
     if n_words > _MAX_ADJ_WORDS:
-        return _jaccard_rank(_jaccard_wedge(e, adj))
-    return _jaccard_bitmap(spark, sf_dir, adj, idx, n_words)
-
-
-def _jaccard_rank(scored: DataFrame) -> DataFrame:
-    """Shared ranking tail: one IEEE division of exact BIGINTs per pair
-    (deterministic cross-engine, cosine discipline), (u, v) tie-break."""
-    return (
-        scored.select(
-            "u",
-            "v",
-            "common_neighbors",
-            "deg_u",
-            "deg_v",
-            (
-                F.col("common_neighbors").cast("double")
-                / (
-                    F.col("deg_u")
-                    + F.col("deg_v")
-                    - F.col("common_neighbors")
+        ranked = _wedge_cand(e, adj)
+        if "jaccard" in out_cols:
+            deg = adj.groupBy("s").agg(
+                F.count(F.lit(1)).cast("bigint").alias("d")
+            )
+            for end in ("u", "v"):
+                ends = deg.select(
+                    F.col("s").alias(end), F.col("d").alias(f"deg_{end}")
                 )
-            ).alias("jaccard"),
-        )
-        .orderBy(F.col("jaccard").desc(), "u", "v")
+                ranked = ranked.join(F.broadcast(ends), end)
+            ranked = ranked.select("*", _jaccard("deg_u", "deg_v"))
+    else:
+        cand, members = _twin_cand_table(spark, sf_dir, adj, idx, n_words)
+        ranked = _twin_expand(cand, members, rank_col)
+    return (
+        ranked.select(*out_cols)
+        .orderBy(F.col(rank_col).desc(), "u", "v")
         .limit(20)
     )
 
 
-def _jaccard_wedge(e: DataFrame, adj: DataFrame) -> DataFrame:
-    """Sparse-regime pairs: `_linkpred_wedge`'s shape with the two degree
-    attaches — node-id shuffles only, hub cost deg^2 (which is why the
-    dense regime dispatches to bitmaps)."""
-    deg = adj.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+def _jaccard(deg_u: str, deg_v: str):
+    """``common_neighbors / (deg_u + deg_v - common_neighbors)``: one IEEE
+    division of exact BIGINTs per pair, identical in both engines."""
+    cn = F.col("common_neighbors")
+    return (cn.cast("double") / (F.col(deg_u) + F.col(deg_v) - cn)).alias(
+        "jaccard"
+    )
+
+
+def _wedge_cand(e: DataFrame, adj: DataFrame) -> DataFrame:
+    """Sparse-regime candidates ``(u, v, common_neighbors)``: the oracle's
+    own symmetric wedge shape as Spark equi-joins — count middle nodes per
+    (u, v) pair via ``adj ⋈ adj`` on the wedge center and drop adjacent
+    pairs with one anti-join on the edge list. Shuffles on node ids only
+    (never materializes per-node neighbor sets); a hub node contributes
+    deg^2 wedge rows, which is exactly why the DENSE regime (where hubs
+    live) uses the bitmap pass instead and this shape is reserved for the
+    sparse large-V regime. AQE's skew-join split handles residual hubs."""
     a1 = adj.select(F.col("s").alias("u"), F.col("t").alias("mid"))
     a2 = adj.select(F.col("t").alias("v"), F.col("s").alias("mid"))
     wedge = (
@@ -882,41 +828,32 @@ def _jaccard_wedge(e: DataFrame, adj: DataFrame) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("bigint").alias("common_neighbors"))
     )
-    cand = wedge.join(e, ["u", "v"], "left_anti")
-    return cand.join(
-        F.broadcast(
-            deg.select(F.col("s").alias("u"), F.col("d").alias("deg_u"))
-        ),
-        "u",
-    ).join(
-        F.broadcast(
-            deg.select(F.col("s").alias("v"), F.col("d").alias("deg_v"))
-        ),
-        "v",
-    )
+    return wedge.join(e, ["u", "v"], "left_anti")
 
 
-def _jaccard_classes(
+def _twin_classes(
     spark: SparkSession,
     sf_dir: str,
     adj: DataFrame,
     idx: DataFrame,
     n_words: int,
-) -> tuple[DataFrame, DataFrame]:
-    """True-twin class tables, memoized per (session, sf_dir):
-    ``groups`` = one row per closed-neighborhood class (exemplar, closed
-    mask, class degree); ``members`` = (node, exemplar) mapping.
+) -> DataFrame:
+    """True-twin class table ``(s, ex, cm, deg)``, memoized and cached per
+    (session, sf_dir): every node ``s`` with its closed mask
+    ``cm`` = N[s] = N(s) | {s}, its degree, and its class exemplar ``ex``,
+    the smallest node with the same closed mask. The classes are its
+    ``s = ex`` rows; the (node, exemplar) mapping is its ``(s, ex)``
+    projection.
 
-    The closed mask N[x] = N(x) | {x} is built by UNIONing one self-row
-    per node into the (node, neighbor-index) stream BEFORE the one
-    ``_mask_expr`` aggregate — no post-hoc mask|own-bit projection exists
-    (a 233-element array constructor was measured to overflow Janino's
-    64 KB method limit and drop its stage to interpreted mode), and the
-    node degree falls out of the same aggregate as ``count(*) - 1`` with
-    zero popcount work."""
+    The closed mask is built by UNIONing one self-row per node into the
+    (node, neighbor-index) stream BEFORE the one ``_mask_expr`` aggregate
+    — no post-hoc mask|own-bit projection exists (a 233-element array
+    constructor was measured to overflow Janino's 64 KB method limit and
+    drop its stage to interpreted mode), and the node degree falls out of
+    the same aggregate as ``count(*) - 1`` with zero popcount work."""
     from pyspark.sql import Window as W
 
-    def with_cm() -> DataFrame:
+    def build() -> DataFrame:
         ai = adj.join(
             F.broadcast(
                 idx.select(
@@ -928,7 +865,7 @@ def _jaccard_classes(
         selfrows = idx.select(
             F.col("node").alias("s"), F.col("nidx").alias("tidx")
         )
-        return (
+        closed = (
             ai.unionByName(selfrows)
             .groupBy("s")
             .agg(
@@ -936,39 +873,11 @@ def _jaccard_classes(
                 (F.count(F.lit(1)) - 1).cast("bigint").alias("deg"),
             )
         )
+        return closed.select(
+            "s", F.min("s").over(W.partitionBy("cm")).alias("ex"), "cm", "deg"
+        ).cache()
 
-    def build_groups() -> DataFrame:
-        members = with_cm().select(
-            "s", "cm", "deg", F.min("s").over(W.partitionBy("cm")).alias("ex")
-        )
-        return (
-            members.filter(F.col("s") == F.col("ex"))
-            .select("ex", "cm", "deg")
-            .cache()
-        )
-
-    def build_members() -> DataFrame:
-        return (
-            with_cm()
-            .select("s", F.min("s").over(W.partitionBy("cm")).alias("ex"))
-            .cache()
-        )
-
-    return (
-        _memoized(spark, sf_dir, "jaccard_groups", build_groups),
-        _memoized(spark, sf_dir, "jaccard_members", build_members),
-    )
-
-
-#: chain-vs-explode dispatch for per-pair popcounts: up to this many mask
-#: words the unrolled bit_count chain compiles comfortably even fused with
-#: join machinery (24 words — sf0.1 — measured fine); past it the fused
-#: method overflows Janino's 64 KB limit (233 words measured failing) and
-#: the popcount becomes an EXPLODE + codegen'd SUM aggregate instead:
-#: pairs x words rows through a map-side-combined aggregate, no generated
-#: method growing with mask width — the form that survives any graph the
-#: broadcast guard admits.
-_CHAIN_MAX_WORDS = 96
+    return _memoized(spark, sf_dir, "twin_classes", build)
 
 
 def _twin_cand_table(
@@ -978,20 +887,39 @@ def _twin_cand_table(
     idx: DataFrame,
     n_words: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Memoized CANDIDATE table over true-twin classes, shared by
-    graph_link_prediction_cn and graph_link_prediction_jaccard: one row
-    per non-adjacent class pair with common neighbors, columns
-    (exu, exv, gdeg_u, gdeg_v, common_neighbors, jaccard). Returns
-    ``(cand, members)``.
+    """Memoized CANDIDATE table over true-twin classes (VERDICT r6 item 5),
+    shared by both link-prediction queries: one row per non-adjacent class
+    pair with common neighbors, columns (exu, exv, gdeg_u, gdeg_v,
+    common_neighbors, jaccard). Returns ``(cand, members)``, members being
+    the (s, ex) node-to-exemplar mapping of :func:`_twin_classes`.
 
-    Candidate scoring dispatches on mask width (``_CHAIN_MAX_WORDS``):
-    narrow masks use the unrolled chunked bit_count chain in the broadcast
-    all-pairs projection; wide masks explode ``arrays_zip(cm_u, cm_v)``
-    and SUM codegen'd per-word popcounts grouped by the class pair —
-    linear work, constant-size generated code. Both paths barrier the
-    non-adjacency/cn filter (operators/_barrier.py) and CACHE the result,
-    so the top-k probes downstream never rescan the pair stream."""
-    groups, members = _jaccard_classes(spark, sf_dir, adj, idx, n_words)
+    Why CLOSED neighborhoods, not the raw mask: the duplicate structure
+    worth collapsing is mutually-adjacent twin cliques (the
+    10x-replication fixture's replica groups). Their OPEN neighborhoods
+    differ pairwise by exactly two bits (each twin's mask contains the
+    others but not itself — measured D = V-1 on raw masks at sf0.1, a
+    useless key), while their closed neighborhoods are IDENTICAL.
+    True-twin classes are cliques: two distinct nodes with N[x] = N[y]
+    must be adjacent (y in N[y] = N[x] and y != x implies y in N(x)), so
+    same-class pairs are never candidates and the class-level pass needs
+    no self-pair block.
+
+    Exactness for a candidate pair u in A, v in B (A != B, non-adjacent):
+    cn(u, v) = |N(u) ∩ N(v)| = popcount(cm_A & cm_B) - 2*[u adj v]
+             = popcount(cm_A & cm_B); deg(u) = popcount(cm_A) - 1; both
+    class-level, and adjacency is too (v in cm_A iff u in cm_B, constant
+    across members) — so the expansion in :func:`_twin_expand` is exact
+    and the result matches the uncollapsed hash. Measured at sf1: 64 s
+    (r6 uncollapsed V^2/2 pass) -> ~8 s warm (class pairs + cache).
+
+    Scoring explodes ``arrays_zip(cm_u, cm_v)`` and SUMs codegen'd
+    per-word popcounts grouped by the class pair — linear work,
+    constant-size generated code at any mask width (see
+    :func:`_popcount_sum`). The non-adjacency/cn filter is barriered
+    (operators/_barrier.py) and the result CACHED, so the top-k probes
+    downstream never rescan the pair stream."""
+    classes = _twin_classes(spark, sf_dir, adj, idx, n_words)
+    groups = classes.filter(F.col("s") == F.col("ex"))
 
     def build() -> DataFrame:
         a = groups.select(
@@ -1021,74 +949,45 @@ def _twin_cand_table(
             "((element_at(mu, CAST(vidx DIV 64 AS INT) + 1) "
             ">> CAST(vidx % 64 AS INT)) & CAST(1 AS BIGINT)) = 1"
         )
-        pairs = a.join(F.broadcast(b), F.col("exu") < F.col("exv"))
-        if n_words <= _CHAIN_MAX_WORDS:
-            chunks = _popcount_chunks("mu", "mv", n_words)
-            scored = pairs.select(
-                "exu",
-                "exv",
-                "gdeg_u",
-                "gdeg_v",
-                *[
-                    F.expr(f"CAST(({c}) AS BIGINT)").alias(f"_pc{i}")
-                    for i, c in enumerate(chunks)
-                ],
-                F.expr(f"({is_edge})").alias("_is_edge"),
-            )
-            cn_sum = _attr_sum("_pc", len(chunks))
-            cand = _barrier_filter(
-                scored, (~F.col("_is_edge")) & (cn_sum > 0)
-            )
-        else:
-            z = pairs.select(
-                "exu",
-                "exv",
-                "gdeg_u",
-                "gdeg_v",
-                F.expr(f"({is_edge})").alias("_is_edge"),
-                F.explode(F.arrays_zip("mu", "mv")).alias("z"),
-            )
-            agged = z.groupBy(
-                "exu", "exv", "gdeg_u", "gdeg_v", "_is_edge"
-            ).agg(
-                F.sum(F.expr("bit_count(z.mu & z.mv)"))
-                .cast("bigint")
-                .alias("common_neighbors")
-            )
-            # barrier: the _is_edge grouping-key predicate would otherwise
-            # push below the aggregate and land in the all-pairs join
-            # condition (element_at is a heavy token there)
-            cand = _barrier_filter(
-                agged,
-                (~F.col("_is_edge")) & (F.col("common_neighbors") > 0),
-            )
-            cn_sum = F.col("common_neighbors")
+        z = a.join(F.broadcast(b), F.col("exu") < F.col("exv")).select(
+            "exu",
+            "exv",
+            "gdeg_u",
+            "gdeg_v",
+            F.expr(f"({is_edge})").alias("_is_edge"),
+            F.explode(F.arrays_zip("mu", "mv")).alias("z"),
+        )
+        agged = z.groupBy("exu", "exv", "gdeg_u", "gdeg_v", "_is_edge").agg(
+            F.sum(F.expr("bit_count(z.mu & z.mv)"))
+            .cast("bigint")
+            .alias("common_neighbors")
+        )
+        # barrier: the _is_edge grouping-key predicate would otherwise push
+        # below the aggregate and land in the all-pairs join condition
+        # (element_at is a heavy token there)
+        cand = barrier_filter(
+            agged, (~F.col("_is_edge")) & (F.col("common_neighbors") > 0)
+        )
         return cand.select(
             "exu",
             "exv",
             "gdeg_u",
             "gdeg_v",
-            cn_sum.alias("common_neighbors"),
-            (
-                cn_sum.cast("double")
-                / (F.col("gdeg_u") + F.col("gdeg_v") - cn_sum)
-            ).alias("jaccard"),
+            "common_neighbors",
+            _jaccard("gdeg_u", "gdeg_v"),
         ).cache()
 
+    members = classes.select("s", "ex")
     return _memoized(spark, sf_dir, "twin_cand", build), members
 
 
-def _twin_expand_topk(
-    cand: DataFrame,
-    members: DataFrame,
-    rank_col: str,
-    out_cols: list[str],
-) -> DataFrame:
-    """Shared class-pair -> node-pair top-20 tail: theta = min rank of the
-    top-20 CLASS pairs (every class pair expands to >= 1 node pair, so
-    anything below theta is dominated by >= 20 expanded pairs; ties at
-    theta are kept), re-expand the survivors through two equi-joins on the
-    exemplar id, and rank the expanded pairs exactly as the oracle does.
+def _twin_expand(cand: DataFrame, members: DataFrame, rank_col: str) -> DataFrame:
+    """Class-pair -> node-pair expansion of the candidates that can reach
+    the top 20: theta = min ``rank_col`` of the top-20 CLASS pairs (every
+    class pair expands to >= 1 node pair, so anything below theta is
+    dominated by >= 20 expanded pairs; ties at theta are kept), re-expand
+    the survivors through two equi-joins on the exemplar id, and emit
+    (u, v, common_neighbors, deg_u, deg_v, jaccard) per node pair.
     ``cand`` is cached, so the theta probe and the keep filter are two
     cheap scans of the materialized table — no barrier needed, there is no
     join underneath to mis-push into."""
@@ -1105,7 +1004,7 @@ def _twin_expand_topk(
     mem_u = members.select(F.col("ex").alias("exu"), F.col("s").alias("_x"))
     mem_v = members.select(F.col("ex").alias("exv"), F.col("s").alias("_y"))
     expanded = mem_u.join(F.broadcast(kept), "exu").join(mem_v, "exv")
-    out = expanded.select(
+    return expanded.select(
         F.least("_x", "_y").alias("u"),
         F.greatest("_x", "_y").alias("v"),
         "common_neighbors",
@@ -1116,49 +1015,6 @@ def _twin_expand_topk(
         .otherwise(F.col("gdeg_u"))
         .alias("deg_v"),
         "jaccard",
-    )
-    return (
-        out.select(*out_cols)
-        .orderBy(F.col(rank_col).desc(), "u", "v")
-        .limit(20)
-    )
-
-
-def _jaccard_bitmap(
-    spark: SparkSession,
-    sf_dir: str,
-    adj: DataFrame,
-    idx: DataFrame,
-    n_words: int,
-) -> DataFrame:
-    """Dense-regime Jaccard top-20 with TRUE-TWIN COLLAPSE (VERDICT r6
-    item 5): nodes are grouped by their CLOSED neighborhood
-    ``N[x] = N(x) | {x}`` and only one exemplar per class enters pair
-    generation; surviving class pairs re-expand to node pairs at the end.
-
-    Why CLOSED, not the raw mask: the duplicate structure worth collapsing
-    is mutually-adjacent twin cliques (the 10x-replication fixture's
-    replica groups). Their OPEN neighborhoods differ pairwise by exactly
-    two bits (each twin's mask contains the others but not itself —
-    measured D = V-1 on raw masks at sf0.1, a useless key), while their
-    closed neighborhoods are IDENTICAL. True-twin classes are cliques: two
-    distinct nodes with N[x] = N[y] must be adjacent (y in N[y] = N[x] and
-    y != x implies y in N(x)), so same-class pairs are never candidates
-    and the class-level pass needs no self-pair block.
-
-    Exactness for a candidate pair u in A, v in B (A != B, non-adjacent):
-    cn(u, v) = |N(u) ∩ N(v)| = popcount(cm_A & cm_B) - 2*[u adj v]
-             = popcount(cm_A & cm_B); deg(u) = popcount(cm_A) - 1; both
-    class-level, and adjacency is too (v in cm_A iff u in cm_B, constant
-    across members) — so the expansion in :func:`_twin_expand_topk` is
-    exact and the result matches the uncollapsed hash. Measured at sf1:
-    64 s (r6 uncollapsed V^2/2 pass) -> ~8 s warm (class pairs + cache)."""
-    cand, members = _twin_cand_table(spark, sf_dir, adj, idx, n_words)
-    return _twin_expand_topk(
-        cand,
-        members,
-        "jaccard",
-        ["u", "v", "common_neighbors", "deg_u", "deg_v", "jaccard"],
     )
 
 

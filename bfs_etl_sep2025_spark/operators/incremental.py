@@ -59,7 +59,7 @@ from bfs_etl_sep2025_spark.operators.similarity import (
     SEMDEDUP_STRIDE,
     SEMDEDUP_TAU,
     _codebook,
-    _ivf_assign,
+    _ivf_assigner,
     _norm_arr,
     _sql_dot,
     _sql_norm,
@@ -316,8 +316,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # full-rescan verdict, which is exactly what the oracle recomputes.
 
 
-def _sem_sync_batch(spark, batch, cent, store, pending):
-    """One semantic-dedup sync: BLAS-assign the delta to its fixed cell,
+def _sem_sync_batch(spark, batch, assign, store, pending):
+    """One semantic-dedup sync: BLAS-assign the delta to its fixed cell
+    with ``assign`` (:func:`similarity._ivf_assigner`),
     GEMM-prefilter each cell in delta mode (:func:`gemm_pairs` with
     ``delta_col`` — only delta rows are scored, so store-vs-store pairs are
     never re-scored), exact-rerank the candidates
@@ -327,7 +328,7 @@ def _sem_sync_batch(spark, batch, cent, store, pending):
     appended to ``pending``, and the caller commits via
     :func:`commit_pending`."""
     assigned = (
-        _ivf_assign(batch, cent)
+        assign(batch)
         .filter(F.col("cr") == 1)
         .select("vec_id", "cell", "embedding", "nrm")
         .localCheckpoint(eager=True)  # feeds the pool, the rerank, the MERGE
@@ -404,7 +405,7 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_semantic_embedding`` — real deployments train k-means on an
     initial sample, same dataflow); three arrival batches (contiguous
     ``vec_id`` ranges) are each BLAS-assigned to their cell
-    (:func:`similarity._ivf_assign`, delta-only), GEMM-prefiltered
+    (:func:`similarity._ivf_assigner`, delta-only), GEMM-prefiltered
     against the cell's pool in delta mode (:func:`similarity.gemm_pairs`:
     delta rows x store+delta rows — store-vs-store pairs are never
     re-scored, the property that makes the sync cost O(delta x cell), not
@@ -425,20 +426,19 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python, and the store is read via a cell equi-join, never re-paired."""
     e = widen(load(spark, sf_dir, "embeddings"))
     # r11 (guide §5): n feeds the percentile probe, the centroid slice and
-    # all three delta batches, and cent's codebook is COLLECTED once per
-    # sync by the assignment matmul — un-checkpointed, the 64-term norm
-    # projection re-ran for every consumer (5+ recomputes across the
-    # three syncs). Materialize each once.
+    # all three delta batches — un-checkpointed, the 64-term norm
+    # projection re-ran for every consumer. Materialize it once; the
+    # codebook is collected and broadcast once for all three syncs.
     n = e.select(
         "vec_id", "embedding", _norm_arr("embedding").alias("nrm")
     ).localCheckpoint(eager=True)
-    cent = _codebook(n, SEMDEDUP_STRIDE).localCheckpoint(eager=True)
+    assign = _ivf_assigner(_codebook(n, SEMDEDUP_STRIDE))
     store = VersionedTable(spark, scratch_dir("sem_store_"))
     # one multi-batch MERGE per run, as in dedup_incremental_minhash
     pending: list[DataFrame] = []
     verdicts = None
     for batch in arrival_batches(n, "vec_id"):
-        v = _sem_sync_batch(spark, batch, cent, store, pending=pending)
+        v = _sem_sync_batch(spark, batch, assign, store, pending=pending)
         verdicts = v if verdicts is None else verdicts.unionByName(v)
     commit_pending(store, pending, keys=["vec_id"])
     return verdicts.select(

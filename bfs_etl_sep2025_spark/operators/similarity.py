@@ -464,13 +464,15 @@ def _codebook(n: DataFrame, stride: int) -> DataFrame:
     )
 
 
-def _ivf_assign(n: DataFrame, cent: DataFrame) -> DataFrame:
-    """Assign every vector of ``n`` to its IVF cells, returning ``(vec_id,
-    embedding, nrm, cell, cr)`` with ``cr`` = rank of the cell by
-    similarity (1 = nearest, emitted through ``N_PROBE``; callers keep
-    ``cr == 1`` as membership and every row as a probe). One Arrow-batched
-    BLAS matmul per partition against the broadcast codebook ``cent``
-    (:func:`_codebook`).
+def _ivf_assigner(cent: DataFrame):
+    """Collect and broadcast the codebook ``cent`` (:func:`_codebook`) once
+    and return ``assign(n)``, which assigns every vector of ``n`` to its
+    IVF cells as ``(vec_id, embedding, nrm, cell, cr)`` with ``cr`` = rank
+    of the cell by similarity (1 = nearest, emitted through ``N_PROBE``;
+    callers keep ``cr == 1`` as membership and every row as a probe). A
+    query that assigns several arrival batches and its probes calls
+    ``assign`` for each against the one broadcast. Each call is one
+    Arrow-batched BLAS matmul per partition against the broadcast.
 
     The row-expression alternative (vectors x centroids broadcast join +
     codegen'd unrolled dots) materializes |corpus| x |cells| rows and
@@ -494,14 +496,14 @@ def _ivf_assign(n: DataFrame, cent: DataFrame) -> DataFrame:
     scale every cell's score equally and are dropped from the ranking;
     ties rank by cell id via the stable argsort over id-sorted cells.
 
-    Scale: the codebook is collected once (cells x DIM doubles: 64k cells
-    are 32 MB), shipped as an explicit Spark broadcast; each executor does
-    a (batch x DIM) @ (DIM x cells) matmul per Arrow batch — compute
-    proportional to corpus x cells with BLAS constants, no shuffle at all
-    until the downstream cell-keyed join."""
+    Scale: the codebook is collected once per query (cells x DIM doubles:
+    64k cells are 32 MB), shipped as an explicit Spark broadcast; each
+    executor does a (batch x DIM) @ (DIM x cells) matmul per Arrow batch —
+    compute proportional to corpus x cells with BLAS constants, no shuffle
+    at all until the downstream cell-keyed join."""
     import numpy as np
 
-    spark = n.sparkSession
+    spark = cent.sparkSession
     rows = cent.select("cell", "c_emb").collect()  # the codebook
     cells = np.array([r.cell for r in rows], dtype=np.int64)
     order = np.argsort(cells)
@@ -524,17 +526,20 @@ def _ivf_assign(n: DataFrame, cent: DataFrame) -> DataFrame:
         idx = np.argsort(-S, axis=1, kind="stable")[:, :k]
         return pd.Series([cells_[row].tolist() for row in idx])
 
-    return n.select(
-        "vec_id", "embedding", "nrm", topk_cells("embedding").alias("__tc")
-    ).select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        F.posexplode("__tc").alias("__pos", "cell"),
-    ).select(
-        "vec_id", "embedding", "nrm", "cell",
-        (F.col("__pos") + 1).cast("int").alias("cr"),
-    )
+    def assign(n: DataFrame) -> DataFrame:
+        return n.select(
+            "vec_id", "embedding", "nrm", topk_cells("embedding").alias("__tc")
+        ).select(
+            "vec_id",
+            "embedding",
+            "nrm",
+            F.posexplode("__tc").alias("__pos", "cell"),
+        ).select(
+            "vec_id", "embedding", "nrm", "cell",
+            (F.col("__pos") + 1).cast("int").alias("cr"),
+        )
+
+    return assign
 
 
 @query(
@@ -581,13 +586,13 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes its {N_PROBE} nearest cells and reranks only their members.
 
     Scale shape: assignment is one BLAS argmax per Arrow batch against the
-    broadcast codebook (:func:`_ivf_assign`), never a vectors x centroids
+    broadcast codebook (:func:`_ivf_assigner`), never a vectors x centroids
     row product; search joins queries to cells on the cell id — scan cost
     per query is |probed cells| not |corpus|, the property that holds at
     billions of vectors."""
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    assign = _ivf_assign(n, _codebook(n, CENTROID_STRIDE))
+    assign = _ivf_assigner(_codebook(n, CENTROID_STRIDE))(n)
     members = assign.filter(F.col("cr") == 1)
     probes = _probes(assign.filter(F.col("vec_id") < 10), "cell")
     return _top_k(_probe_scores(members, probes, "cell"), 3)
@@ -1553,7 +1558,7 @@ SEMDEDUP_TAU = 0.40
 #: keeps the within-cell quadratic pass LINEAR in corpus size (a fixed K
 #: measured 141 s at sf1 vs 28 s with this stride; at 100 TB fixed K would
 #: be quadratic death). Assignment is the IVF BLAS argmax
-#: (:func:`_ivf_assign`) against this broadcast codebook.
+#: (:func:`_ivf_assigner`) against this broadcast codebook.
 SEMDEDUP_STRIDE = 250
 
 
@@ -1610,7 +1615,7 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus while cell size stays ~constant, making the within-cell
     quadratic pass linear in corpus size overall (measured: 28 s at sf1
     vs 141 s for a fixed-K variant of this same query). Assignment is the
-    shared IVF path (:func:`_ivf_assign`): one BLAS argmax against the
+    shared IVF path (:func:`_ivf_assigner`): one BLAS argmax against the
     broadcast codebook — never a vectors x all-centroids row product. Each
     cell is one :func:`gemm_pairs` group (cells are stride-bounded, so a
     cell is a single ~2 MB tile at any corpus size) and
@@ -1627,7 +1632,7 @@ def dedup_semantic_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two full ArrowEvalPython assignment stages of ~12 s executor time
     # each). One eager checkpoint materializes |corpus| small rows once.
     members = (
-        _ivf_assign(n, _codebook(n, SEMDEDUP_STRIDE))
+        _ivf_assigner(_codebook(n, SEMDEDUP_STRIDE))(n)
         .filter(F.col("cr") == 1)
         .localCheckpoint(eager=True)
     )
@@ -1694,9 +1699,10 @@ def similarity_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook shared with ``similarity_ann_ivf`` — real deployments train
     k-means on an initial sample, same dataflow); then three arrival
     batches (contiguous ``vec_id`` ranges) are each assigned against the
-    broadcast codebook (:func:`_ivf_assign` — only the DELTA is ever
-    scanned) and the postings ``(vec_id, cell)`` commit into a
-    ``VersionedTable`` store in one multi-batch MERGE
+    one broadcast of the codebook that the probes use too
+    (:func:`_ivf_assigner` — only the DELTA is ever scanned) and the
+    postings ``(vec_id, cell)`` commit into a ``VersionedTable`` store in
+    one multi-batch MERGE
     (:func:`incremental.commit_pending`). Search quantizes the queries
     fresh, probes {N_PROBE} cells, and reranks ONLY members read back from
     the incrementally-built store — so oracle parity proves the store equals
@@ -1718,13 +1724,13 @@ def similarity_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = widen(load(spark, sf_dir, "embeddings"))
     n = e.select("vec_id", "embedding", _norm_arr("embedding").alias("nrm"))
-    cent = _codebook(n, CENTROID_STRIDE)
+    assign = _ivf_assigner(_codebook(n, CENTROID_STRIDE))
     store = VersionedTable(spark, scratch_dir("ivf_store_"))
     pending = [
-        _ivf_assign(batch, cent).filter(F.col("cr") == 1).select("vec_id", "cell")
+        assign(batch).filter(F.col("cr") == 1).select("vec_id", "cell")
         for batch in arrival_batches(n, "vec_id")
     ]
     commit_pending(store, pending, keys=["vec_id"])
     members = store.read().join(n, "vec_id")
-    probes = _probes(_ivf_assign(n.filter(F.col("vec_id") < 12), cent), "cell")
+    probes = _probes(assign(n.filter(F.col("vec_id") < 12)), "cell")
     return _top_k(_probe_scores(members, probes, "cell", "cell"), 5)

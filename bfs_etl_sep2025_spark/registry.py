@@ -82,10 +82,15 @@ PLAN_CHANGED: tuple[str, ...] = (
     "similarity_ann_ivf",
     "similarity_recall_lsh",
     "similarity_ann_pq",
-    # postings commit once through commit_pending
+    # postings commit once through commit_pending; the codebook is
+    # broadcast once per run (so is dedup_incremental_semantic's, above)
     "similarity_incremental_ivf",
     # limit-1 test of the newest hop layer, which leads the union
     "graph_bfs_distances",
+    # one per-pair popcount form (explode + SUM), one link-prediction path
+    "graph_triangle_count",
+    "graph_link_prediction_cn",
+    "graph_link_prediction_jaccard",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

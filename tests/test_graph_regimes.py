@@ -44,7 +44,7 @@ def test_bucket_join_dispatch_target_matches_bitmap_path(spark):
 
 
 def test_allpairs_join_condition_carries_no_popcount(spark):
-    """_barrier_filter must keep the shared-bucket threshold above the
+    """barrier_filter must keep the shared-bucket threshold above the
     join: the BroadcastNestedLoopJoin condition line contains only the
     id inequality, never the bit_count chain (the bound-condition path is
     not whole-stage-codegen'd — the pathology measured at sf1)."""
@@ -218,43 +218,6 @@ def test_nlj_condition_parser_units():
     ) == "(bit_count(x#3"
 
 
-def test_wide_mask_explode_path_matches_chain(spark, monkeypatch):
-    """The WIDE-mask scoring form (explode + codegen'd SUM — the path sf1's
-    233-word masks take, where unrolled chains overflow Janino's 64 KB
-    method limit) must be row-identical to the narrow chain form for both
-    link-prediction queries and the triangle count. The memo is cleared
-    around the flip so the chain-built candidate cache cannot mask the
-    wide build (and cleared after, so other tests see narrow-path plans)."""
-    want_j = [
-        tuple(r)
-        for r in graph.graph_link_prediction_jaccard(spark, SF).collect()
-    ]
-    want_c = [
-        tuple(r) for r in graph.graph_link_prediction_cn(spark, SF).collect()
-    ]
-    want_t = graph.graph_triangle_count(spark, SF).collect()[0]
-    graph.clear_edge_memo()
-    monkeypatch.setattr(graph, "_CHAIN_MAX_WORDS", 0)
-    try:
-        got_j = [
-            tuple(r)
-            for r in graph.graph_link_prediction_jaccard(spark, SF).collect()
-        ]
-        got_c = [
-            tuple(r)
-            for r in graph.graph_link_prediction_cn(spark, SF).collect()
-        ]
-        got_t = graph.graph_triangle_count(spark, SF).collect()[0]
-    finally:
-        graph.clear_edge_memo()
-    assert got_j == want_j and len(want_j) == 20
-    assert got_c == want_c and len(want_c) == 20
-    assert (got_t.n_edges, got_t.n_triangles) == (
-        want_t.n_edges,
-        want_t.n_triangles,
-    )
-
-
 def test_graph_memo_sees_rewritten_files(spark, tmp_path):
     """The graph memo is keyed on the files under ``sf_dir``: after
     ``events.parquet`` is rewritten with a third of its rows, a query
@@ -278,13 +241,16 @@ def test_graph_memo_sees_rewritten_files(spark, tmp_path):
     graph.clear_edge_memo()
 
 
-def test_bfs_stops_at_first_empty_layer_and_returns_at_the_cap(
-    spark, monkeypatch, tmp_path
-):
-    """BFS stops at its first empty hop layer: on a graph with no edges
-    that is the seed layer, and the answer is empty. A hop cap the graph
-    outruns returns the capped distances, the same rows as the uncapped
-    answer's first hops, and never raises."""
+_GRAPH_QUERIES = sorted(
+    n for n, spec in registry.all_specs().items() if spec.family == "graph"
+)
+
+
+@pytest.mark.parametrize("name", _GRAPH_QUERIES)
+def test_graph_query_answers_the_empty_graph(spark, tmp_path, name):
+    """On a graph with no edges every graph query returns its defined empty
+    answer: ``(0, 0)`` for the triangle count, no rows for the rest (BFS
+    stops at its empty seed layer)."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -296,12 +262,23 @@ def test_bfs_stops_at_first_empty_layer_and_returns_at_the_cap(
     events = pq.read_table(f"{sf}/events.parquet")
     pq.write_table(events.slice(0, 0), f"{sf}/events.parquet")
     try:
-        assert graph.graph_bfs_distances(spark, sf).collect() == []
+        fn = registry.all_specs()[name].fn
+        got = [tuple(r) for r in fn(spark, sf).collect()]
     finally:
         graph.clear_edge_memo()
+    assert got == ([(0, 0)] if name == "graph_triangle_count" else [])
 
+
+def test_bfs_stops_at_first_empty_layer_and_returns_at_the_cap(
+    spark, monkeypatch
+):
+    """BFS stops at its first empty hop layer: the sf0.01 graph runs out of
+    new nodes before the hop cap. A hop cap the graph outruns returns the
+    capped distances, the same rows as the uncapped answer's first hops,
+    and never raises. (The empty graph, where the first empty layer is the
+    seed layer, is test_graph_query_answers_the_empty_graph.)"""
     full = [tuple(r) for r in graph.graph_bfs_distances(spark, SF).collect()]
-    assert max(d for _, d in full) > 1
+    assert 1 < max(d for _, d in full) < graph._BFS_MAX
     monkeypatch.setattr(graph, "_BFS_MAX", 1)
     capped = [tuple(r) for r in graph.graph_bfs_distances(spark, SF).collect()]
     assert capped == [(u, d) for u, d in full if d <= 1]

@@ -190,7 +190,7 @@ def test_fixpoints_with_reliable_checkpoint_dir(spark, tmp_path, name):
 
 
 def test_ivf_assignment_matches_numpy_oracle(spark):
-    """_ivf_assign's BLAS argmax against an independent numpy replay on
+    """_ivf_assigner's BLAS argmax against an independent numpy replay on
     sf0.1's 40-cell codebook (sf0.01 has only 4 cells): every vector gets
     ranks 1..N_PROBE, and each rank's cell is the replay's, ranking cells
     by cosine DESC with ties to the smaller cell."""
@@ -203,8 +203,9 @@ def test_ivf_assignment_matches_numpy_oracle(spark):
     n = e.select(
         "vec_id", "embedding", sim._norm_arr("embedding").alias("nrm")
     )
+    assign = sim._ivf_assigner(sim._codebook(n, sim.CENTROID_STRIDE))
     got = {}
-    for r in sim._ivf_assign(n, sim._codebook(n, sim.CENTROID_STRIDE)).collect():
+    for r in assign(n).collect():
         got.setdefault(r.vec_id, {})[r.cr] = r.cell
 
     pdf = e.toPandas().sort_values("vec_id")
@@ -225,6 +226,28 @@ def test_ivf_assignment_matches_numpy_oracle(spark):
     assert got.keys() == want.keys()  # every vector assigned
     mismatches = {v: (got[v], want[v]) for v in want if got[v] != want[v]}
     assert not mismatches, f"{len(mismatches)} mismatches: {mismatches}"
+
+
+@pytest.mark.parametrize(
+    "name", ["similarity_incremental_ivf", "dedup_incremental_semantic"]
+)
+def test_incremental_ann_broadcasts_its_codebook_once(spark, monkeypatch, name):
+    """An incremental ANN query collects and broadcasts its fixed codebook
+    once per run and assigns all three arrival batches (and, for the IVF
+    index, its probes) against that one broadcast."""
+    from pyspark import SparkContext
+
+    codebooks = []
+    real = SparkContext.broadcast
+
+    def spy(sc, value):
+        if isinstance(value, tuple):  # (cells, unit-norm codebook.T)
+            codebooks.append(value)
+        return real(sc, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    assert _q(name)(spark, SF).collect()
+    assert len(codebooks) == 1
 
 
 def _bpe_ref_merge(sym, l, r):

@@ -163,7 +163,7 @@ def test_new_ops_no_interpreted_array_hofs(spark, name):
 
 
 #: queries that assign vectors to IVF cells: the Arrow-batched BLAS argmax
-#: (``similarity._ivf_assign``) is their one sanctioned Python node
+#: (``similarity._ivf_assigner``) is their one sanctioned Python node
 _ASSIGNS_CELLS = {
     "similarity_ann_ivf",
     "similarity_incremental_ivf",
@@ -213,7 +213,7 @@ def test_similarity_scoring_is_codegen(spark, name):
     unrolled literal-index element_at chain (whole-stage codegen), never an
     interpreted lambda HOF evaluated per candidate pair. The one sanctioned
     Python node is the Arrow-batched BLAS cell ASSIGNMENT of the queries
-    that assign cells (`_ivf_assign`, per-vector not per-pair — measured
+    that assign cells (`_ivf_assigner`, per-vector not per-pair — measured
     36x faster than the codegen'd all-pairs join at sf1); row-at-a-time
     BatchEvalPython stays banned everywhere. No plan has a cartesian
     product, and every probe join outside the exact scans is an equi-join
