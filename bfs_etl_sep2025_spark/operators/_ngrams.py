@@ -26,8 +26,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _tokens(text: Column) -> Column:
+    """The one tokenizer of the text, corpus and dedup operators: split on
+    single spaces (DuckDB twin: ``string_split(text, ' ')``)."""
+    return F.split(text, " ")
 
 
 def exploded_ngrams(
@@ -41,7 +47,7 @@ def exploded_ngrams(
     Output order within a doc follows gram start position (explode preserves
     element order), identical to the array-transform form it replaces.
     """
-    t = F.split("text", " ")
+    t = _tokens(F.col("text"))
     idx = F.when(
         F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))
     ).otherwise(F.array(F.lit(-1)))

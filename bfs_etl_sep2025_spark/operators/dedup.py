@@ -33,7 +33,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from bfs_etl_sep2025_spark.operators._fixpoint import min_label_components
-from bfs_etl_sep2025_spark.operators._ngrams import exploded_ngrams
+from bfs_etl_sep2025_spark.operators._ngrams import _tokens, exploded_ngrams
 from bfs_etl_sep2025_spark.registry import query
 from bfs_etl_sep2025_spark.tables import load, widen
 
@@ -44,10 +44,6 @@ from bfs_etl_sep2025_spark.tables import load, widen
 N_HASHES = 16
 N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
-
-
-def _tokens(text: Column) -> Column:
-    return F.split(text, " ")
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
@@ -82,6 +78,38 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
         .agg(*mins)
         .select("doc_id", F.array(*[f"m{j}" for j in range(N_HASHES)]).alias("sig"))
     )
+
+
+def band_hashes(sig: str) -> Column:
+    """The ``N_BANDS`` LSH band hashes of signature column ``sig`` as one
+    array: band b is the md5 of its ``ROWS_PER_BAND`` minhashes' decimal
+    strings, concatenated. Literal indexes keep it a codegen'd projection."""
+    return F.array(
+        *[
+            F.md5(
+                F.concat(
+                    *[
+                        F.element_at(sig, b * ROWS_PER_BAND + i).cast("string")
+                        for i in range(1, ROWS_PER_BAND + 1)
+                    ]
+                )
+            )
+            for b in range(N_BANDS)
+        ]
+    )
+
+
+def n_agree(sig_a: str, sig_b: str) -> Column:
+    """How many of the ``N_HASHES`` minhashes two signatures share: an
+    unrolled chain of literal-index compares, not an interpreted array
+    lambda. Score it after the band join, never inside its condition
+    (extra-condition chains run before the cheap conjuncts for every
+    key-matched pair)."""
+    n_eq = None
+    for j in range(1, N_HASHES + 1):
+        e_j = F.when(F.element_at(sig_a, j) == F.element_at(sig_b, j), 1).otherwise(0)
+        n_eq = e_j if n_eq is None else n_eq + e_j
+    return n_eq
 
 
 #: DuckDB twin of the shingle + signature builders
@@ -249,25 +277,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`dedup_minhash_clusters`) join or aggregate it, and a global sort
     here costs them a range-sampling job and a sort."""
     d = load(spark, sf_dir, "documents")
-    sigs = minhash_signatures(d)
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("b"),
-    ).select(
-        "doc_id",
-        "sig",
-        "b",
-        F.md5(
-            F.concat(
-                *[
-                    F.element_at("sig", F.col("b") * ROWS_PER_BAND + i).cast(
-                        "string"
-                    )
-                    for i in range(1, ROWS_PER_BAND + 1)
-                ]
-            )
-        ).alias("bh"),
+    bands = minhash_signatures(d).select(
+        "doc_id", "sig", F.posexplode(band_hashes("sig")).alias("b", "bh")
     )
     left = bands.select(
         F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "b", "bh"
@@ -278,16 +289,6 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Self-join via SHUFFLE_HASH, not broadcast: at 100 TB the band table
     # is not broadcastable, and a broadcast build side would recompute the
     # whole signature pipeline into the broadcast exchange.
-    # Unrolled signature agreement count (interpreted-lambda avoidance).
-    eqs = [
-        F.when(
-            F.element_at("sig_a", j) == F.element_at("sig_b", j), 1
-        ).otherwise(0)
-        for j in range(1, N_HASHES + 1)
-    ]
-    n_eq = eqs[0]
-    for e_j in eqs[1:]:
-        n_eq = n_eq + e_j
     # Score BEFORE deduplicating: a pair colliding in several bands carries
     # the same n_eq each time, so max() collapses duplicates — the dedup
     # then shuffles only (doc_a, doc_b, int), never the signature arrays
@@ -296,7 +297,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         left.hint("shuffle_hash")
         .join(right, ["b", "bh"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", n_eq.alias("n_eq"))
+        .select("doc_a", "doc_b", n_agree("sig_a", "sig_b").alias("n_eq"))
         .groupBy("doc_a", "doc_b")
         .agg(F.max("n_eq").alias("n_eq"))
     )

@@ -48,12 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bfs_etl_sep2025_spark.operators.dedup import (
-    N_BANDS,
     N_HASHES,
-    ROWS_PER_BAND,
     SQL_SHINGLES,
     SQL_SIG,
+    band_hashes,
     minhash_signatures,
+    n_agree,
 )
 from bfs_etl_sep2025_spark.operators.similarity import (
     SEMDEDUP_STRIDE,
@@ -81,22 +81,10 @@ def fingerprint_batch(docs: DataFrame) -> DataFrame:
     document. Bands are kept as a width-4 array (exploded only at join
     time) so the store stays one-row-per-doc and the MERGE key is just
     ``doc_id``."""
-    sigs = minhash_signatures(docs)
-    band_cols = [
-        F.md5(
-            F.concat(
-                *[
-                    F.element_at("sig", b * ROWS_PER_BAND + i).cast("string")
-                    for i in range(1, ROWS_PER_BAND + 1)
-                ]
-            )
-        )
-        for b in range(N_BANDS)
-    ]
     return (
         docs.select("doc_id", F.md5("text").alias("h_exact"))
-        .join(sigs, "doc_id")
-        .select("doc_id", "h_exact", "sig", F.array(*band_cols).alias("bands"))
+        .join(minhash_signatures(docs), "doc_id")
+        .select("doc_id", "h_exact", "sig", band_hashes("sig").alias("bands"))
     )
 
 
@@ -186,30 +174,18 @@ def sync_batch(
     )
 
     # near dups: band equi-join (delta side vs store-plus-batch side),
-    # signature agreement scored AFTER the join behind a per-pair
-    # aggregate — the unrolled 16-term chain must never ride inside the
-    # join condition (r8: extra-condition chains run before the cheap
-    # conjuncts for every key-matched pair)
+    # signature agreement scored AFTER the join behind a per-doc aggregate
     bb = fp.select(
         "doc_id", "sig", F.posexplode("bands").alias("b", "bh")
     )
     pb = prior.select(
         "prior_id", "prior_sig", F.posexplode("bands").alias("b", "bh")
     )
-    eqs = [
-        F.when(
-            F.element_at("sig", j) == F.element_at("prior_sig", j), 1
-        ).otherwise(0)
-        for j in range(1, N_HASHES + 1)
-    ]
-    n_eq = eqs[0]
-    for e_j in eqs[1:]:
-        n_eq = n_eq + e_j
     near_ids = (
         bb.hint("shuffle_hash")
         .join(pb, ["b", "bh"])
         .filter(F.col("prior_id") < F.col("doc_id"))
-        .select("doc_id", n_eq.alias("n_eq"))
+        .select("doc_id", n_agree("sig", "prior_sig").alias("n_eq"))
         .groupBy("doc_id")
         .agg(F.max("n_eq").alias("n_eq"))
         .filter(F.col("n_eq") >= AGREE_MIN)

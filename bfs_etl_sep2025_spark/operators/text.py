@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from bfs_etl_sep2025_spark.operators._ngrams import exploded_ngrams
+from bfs_etl_sep2025_spark.operators._ngrams import _tokens, exploded_ngrams
 from bfs_etl_sep2025_spark.registry import query
 from bfs_etl_sep2025_spark.tables import load, widen
 
@@ -39,10 +39,6 @@ LANG_MARKERS = {
 }
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
-
-
-def _tokens(text: Column) -> Column:
-    return F.split(text, " ")
 
 
 def _count_tokens_in(words: tuple[str, ...]) -> Column:
@@ -576,31 +572,17 @@ def text_repetition_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-level dedup misses. ``rep_passes`` applies the Gopher-style ≤0.2
     top-fraction threshold.
 
-    Scale notes: bigrams come from ``explode(sequence)`` over token
-    positions with codegen'd ``element_at`` pairing — per the hot-path rule,
-    no interpreted array lambda touches the exploded rows. Two hash
+    Scale notes: bigrams come from the codegen'd index-explode builder
+    (``_ngrams``) over docs with >= 2 tokens — per the hot-path rule, no
+    interpreted array lambda touches the exploded rows. Two hash
     aggregations, both with map-side partial combine: (doc_id, bigram)
     counts first (the explode fan-out collapses before the shuffle), then
     per-doc stats; only count columns cross the wire. Reporting ``top_n``
     (the max count) rather than the top bigram string keeps the result
     deterministic under count ties."""
     d = widen(load(spark, sf_dir, "documents"))
-    t = _tokens(F.col("text"))
-    bg = (
-        d.filter(F.size(t) >= 2)
-        .select(
-            "doc_id",
-            t.alias("t"),
-            F.explode(F.sequence(F.lit(1), F.size(t) - 1)).alias("i"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.element_at("t", F.col("i")),
-                F.element_at("t", F.col("i") + 1),
-            ).alias("bigram"),
-        )
+    bg = exploded_ngrams(
+        d.filter(F.size(_tokens(F.col("text"))) >= 2), n=2, out="bigram"
     )
     per = bg.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("n"))
     top_frac = F.max("n").cast("double") / F.sum("n").cast("double")

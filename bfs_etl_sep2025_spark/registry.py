@@ -91,6 +91,18 @@ PLAN_CHANGED: tuple[str, ...] = (
     "graph_triangle_count",
     "graph_link_prediction_cn",
     "graph_link_prediction_jaccard",
+    # one window scan, run builder, shared-chunk aggregate and stride
+    # chunker for the span-dedup queries
+    "corpus_chunk_overlap",
+    "corpus_chunk_dedup",
+    "corpus_cdc_chunk_dedup",
+    "corpus_duplicate_spans",
+    "corpus_span_removal",
+    # LSH bands posexplode the shared band-hash array
+    "dedup_minhash_lsh_pairs",
+    "llm_corpus_clean",
+    # bigrams from the shared n-gram builder
+    "text_repetition_ngrams",
 )
 
 #: where the external driver's per-round ``CORRECTNESS_r<N>.json`` files live

@@ -785,3 +785,48 @@ def test_single_thread_blas_idempotent():
     single_thread_blas()
     single_thread_blas()
     assert os.environ.get("OPENBLAS_NUM_THREADS", "1") == "1"
+
+
+@pytest.mark.parametrize("first", [1, 2])
+def test_window_scan_matches_python_windows_at_segment_edges(spark, first):
+    """The span-dedup window scan hoists one text segment per ``_CDC_SEG``
+    positions; every doc length around a segment edge (and a doc of
+    multi-byte characters, since Spark's substring counts code points)
+    must yield exactly Python's windows, and docs shorter than the
+    window yield none."""
+    import random
+
+    from bfs_etl_sep2025_spark.operators.corpus import (
+        _CDC_SEG,
+        _CDC_W,
+        _window_scan,
+    )
+
+    width = _CDC_W
+    lengths = [
+        width - 1,
+        width,
+        width + 1,
+        _CDC_SEG + width - 2,
+        _CDC_SEG + width - 1,
+        _CDC_SEG + width,
+        2 * _CDC_SEG + width + 3,
+    ]
+    rng = random.Random(7)
+    texts = ["".join(rng.choice("abcd ") for _ in range(n)) for n in lengths]
+    texts.append(
+        "".join(rng.choice("aé中😀 ") for _ in range(_CDC_SEG + width + 5))
+    )
+    docs = spark.createDataFrame(
+        [(i, t, len(t)) for i, t in enumerate(texts)],
+        "doc_id bigint, text string, n_chars bigint",
+    )
+    got: dict[int, list] = {i: [] for i in range(len(texts))}
+    for r in _window_scan(docs, width, first).collect():
+        got[r["doc_id"]].append((r["p"], r["w"]))
+    for i, t in enumerate(texts):
+        want = [
+            (p, t[p - 1 : p - 1 + width])
+            for p in range(first, len(t) - width + 2)
+        ]
+        assert sorted(got[i]) == want, (i, len(t))
