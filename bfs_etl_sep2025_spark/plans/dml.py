@@ -27,11 +27,8 @@ from __future__ import annotations
 
 import re
 
-from bfs_etl_sep2025_spark.plans.merge import swap_snapshot, table_meta
-from bfs_etl_sep2025_spark.plans.sqlsplit import (
-    keyword_positions,
-    split_top_level,
-)
+from bfs_etl_sep2025_spark.plans.merge import parse_sets, swap_snapshot, table_meta
+from bfs_etl_sep2025_spark.plans.sqlsplit import keyword_positions
 
 _DELETE_HEAD = re.compile(r"(?is)^\s*DELETE\s+FROM\s+(?P<name>[\w.`\"]+)\s*")
 _UPDATE_HEAD = re.compile(r"(?is)^\s*UPDATE\s+(?P<name>[\w.`\"]+)\s+SET\s")
@@ -76,12 +73,7 @@ def run_update_or_delete(spark, stmt: str) -> None:
     table = m.group("name").strip('`"')
     meta = table_meta(spark, table)
     sets_sql, pred = _split_where(stmt[m.end() :])
-    sets: dict[str, str] = {}
-    for assign in split_top_level(sets_sql):
-        col, _, expr = assign.partition("=")
-        if not expr:
-            raise ValueError(f"bad SET assignment: {assign!r}")
-        sets[col.strip().strip('`"')] = expr.strip()
+    sets = parse_sets(sets_sql)
     cond = f"coalesce(({pred}), false)" if pred is not None else "true"
     cols = ", ".join(
         f"CASE WHEN {cond} THEN ({expr}) ELSE {c} END AS {c}"

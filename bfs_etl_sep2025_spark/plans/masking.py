@@ -1,4 +1,4 @@
-"""Snowflake dynamic-data-masking shim (column masking policies).
+"""Snowflake dynamic-data-masking shim (masking and row access policies).
 
 Reference parity: masking policies are reachable through the reference's
 arbitrary-SQL chokepoint (``dags/dev_db_test.py:41-70``) — the standard
@@ -35,6 +35,9 @@ Semantics mapped onto Spark:
   body becomes the view's WHERE over the RAW stored columns (evaluated
   before column masks, as in Snowflake), so Catalyst pushes it down to
   the scan like any user predicate.
+- Both kinds share one store of ``(kind, args, body)``, one binding map
+  (``(table, column)`` for a mask, ``(table, None)`` for a row filter),
+  one DROP handler and one renderer, :func:`_apply`.
 
 Documented divergences:
 
@@ -58,23 +61,20 @@ import re
 from pyspark.sql import SparkSession
 
 from bfs_etl_sep2025_spark.plans.sqlsplit import (
+    ident_key,
     match_close,
     split_top_level,
     sub_unquoted,
 )
 
-#: policy name (lowercased) -> {"arg": str, "body": str}
-_POLICIES: dict[str, dict] = {}
-#: table name (lowercased) -> {column (lowercased): policy name}
-_BINDINGS: dict[str, dict[str, str]] = {}
-#: row-access policy name (lowercased) -> {"args": [str], "body": str}
-_ROW_POLICIES: dict[str, dict] = {}
-#: table name (lowercased) -> (policy name, [bound column names])
-_ROW_BINDINGS: dict[str, tuple[str, list[str]]] = {}
+#: policy name -> (kind: "masking" | "row access", argument names, body)
+_POLICIES: dict[str, tuple[str, list[str], str]] = {}
+#: (table, column) -> (masking policy, [column]) and (table, None) -> (row
+#: access policy, [bound columns]); table, column and policy names are
+#: :func:`ident_key` keys
+_BINDINGS: dict[tuple[str, str | None], tuple[str, list[str]]] = {}
 #: session role, set by USE ROLE (Snowflake default role spelling)
 _ROLE: str = "PUBLIC"
-#: one live masked view per table (previous read's view is replaced)
-_LIVE_VIEWS: dict[str, str] = {}
 
 #: policy head up to ``AS (``; the arguments run to their balanced close, so
 #: types such as ``DECIMAL(10,2)`` parse, and ``_POLICY_TAIL`` reads the rest
@@ -86,9 +86,9 @@ _POLICY_TAIL = re.compile(
     r"(?is)\s*RETURNS\s+(?P<rtype>\w+)(?:\s*\([\d\s,]*\))?\s*->\s*"
     r"(?P<body>.+?)\s*$"
 )
-DROP_ROW_POLICY = re.compile(
-    r"(?is)^\s*DROP\s+ROW\s+ACCESS\s+POLICY\s+(?:IF\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`\"]+)\s*$"
+DROP_POLICY = re.compile(
+    r"(?is)^\s*DROP\s+(?P<kind>MASKING|ROW\s+ACCESS)\s+POLICY\s+"
+    r"(?:IF\s+EXISTS\s+)?(?P<name>[\w.`\"]+)\s*$"
 )
 ADD_ROW_POLICY = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<table>[\w.`\"]+)\s+"
@@ -98,10 +98,6 @@ ADD_ROW_POLICY = re.compile(
 DETACH_ROW_POLICY = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<table>[\w.`\"]+)\s+"
     r"DROP\s+ROW\s+ACCESS\s+POLICY\s+(?P<policy>[\w.`\"]+)\s*$"
-)
-DROP_POLICY = re.compile(
-    r"(?is)^\s*DROP\s+MASKING\s+POLICY\s+(?:IF\s+EXISTS\s+)?"
-    r"(?P<name>[\w.`\"]+)\s*$"
 )
 SET_POLICY = re.compile(
     r"(?is)^\s*ALTER\s+TABLE\s+(?P<table>[\w.`\"]+)\s+"
@@ -117,8 +113,8 @@ USE_ROLE = re.compile(r"(?is)^\s*USE\s+ROLE\s+(?P<role>[\w`\"]+)\s*$")
 _CURRENT_ROLE = re.compile(r"(?i)\bCURRENT_ROLE\s*\(\s*\)")
 
 
-def _norm(name: str) -> str:
-    return name.strip('`"').lower()
+def _kind(m: re.Match) -> str:
+    return " ".join(m.group("kind").split()).lower()
 
 
 def _parse_create_policy(stmt: str):
@@ -130,101 +126,75 @@ def _parse_create_policy(stmt: str):
     tail = close and _POLICY_TAIL.match(stmt, close)
     if not tail:
         return None
-    kind = m.group("kind").split()[0].upper()
+    kind = _kind(m)
     args = [a.split()[0] for a in split_top_level(stmt[m.end() : close - 1])]
-    if kind == "MASKING" and len(args) != 1:
+    if kind == "masking" and len(args) != 1:
         return None
-    if kind == "ROW" and tail.group("rtype").upper() != "BOOLEAN":
+    if kind == "row access" and tail.group("rtype").upper() != "BOOLEAN":
         return None
     body = tail.group("body").rstrip("; \n")
-    return kind, _norm(m.group("name")), args, body
+    return kind, ident_key(m.group("name")), args, body
+
+
+def _require(kind: str, name: str, task_id: str) -> list[str]:
+    """The argument names of the ``kind`` policy ``name``; raises unless
+    that policy exists."""
+    if _POLICIES.get(name, ("",))[0] != kind:
+        raise ValueError(f"sql task {task_id!r}: unknown {kind} policy {name!r}")
+    return _POLICIES[name][1]
 
 
 def handle_statement(spark: SparkSession, stmt: str, task_id: str) -> bool:
-    """Consume masking DDL / USE ROLE. True = statement fully handled."""
+    """Consume policy DDL / USE ROLE. True = statement fully handled."""
     global _ROLE
     policy = _parse_create_policy(stmt)
     if policy is not None:
         kind, name, args, body = policy
-        if kind == "MASKING":
-            _POLICIES[name] = {"arg": args[0], "body": body}
-        else:
-            _ROW_POLICIES[name] = {"args": args, "body": body}
+        _POLICIES[name] = (kind, args, body)
         return True
-    m = DROP_POLICY.match(stmt)
-    if m:
-        name = _norm(m.group("name"))
-        bound = [
-            (t, c)
-            for t, cols in _BINDINGS.items()
-            for c, p in cols.items()
-            if p == name
-        ]
-        if bound:
-            raise ValueError(
-                f"sql task {task_id!r}: masking policy {name!r} is still "
-                f"bound to {bound} — UNSET it first (Snowflake refuses too)"
-            )
-        _POLICIES.pop(name, None)
+    if m := DROP_POLICY.match(stmt):
+        kind, name = _kind(m), ident_key(m.group("name"))
+        if _POLICIES.get(name, ("",))[0] == kind:
+            bound = sorted({t for (t, _), (p, _) in _BINDINGS.items() if p == name})
+            if bound:
+                raise ValueError(
+                    f"sql task {task_id!r}: {kind} policy {name!r} is still "
+                    f"bound to {bound} — unbind it first (Snowflake refuses too)"
+                )
+            del _POLICIES[name]
         return True
-    m = SET_POLICY.match(stmt)
-    if m:
-        pol = _norm(m.group("policy"))
-        if pol not in _POLICIES:
-            raise ValueError(
-                f"sql task {task_id!r}: unknown masking policy {pol!r}"
-            )
-        _BINDINGS.setdefault(_norm(m.group("table")), {})[
-            _norm(m.group("col"))
-        ] = pol
+    if m := SET_POLICY.match(stmt):
+        pol = ident_key(m.group("policy"))
+        _require("masking", pol, task_id)
+        col = m.group("col").strip('`"')
+        _BINDINGS[ident_key(m.group("table")), ident_key(col)] = (pol, [col])
         return True
-    m = UNSET_POLICY.match(stmt)
-    if m:
-        t = _norm(m.group("table"))
-        _BINDINGS.get(t, {}).pop(_norm(m.group("col")), None)
-        if not _BINDINGS.get(t):
-            _BINDINGS.pop(t, None)
+    if m := UNSET_POLICY.match(stmt):
+        t, col = ident_key(m.group("table")), ident_key(m.group("col"))
+        _BINDINGS.pop((t, col), None)
         return True
-    m = DROP_ROW_POLICY.match(stmt)
-    if m:
-        name = _norm(m.group("name"))
-        bound = [t for t, (p, _) in _ROW_BINDINGS.items() if p == name]
-        if bound:
-            raise ValueError(
-                f"sql task {task_id!r}: row access policy {name!r} is "
-                f"still bound to {bound} — detach it first"
-            )
-        _ROW_POLICIES.pop(name, None)
-        return True
-    m = ADD_ROW_POLICY.match(stmt)
-    if m:
-        pol = _norm(m.group("policy"))
-        if pol not in _ROW_POLICIES:
-            raise ValueError(
-                f"sql task {task_id!r}: unknown row access policy {pol!r}"
-            )
-        t = _norm(m.group("table"))
-        if t in _ROW_BINDINGS:
+    if m := ADD_ROW_POLICY.match(stmt):
+        pol, t = ident_key(m.group("policy")), ident_key(m.group("table"))
+        args = _require("row access", pol, task_id)
+        if (t, None) in _BINDINGS:
             raise ValueError(
                 f"sql task {task_id!r}: table {t!r} already has a row "
                 "access policy (Snowflake allows one per table)"
             )
         cols = [c.strip().strip('`"') for c in m.group("cols").split(",")]
-        if len(cols) != len(_ROW_POLICIES[pol]["args"]):
+        if len(cols) != len(args):
             raise ValueError(
                 f"sql task {task_id!r}: row access policy {pol!r} takes "
-                f"{len(_ROW_POLICIES[pol]['args'])} args, got {len(cols)}"
+                f"{len(args)} args, got {len(cols)}"
             )
-        _ROW_BINDINGS[t] = (pol, cols)
+        _BINDINGS[t, None] = (pol, cols)
         return True
-    m = DETACH_ROW_POLICY.match(stmt)
-    if m:
-        t = _norm(m.group("table"))
-        if _ROW_BINDINGS.get(t, (None,))[0] == _norm(m.group("policy")):
-            _ROW_BINDINGS.pop(t)
+    if m := DETACH_ROW_POLICY.match(stmt):
+        t = ident_key(m.group("table"))
+        if _BINDINGS.get((t, None), ("",))[0] == ident_key(m.group("policy")):
+            del _BINDINGS[t, None]
         return True
-    m = USE_ROLE.match(stmt)
-    if m:
+    if m := USE_ROLE.match(stmt):
         _ROLE = m.group("role").strip('`"').upper()
         return True
     return False
@@ -232,7 +202,7 @@ def handle_statement(spark: SparkSession, stmt: str, task_id: str) -> bool:
 
 def masked_tables() -> list[str]:
     """Tables needing a read rewrite: column-masked OR row-filtered."""
-    return list({**_BINDINGS, **dict.fromkeys(_ROW_BINDINGS)})
+    return list(dict.fromkeys(t for t, _ in _BINDINGS))
 
 
 def current_role() -> str:
@@ -243,10 +213,21 @@ def clear_masking() -> None:
     global _ROLE
     _POLICIES.clear()
     _BINDINGS.clear()
-    _ROW_POLICIES.clear()
-    _ROW_BINDINGS.clear()
-    _LIVE_VIEWS.clear()
     _ROLE = "PUBLIC"
+
+
+def _apply(policy: str, cols: list[str]) -> str:
+    """The body of ``policy`` with ``CURRENT_ROLE()`` folded to the session
+    role and each argument bound to its column of ``cols``. Both
+    substitutions skip literals (ADVICE r10): a body like ``IFF(role(), v,
+    'masked v value')`` or a literal holding the text ``current_role()``
+    keeps its literals intact."""
+    _, args, body = _POLICIES[policy]
+    body = sub_unquoted(_CURRENT_ROLE, f"'{_ROLE}'", body)
+    for arg, c in zip(args, cols):
+        arg_ref = re.compile(rf"(?i)\b{re.escape(arg)}\b")
+        body = sub_unquoted(arg_ref, f"`{c}`", body)
+    return f"({body})"
 
 
 def resolve_masked_view(spark: SparkSession, table: str) -> str:
@@ -254,40 +235,19 @@ def resolve_masked_view(spark: SparkSession, table: str) -> str:
     its name: column masks in the SELECT list, the row access policy (if
     any) as a WHERE clause — the filter sits directly over the scan, so
     Catalyst pushes it down like any user predicate. Rebuilt per read so
-    a ``USE ROLE`` between statements is always observed; the previous
-    view is replaced, never leaked."""
-    cols = spark.table(table).columns
-    bindings = _BINDINGS.get(_norm(table), {})
+    a ``USE ROLE`` between statements is always observed; the view name is
+    fixed per table, so the previous read's view is replaced, never
+    leaked."""
+    key = ident_key(table)
     items = []
-    for c in cols:
-        pol = bindings.get(c.lower())
-        if pol is None:
-            items.append(f"`{c}`")
-            continue
-        spec = _POLICIES[pol]
-        # both substitutions are restricted to UNQUOTED positions (ADVICE
-        # r10): a body like IFF(role(), v, 'masked v value') or a literal
-        # containing the text current_role() must keep its literals intact
-        body = sub_unquoted(_CURRENT_ROLE, f"'{_ROLE}'", spec["body"])
-        body = sub_unquoted(
-            re.compile(rf"(?i)\b{re.escape(spec['arg'])}\b"), f"`{c}`", body
-        )
-        items.append(f"({body}) AS `{c}`")
-    where = ""
-    row_bind = _ROW_BINDINGS.get(_norm(table))
-    if row_bind is not None:
-        pol, bound_cols = row_bind
-        spec = _ROW_POLICIES[pol]
-        body = sub_unquoted(_CURRENT_ROLE, f"'{_ROLE}'", spec["body"])
-        for arg, c in zip(spec["args"], bound_cols):
-            body = sub_unquoted(
-                re.compile(rf"(?i)\b{re.escape(arg)}\b"), f"`{c}`", body
-            )
-        where = f" WHERE ({body})"
-    view = f"__masked_{_norm(table).replace('.', '_')}_v"
+    for c in spark.table(table).columns:
+        mask = _BINDINGS.get((key, c.lower()))
+        items.append(f"{_apply(*mask)} AS `{c}`" if mask else f"`{c}`")
+    row = _BINDINGS.get((key, None))
+    where = f" WHERE {_apply(*row)}" if row else ""
+    view = f"__masked_{key.replace('.', '_')}_v"
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY VIEW {view} AS "
         f"SELECT {', '.join(items)} FROM {table}{where}"
     )
-    _LIVE_VIEWS[_norm(table)] = view
     return view

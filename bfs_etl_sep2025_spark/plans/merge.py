@@ -142,26 +142,6 @@ class MergeSpec:
     #: with no source match) — same dataclass as matched: identical actions
     nm_by_source: list[MatchedBranch] = field(default_factory=list)
 
-    # -- first-branch convenience views (the pre-guard API shape) ----------
-    @property
-    def update_sets(self) -> dict[str, str]:
-        for b in self.matched:
-            if not b.delete:
-                return b.sets
-        return {}
-
-    @property
-    def delete_matched(self) -> bool:
-        return any(b.delete for b in self.matched)
-
-    @property
-    def insert_cols(self) -> list[str] | None:
-        return self.not_matched[0].cols if self.not_matched else None
-
-    @property
-    def insert_vals(self) -> list[str] | None:
-        return self.not_matched[0].vals if self.not_matched else None
-
 
 def _name_and_alias(fragment: str) -> tuple[str, str]:
     """``db.tbl [AS] alias`` or ``(subquery) [AS] alias`` -> (sql, alias);
@@ -176,6 +156,18 @@ def _name_and_alias(fragment: str) -> tuple[str, str]:
     rest = re.sub(r"(?i)^AS\s+", "", rest.strip())
     alias = rest.split()[0] if rest else sql.split(".")[-1].strip('`"')
     return sql, alias
+
+
+def parse_sets(text: str) -> dict[str, str]:
+    """``col = expr [, ...]`` of an UPDATE SET list -> {column: expr}; a
+    qualified column (``t.col``) keeps its last part."""
+    sets: dict[str, str] = {}
+    for assign in split_top_level(text):
+        col, _, expr = assign.partition("=")
+        if not expr:
+            raise ValueError(f"bad SET assignment: {assign!r}")
+        sets[col.strip().split(".")[-1].strip('`"')] = expr.strip()
+    return sets
 
 
 def parse_merge(stmt: str) -> MergeSpec:
@@ -245,12 +237,7 @@ def parse_merge(stmt: str) -> MergeSpec:
         if update_side and _DELETE_ACT.match(action):
             prior.append(MatchedBranch(guard=guard, delete=True))
         elif update_side and (mm := _UPDATE_ACT.match(action)):
-            sets: dict[str, str] = {}
-            for assign in split_top_level(mm.group("sets")):
-                col, _, expr = assign.partition("=")
-                if not expr:
-                    raise ValueError(f"bad SET assignment: {assign!r}")
-                sets[col.strip().split(".")[-1].strip('`"')] = expr.strip()
+            sets = parse_sets(mm.group("sets"))
             prior.append(MatchedBranch(guard=guard, sets=sets))
         elif is_not and not by_source and (mm := _INSERT_ACT.match(action)):
             cols = mm.group("cols")
@@ -383,7 +370,9 @@ def _insert_cols(
     """Per target column, the value an unmatched source row is inserted
     with: the first INSERT branch whose guard holds gives it, a typed NULL
     when that branch lists no value for the column. Also returns the
-    condition that some branch applies."""
+    condition that some branch applies. One unguarded branch takes the same
+    general form, ``CASE (CASE WHEN true THEN 1 ...) WHEN 1 THEN v ...``
+    and ``<> 0``, which Catalyst folds to the plain value and ``true``."""
     names = [c for c, _ in tgt_fields]
     per_branch_vals: list[dict[str, str]] = []
     for b in spec.not_matched:
@@ -391,12 +380,6 @@ def _insert_cols(
         if len(icols) != len(b.vals):
             raise ValueError("MERGE INSERT: column/value count mismatch")
         per_branch_vals.append(dict(zip(icols, b.vals)))
-    if len(spec.not_matched) == 1 and spec.not_matched[0].guard is None:
-        vals = per_branch_vals[0]
-        return [
-            f"({vals[c]})" if c in vals else f"CAST(NULL AS {typ})"
-            for c, typ in tgt_fields
-        ], "true"
     arms = "".join(
         f" WHEN ({b.guard}) THEN {i}"
         if b.guard is not None
@@ -597,6 +580,19 @@ def table_meta(spark, name: str) -> TableMeta:
     )
 
 
+def partition_spec(utils, rel: str) -> str:
+    """``PARTITION (...)`` for a relative partition path like
+    ``d=2022-07-13/h=3`` (``utils`` is Spark's ``ExternalCatalogUtils``; the
+    catalog casts each string value to its column's type)."""
+    pairs = []
+    for seg in rel.split("/"):
+        key, val = map(utils.unescapePathName, seg.split("=", 1))
+        esc = val.replace("\\", "\\\\").replace("'", "\\'")
+        lit = "NULL" if val == utils.DEFAULT_PARTITION_NAME() else f"'{esc}'"
+        pairs.append(f"{_quote(key)} = {lit}")
+    return f"PARTITION ({', '.join(pairs)})"
+
+
 def _store_cast(schema) -> list[str]:
     """The table-insert contract for a path write: each column CAST to its
     declared type, and CHAR/VARCHAR values length-checked as ``INSERT``
@@ -739,12 +735,11 @@ def swap_snapshot(spark, meta: TableMeta, select: str, partitions=None) -> None:
         utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         specs = {}  # relative partition path -> PARTITION clause
         for values in partitions:
-            pairs = list(zip(meta.pcols, values))
             rel = "/".join(
-                utils.getPartitionPathString(p, _part_string(v)) for p, v in pairs
+                utils.getPartitionPathString(p, _part_string(v))
+                for p, v in zip(meta.pcols, values)
             )
-            lits = ", ".join(f"{_quote(p)} = {_part_literal(v)}" for p, v in pairs)
-            specs[rel] = f"PARTITION ({lits})"
+            specs[rel] = partition_spec(utils, rel)
         if specs:  # a managed table's DROP deletes the old directories too
             drop = ", ".join(specs.values())
             spark.sql(f"ALTER TABLE {meta.name} DROP IF EXISTS {drop}")

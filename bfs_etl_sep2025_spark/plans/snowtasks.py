@@ -55,6 +55,7 @@ from pyspark.sql import SparkSession
 from bfs_etl_sep2025_spark.plans.pipeline import Pipeline
 from bfs_etl_sep2025_spark.plans.sqlsplit import (
     finditer_unquoted,
+    ident_key,
     keyword_positions,
 )
 from bfs_etl_sep2025_spark.plans.tasks import SqlTask
@@ -78,10 +79,6 @@ _N_MINUTE = re.compile(r"(?i)^\s*(?P<n>\d+)\s+MINUTE\s*$")
 _USING_CRON = re.compile(r"(?i)^\s*USING\s+CRON\s+(?P<expr>\S+(?:\s+\S+){4})")
 
 
-def _norm(name: str) -> str:
-    return name.strip('`"').lower()
-
-
 @dataclass
 class TaskDef:
     name: str
@@ -103,7 +100,7 @@ def clear_tasks() -> None:
 
 
 def task_def(name: str) -> TaskDef:
-    return _TASKS[_norm(name)]
+    return _TASKS[ident_key(name)]
 
 
 def create_task(stmt: str, task_id: str) -> bool:
@@ -157,7 +154,7 @@ def create_task(stmt: str, task_id: str) -> bool:
     ma = next(finditer_unquoted(_AFTER, head), None)
     if ma:
         after = tuple(
-            _norm(p) for p in ma.group("parents").split(",")
+            ident_key(p.strip()) for p in ma.group("parents").split(",")
         )
         head = head[: ma.start()] + head[ma.end() :]
     leftover = head.strip()
@@ -167,7 +164,7 @@ def create_task(stmt: str, task_id: str) -> bool:
             "unsupported by the shim (SCHEDULE / AFTER / WHEN translate; "
             "WAREHOUSE and session parameters have no engine equivalent)"
         )
-    name = _norm(m.group("name"))
+    name = ident_key(m.group("name"))
     for p in after:
         if p not in _TASKS:
             raise ValueError(
@@ -188,7 +185,7 @@ def alter_task(stmt: str) -> bool:
     m = _ALTER_TASK.match(stmt)
     if not m:
         return False
-    name = _norm(m.group("name"))
+    name = ident_key(m.group("name"))
     if name not in _TASKS:
         raise ValueError(f"ALTER TASK: no task {name!r}")
     _TASKS[name].resumed = m.group("verb").upper() == "RESUME"
@@ -268,7 +265,7 @@ def execute_task(
     true), in execution order. The root runs regardless of its own
     RESUME state (Snowflake's EXECUTE TASK fires a suspended root too);
     children require RESUME."""
-    name = _norm(name)
+    name = ident_key(name)
     if name not in _TASKS:
         raise ValueError(f"EXECUTE TASK: no task {name!r}")
     p = _task_graph(name, forced=True)
@@ -297,7 +294,7 @@ def task_pipeline(root: str, start_date: date, clock=None) -> Pipeline:
     next-run exactly as it does for the reference's Airflow schedules.
     A scheduled run fires nothing while the root is suspended; otherwise
     each task runs when it is resumed and its WHEN holds."""
-    t = _TASKS[_norm(root)]
+    t = _TASKS[ident_key(root)]
     if t.schedule is None:
         raise ValueError(f"task {root!r} has no SCHEDULE to build from")
     mn = _N_MINUTE.match(t.schedule)
@@ -312,7 +309,7 @@ def task_pipeline(root: str, start_date: date, clock=None) -> Pipeline:
     else:
         schedule = _USING_CRON.match(t.schedule).group("expr")
     return _task_graph(
-        _norm(root),
+        ident_key(root),
         forced=False,
         schedule=schedule,
         start_date=start_date,

@@ -15,7 +15,8 @@ outside the code). It yields each *code position* — a character outside
 every literal, quoted identifier and comment — with its paren depth, and
 every helper below derives from it: statement splitting, the unquoted
 position set, quote-aware substitution, top-level keyword search,
-top-level comma splitting and bracket matching.
+top-level comma splitting and bracket matching. :func:`ident_key` is the
+one spelling of an identifier's lookup key.
 """
 
 from __future__ import annotations
@@ -70,6 +71,12 @@ def _split_at(text: str, cuts: list[int]) -> list[str]:
         last = i + 1
     parts.append(text[last:])
     return [p.strip() for p in parts if p.strip()]
+
+
+def ident_key(name: str) -> str:
+    """The lookup key of an identifier as SQL spells it: every identifier
+    quote dropped, lowercased (``mdb.`Users``` -> ``mdb.users``)."""
+    return re.sub(r'[`"]', "", name).lower()
 
 
 def split_statements(sql: str) -> list[str]:

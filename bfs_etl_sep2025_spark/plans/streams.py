@@ -70,6 +70,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from bfs_etl_sep2025_spark.plans.commitlog import CommitLog, ConcurrentWriteError
+from bfs_etl_sep2025_spark.plans.sqlsplit import ident_key
 from bfs_etl_sep2025_spark.plans.versioned import (
     _SQL_REGISTRY,
     VersionedTable,
@@ -91,10 +92,6 @@ DROP_STREAM = re.compile(
 _OPT = re.compile(r"(?i)(APPEND_ONLY|SHOW_INITIAL_ROWS)\s*=\s*(TRUE|FALSE)")
 
 
-def _norm(name: str) -> str:
-    return name.strip('`"').lower()
-
-
 def _logs() -> dict[str, dict[str, CommitLog]]:
     """Stream name -> {table root: offset log}, over the registered tables."""
     out: dict[str, dict[str, CommitLog]] = {}
@@ -108,7 +105,7 @@ def _logs() -> dict[str, dict[str, CommitLog]]:
 
 def _find(name: str) -> tuple[str, CommitLog] | None:
     """(table root, offset log) of stream ``name``, or None."""
-    hits = _logs().get(_norm(name), {})
+    hits = _logs().get(ident_key(name), {})
     if len(hits) > 1:
         raise ValueError(f"stream {name!r} exists under more than one "
                          f"registered table: {sorted(hits)}")
@@ -124,14 +121,18 @@ def _state(name: str) -> tuple[str, CommitLog, int, dict]:
     return root, log, head, log.read(head)
 
 
-def create_stream(
-    spark: SparkSession, stmt: str, task_id: str
-) -> bool:
-    """Handle a CREATE STREAM statement; returns True when it was one."""
+def handle_statement(spark: SparkSession, stmt: str, task_id: str) -> bool:
+    """Handle CREATE / DROP STREAM; returns True when the statement was one."""
+    if m := DROP_STREAM.match(stmt):
+        name = ident_key(m.group("name"))
+        if found := _find(name):
+            shutil.rmtree(found[1].root)
+        _STREAMS.pop(name, None)
+        return True
     m = CREATE_STREAM.match(stmt)
     if not m:
         return False
-    name, table = _norm(m.group("name")), m.group("table").strip('`"')
+    name, table = ident_key(m.group("name")), m.group("table")
     old = _find(name)
     if m.group("ine") and old:
         return True
@@ -161,17 +162,6 @@ def create_stream(
         "offset": 0 if opts.get("SHOW_INITIAL_ROWS") else vt.current_version(),
         "append_only": bool(opts.get("APPEND_ONLY")),
     })
-    return True
-
-
-def drop_stream(stmt: str) -> bool:
-    m = DROP_STREAM.match(stmt)
-    if not m:
-        return False
-    name = _norm(m.group("name"))
-    if found := _find(name):
-        shutil.rmtree(found[1].root)
-    _STREAMS.pop(name, None)
     return True
 
 
@@ -227,16 +217,17 @@ def resolve_stream_view(
         ).alias("METADATA$ROW_ID"),
     )
     # a temp view name is one identifier: ``db.s`` reads as ``db_s``
-    view = "__stream_{}_{}_{}".format(re.sub(r"\W", "_", _norm(name)), offset, cur)
+    key = ident_key(name)
+    view = "__stream_{}_{}_{}".format(re.sub(r"\W", "_", key), offset, cur)
     # one live view per stream: drop the previous (offset, version) view so
     # a long session does not leak a catalog entry per read (ADVICE r8).
     # A view embedded in a longer-lived object (CREATE VIEW ... FROM s) is
     # NOT protected here — see the module-contract note on folding.
-    prev = _STREAMS.get(_norm(name))
+    prev = _STREAMS.get(key)
     if prev is not None and prev != view:
         spark.catalog.dropTempView(prev)
     out.createOrReplaceTempView(view)
-    _STREAMS[_norm(name)] = view
+    _STREAMS[key] = view
     return view, cur
 
 

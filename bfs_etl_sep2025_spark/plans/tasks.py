@@ -30,6 +30,7 @@ from bfs_etl_sep2025_spark.plans.qualify import rewrite_qualify
 from bfs_etl_sep2025_spark.plans.sqlsplit import (
     blank_quoted,
     finditer_unquoted,
+    ident_key,
     match_close,
     split_statements,
     split_top_level,
@@ -380,7 +381,7 @@ def _resolve_time_travel(
         resolve_versioned_table,
     )
 
-    name = re.sub(r'[`"]', "", name)  # identifier quotes
+    name = ident_key(name)
     vt = resolve_versioned_table(spark, name)
     if vt is None or not vt.exists():
         raise ValueError(
@@ -830,7 +831,7 @@ class SqlTask(Task):
             ),
             out,
         )
-        target = (self._write_target(out) or "").strip('`"').lower()
+        target = ident_key(self._write_target(out) or "")
         if target in names:
             raise ValueError(
                 f"sql task {self.task_id!r}: stream {target!r} is a "
@@ -856,7 +857,7 @@ class SqlTask(Task):
         tables = _masking.masked_tables()
         if not tables:
             return stmt
-        target = (self._write_target(stmt) or "").strip('`"').lower()
+        target = ident_key(self._write_target(stmt) or "")
         return self._route_table_refs(
             stmt,
             [t for t in tables if t != target],
@@ -864,22 +865,32 @@ class SqlTask(Task):
         )
 
     def _route_table_refs(self, stmt: str, names, resolve) -> str:
-        """Replace each unquoted reference to one of ``names`` that sits in
+        """Replace each reference to one of ``names`` that sits in
         TABLE-REFERENCE position (a column or alias sharing the name is left
         alone) with the view ``resolve(name)`` returns; ``resolve`` runs only
-        for the names the statement references."""
+        for the names the statement references. Each dot-separated part may
+        be spelled bare or quoted (``mdb.users``, ```mdb`.`users```,
+        ``mdb."users"``); ```mdb.users``` is one identifier, another table."""
+        code = unquoted_positions(stmt)
         for name in names:
-            pat = re.compile(rf"(?i)(?<![\w.`\"]){re.escape(name)}\b")
+            parts = [
+                rf"(?:`{p}`|\"{p}\"|{p}\b)"
+                for p in map(re.escape, name.split("."))
+            ]
+            pat = re.compile(r"(?i)(?<![\w.`\"])" + r"\.".join(parts))
             hits = {
                 m.start()
-                for m in finditer_unquoted(pat, stmt)
-                if self._is_table_ref_position(stmt, m.start())
+                for m in pat.finditer(stmt)
+                # a quoted name opens on a non-code quote after code
+                if (m.start() in code or m.start() - 1 in code)
+                and self._is_table_ref_position(stmt, m.start())
             }
             if hits:
                 view = resolve(name)
                 stmt = pat.sub(
                     lambda m: view if m.start() in hits else m.group(0), stmt
                 )
+                code = unquoted_positions(stmt)
         return stmt
 
     def _bind(self, stmt: str) -> str:
@@ -934,27 +945,16 @@ class SqlTask(Task):
         if self.schema:
             spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.schema}")
             spark.catalog.setCurrentDatabase(self.schema)
-        from bfs_etl_sep2025_spark.plans import streams as _streams
+        from bfs_etl_sep2025_spark.plans import masking, snowtasks, streams
 
         for stmt in self.statements(ctx):
             self.executed.append(stmt)
-            # Snowflake STREAM DDL and references resolve at EXECUTION
-            # time (offsets must observe earlier statements' commits)
-            if _streams.create_stream(
-                spark, stmt, self.task_id
-            ) or _streams.drop_stream(stmt):
-                continue
-            # Snowflake TASK objects (CREATE/ALTER/EXECUTE TASK) dispatch
-            # to the Pipeline-backed shim (plans/snowtasks.py)
-            from bfs_etl_sep2025_spark.plans import snowtasks as _snowtasks
-
-            if _snowtasks.handle_statement(spark, stmt, self.task_id):
-                continue
-            # Snowflake masking policies: DDL + USE ROLE are consumed;
-            # reads of masked tables are rewritten after the stream pass
-            from bfs_etl_sep2025_spark.plans import masking as _masking
-
-            if _masking.handle_statement(spark, stmt, self.task_id):
+            # STREAM, TASK and policy DDL and USE ROLE run at EXECUTION time,
+            # so offsets and task runs observe earlier statements' commits
+            if any(
+                mod.handle_statement(spark, stmt, self.task_id)
+                for mod in (streams, snowtasks, masking)
+            ):
                 continue
             stmt, consumed = self._rewrite_streams(stmt, ctx)
             stmt = self._rewrite_masked(stmt, ctx)
@@ -980,4 +980,4 @@ class SqlTask(Task):
                 # offset to the version captured when the statement read it
                 # (Snowflake's consume-on-commit); a plain SELECT only peeks
                 for sname, ver in consumed:
-                    _streams.advance_stream(sname, ver)
+                    streams.advance_stream(sname, ver)

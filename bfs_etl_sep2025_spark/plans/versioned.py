@@ -66,6 +66,7 @@ from bfs_etl_sep2025_spark.plans.commitlog import (  # noqa: F401 (re-export)
     ConcurrentWriteError,
 )
 from bfs_etl_sep2025_spark.plans.locks import table_write_lock
+from bfs_etl_sep2025_spark.plans.sqlsplit import ident_key
 
 #: logical-plan node names that make a DataFrame a deterministic pure
 #: projection over already-materialized rows (see upsert's checkpoint skip)
@@ -135,7 +136,7 @@ def unregister_versioned_table(name: str) -> None:
 def resolve_versioned_table(
     spark: SparkSession, name: str
 ) -> "VersionedTable | None":
-    root = _SQL_REGISTRY.get(name.strip('`"').lower())
+    root = _SQL_REGISTRY.get(ident_key(name))
     return None if root is None else VersionedTable(spark, root)
 
 
@@ -202,8 +203,9 @@ class VersionedTable:
         cancel in one aggregation per commit: each distinct row's count in
         the added dirs minus its count in the removed ones, which is the
         multiset rule of ``exceptAll`` in both directions. Schema evolution
-        is aligned per commit by NULL-filling each side to the union of the
-        two committed schemas."""
+        is aligned by ``unionByName(allowMissingColumns=True)``, which
+        NULL-fills each side to the union of the two committed schemas,
+        new-schema order first, and each commit's rows the same way."""
         from pyspark.sql import functions as F
 
         hi = self.current_version() if to_version is None else to_version
@@ -212,6 +214,7 @@ class VersionedTable:
                 f"changes({from_version}, {to_version}) outside committed "
                 f"range 0..{self.current_version()} on {self.root}"
             )
+        union = functools.partial(DataFrame.unionByName, allowMissingColumns=True)
         parts: list[DataFrame] = []
         for v in range(from_version + 1, hi + 1):
             # version 0 is the empty pre-create table: no manifest exists
@@ -219,48 +222,20 @@ class VersionedTable:
             m = self._manifest(v)
             added = [d for d in m["dirs"] if d not in set(pm["dirs"])]
             removed = [d for d in pm["dirs"] if d not in set(m["dirs"])]
-            if not added and not removed:
-                continue
-            new_side = (
-                self._read_dirs(added, m.get("schema")) if added else None
-            )
-            old_side = (
-                self._read_dirs(removed, pm.get("schema"))
-                if removed
-                else None
-            )
-            # union of the two committed shapes, new-schema order first
-            types: dict[str, object] = {}
-            cols: list[str] = []
-            for side in (new_side, old_side):
-                if side is not None:
-                    for f in side.schema.fields:
-                        if f.name not in types:
-                            types[f.name] = f.dataType
-                            cols.append(f.name)
-
-            def aligned(df: DataFrame) -> DataFrame:
-                have = set(df.columns)
-                return df.select(
-                    *[
-                        F.col(c)
-                        if c in have
-                        else F.lit(None).cast(types[c]).alias(c)
-                        for c in cols
-                    ]
-                )
-
             # one aggregation nets the commit: new rows count +1, old rows
             # -1, and each distinct row with a nonzero net surfaces |net|
             # times — exceptAll's multiset rule for both directions at once
             signed = [
-                aligned(side).withColumn("__change_n", F.lit(sign))
-                for side, sign in ((new_side, 1), (old_side, -1))
-                if side is not None
+                self._read_dirs(dirs, mf.get("schema")).select(
+                    F.lit(sign).alias("__change_n"), "*"
+                )
+                for dirs, mf, sign in ((added, m, 1), (removed, pm, -1))
+                if dirs
             ]
-            tagged = signed[0]
-            if len(signed) == 2:
-                tagged = tagged.unionByName(signed[1])
+            if not signed:
+                continue
+            tagged = functools.reduce(union, signed)
+            cols = tagged.columns[1:]
             net = F.col("__change_n")
             parts.append(
                 tagged.groupBy(*cols)
@@ -286,10 +261,7 @@ class VersionedTable:
                 F.lit("insert").alias("_change_type"),
                 F.lit(0).cast("int").alias("_commit_version"),
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return functools.reduce(union, parts)
 
     def version_at(
         self, ts_us: int, *, strict_before: bool = False

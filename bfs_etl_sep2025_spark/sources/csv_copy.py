@@ -145,18 +145,6 @@ def ledger(ledger_path: str, table: str) -> CommitLog:
     return CommitLog(os.path.join(ledger_path, table))
 
 
-def _partition_spec(utils, rel: str) -> str:
-    """``PARTITION (...)`` for a partition directory like ``d=2022-07-13``
-    (the catalog casts each string value to its column's type)."""
-    pairs = []
-    for seg in rel.split("/"):
-        key, val = map(utils.unescapePathName, seg.split("=", 1))
-        esc = val.replace("\\", "\\\\").replace("'", "\\'")
-        lit = "NULL" if val == utils.DEFAULT_PARTITION_NAME() else f"'{esc}'"
-        pairs.append(f"{merge._quote(key)} = {lit}")
-    return f"PARTITION ({', '.join(pairs)})"
-
-
 def _land(spark, meta, staged: str) -> None:
     """Move a staged batch into the table: register its partitions, rename
     each file to the same relative path under the location, drop the
@@ -172,7 +160,7 @@ def _land(spark, meta, staged: str) -> None:
             files.append(path.toUri().getPath()[len(prefix):])
     if parts := sorted({f.rpartition("/")[0] for f in files} - {""}):
         utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        specs = " ".join(_partition_spec(utils, rel) for rel in parts)
+        specs = " ".join(merge.partition_spec(utils, rel) for rel in parts)
         spark.sql(f"ALTER TABLE {meta.name} ADD IF NOT EXISTS {specs}")
         for rel in parts:
             fs.mkdirs(Path(root, rel))

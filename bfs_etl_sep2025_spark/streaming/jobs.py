@@ -21,13 +21,13 @@ bounds micro-batch size; sinks should be ``foreachBatch`` into a
 transactional table for exactly-once.
 
 State note: a stateful stream whose state fits built-in aggregates uses
-them (:func:`stream_user_profile_tws`): no Python worker per micro-batch.
-Logic that aggregates cannot express goes through
-``applyInPandasWithState`` (:func:`stream_running_user_totals`, the LSH
-near-dup gate :func:`stream_lsh_band_dedup`): each key's state is one
-tuple that travels inline with the key's Arrow batch, so there is no state
-server to call and no pre-init worker at query start, and both state
-stores (HDFS-backed, RocksDB) run it.
+them (:func:`stream_user_profile_tws`, :func:`stream_running_user_totals`):
+no Python worker per micro-batch. Logic that aggregates cannot express
+goes through ``applyInPandasWithState`` (the LSH near-dup gate
+:func:`stream_lsh_band_dedup`): each key's state is one tuple that
+travels inline with the key's Arrow batch, so there is no state server to
+call and no pre-init worker at query start, and both state stores
+(HDFS-backed, RocksDB) run it.
 """
 
 from __future__ import annotations
@@ -112,38 +112,21 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
 
 
 def stream_running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: a per-user
-    running (count, total_value) accumulator that survives across
-    micro-batches in the state store. Each batch emits the user's updated
-    running totals — the building block for online feature aggregation
-    that windowed aggs can't express (state has no window bound; eviction
-    here is by processing-time timeout).
+    """Per-user running ``(n_events, total_value)`` that accumulates across
+    micro-batches in the state store: one built-in aggregation, run in
+    Update mode, so each batch emits the updated totals of the users it
+    touched and no Python worker runs. ``coalesce(sum(value), 0.0)`` skips
+    NULL values and reads 0.0 for a user with none. Checkpoints written by
+    the earlier ``applyInPandasWithState`` version of this job cannot be
+    resumed: Spark rejects the changed state schema.
 
-    Scale notes: state is per-key in the executor state store (RocksDB in
-    production), shuffled by user_id; unbounded key spaces need the timeout
-    (set below) or state grows forever.
+    Scale notes: state is one row per user, shuffled by user_id after a
+    partial aggregation per batch. It has no window bound and nothing
+    evicts it, so an unbounded key space grows it forever.
     """
-    import pandas as pd  # imported lazily: executors pickle this closure
-
-    def update(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType="user_id bigint, n_events bigint, total_value double",
-            stateStructType="n bigint, total double",
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.coalesce(F.sum("value"), F.lit(0.0)).alias("total_value"),
     )
 
 

@@ -3,7 +3,7 @@
 Usage::
 
     python scripts/ab_query.py OLD_REPO_DIR QUERY [QUERY...] --sf DIR \
-        [--rounds N]
+        [--rounds N]    # default 10 pairs
 
 Arms: OLD = the query run from ``OLD_REPO_DIR`` (a checkout of the
 pre-change commit), NEW = the same query from the checkout holding this
@@ -19,7 +19,10 @@ the driver, the JVM and its Python workers, read from ``/proc`` by
 submitted (each run is its own job group, counted through
 ``statusTracker().getJobIdsForGroup``, which needs no Spark UI) and an
 order-insensitive md5 of the collected rows, so the A/B asserts OUTPUT
-EQUALITY, not just speed.
+EQUALITY, not just speed. The summary gives each arm's median and
+quartiles and the number of rounds in which NEW's CPU-seconds beat OLD's
+("k of n"): a difference that a few rounds' quartiles cannot resolve
+shows as a k near n/2.
 """
 
 from __future__ import annotations
@@ -90,7 +93,7 @@ def main() -> None:
     ap.add_argument("old_repo")
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", required=True, help="fixture directory")
-    ap.add_argument("--rounds", type=int, default=5)
+    ap.add_argument("--rounds", type=int, default=10)
     a = ap.parse_args()
     arms = {"OLD": str(Path(a.old_repo).resolve()), "NEW": str(NEW_REPO)}
     for q in a.queries:
@@ -117,6 +120,8 @@ def main() -> None:
                 f"== {q} {label}: wall median [q1, q3] "
                 f"{quartiles(wall[label])} s, cpu {quartiles(cpu[label])} s"
             )
+        wins = sum(n < o for o, n in zip(cpu["OLD"], cpu["NEW"]))
+        print(f"== {q}: NEW cpu below OLD in {wins} of {a.rounds} rounds")
         print(f"== {q}: outputs_identical={same}", flush=True)
         if not same:
             raise SystemExit(f"OUTPUT MISMATCH on {q}: {md5s}")

@@ -239,3 +239,43 @@ def test_parenthesized_argument_types(spark, users):
         ],
     )
     assert _emails(spark, users) == [(1, "a***", "free")]
+
+
+@pytest.mark.parametrize("ref", ["mdb.users", "`mdb`.`users`", "mdb.`users`"])
+def test_quoted_table_name_reads_masked(spark, ref):
+    """Each dot-separated part of a masked table's name may be spelled
+    quoted; every spelling reads through the policy view."""
+    spark.sql("CREATE DATABASE IF NOT EXISTS mdb")
+    spark.sql("DROP TABLE IF EXISTS mdb.users")
+    spark.sql("CREATE TABLE mdb.users (id INT, email STRING) USING PARQUET")
+    spark.sql("INSERT INTO mdb.users VALUES (1, 'a@x.com')")
+    try:
+        _run_sql(
+            spark,
+            [
+                "CREATE MASKING POLICY star_mask AS (v STRING) "
+                "RETURNS STRING -> '***'",
+                "ALTER TABLE mdb.users MODIFY COLUMN email "
+                "SET MASKING POLICY star_mask",
+                f"CREATE OR REPLACE TABLE mask_quoted AS SELECT email FROM {ref}",
+            ],
+        )
+        assert [r.email for r in spark.table("mask_quoted").collect()] == ["***"]
+    finally:
+        clear_masking()
+        spark.sql("DROP TABLE IF EXISTS mdb.users")
+        spark.sql("DROP TABLE IF EXISTS mask_quoted")
+
+
+def test_one_quoted_identifier_with_a_dot_names_another_table():
+    """```mdb.users``` is one identifier (a table literally named
+    ``mdb.users``), and a quoted spelling inside a literal is data; neither
+    routes to the view of ``mdb.users``."""
+    task = SqlTask("route_probe", sql="SELECT 1")
+
+    def route(sql):
+        return task._route_table_refs(sql, ["mdb.users"], lambda _: "masked_v")
+
+    for sql in ["SELECT email FROM `mdb.users`", "SELECT 'FROM `mdb`.`users`'"]:
+        assert route(sql) == sql
+    assert route('SELECT * FROM "mdb"."users"') == "SELECT * FROM masked_v"

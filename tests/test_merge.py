@@ -10,7 +10,12 @@ from datetime import datetime
 import pytest
 
 from bfs_etl_sep2025_spark.plans import Pipeline, SqlTask
-from bfs_etl_sep2025_spark.plans.merge import parse_merge, run_merge
+from bfs_etl_sep2025_spark.plans.merge import (
+    InsertBranch,
+    MatchedBranch,
+    parse_merge,
+    run_merge,
+)
 
 FROZEN = datetime(2024, 3, 1, 12, 0, 0)
 
@@ -25,9 +30,12 @@ def test_parse_upsert_shape():
     assert spec.target == "m_tgt" and spec.target_alias == "t"
     assert spec.source_sql == "m_src" and spec.source_alias == "s"
     assert spec.on == "t.id = s.id"
-    assert spec.update_sets == {"val": "s.val", "n": "t.n + 1"}
-    assert spec.insert_cols == ["id", "val", "n"]
-    assert spec.insert_vals == ["s.id", "s.val", "0"]
+    assert spec.matched == [
+        MatchedBranch(guard=None, sets={"val": "s.val", "n": "t.n + 1"})
+    ]
+    assert spec.not_matched == [
+        InsertBranch(None, ["id", "val", "n"], ["s.id", "s.val", "0"])
+    ]
 
 
 def test_parse_subquery_source_and_delete():
@@ -37,8 +45,8 @@ def test_parse_subquery_source_and_delete():
     )
     assert spec.target == "db.tgt" and spec.target_alias == "tgt"
     assert spec.source_sql == "(SELECT id FROM x WHERE ok)"
-    assert spec.delete_matched and not spec.update_sets
-    assert spec.insert_vals is None
+    assert spec.matched == [MatchedBranch(guard=None, delete=True)]
+    assert spec.not_matched == []
 
 
 def test_parse_rejects_update_plus_delete():
@@ -517,9 +525,12 @@ def test_parse_merge_extracts_fields_exactly(tgt, talias, salias, key, cols):
     assert spec.target == tgt and spec.target_alias == talias
     assert spec.source_alias == salias
     assert spec.on == f"{talias}.{key} = {salias}.{key}"
-    assert spec.update_sets == {c: f"{salias}.{c}" for c in cols}
-    assert spec.insert_cols == [key] + cols
-    assert spec.insert_vals == [f"{salias}.{c}" for c in [key] + cols]
+    assert spec.matched == [
+        MatchedBranch(guard=None, sets={c: f"{salias}.{c}" for c in cols})
+    ]
+    assert spec.not_matched == [
+        InsertBranch(None, [key] + cols, [f"{salias}.{c}" for c in [key] + cols])
+    ]
 
 
 @given(
@@ -559,7 +570,7 @@ def test_parse_by_source_branches():
         "WHEN NOT MATCHED BY SOURCE THEN DELETE"
     )
     # BY TARGET is a synonym for plain NOT MATCHED
-    assert spec.insert_cols == ["id", "v"]
+    assert spec.not_matched == [InsertBranch(None, ["id", "v"], ["s.id", "s.v"])]
     assert len(spec.nm_by_source) == 2
     assert spec.nm_by_source[0].guard == "t.v > 0"
     assert spec.nm_by_source[0].sets == {"v": "-t.v"}
@@ -598,8 +609,8 @@ def test_parse_by_source_does_not_shadow_other_sides():
         "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"
     )
     assert spec.nm_by_source[0].delete
-    assert spec.update_sets == {"v": "s.v"}
-    assert spec.insert_cols == ["id", "v"]
+    assert spec.matched == [MatchedBranch(guard=None, sets={"v": "s.v"})]
+    assert spec.not_matched == [InsertBranch(None, ["id", "v"], ["s.id", "s.v"])]
 
 
 def test_merge_full_sync_executes(spark):
@@ -701,11 +712,13 @@ def test_parse_merge_by_source_roundtrip(tgt, salias, key, cols, gval):
         f"WHEN NOT MATCHED BY TARGET THEN "
         f"INSERT ({key}) VALUES ({salias}.{key})"
     )
-    assert spec.update_sets == {c: f"{salias}.{c}" for c in cols}
+    assert spec.matched == [
+        MatchedBranch(guard=None, sets={c: f"{salias}.{c}" for c in cols})
+    ]
     assert spec.nm_by_source[0].guard == f"{tgt}.{key} > {gval}"
     assert spec.nm_by_source[0].sets == {c: "NULL" for c in cols}
     assert spec.nm_by_source[1].delete
-    assert spec.insert_cols == [key]
+    assert spec.not_matched == [InsertBranch(None, [key], [f"{salias}.{key}"])]
 
 
 # -- partition-pruned MERGE path ---------------------------------------------

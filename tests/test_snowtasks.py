@@ -108,6 +108,24 @@ def test_after_chain_runs_in_dependency_order(spark, vt_src):
     assert spark.table("tk_b").collect()[0].y == 2
 
 
+def test_after_lists_several_parents(spark, vt_src):
+    """``AFTER a, b`` names two parents; the child runs after both."""
+    _run_sql(
+        spark,
+        [
+            "CREATE TASK t_p1 AS CREATE OR REPLACE TABLE tk_p1 AS SELECT 1 AS x",
+            "CREATE TASK t_p2 AFTER t_p1 AS "
+            "CREATE OR REPLACE TABLE tk_p2 AS SELECT 2 AS x",
+            "CREATE TASK t_join AFTER t_p1, t_p2 AS "
+            "CREATE OR REPLACE TABLE tk_join AS SELECT 3 AS x",
+            "ALTER TASK t_p2 RESUME",
+            "ALTER TASK t_join RESUME",
+        ],
+    )
+    assert task_def("t_join").after == ("t_p1", "t_p2")
+    assert execute_task(spark, "t_p1") == ["t_p1", "t_p2", "t_join"]
+
+
 def test_suspended_child_skips_but_root_executes(spark, vt_src):
     _run_sql(
         spark,

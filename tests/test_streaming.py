@@ -98,7 +98,7 @@ def test_checkpoint_skips_processed_files(stream_env):
 
 @slow
 def test_stateful_running_totals_across_batches(stream_env):
-    """applyInPandasWithState: per-user state must ACCUMULATE across
+    """Built-in Update-mode aggregation: per-user state must ACCUMULATE across
     micro-batches (file 1 then file 2), emitting updated running totals."""
     from bfs_etl_sep2025_spark.streaming.jobs import stream_running_user_totals
 

@@ -227,6 +227,14 @@ def test_qualified_stream_name_reads(spark, s_table):
     assert sorted(r.id for r in spark.table("q_now").collect()) == [1, 2]
 
 
+def test_quoted_stream_name_reads(spark, s_table):
+    """A backquoted stream name resolves to the change feed like the bare
+    one."""
+    _run_sql(spark, "CREATE STREAM s_bq ON TABLE st_orders SHOW_INITIAL_ROWS = TRUE")
+    _run_sql(spark, "CREATE OR REPLACE TEMPORARY VIEW bq_now AS SELECT id FROM `s_bq`")
+    assert sorted(r.id for r in spark.table("bq_now").collect()) == [1, 2]
+
+
 def test_stream_resolves_in_comma_join(spark, s_table):
     """Table-reference positions beyond plain FROM: the comma-join slot
     must still resolve the stream to its change feed."""

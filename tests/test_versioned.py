@@ -1236,6 +1236,25 @@ def test_changes_feed_aligns_schema_evolution(spark, tmp_path):
     assert (2, "insert", 2, 9) in rows
 
 
+def test_changes_feed_across_a_schema_replacing_overwrite(spark, tmp_path):
+    """One commit that drops ``v`` and adds ``w``: the feed has the new
+    schema's columns first, then the old-only ``v``, and each side is
+    NULL-filled in the column it lacks."""
+    vt = VersionedTable(spark, str(tmp_path / "cdf_replace"))
+    vt.create(spark.createDataFrame([(1, "a"), (2, "b")], "id INT, v STRING"))
+    vt.overwrite(spark.createDataFrame([(1, 10.5)], "id INT, w DOUBLE"))
+    feed = vt.changes(1)
+    assert feed.columns == ["id", "w", "v", "_change_type", "_commit_version"]
+    assert dict(feed.dtypes)["w"] == "double"
+    assert dict(feed.dtypes)["v"] == "string"
+    rows = sorted((tuple(r) for r in feed.collect()), key=lambda r: (r[0], r[3]))
+    assert rows == [
+        (1, None, "a", "delete", 2),
+        (1, 10.5, None, "insert", 2),
+        (2, None, "b", "delete", 2),
+    ]
+
+
 def test_changes_empty_range_at_version_zero(spark, tmp_path):
     """changes(0, 0) is a valid empty range (its own error message says
     the committed range starts at 0) and must return an empty feed, not
